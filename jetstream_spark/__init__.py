@@ -9,7 +9,8 @@ Layout:
                pipeline extensions), each paired with a DuckDB oracle SQL
   atproto/   — the jetstream event engine: envelope schema, normalize,
                monotonic sequencer, partitioned event log, subscriptions
-  streaming/ — Structured Streaming ingest + subscription delivery
+  streaming/ — Structured Streaming ingest + streaming analytics
+  serving/   — the /subscribe edge and its shared live tail (LiveTailHub)
 """
 
 __version__ = "0.1.0"

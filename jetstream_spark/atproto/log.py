@@ -202,10 +202,10 @@ def read_log(spark: SparkSession, log_dir: str) -> DataFrame:
     instant between them the live partition directory does not exist; a
     plain `spark.read.parquet(log_dir)` planned in that window would
     silently return a log WITHOUT bucket N — and a cursor-paced replay
-    consumer (subscriptions.py) that delivered bucket N+1 rows from such a
-    snapshot would advance its watermark past bucket N forever. Pebble
-    gets this for free (iterators are snapshot-isolated across
-    DeleteRange, persist.go:120-137); here the swap protocol's own
+    consumer (the edge's replay rounds) that delivered bucket N+1 rows
+    from such a snapshot would advance its watermark past bucket N
+    forever. Pebble gets this for free (iterators are snapshot-isolated
+    across DeleteRange, persist.go:120-137); here the swap protocol's own
     invariant — at every instant a COMPLETE copy of the bucket exists at
     the live path or at `_compact_old_N` — is what readers lean on: a
     bucket whose live dir is absent is read from its aside copy (with the

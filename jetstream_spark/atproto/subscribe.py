@@ -4,8 +4,8 @@ A Subscription is the reference's "physical plan" (server.go:26-39): a
 validated predicate set + cursor + per-subscriber monotonic sequence.
 HandleSubscribe's parse/validate stage (server.go:240-300) becomes
 `Subscription.parse`; the replay→live cutover loop (server.go:305-337)
-becomes `backfill_plan` + the streaming attach in
-jetstream_spark.streaming.subscriptions.
+becomes `replay_batch` rounds in the serving edge followed by the attach
+to the shared live tail (serving/hub.py).
 """
 
 from __future__ import annotations

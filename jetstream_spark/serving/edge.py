@@ -16,13 +16,14 @@ semantics and per-subscriber policies either way:
   S21  param validation via Subscription.parse — invalid NSID/DID/cursor
        ⇒ HTTP 400 (server.go:250-287)
   S22  subscriber registry with ids + counts (server.go:187-238)
-  S15/S18  replay→live cutover and the monotonic seq guard come from
-       Subscription/backfill — the same code paths the engine tests
+  S15/S18  replay→live cutover: a cursor subscriber runs replay rounds
+       (Subscription.replay_batch, monotonic seq guard) until caught up,
+       then joins the shared LiveTailHub — the one live pipeline
 
 Spark work (replay scans) runs in worker threads; the event loop only
-shuttles frames. The live tail polls the sequencer state file — the same
-"new data committed?" signal the tick stream uses in
-streaming/subscriptions.py.
+shuttles frames. A server built without a hub (the ingest process's
+metrics listener) serves /metrics and /debug/* and answers /subscribe
+with 503.
 """
 
 from __future__ import annotations
@@ -32,10 +33,11 @@ import threading
 import time
 import urllib.parse
 from dataclasses import dataclass, field
+from http import HTTPStatus
 
 from pyspark.sql import SparkSession
 
-from jetstream_spark.atproto.log import replay, replay_rows
+from jetstream_spark.atproto.log import replay_rows
 from jetstream_spark.operators.observability import prom_label
 from jetstream_spark.atproto.sequencer import SequencerState
 from jetstream_spark.atproto.subscribe import Subscription, SubscriptionError
@@ -136,20 +138,19 @@ class SubscribeServer:
         self.port = port
         self.max_sub_rate = max_sub_rate
         self.sub_buffer = sub_buffer
-        # optional LiveTailHub (serving/hub.py): when set, the live phase is
-        # fed by the ONE shared streaming tail instead of per-sub polling —
-        # the reference's single-live-pipeline topology (server.go:187-238)
+        # LiveTailHub (serving/hub.py): the ONE shared streaming tail every
+        # live phase attaches to — the reference's single-live-pipeline
+        # topology (server.go:187-238). None = metrics-only listener.
         self.hub = hub
         self.registry = Registry()
         # server-level counters (cmd/jetstream/metrics.go names). The
         # reference increments emitted ONCE per event entering Server.Emit,
         # regardless of subscriber count and before per-subscriber filters
-        # (cmd/jetstream/server.go:62-80) — NOT per enqueue. In this pull
-        # topology the analogue is "once per distinct time_us advanced past
-        # the fan-out head": a monotonic gate dedups the same event observed
-        # by N subscribers, and cursor replays/backfills (time_us at or
-        # below the server-start head) never count. Per-subscriber enqueues
-        # live under the engine-specific *_enqueued_total names instead.
+        # (cmd/jetstream/server.go:62-80) — NOT per enqueue. Here that is
+        # the hub's slice hook, gated "once per distinct time_us advanced
+        # past the fan-out head": history at or below the server-start head
+        # never counts, and cursor replay rounds never count. Per-subscriber
+        # enqueues live under the engine-specific *_enqueued_total names.
         # delivered = frames actually written to a subscriber.
         self.events_delivered_total = 0
         self.bytes_delivered_total = 0
@@ -189,31 +190,25 @@ class SubscribeServer:
         # replay_rows, frame rebuilt per attempt: a compaction swap or TTL
         # trim landing between this fetch's file listing and its collect
         # must not drop the subscriber's connection (same contract as the
-        # hub slice loop and the subscription delivery loop; the seq
-        # watermark advances only after a delivered batch)
+        # hub slice loop; the seq watermark advances only after a
+        # delivered batch)
         return replay_rows(
             self.spark,
             self.log_dir,
-            lambda: to_wire(
-                replay(
-                    self.spark,
-                    self.log_dir,
-                    cursor=(sub.seq + 1) if sub.seq else sub.cursor,
-                    wanted_collections=sub.wanted_collections or None,
-                    wanted_dids=sub.wanted_dids or None,
-                ).limit(limit)
-            ).orderBy("time_us"),
+            lambda: to_wire(sub.replay_batch(self.spark, self.log_dir).limit(limit)).orderBy("time_us"),
         )
 
     async def _live_via_hub(self, info: "SubscriberInfo", sub: Subscription, queue: "asyncio.Queue[bytes]") -> None:
         """Attach to the shared LiveTailHub for the live phase. The hub's
         emit callback runs on its tick thread — frames hop to the event loop
-        and enqueue non-blocking: a full buffer drops the subscriber (S19),
-        same policy as the polling path."""
+        and enqueue non-blocking: a full buffer drops the subscriber (S19,
+        server.go:168-175)."""
         loop = asyncio.get_running_loop()
 
         def emit(rows: list) -> None:
             def _push() -> None:
+                if info.dropped:
+                    return
                 for row in rows:
                     frame = row["value"].encode() + b"\n"
                     try:
@@ -225,12 +220,20 @@ class SubscribeServer:
 
             loop.call_soon_threadsafe(_push)
 
-        hub_id = await asyncio.to_thread(self.hub.register, sub, emit)
+        def unregister(registered: asyncio.Future) -> None:
+            if registered.exception() is None:
+                self.hub.unregister(registered.result())
+
+        # shielded: a client that leaves during register's catch-up round
+        # cancels this task, but the round runs on in its thread — the
+        # subscriber is unregistered once it returns instead of leaking
+        registration = asyncio.ensure_future(asyncio.to_thread(self.hub.register, sub, emit))
         try:
+            await asyncio.shield(registration)
             while not info.dropped:
                 await asyncio.sleep(POLL_INTERVAL_S)
         finally:
-            self.hub.unregister(hub_id)
+            registration.add_done_callback(unregister)
 
     # --- HTTP + websocket plumbing ------------------------------------------
 
@@ -257,6 +260,9 @@ class SubscribeServer:
                 return
             if url.path != "/subscribe":
                 await self._respond(writer, 404, "not found")
+                return
+            if self.hub is None:
+                await self._respond(writer, 503, "no live tail on this listener")
                 return
             params = urllib.parse.parse_qs(url.query)
             try:
@@ -322,35 +328,25 @@ class SubscribeServer:
             data = bytes(b ^ mask[i % 4] for i, b in enumerate(data))
         return opcode, data
 
-    def _note_enqueued(self, frame: bytes, time_us: int | None = None) -> None:
+    def _note_enqueued(self, frame: bytes) -> None:
         """Per-subscriber enqueue accounting (engine-specific metric — the
-        reference has no per-enqueue counter), plus the head-gated emitted
-        note when the enqueueing path is the only fan-out observer (no hub:
-        per-subscriber polling IS the fan-out, so the first subscriber to
-        see a new event counts it and the gate dedups the rest)."""
+        reference has no per-enqueue counter)."""
         self.events_enqueued_total += 1
         self.bytes_enqueued_total += len(frame)
-        if time_us is not None and self.hub is None:
-            self._note_event_emitted(time_us, len(frame))
-
-    def _note_event_emitted(self, time_us: int, nbytes: int) -> None:
-        """Count an event entering the fan-out ONCE (server.go:62-80
-        semantics): a monotonic head gate drops duplicates observed by
-        other subscribers and anything at or below the server-start head
-        (cursor replays / backfills). Lock because the hub tick thread and
-        the event loop can both note."""
-        with self._emit_lock:
-            if time_us > self._emitted_head_us:
-                self._emitted_head_us = time_us
-                self.events_emitted_total += 1
-                self.bytes_emitted_total += nbytes
 
     def _note_slice_emitted(self, rows: list) -> None:
-        """Hub hook: one call per tick slice, BEFORE per-subscriber filters
-        (matching the reference's pre-filter Emit increment), independent of
-        how many subscribers the slice fans out to."""
-        for row in rows:
-            self._note_event_emitted(row["time_us"], len(row["value"].encode()) + 1)
+        """Hub hook: count each event entering the fan-out ONCE
+        (server.go:62-80 semantics), before per-subscriber filters and
+        independent of how many subscribers the slice fans out to. A
+        monotonic head gate drops slices re-collected for a catching-up
+        subscriber and anything at or below the server-start head. Lock
+        because registration catch-up and the tick thread both call this."""
+        with self._emit_lock:
+            for row in rows:
+                if row["time_us"] > self._emitted_head_us:
+                    self._emitted_head_us = row["time_us"]
+                    self.events_emitted_total += 1
+                    self.bytes_emitted_total += len(row["value"].encode()) + 1
 
     def _metrics_text(self) -> str:
         """Prometheus text exposition — the scrape surface the reference
@@ -434,7 +430,7 @@ class SubscribeServer:
             await self._respond(writer, 404, "not found")
 
     async def _respond(self, writer: asyncio.StreamWriter, code: int, msg: str) -> None:
-        reason = {200: "OK", 400: "Bad Request", 404: "Not Found", 405: "Method Not Allowed"}[code]
+        reason = HTTPStatus(code).phrase
         body = msg.encode() + b"\n"
         writer.write(
             f"HTTP/1.1 {code} {reason}\r\nContent-Length: {len(body)}\r\n"
@@ -454,8 +450,16 @@ class SubscribeServer:
             # live tail: start at the current head (server.go:274-287 —
             # no cursor ⇒ only new events), the S18 guard does the rest
             sub.seq = self._head()
+        else:
+            # cursor-inclusive: everything below the cursor counts as seen,
+            # so the hub never backfills history the cursor excluded
+            sub.advance(sub.cursor - 1)
         info = self.registry.add(sub, ip=ip)
-        limiter = TokenBucket(self.max_sub_rate * (PLAYBACK_MULT if sub.cursor is not None else 1))
+        limiter = TokenBucket(self.max_sub_rate * PLAYBACK_MULT)
+        # replay frames queued but not yet written: they all precede the
+        # first live frame in the FIFO, so each is paced at the playback
+        # rate and everything after at the live rate (server.go:307)
+        replayed = 0
         queue: asyncio.Queue[bytes] = asyncio.Queue(maxsize=self.sub_buffer)
         if ws_key is not None:
             writer.write(
@@ -472,39 +476,26 @@ class SubscribeServer:
         await writer.drain()
 
         async def producer() -> None:
-            """Replay rounds then live tail; S18 guard via sub.seq. The live
-            phase is either per-sub polling (no hub) or the shared streaming
-            tail fan-out (hub set — S15 cutover onto the single live feed)."""
+            """Replay rounds (cursor set) until caught up or a round comes
+            back empty, then the shared live tail (S15 cutover onto the hub;
+            its registration catch-up closes any gap, the S18 guard drops
+            any overlap)."""
+            nonlocal replayed
             try:
-                while not info.dropped:
-                    if self.hub is not None and (sub.cursor is None or sub.caught_up(self._head())):
-                        await self._live_via_hub(info, sub, queue)
-                        return
-                    head = self._head()
+                while sub.cursor is not None and not info.dropped:
                     batch = await asyncio.to_thread(self._fetch_batch, sub, self.sub_buffer)
-                    if batch:
-                        playback = sub.cursor is not None and not sub.caught_up(head)
-                        for row in batch:
-                            frame = row["value"].encode() + b"\n"
-                            if playback:
-                                await queue.put(frame)  # replay: blocking = backpressure
-                            else:
-                                try:
-                                    queue.put_nowait(frame)  # live: full buffer ⇒ drop
-                                except asyncio.QueueFull:
-                                    info.dropped = True
-                                    return
-                            self._note_enqueued(frame, time_us=row["time_us"])
-                        sub.advance(batch[-1]["time_us"])
-                        limiter.rate = self.max_sub_rate * (
-                            PLAYBACK_MULT if not sub.caught_up(self._head()) else 1
-                        )
-                    elif self.hub is not None:
-                        # empty round at head: cut over to the shared tail
-                        await self._live_via_hub(info, sub, queue)
-                        return
-                    else:
-                        await asyncio.sleep(POLL_INTERVAL_S)
+                    if not batch:
+                        break
+                    for row in batch:
+                        frame = row["value"].encode() + b"\n"
+                        replayed += 1
+                        await queue.put(frame)  # replay: blocking = backpressure
+                        self._note_enqueued(frame)
+                    sub.advance(batch[-1]["time_us"])
+                    if sub.caught_up(self._head()):
+                        break
+                if not info.dropped:
+                    await self._live_via_hub(info, sub, queue)
             finally:
                 await queue.put(b"")  # sentinel
 
@@ -536,6 +527,10 @@ class SubscribeServer:
                 frame = await queue.get()
                 if not frame:
                     break
+                if replayed:
+                    replayed -= 1
+                else:
+                    limiter.rate = self.max_sub_rate
                 await limiter.wait()
                 if ws_key is not None:
                     # the reference's framing: one JSON text frame per event

@@ -39,6 +39,7 @@ from jetstream_spark.atproto.log import replay, replay_rows
 from jetstream_spark.atproto.sequencer import SequencerState
 from jetstream_spark.atproto.subscribe import Subscription
 from jetstream_spark.atproto.wire import to_wire
+from jetstream_spark.serving.edge import MAX_SUB_RATE, PLAYBACK_MULT
 
 
 def _matches(row, collections: frozenset[str], dids: frozenset[str]) -> bool:
@@ -71,12 +72,12 @@ class LiveTailHub:
         checkpoint_dir: str,
         batch_limit: int | None = None,
     ):
-        from jetstream_spark.streaming.subscriptions import _default_batch_limit
-
         self.spark = spark
         self.log_dir = log_dir
         self.checkpoint_dir = checkpoint_dir
-        self.batch_limit = batch_limit or _default_batch_limit()
+        # one second of replay at the contract rate (persist.go:149's 10×
+        # playback multiplier over main.go:79-84's 5k/s live ceiling)
+        self.batch_limit = batch_limit or MAX_SUB_RATE * PLAYBACK_MULT
         self._subs: dict[int, _HubSub] = {}
         self._next_id = 0
         # optional observer called ONCE per collected slice, before the
@@ -123,10 +124,12 @@ class LiveTailHub:
         tick = (
             self.spark.readStream.schema("time_us bigint, hour_bucket bigint")
             .option("maxFilesPerTrigger", 1000)
-            # same contract as start_subscription's tick: the heartbeat
-            # must not die on files a TTL trim removed between listing and
-            # read — delivery correctness lives in the seq-guarded replay
-            # re-read (_on_tick), not in this stream's contents
+            # the heartbeat must not die on files a TTL trim removed
+            # between listing and read — delivery correctness lives in the
+            # seq-guarded replay re-read (_on_tick), not in this stream's
+            # contents. Deliberately NOT set on the replay reads: there a
+            # vanished file can be a mid-compaction swap whose data lives on
+            # at the aside copy, and replay_rows' re-plan retry is the tool
             .option("ignoreMissingFiles", "true")
             .parquet(self.log_dir)
         )
@@ -174,9 +177,9 @@ class LiveTailHub:
             # replay_rows, frame rebuilt per attempt: a compaction swap or
             # TTL trim landing between this slice's file listing and its
             # collect must not kill the ONE query every subscriber shares
-            # (same contract as the subscription path's delivery loop;
-            # watermarks advance only after a delivered slice, so the
-            # retry is exactly-once)
+            # (same contract as the edge's replay rounds; watermarks
+            # advance only after a delivered slice, so the retry is
+            # exactly-once)
             rows = replay_rows(
                 self.spark,
                 self.log_dir,

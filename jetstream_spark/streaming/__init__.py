@@ -1,1 +1,1 @@
-"""Structured Streaming: the standing ingest pipeline and live subscriptions."""
+"""Structured Streaming: the standing ingest pipeline and the streaming analytics."""

@@ -117,3 +117,20 @@ def make_frames(n_commits: int = 40, seed: int = 7) -> list[dict]:
         }
     )
     return frames
+
+
+def drain_via_edge(spark, log_dir: str, sub, limit: int, deliver) -> int:
+    """A cursor subscriber's replay rounds as the serving edge runs them —
+    SubscribeServer._fetch_batch, deliver, sub.advance — but drained until
+    a round comes back empty instead of stopping once caught up, so a test
+    sees the whole log (or what maintenance left of it). Returns the
+    delivered count."""
+    from jetstream_spark.serving.edge import SubscribeServer
+
+    server = SubscribeServer(spark, log_dir)
+    delivered = 0
+    while batch := server._fetch_batch(sub, limit):
+        deliver(batch)
+        delivered += len(batch)
+        sub.advance(batch[-1]["time_us"])
+    return delivered

@@ -13,6 +13,7 @@ from jetstream_spark.atproto.normalize import normalize_frames
 from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
 from jetstream_spark.client import JetstreamClient, ParallelScheduler, SequentialScheduler
 from jetstream_spark.serving.edge import run_server_in_thread
+from jetstream_spark.serving.hub import LiveTailHub
 from tests.fixtures import make_frames
 
 
@@ -22,11 +23,14 @@ def edge(spark, tmp_path_factory):
     frames = spark.createDataFrame(make_frames(), schema=RAW_FRAME_SCHEMA)
     normalized = normalize_frames(frames).cache()
     eventlog.ingest_batch(normalized, log_dir, wall_clock_us=1_000_000)
-    server, _ = run_server_in_thread(spark, log_dir)
+    hub = LiveTailHub(spark, log_dir, str(tmp_path_factory.mktemp("hubckpt")))
+    hub.start()
+    server, _ = run_server_in_thread(spark, log_dir, hub=hub)
     yield server, log_dir
     import asyncio
 
     asyncio.run_coroutine_threadsafe(server.stop(), server._loop).result(timeout=10)
+    hub.stop()
 
 
 def test_sequential_scheduler_stream_order(edge, spark):

@@ -73,8 +73,8 @@ def test_edge_hub_cutover_no_dup_no_gap_under_concurrent_writes(spark, tmp_path)
 @pytest.mark.timeout(300)
 def test_edge_hub_drops_slow_consumer(spark, tmp_path):
     """S19 on the hub path: a live subscriber whose buffer overflows is
-    dropped (non-blocking enqueue), exactly like the polling path — the
-    reference closes the websocket on a full channel (server.go:168-175)."""
+    dropped (non-blocking enqueue) — the reference closes the websocket on
+    a full channel (server.go:168-175)."""
     log_dir = str(tmp_path / "log")
     frames = spark.createDataFrame(make_frames(), schema=RAW_FRAME_SCHEMA)
     normalized = normalize_frames(frames).cache()
@@ -227,3 +227,54 @@ def test_hub_register_unregister_never_block_on_a_slow_collect(spark, tmp_path, 
     # the subscriber dropped while the first round's slice was in flight
     # must not be emitted to when that slice finally lands
     assert got1 == []
+
+
+@pytest.mark.timeout(300)
+def test_cursor_past_last_match_never_backfills_history(spark, tmp_path):
+    """A filtered cursor subscriber whose first replay round comes back
+    empty (nothing matching at or after the cursor) joins the hub with the
+    cursor as its watermark: it must receive only events at or after the
+    cursor, never the matching history the cursor excluded."""
+    from pyspark.sql import functions as F
+
+    log_dir = str(tmp_path / "log")
+    frames = spark.createDataFrame(make_frames(), schema=RAW_FRAME_SCHEMA)
+    normalized = normalize_frames(frames).cache()
+    head = eventlog.ingest_batch(normalized, log_dir, wall_clock_us=1_000_000, batch_id=0)
+    log = eventlog.read_log(spark, log_dir)
+    head_did = log.where(F.col("time_us") == head).first()["did"]
+    did = sorted({r["did"] for r in log.select("did").distinct().collect()} - {head_did})[0]
+    assert log.where(F.col("did") == did).count() > 0  # history the cursor excludes
+
+    hub = LiveTailHub(spark, log_dir, str(tmp_path / "hubckpt"))
+    hub.start()
+    server, _ = run_server_in_thread(spark, log_dir, hub=hub)
+    try:
+        conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=120)
+        conn.request("GET", f"/subscribe?cursor={head}&wantedDids={did}")
+        resp = conn.getresponse()
+        assert resp.status == 200
+        deadline = time.time() + 60
+        while time.time() < deadline and not hub._subs:
+            time.sleep(0.1)
+        assert hub._subs, "subscriber never reached the hub"
+        head2 = eventlog.ingest_batch(normalized, log_dir, wall_clock_us=head + 1, batch_id=1)
+        expected = eventlog.replay(spark, log_dir, cursor=head, wanted_dids=[did]).count()
+        assert expected > 0
+        got: list[dict] = []
+        while len(got) < expected:
+            line = resp.readline()
+            if not line:
+                break
+            got.append(json.loads(line))
+        conn.close()
+    finally:
+        import asyncio
+
+        asyncio.run_coroutine_threadsafe(server.stop(), server._loop).result(timeout=10)
+        hub.stop()
+
+    assert len(got) == expected
+    assert all(head < f["time_us"] <= head2 and f["did"] == did for f in got), (
+        "history before the cursor leaked through the hub"
+    )

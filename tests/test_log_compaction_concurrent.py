@@ -14,8 +14,8 @@ listing-to-execution race, exactly-once because consumers advance their
 cursor only after a delivered chunk.
 
 Coverage: every mid-swap state pinned DETERMINISTICALLY (no timing
-luck), then a threaded soak interleaving a real cursor-paced backfill
-consumer with live swap cycles.
+luck), then a threaded soak interleaving the edge's cursor-paced replay
+rounds with live swap cycles.
 """
 
 from __future__ import annotations
@@ -31,8 +31,7 @@ from jetstream_spark.atproto import log as eventlog
 from jetstream_spark.atproto.normalize import normalize_frames
 from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
 from jetstream_spark.atproto.subscribe import Subscription
-from jetstream_spark.streaming.subscriptions import backfill, start_subscription
-from tests.fixtures import make_frames
+from tests.fixtures import drain_via_edge, make_frames
 
 
 @pytest.fixture(scope="module")
@@ -130,69 +129,13 @@ def _swap_cycle(spark, log_dir: str, bucket: int = 0) -> None:
     spark.catalog.refreshByPath(part)  # the post-commit refresh compact_bucket does
 
 
-def test_start_subscription_survives_mid_chunk_swap(spark, tmp_path, normalized):
-    """ADVICE r8 (medium): the live-tail delivery loop's compaction-swap
-    retry must REBUILD its replay frame on every attempt. The old code
-    captured a pre-built frame in the retry lambda, so after a swap landed
-    between the frame's file listing and its collect, all 8 attempts
-    re-collected the same vanished file names and the foreachBatch query
-    crashed. This pins the race DETERMINISTICALLY: the first replay frame
-    the live loop builds gets a swap injected right after its listing, so
-    attempt 1 must fail mid-chunk and the retry only succeeds if it
-    re-lists via a fresh frame."""
-    log_dir = _mk_log(spark, tmp_path, normalized, n_batches=3)
-    expected = _replay_keys(spark, log_dir)
-    head = max(t for t, _ in expected)
-
-    real_replay = eventlog.replay
-    swapped: list = []
-
-    def racy_replay(spark_, log_dir_, **kw):
-        df = real_replay(spark_, log_dir_, **kw)
-        if not swapped:  # first frame only: swap lands AFTER its listing
-            swapped.append(1)
-            _swap_cycle(spark, log_dir)
-        return df
-
-    delivered: list = []
-    sub = Subscription()  # cursor=None: live tail only, seq starts at 0
-    ckpt = str(tmp_path / "subckpt")
-    old = eventlog.replay
-    eventlog.replay = racy_replay
-    try:
-        q = start_subscription(
-            spark,
-            log_dir,
-            sub,
-            server_head_us=lambda: head,
-            deliver=lambda rows: delivered.extend(rows),
-            checkpoint_dir=ckpt,
-            batch_limit=7,  # several rounds -> the injected swap hits round 1
-            rate_per_s=1e9,
-        )
-        try:
-            q.processAllAvailable()
-            assert q.exception() is None, q.exception()
-        finally:
-            q.stop()
-    finally:
-        eventlog.replay = old
-
-    assert swapped, "the race was never injected"
-    got = [(r["time_us"], r["did"]) for r in delivered]
-    assert sorted(got) == expected, "missed or duplicated events across the swap"
-    times = [t_ for t_, _ in got]
-    assert times == sorted(times), "delivery order broke across the swap"
-
-
 def test_backfill_interleaved_with_live_compaction(spark, tmp_path, normalized):
-    """The real cursor-paced replay consumer drains the log while a
+    """The edge's cursor-paced replay rounds drain the log while a
     compactor thread cycles the swap concurrently (first the real
     compact_bucket, then repeated content-preserving swap cycles):
     delivery must be complete, duplicate-free, and time-ordered."""
     log_dir = _mk_log(spark, tmp_path, normalized, n_batches=4)
     expected = _replay_keys(spark, log_dir)
-    head = max(t for t, _ in expected)
 
     stop = threading.Event()
     compactor_error: list = []
@@ -214,17 +157,8 @@ def test_backfill_interleaved_with_live_compaction(spark, tmp_path, normalized):
     t.start()
     try:
         time.sleep(0.2)  # let the first swap cycles start
-        sub = Subscription(cursor=0)
-        n = backfill(
-            spark,
-            log_dir,
-            sub,
-            server_head_us=lambda: head + 10**12,  # never "caught up" early
-            deliver=lambda rows: delivered.extend(rows),
-            max_rounds=1000,
-            batch_limit=7,  # many small rounds -> many listing windows
-            rate_per_s=1e9,
-        )
+        # many small rounds -> many listing windows
+        n = drain_via_edge(spark, log_dir, Subscription(cursor=0), 7, delivered.extend)
     finally:
         stop.set()
         t.join(timeout=60)
@@ -239,8 +173,8 @@ def test_backfill_interleaved_with_live_compaction(spark, tmp_path, normalized):
 
 
 def test_hub_delivery_survives_mid_slice_swap(spark, tmp_path, normalized):
-    """The shared LiveTailHub slice loop gets the same deterministic pin
-    as the per-subscriber delivery loop: a compaction swap lands right
+    """The shared LiveTailHub slice loop, deterministically pinned: a
+    compaction swap lands right
     after the FIRST slice frame's file listing, so its collect fails on
     the vanished pre-swap files. The hub must retry with a rebuilt frame
     and deliver the COMPLETE log (the swap keeps a full copy at every

@@ -145,7 +145,7 @@ def test_loop_runs_beside_a_draining_consumer(spark, tmp_path, normalized):
     while a cursor-paced consumer drains — the conservation invariant of
     the churn soak, but through the production MaintenanceLoop."""
     from jetstream_spark.atproto.subscribe import Subscription
-    from jetstream_spark.streaming.subscriptions import backfill
+    from tests.fixtures import drain_via_edge
 
     log_dir = str(tmp_path / "log")
     for b in range(4):
@@ -173,16 +173,7 @@ def test_loop_runs_beside_a_draining_consumer(spark, tmp_path, normalized):
     ).start()
     delivered: list = []
     try:
-        backfill(
-            spark,
-            log_dir,
-            Subscription(cursor=0),
-            server_head_us=lambda: 10**15,
-            deliver=lambda rows: delivered.extend(rows),
-            max_rounds=1000,
-            batch_limit=7,
-            rate_per_s=1e9,
-        )
+        drain_via_edge(spark, log_dir, Subscription(cursor=0), 7, delivered.extend)
     finally:
         loop.stop()
     assert loop.counters["errors"] == 0
@@ -192,7 +183,7 @@ def test_loop_runs_beside_a_draining_consumer(spark, tmp_path, normalized):
     times = [t for t, _ in got]
     assert times == sorted(times)
     missed = set(all_keys) - set(got)
-    # ticks expire 24 then 25 (clock stops mattering once backfill ends);
+    # ticks expire 24 then 25 (clock stops mattering once the drain ends);
     # buckets 26-27 can never have expired
     assert missed <= by_bucket[24] | by_bucket[25], "maintenance lost unexpired events"
     assert by_bucket[26] | by_bucket[27] <= set(got)

@@ -13,6 +13,7 @@ from jetstream_spark.atproto import log as eventlog
 from jetstream_spark.atproto.normalize import normalize_frames
 from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
 from jetstream_spark.serving.edge import run_server_in_thread
+from jetstream_spark.serving.hub import LiveTailHub
 from tests.fixtures import make_frames
 
 
@@ -22,11 +23,14 @@ def edge(spark, tmp_path_factory):
     frames = spark.createDataFrame(make_frames(), schema=RAW_FRAME_SCHEMA)
     normalized = normalize_frames(frames).cache()
     eventlog.ingest_batch(normalized, log_dir, wall_clock_us=1_000_000)
-    server, thread = run_server_in_thread(spark, log_dir)
+    hub = LiveTailHub(spark, log_dir, str(tmp_path_factory.mktemp("hubckpt")))
+    hub.start()
+    server, _ = run_server_in_thread(spark, log_dir, hub=hub)
     yield server, log_dir, normalized
     import asyncio
 
     asyncio.run_coroutine_threadsafe(server.stop(), server._loop).result(timeout=10)
+    hub.stop()
 
 
 def _read_frames(port: int, path: str, n: int, timeout: float = 60.0) -> list[dict]:
@@ -166,3 +170,76 @@ def test_registry_tracks_and_clears(edge, spark):
     total = eventlog.read_log(spark, log_dir).count()
     _read_frames(server.port, "/subscribe?cursor=0", total)
     assert _wait_registry_empty(server), "registry must clear on disconnect"
+
+
+def test_cursor_replay_paced_at_playback_rate(spark, tmp_path):
+    """S20 on the edge (server.go:307): frames replayed from a cursor are
+    written at max_sub_rate × PLAYBACK_MULT (burst = one second), not at
+    the live rate, and pacing drops nothing. The rate is set so the whole
+    log is two seconds' worth of playback, i.e. twenty of live."""
+    import asyncio
+    import time
+
+    from jetstream_spark.serving.edge import PLAYBACK_MULT
+
+    log_dir = str(tmp_path / "log")
+    frames_df = spark.createDataFrame(make_frames(), schema=RAW_FRAME_SCHEMA)
+    eventlog.ingest_batch(normalize_frames(frames_df), log_dir, wall_clock_us=1_000_000)
+    total = eventlog.read_log(spark, log_dir).count()
+    assert total >= 20
+    live_rate = total / (2 * PLAYBACK_MULT)
+    playback_rate = live_rate * PLAYBACK_MULT
+
+    hub = LiveTailHub(spark, log_dir, str(tmp_path / "hubckpt"))
+    hub.start()
+    server, _ = run_server_in_thread(spark, log_dir, hub=hub, max_sub_rate=live_rate)
+    try:
+        conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=120)
+        conn.request("GET", "/subscribe?cursor=0")
+        resp = conn.getresponse()
+        assert resp.status == 200
+        got, stamps = [], []
+        while len(got) < total:
+            line = resp.readline()
+            if not line:
+                break
+            got.append(json.loads(line))
+            stamps.append(time.monotonic())
+        conn.close()
+    finally:
+        asyncio.run_coroutine_threadsafe(server.stop(), server._loop).result(timeout=10)
+        hub.stop()
+
+    times = [f["time_us"] for f in got]
+    assert len(got) == total, "pacing must not drop events"
+    assert times == sorted(times) and len(set(times)) == total
+    # first frame -> last frame excludes the replay fetch: the burst covers
+    # one second's worth, the rest waits for refill
+    elapsed = stamps[-1] - stamps[0]
+    assert elapsed >= (total - playback_rate) / playback_rate * 0.8, (
+        f"replay of {total} at {playback_rate}/s finished in {elapsed:.2f}s — not paced"
+    )
+    assert elapsed < (total - live_rate) / live_rate * 0.5, (
+        f"replay of {total} took {elapsed:.2f}s — paced at the live rate, not playback"
+    )
+
+
+def test_subscribe_without_hub_is_503(edge, spark):
+    """A listener built without a LiveTailHub (ingest --metrics-addr) has
+    no live tail to serve: /subscribe answers 503 while /metrics and the
+    debug surface keep working."""
+    import asyncio
+
+    _, log_dir, _ = edge
+    server, _ = run_server_in_thread(spark, log_dir)
+    try:
+        for path, status in (("/subscribe?cursor=0", 503), ("/subscribe", 503), ("/metrics", 200)):
+            conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=30)
+            conn.request("GET", path)
+            resp = conn.getresponse()
+            assert resp.status == status, path
+            resp.read()
+            conn.close()
+        assert not server.registry.subscribers
+    finally:
+        asyncio.run_coroutine_threadsafe(server.stop(), server._loop).result(timeout=10)

@@ -1,5 +1,6 @@
 """Streaming tests (SURVEY.md §5.2 item 4): checkpointed ingest with
-kill/resume (S12 cursor semantics) and subscription replay→live cutover (H2)."""
+kill/resume (S12 cursor semantics) and filtered cursor replay; the
+replay→live cutover (H2) is pinned end to end in test_edge_hub.py."""
 
 from __future__ import annotations
 
@@ -12,8 +13,7 @@ from pyspark.sql import functions as F
 from jetstream_spark.atproto import log as eventlog
 from jetstream_spark.atproto.subscribe import Subscription
 from jetstream_spark.streaming.pipeline import start_ingest
-from jetstream_spark.streaming.subscriptions import backfill, start_subscription
-from tests.fixtures import make_frames
+from tests.fixtures import drain_via_edge, make_frames
 
 
 def _write_frame_file(frames_dir: str, frames: list[dict], name: str) -> None:
@@ -84,46 +84,6 @@ def test_ingest_batch_idempotent_crash_replay(spark, tmp_path):
 
 
 @pytest.mark.timeout(300)
-def test_subscription_replay_then_live_gapless(spark, tmp_path):
-    """H2: backfill from cursor, cut over to live tail, new events keep
-    flowing; no duplicates, no gaps, order preserved."""
-    from jetstream_spark.atproto.normalize import normalize_frames
-    from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
-
-    log_dir = str(tmp_path / "log")
-    ckpt = str(tmp_path / "subckpt")
-    frames = make_frames()
-    fdf = spark.createDataFrame(frames, schema=RAW_FRAME_SCHEMA)
-    normalized = normalize_frames(fdf).cache()
-    head = eventlog.ingest_batch(normalized, log_dir, wall_clock_us=1_000_000)
-
-    sub = Subscription.parse(cursor="0", server_time_us=head)
-    sub.cursor = 0
-    got: list = []
-    q = start_subscription(
-        spark, log_dir, sub, server_head_us=lambda: head, deliver=got.extend, checkpoint_dir=ckpt
-    )
-    try:
-        q.processAllAvailable()
-        n_after_backfill = len(got)
-        assert n_after_backfill > 0
-
-        # live phase: append a new batch to the log; the stream must pick it up
-        head2 = eventlog.ingest_batch(normalized, log_dir, wall_clock_us=head + 1)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    times = [r["time_us"] for r in got]
-    assert times == sorted(times), "per-subscriber delivery must be time-ordered"
-    assert len(times) == len(set(times)), "no duplicates across replay→live cutover"
-    expected = eventlog.read_log(spark, log_dir).count()
-    assert len(times) == expected, "no gaps: everything in the log was delivered"
-    wire_frame = json.loads(got[0]["value"])
-    assert {"did", "time_us", "type"}.issubset(wire_frame)
-
-
-@pytest.mark.timeout(300)
 def test_backfill_respects_filters_and_seq(spark, tmp_path):
     from jetstream_spark.atproto.normalize import normalize_frames
     from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
@@ -138,57 +98,15 @@ def test_backfill_respects_filters_and_seq(spark, tmp_path):
     )
     sub.cursor = 0
     got: list = []
-    backfill(spark, log_dir, sub, server_head_us=lambda: head, deliver=got.extend)
-    assert got, "backfill delivered nothing"
+    drain_via_edge(spark, log_dir, sub, 7, got.extend)
+    assert got, "replay delivered nothing"
+    times = [r["time_us"] for r in got]
+    assert times == sorted(times) and len(set(times)) == len(times), "seq guard across rounds"
+    assert len(got) == eventlog.replay(spark, log_dir, wanted_collections=["app.bsky.feed.post"]).count()
     for r in got:
         if r["type"] == "com":
             assert r["collection"] == "app.bsky.feed.post"
     assert {r["type"] for r in got} >= {"com", "acc", "id"}, "bypass rule must hold in backfill"
-
-
-@pytest.mark.timeout(300)
-def test_backfill_replay_rate_limit(spark, tmp_path):
-    """persist.go:149 analogue: the ENGINE paces the replay loop at
-    rate_per_s (burst = one second), independent of the edge's limiter."""
-    import time as _time
-
-    from jetstream_spark.atproto.normalize import normalize_frames
-    from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
-    from jetstream_spark.atproto.subscribe import CUTOVER_THRESHOLD_US
-
-    log_dir = str(tmp_path / "log")
-    fdf = spark.createDataFrame(make_frames(), schema=RAW_FRAME_SCHEMA)
-    normalized = normalize_frames(fdf)
-    head = eventlog.ingest_batch(normalized, log_dir, wall_clock_us=1_000_000)
-    total = eventlog.read_log(spark, log_dir).count()
-    assert total >= 20
-
-    # keep the reported head far ahead so the loop replays the whole log
-    # instead of cutting over to live after its first round
-    far_head = head + 10 * CUTOVER_THRESHOLD_US
-
-    def run(rate):
-        sub = Subscription.parse(cursor="0", server_time_us=head)
-        sub.cursor = 0
-        got: list = []
-        t0 = _time.monotonic()
-        n = backfill(
-            spark, log_dir, sub, server_head_us=lambda: far_head, deliver=got.extend,
-            batch_limit=max(1, total // 5), rate_per_s=rate,
-        )
-        return n, _time.monotonic() - t0
-
-    n_fast, _ = run(float("inf"))
-    assert n_fast == total
-
-    # burst covers the first second's worth; the rest must wait for refill:
-    # expected extra wall time >= (total - rate) / rate
-    rate = total / 2.0
-    n_slow, elapsed = run(rate)
-    assert n_slow == total, "pacing must not drop events"
-    assert elapsed >= (total - rate) / rate * 0.8, (
-        f"replay of {total} at {rate}/s finished in {elapsed:.2f}s — not paced"
-    )
 
 
 @pytest.mark.timeout(300)

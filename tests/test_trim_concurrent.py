@@ -32,8 +32,8 @@ from jetstream_spark.atproto.log import US_PER_HOUR
 from jetstream_spark.atproto.normalize import normalize_frames
 from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
 from jetstream_spark.atproto.subscribe import Subscription
-from jetstream_spark.streaming.subscriptions import backfill
-from tests.fixtures import make_frames
+from jetstream_spark.serving.hub import LiveTailHub
+from tests.fixtures import drain_via_edge, make_frames
 
 
 @pytest.fixture(scope="module")
@@ -87,16 +87,7 @@ def test_backfill_survives_concurrent_ttl_trim(spark, tmp_path, normalized):
     delivered: list = []
     eventlog.replay = racy_replay
     try:
-        n = backfill(
-            spark,
-            log_dir,
-            Subscription(cursor=0),
-            server_head_us=lambda: 10**15,  # never "caught up" early: drain to empty
-            deliver=lambda rows: delivered.extend(rows),
-            max_rounds=1000,
-            batch_limit=7,
-            rate_per_s=1e9,
-        )
+        n = drain_via_edge(spark, log_dir, Subscription(cursor=0), 7, delivered.extend)
     finally:
         eventlog.replay = real_replay
 
@@ -137,16 +128,7 @@ def test_backfill_survives_planning_time_trim_race(spark, tmp_path, normalized, 
     delivered: list = []
     monkeypatch.setattr(eventlog.os, "listdir", stale_listdir)
     try:
-        n = backfill(
-            spark,
-            log_dir,
-            Subscription(cursor=0),
-            server_head_us=lambda: 10**15,
-            deliver=lambda rows: delivered.extend(rows),
-            max_rounds=1000,
-            batch_limit=7,
-            rate_per_s=1e9,
-        )
+        n = drain_via_edge(spark, log_dir, Subscription(cursor=0), 7, delivered.extend)
     finally:
         monkeypatch.undo()
 
@@ -176,28 +158,18 @@ def test_vanished_subpath_classifier():
 
 
 def test_live_subscription_survives_ttl_trim_between_ticks(spark, tmp_path, normalized):
-    """Race 1 on the live-tail path: a subscriber attached to the log keeps
+    """Race 1 on the live-tail path: a subscriber attached to the hub keeps
     delivering across a TTL trim of already-delivered buckets — the tick
     stream must not die on vanished files (ignoreMissingFiles: the tick is
     a heartbeat, delivery is the seq-guarded replay re-read), and events
     ingested AFTER the trim must still arrive complete and in order."""
-    from jetstream_spark.streaming.subscriptions import start_subscription
-
     log_dir = _mk_hourly_log(spark, tmp_path, normalized)
     all_keys = _keys(eventlog.replay(spark, log_dir).collect())
 
     delivered: list = []
-    sub = Subscription()  # cursor=None: live tail from seq 0
-    q = start_subscription(
-        spark,
-        log_dir,
-        sub,
-        server_head_us=lambda: 0,
-        deliver=lambda rows: delivered.extend(rows),
-        checkpoint_dir=str(tmp_path / "subckpt"),
-        batch_limit=7,
-        rate_per_s=1e9,
-    )
+    hub = LiveTailHub(spark, log_dir, str(tmp_path / "hubckpt"), batch_limit=7)
+    hub.register(Subscription(), delivered.extend)  # live tail from seq 0
+    q = hub.start()
     try:
         q.processAllAvailable()
         assert q.exception() is None, q.exception()
@@ -213,9 +185,9 @@ def test_live_subscription_survives_ttl_trim_between_ticks(spark, tmp_path, norm
         )
         eventlog.mark_batch_done(log_dir, 9)
         q.processAllAvailable()
-        assert q.exception() is None, f"subscription died across the trim: {q.exception()}"
+        assert q.exception() is None, f"hub tick died across the trim: {q.exception()}"
     finally:
-        q.stop()
+        hub.stop()
 
     new_keys = [
         k
@@ -248,35 +220,31 @@ def test_ignore_missing_files_suppresses_task_time_vanish(spark, tmp_path, norma
 
 
 def test_subscription_restart_from_checkpoint_after_trim(spark, tmp_path, normalized):
-    """A subscriber that detaches, misses a TTL trim while down, and
-    reattaches from the SAME checkpoint: the file source's seen-file log
-    references files that no longer exist, and the restart must come up
-    clean and deliver exactly the events appended since (seq guard), not
-    crash on the vanished history. This is the reference's reconnect-
-    after-downtime shape (server.go:240-356 with a cursor inside the
-    retention window while older data expired)."""
-    from jetstream_spark.streaming.subscriptions import start_subscription
-
+    """A hub that stops, misses a TTL trim while down, and restarts from
+    the SAME checkpoint (serve reuses `_hub_ckpt` across restarts): the
+    file source's seen-file log references files that no longer exist, and
+    the restart must come up clean and deliver exactly the events appended
+    since (seq guard) to the reattached subscriber, not crash on the
+    vanished history. This is the reference's reconnect-after-downtime
+    shape (server.go:240-356 with a cursor inside the retention window
+    while older data expired)."""
     log_dir = _mk_hourly_log(spark, tmp_path, normalized)
     all_keys = _keys(eventlog.replay(spark, log_dir).collect())
-    ckpt = str(tmp_path / "subckpt")
+    ckpt = str(tmp_path / "hubckpt")
 
     delivered: list = []
     sub = Subscription()  # live tail from seq 0
-    q = start_subscription(
-        spark, log_dir, sub,
-        server_head_us=lambda: 0,
-        deliver=lambda rows: delivered.extend(rows),
-        checkpoint_dir=ckpt, batch_limit=7, rate_per_s=1e9,
-    )
+    hub = LiveTailHub(spark, log_dir, ckpt, batch_limit=7)
+    hub.register(sub, delivered.extend)
+    q = hub.start()
     try:
         q.processAllAvailable()
         assert q.exception() is None, q.exception()
     finally:
-        q.stop()
+        hub.stop()
     assert len(delivered) == len(all_keys)
 
-    # while detached: retention passes, then fresh events land
+    # while down: retention passes, then fresh events land
     assert eventlog.trim_events(
         spark, log_dir, now_us=US_PER_HOUR + eventlog.DEFAULT_TTL_US
     ) == 1
@@ -286,17 +254,21 @@ def test_subscription_restart_from_checkpoint_after_trim(spark, tmp_path, normal
     eventlog.mark_batch_done(log_dir, 9)
 
     resumed: list = []
-    q2 = start_subscription(
-        spark, log_dir, sub,  # same sub: seq is the subscriber's watermark
-        server_head_us=lambda: 0,
-        deliver=lambda rows: resumed.extend(rows),
-        checkpoint_dir=ckpt, batch_limit=7, rate_per_s=1e9,
-    )
+    hub2 = LiveTailHub(spark, log_dir, ckpt, batch_limit=7)
+    hub2.register(sub, resumed.extend)  # same sub: seq is its watermark
+    q2 = hub2.start()
     try:
         q2.processAllAvailable()
         assert q2.exception() is None, f"restart died on trimmed history: {q2.exception()}"
+        # and the restarted tail keeps delivering what lands after it
+        eventlog.ingest_batch(
+            normalized, log_dir, wall_clock_us=3 * US_PER_HOUR + 2_000, batch_id=10
+        )
+        eventlog.mark_batch_done(log_dir, 10)
+        q2.processAllAvailable()
+        assert q2.exception() is None, q2.exception()
     finally:
-        q2.stop()
+        hub2.stop()
 
     new_keys = [
         k
@@ -446,17 +418,17 @@ def test_hub_delivery_survives_mid_slice_trim(spark, tmp_path, normalized):
 
 
 def test_edge_fetch_survives_mid_batch_trim(spark, tmp_path, normalized):
-    """Race 1 on the websocket edge's replay/polling path: _fetch_batch's
-    frame is listed pre-trim and collected post-trim. The retry must
-    rebuild and return the surviving events instead of dropping the
-    subscriber's connection."""
+    """Race 1 on the websocket edge's replay path: _fetch_batch's frame
+    (built by Subscription.replay_batch over atproto.log.replay) is listed
+    pre-trim and collected post-trim. The retry must rebuild and return
+    the surviving events instead of dropping the subscriber's connection."""
     from jetstream_spark.serving import edge as edgemod
 
     log_dir = _mk_hourly_log(spark, tmp_path, normalized)
     all_keys = _keys(eventlog.replay(spark, log_dir).collect())
     surviving = [k for k in all_keys if k[0] >= US_PER_HOUR]
 
-    real_replay = edgemod.replay
+    real_replay = eventlog.replay
     trimmed: list = []
 
     def racy_replay(spark_, log_dir_, **kw):
@@ -470,11 +442,11 @@ def test_edge_fetch_survives_mid_batch_trim(spark, tmp_path, normalized):
         return df
 
     server = edgemod.SubscribeServer(spark, log_dir)
-    edgemod.replay = racy_replay
+    eventlog.replay = racy_replay
     try:
         rows = server._fetch_batch(Subscription(cursor=0), limit=len(all_keys))
     finally:
-        edgemod.replay = real_replay
+        eventlog.replay = real_replay
 
     assert trimmed == [1], "the race was never injected"
     got = sorted((r["time_us"], r["did"]) for r in rows)
@@ -535,16 +507,7 @@ def test_consumer_drains_under_trim_and_compaction_churn(spark, tmp_path, normal
     t.start()
     try:
         _time.sleep(0.2)
-        backfill(
-            spark,
-            log_dir,
-            Subscription(cursor=0),
-            server_head_us=lambda: 10**15,
-            deliver=lambda rows: delivered.extend(rows),
-            max_rounds=1000,
-            batch_limit=7,
-            rate_per_s=1e9,
-        )
+        drain_via_edge(spark, log_dir, Subscription(cursor=0), 7, delivered.extend)
     finally:
         stop.set()
         t.join(timeout=120)
