@@ -1,51 +1,15 @@
 """Benchmark harness — runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric", "value", "unit", "queries", "sf"}.
+JSON line: {"metric", "value", "unit", "queries", "sf", "cpus", "commit", ...}.
 
 Each query is forced through the noop sink (full materialization, no
 driver-side collect cost). First a warmup pass of q1 amortizes JVM/codegen
 startup out of the per-query numbers.
 
-PROTOCOL — flag disposition (the mechanical escalation path; every step
-is committed machinery, not judgment). The round VMs oscillate 1-2x on
-their serial/Python axes at minute scale (r8 post-mortem), so a raw
-would-be flag is evidence of SOMETHING, but not yet of an engine
-regression. A flag is dispositioned in three steps:
-
-  1. IN-RUN: the sampler itself retests — adaptive_min re-samples with a
-     block-store release (clean retest), then apply_second_window
-     re-measures every surviving flag minutes later in a second window.
-     Burst flags die here; whatever survives is reproducible ON THIS
-     host TODAY.
-  2. BAND CHECK: a surviving flag on UNTOUCHED code whose value sits
-     inside the query's committed cross-round band (_history_band:
-     settled-host rows only, self-flagged values excluded, per-query
-     reset at the last code change) is the environment revisiting its
-     own recorded range — reported as within_band evidence, never
-     silently dropped. Code-changed queries skip this step: they always
-     hard-flag.
-  3. SETTLED A/B: a flag that survives 1-2 is attributed by a worktree
-     A/B against the last official commit — mechanized as
-     `python tools/probe_queries.py --ab <commit> <queries...>` (the
-     executed BENCH_AB_r09.json protocol): the baseline commit is
-     checked out into a worktree, the CURRENT probe tool is copied in
-     (identical measurement bytes both sides), and alternating
-     HEAD/baseline windows run as fresh processes across the same span
-     of host weather. Engine regression := the HEAD floor across its
-     windows > 1.15x the baseline floor (ab_verdict); if the old code's
-     floor is just as slow, it is the host, and the flag is cleared
-     with the A/B JSON as committed evidence. A regression verdict the
-     tool annotates low_power (<3 windows/side) or drift_suspect
-     (adjacent-pair median disagrees with the floor rule) is NOT
-     final: run_ab SELF-ESCALATES by extending the alternating run to
-     6 windows before printing its verdict (needs_escalation — the r12
-     window-4 incident mechanized; a 2+2 verdict was believed over its
-     own printed flag until the 3+3 rerun cleared both arms).
-
-tests/test_bench_guard.py pins steps 1-2 (the r8 six-flag shape, band
-direction/exclusion rules, the uniform-1.5x adversarial probe) plus
-step 3's annotations and self-escalation rule; the r9 A/B artifact
-documents step 3's executed form.
+This harness measures; it does not judge. A regression is called only by
+an alternating A/B of two commits (`python tools/probe_queries.py --ab
+COMMIT q1 q2 ...`), which samples both code versions across the same
+span of host load.
 """
 
 from __future__ import annotations
@@ -168,522 +132,6 @@ EXTRAS = [
     "dup_ratio_by_source",   # r8: per-source dup health (one (source,hash) agg)
     "profile_columns_fast",  # r9: xxhash64 twin of profile_columns_approx
 ]
-
-REGRESSION_FACTOR = 1.15
-# Sub-half-second timings swing ±25% run-to-run on this machine (measured:
-# doc_packing 0.45-0.55 s across settled runs) — a 1.15× factor below that
-# floor would only ever flag noise.
-REGRESSION_FLOOR_S = 0.5
-
-
-def _latest_driver_bench(current_sf, here: str | None = None) -> dict | None:
-    """The latest parseable BENCH_r*.json the driver recorded at this SF —
-    the round-over-round comparison point. 'Latest' is the highest ROUND
-    NUMBER parsed from the filename (lexicographic sort would put BENCH_r10
-    before BENCH_r2)."""
-    import glob
-    import re
-
-    here = here or os.path.dirname(os.path.abspath(__file__))
-
-    def round_no(p):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        return int(m.group(1)) if m else -1
-
-    paths = sorted(glob.glob(os.path.join(here, "BENCH_r*.json")), key=round_no)
-    # newest parseable round wins; a driver capture that failed to parse
-    # (parsed: null + raw tail, as in BENCH_r04) falls through to the next
-    # older round instead of silently disabling the guard
-    for path in reversed(paths):
-        try:
-            with open(path) as f:
-                data = json.load(f)
-            data = data.get("parsed") or data
-            if not data.get("queries"):
-                continue  # unparsed driver wrapper
-            if data.get("sf") != current_sf:
-                return None
-            return data
-        except (OSError, ValueError):
-            continue
-    return None
-
-
-def _prev_bench_queries(current_sf, here: str | None = None) -> dict:
-    """Per-query baselines for the regression guard — headline timings from
-    the latest driver BENCH_r*.json, extras from the SAME RUN's full detail.
-
-    The r6 guard miss (VERDICT r6 #2): the compact BENCH_r* line carries
-    only headline timings, and extras used to be back-filled from whatever
-    BENCH_DETAIL.json sat on disk — which can be a DIFFERENT run on a
-    DIFFERENT host (the end-of-round snapshot bench) than the BENCH_r* file
-    the host_shift calibration was computed against. pagerank's baseline
-    came from a 1.76×-slower host while the shift said 1.146×, so a genuine
-    +21%-looking drift never crossed the threshold. Extras now only merge
-    from a detail record whose (sf, calibration_s) matches the chosen
-    BENCH_r* file — i.e. provably the same run — searched first in the
-    append-only BENCH_HISTORY.jsonl (every bench run appends its detail),
-    then in BENCH_DETAIL.json. No same-run detail ⇒ extras carry no
-    baseline rather than a wrong-host one."""
-    here = here or os.path.dirname(os.path.abspath(__file__))
-    official = _latest_driver_bench(current_sf, here)
-    if official is None:
-        return {}
-    merged = {**(official.get("queries") or {}), **(official.get("extras") or {})}
-    cal = official.get("calibration_s")
-
-    def same_run(det: dict) -> bool:
-        return det.get("sf") == current_sf and det.get("calibration_s") == cal
-
-    candidates: list[dict] = []
-    try:
-        with open(os.path.join(here, "BENCH_HISTORY.jsonl")) as f:
-            for line in f:
-                try:
-                    candidates.append(json.loads(line))
-                except ValueError:
-                    continue
-    except OSError:
-        pass
-    try:
-        with open(os.path.join(here, "BENCH_DETAIL.json")) as f:
-            candidates.append(json.load(f))
-    except (OSError, ValueError):
-        pass
-    for det in reversed(candidates):
-        if same_run(det):
-            for k, v in {**(det.get("queries") or {}), **(det.get("extras") or {})}.items():
-                merged.setdefault(k, v)
-            break
-    return merged
-
-
-def _prev_calibration(current_sf, here: str | None = None) -> dict:
-    """All host-probe baselines the previous official round recorded.
-    Rounds before r8 carry only the parallel probe; the serial/python
-    probes return None until a baseline exists (their ratios then join
-    the shift from the next round on)."""
-    official = _latest_driver_bench(current_sf, here)
-    if not official:
-        return {}
-    return {
-        "parallel": official.get("calibration_s"),
-        "serial": official.get("calibration_serial_s"),
-        "python": official.get("calibration_python_s"),
-    }
-
-
-def bench_calibration(spark) -> float:
-    """Host-speed probe: a fixed CPU-bound job that depends on NOTHING in
-    this repo (range scan + xxhash64 fold under whole-stage codegen), so
-    its round-over-round ratio measures the MACHINE, not the engine.
-    Rounds run on freshly-provisioned VMs (uptime resets between rounds)
-    whose per-core throughput varies by 1.3-1.5x; without this probe a
-    uniformly slower host reads as an across-the-board 'regression'.
-
-    min-of-4 (r9, was 2): the probes are ~0.1-1.5 s jobs sampled at the
-    END of a ~30-min session — the r9 run read the parallel probe at
-    1.89x its baseline while the cross-query median said 0.87x and every
-    query ran faster, and a noisy-HIGH probe silently loosens the whole
-    guard (shift multiplies every threshold). Same job, more samples:
-    the baseline stays comparable, the upward tail shrinks."""
-    best = float("inf")
-    for _ in range(4):
-        t0 = time.time()
-        # bit_xor fold: overflow-free under ANSI mode, still one codegen pass
-        spark.range(150_000_000).selectExpr("xxhash64(id) AS h").groupBy().agg(
-            {"h": "bit_xor"}
-        ).write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t0)
-    return round(best, 3)
-
-
-def bench_calibration_serial(spark) -> float:
-    """SERIAL host probe (r8): this box class can lose 2x on the
-    single-thread axis (single-core turbo, JIT compile speed, per-task
-    latency) while the parallel probe reads FASTER — measured r8:
-    parallel probe 0.182 s vs r7's 0.215 while single-partition window
-    shapes (cusum, skyline) ran 2x slower ON IDENTICAL r7 CODE. One
-    1-partition sort of 3M hashed rows = one long single-thread task;
-    its round-over-round ratio measures the serial axis."""
-    best = float("inf")
-    for _ in range(4):
-        t0 = time.time()
-        (
-            spark.range(3_000_000, numPartitions=1)
-            .selectExpr("xxhash64(id) AS h")
-            .sortWithinPartitions("h")
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        best = min(best, time.time() - t0)
-    return round(best, 3)
-
-
-def bench_calibration_python(spark) -> float:
-    """PYTHON/ARROW host probe (r8): the ingest pipeline and every
-    mapInPandas kernel ride the Python-worker + Arrow-transfer axis,
-    which degrades independently of JVM throughput (r8: ingest 62k ev/s
-    on identical r7 code vs 83k recorded by r7 — host, not engine). One
-    pass-through mapInPandas over 2M rows x 32 partitions measures
-    worker dispatch + Arrow round-trip."""
-    import pandas as _pd  # noqa: F401 (worker-side import sanity)
-
-    def _ident(batches):
-        yield from batches
-
-    best = float("inf")
-    for _ in range(4):
-        t0 = time.time()
-        (
-            spark.range(2_000_000, numPartitions=32)
-            .mapInPandas(_ident, "id long")
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        best = min(best, time.time() - t0)
-    return round(best, 3)
-
-
-def host_shift_factor(
-    timings: dict,
-    prev: dict,
-    cal_now: float | None,
-    cal_prev,
-    serial_now: float | None = None,
-    serial_prev: float | None = None,
-    python_now: float | None = None,
-    python_prev: float | None = None,
-    detail: dict | None = None,
-) -> float:
-    """How much slower this host is than the one that recorded the previous
-    round's bench. Preferred signal: the calibration-probe ratio (exact,
-    engine-independent). Fallback when the previous round predates the
-    probe: the MEDIAN now/prev ratio across all compared queries — a
-    single genuine regression cannot move the median of ~50 pairs, while a
-    uniform host slowdown moves every pair identically. Shifts under 5%
-    are treated as noise (factor 1.0); the factor is reported in the
-    output so a reader sees both the raw and normalized picture."""
-    signals: dict[str, float] = {}
-    if cal_now and cal_prev:
-        signals["probe_parallel"] = cal_now / cal_prev
-    if serial_now and serial_prev:
-        signals["probe_serial"] = serial_now / serial_prev
-    if python_now and python_prev:
-        signals["probe_python"] = python_now / python_prev
-    ratios = []
-    for name, now in timings.items():
-        p = prev.get(name)
-        if p is None or name.endswith("_build_s"):
-            continue
-        if name.endswith("_per_sec"):
-            if now > 0:
-                ratios.append(p / now)
-        elif p >= REGRESSION_FLOOR_S and p > 0:
-            ratios.append(now / p)
-    # the capped cross-query median is a FALLBACK signal, not a peer of
-    # the probes (ADVICE r8: an unconditional median could normalize away
-    # a genuinely uniform engine regression up to the 1.5 cap even when
-    # all three probes read 1.0). It joins only when (a) ANY probe axis
-    # lacks a baseline — a partial baseline set is treated the same as
-    # none (ADVICE r9 #3: with exactly one axis baselined, a host shift
-    # on an un-probed axis with flat present probes used to exclude the
-    # median entirely, hard-flagging pure host drift with no backstop) —
-    # or (b) a probe corroborates that the host really shifted (>5% on
-    # some probed axis) — then the median may capture residual drift on
-    # an axis the probes undersample. The 1.5 cap and the per-query 1.15
-    # factor on top still apply.
-    all_axes_baselined = (
-        bool(cal_now and cal_prev)
-        and bool(serial_now and serial_prev)
-        and bool(python_now and python_prev)
-    )
-    probes_corroborate = signals and max(signals.values()) > 1.05
-    if len(ratios) >= 8 and (not all_axes_baselined or probes_corroborate):
-        ratios.sort()
-        # when the probes are the ADMISSION ticket (every axis has a
-        # baseline), the median may only exceed the worst probe by a
-        # residual margin — a probe drifting 1.06 must not re-admit a
-        # 1.5 median, or a mild real host shift could launder a large
-        # uniform engine regression (the ADVICE r8 hole, second order)
-        cap = (
-            min(1.5, max(signals.values()) * 1.15)
-            if all_axes_baselined
-            else 1.5
-        )
-        signals["median_capped"] = min(ratios[len(ratios) // 2], cap)
-    if detail is not None:
-        detail["signals"] = {k: round(v, 3) for k, v in signals.items()}
-        detail["winner"] = max(signals, key=signals.get) if signals else None
-    if not signals:
-        return 1.0
-    shift = max(signals.values())
-    return round(shift, 3) if shift > 1.05 else 1.0
-
-
-def adaptive_min(
-    sample,
-    prev: float | None,
-    release,
-    factor: float = REGRESSION_FACTOR,
-    floor: float = REGRESSION_FLOOR_S,
-    max_extra: int = 4,
-) -> tuple[float, int]:
-    """The bench's per-query sampling policy, extracted so the guard's
-    behavior is unit-testable (tests/test_bench_guard.py): min-of-2, plus
-    up to ``max_extra`` adaptive re-samples while the result would flag a
-    regression vs ``prev`` AND samples are still converging (>3%
-    improvement). The FIRST re-sample is preceded by ``release()`` — the
-    clean-retest (r7 kmeans_train post-mortem): a query measured late in
-    the extras loop runs against ~30 queries of accumulated
-    block-store/GC pressure that an idle rerun of the same code doesn't
-    show, so a would-be flag gets one measurement from a released
-    session before it can stick. Steady-state queries never pay either
-    the release or the extras. Returns (best_seconds, extras_used)."""
-    best = min(sample(), sample())
-    extra, strikes = 0, 0
-    while (
-        prev is not None
-        and prev >= floor
-        and best > prev * factor
-        and strikes < 2
-        and extra < max_extra
-    ):
-        if extra == 0:
-            release()
-        s = sample()
-        # two-strike exit (r8): a single non-improving sample is not
-        # proof of steady state — two CONSECUTIVE cold samples can agree
-        # (measured: dedup_ngram_jaccard 13.4 s, 13.4 s, then 4.8 s once
-        # codegen warmed on a slow-JIT host), and the old single-strike
-        # exit recorded the cold plateau as a regression
-        strikes = 0 if s < best * 0.97 else strikes + 1
-        best = min(best, s)
-        extra += 1
-    return best, extra
-
-
-def apply_second_window(timings: dict, extras: dict, flagged, remeasure) -> list:
-    """Second-window confirmation (r8): this VM class oscillates on its
-    serial/Python axis at MINUTE scale — two back-to-back full bench runs
-    on an idle host flagged DISJOINT query sets (run 1: jaccard/minhash/
-    theta/ingest; run 2: winnowing/MMR/MI/kcenter — none shared), which is
-    the signature of environment bursts, not engine regressions (a real
-    regression reproduces). So a would-be flag must survive a SECOND
-    measurement window, minutes after the first: each flagged metric is
-    re-measured once (wall-time queries keep the min across windows;
-    throughput metrics keep the max), and only flags that persist reach
-    the report. ``remeasure(name)`` returns the second-window value or
-    None when the metric cannot be re-run; returns the names actually
-    re-measured (for the detail record)."""
-    redone = []
-    for name in sorted(flagged):
-        val = remeasure(name)
-        if val is None:
-            continue
-        redone.append(name)
-        tgt = timings if name in timings else extras
-        if name.endswith("_per_sec"):
-            tgt[name] = max(tgt[name], val)
-        else:
-            tgt[name] = min(tgt[name], val)
-    return redone
-
-
-# Queries whose most recent engine-code change predates history rows
-# recording their run's code-changed set (the "code_changed" key exists
-# from r10 on). A band row that cannot be classified as pre- or
-# post-change for these queries is NOT band evidence: pre-change rows
-# measured OLD code, so a regression that reverts the optimization
-# would sit inside the stale band and be demoted to oscillation
-# (ADVICE r9 #2). The set is additive-only and shrinks in effect as
-# legacy rows age out of the 6-row band window.
-_BAND_PRE_LOG_CHANGED = frozenset({
-    "dedup_embedding_lsh",  # r7: N-adaptive band width
-    "label_propagation",  # r7: broadcast label join
-    "fingerprint_winnowing",  # r8: tokenize-once
-    "hbos_outliers",  # r8: tokenize-once feature frame
-    "kmeans_train",  # r8: persisted frame + two-tier round reduce
-    "kneser_ney_perplexity",  # r8: tokenize-once
-    "naive_bayes_domain",  # r8: tokenize-once checkpoint
-    "profile_columns_approx",  # r9: shared estimator expressions
-})
-
-
-def _history_band(current_sf, here: str | None = None, last_n: int = 6, min_samples: int = 3) -> dict:
-    """{query: (lo, hi, n)} over the last ``last_n`` committed bench runs
-    at this SF (BENCH_HISTORY.jsonl, which the current run has not yet
-    appended to). This is the query's settled cross-round oscillation
-    band: the r8 post-mortem showed every 'regression' the driver flagged
-    sat INSIDE the value range this host had already recorded for the
-    same code across r6-r8 (e.g. weak_label_analysis 0.83-1.17 s,
-    textrank 1.55-2.72 s), while the single-previous-run baseline
-    happened to be the band's minimum — the r7 official run caught all
-    six serial-axis queries at their historical minima SIMULTANEOUSLY.
-    Bands with fewer than ``min_samples`` committed values carry no
-    evidence and are omitted.
-
-    Two staleness guards (ADVICE r9):
-      1. rows benched on a recognized-slow host (their recorded
-         host_shift > 1.05) contribute NO band evidence — their raw
-         values are inflated by a shift that was computed as a global
-         max-of-axes, so they were unflagged only because of shift
-         normalization, and as band_hi they would hide a later genuine
-         regression of up to that ratio from a settled host. (Excluded
-         rather than divided back: the global shift is not a per-query
-         factor — queries off the shifted axis would be over-corrected,
-         e.g. dividing the r9 1.894x-host row would put skyline_parts'
-         band floor at 0.34 s against a real settled ~0.6 s.)
-      2. values older than a query's most recent CODE change are not
-         evidence for it: rows record their run's code-changed set (the
-         "code_changed" key), a row declaring the query changed resets
-         its accumulation (that row measured the new code), and for
-         queries in _BAND_PRE_LOG_CHANGED legacy rows without the key
-         are skipped outright."""
-    here = here or os.path.dirname(os.path.abspath(__file__))
-    rows: list[dict] = []
-    try:
-        with open(os.path.join(here, "BENCH_HISTORY.jsonl")) as f:
-            for line in f:
-                try:
-                    rows.append(json.loads(line))
-                except ValueError:
-                    continue
-    except OSError:
-        return {}
-    rows = [r for r in rows if r.get("sf") == current_sf][-last_n:]
-    vals: dict[str, list] = {}
-    for r in rows:
-        # a value the run ITSELF flagged as a regression is not band
-        # evidence — without this exclusion the band self-poisons: a
-        # genuine regression's first flagged run would write its slow
-        # value into history, and the next run would find it inside the
-        # band and demote the same real regression to "oscillation"
-        flagged = set(r.get("regressions") or ())
-        if (r.get("host_shift") or 1.0) > 1.05:
-            continue  # slow-host row: raw values inflated, not band evidence
-        changed = r.get("code_changed")
-        legacy_row = changed is None  # predates code-change recording
-        for k, v in {**(r.get("queries") or {}), **(r.get("extras") or {})}.items():
-            if not isinstance(v, (int, float)) or k in flagged:
-                continue
-            if legacy_row and k in _BAND_PRE_LOG_CHANGED:
-                continue  # unclassifiable: may have measured pre-change code
-            if not legacy_row and k in changed:
-                vals[k] = []  # this row measured NEW code; older values did not
-            vals.setdefault(k, []).append(float(v))
-    return {
-        k: (min(vs), max(vs), len(vs))
-        for k, vs in vals.items()
-        if len(vs) >= min_samples
-    }
-
-
-# Bench metrics (non-registry names) whose ENGINE path changed this
-# round — same semantics as the registry's _CODE_CHANGED (no band
-# suppression this round; history rows record the change so older band
-# values reset), kept separate because the rotation test requires
-# _CODE_CHANGED names to sit inside the driver window and these are not
-# registry entries. Reset each round.
-# r13: the r12 maintenance-lease declaration is retired (band re-formed
-# from three settled r12 rows, 28.1-31.9k ev/s; lease A/B neutral at
-# 1.034, BENCH_AB_r12_maint.json) — but the r13 takeover-flock work
-# (ADVICE r12 #1) ALSO made the per-tick ownership re-assert atomic
-# (touch_owner_if_held: one flock open/lock/close per tick and per
-# heartbeat, maintenance.py), which runs inside the ticks the
-# maintenance-tax measurement samples. Same declaration discipline as
-# r12: a regression there must hard-flag, not band-absorb; the A/B
-# against the pre-round commit is the attribution evidence
-# (BENCH_AB_r13_maint.json). Plain ingest and fan-out are untouched.
-_BENCH_CODE_CHANGED = ("ingest_under_maintenance_events_per_sec",)
-
-
-def _code_changed_queries() -> frozenset:
-    """Queries whose engine/oracle code changed this round (declared in
-    the registry for the driver-window rotation) — band suppression must
-    never apply to them: cross-round band values measured OLD code, so a
-    change that restores an old-slow behavior has to hard-flag."""
-    try:
-        from jetstream_spark.queries import _CODE_CHANGED
-
-        return frozenset(_CODE_CHANGED) | frozenset(_BENCH_CODE_CHANGED)
-    except Exception:
-        return frozenset(_BENCH_CODE_CHANGED)
-
-
-def find_regressions(
-    timings: dict,
-    current_sf,
-    shift: float = 1.0,
-    resamples: dict | None = None,
-    here: str | None = None,
-    band_out: dict | None = None,
-) -> dict:
-    """Queries >1.15× slower than the previous round at the same SF after
-    host-speed normalization (throughput metrics: >1.15× lower). Returns
-    {name: {"prev", "now", "extra_samples", "host_shift"}} with prev
-    reported raw (un-normalized): every flagged entry carries its own
-    evidence — how many adaptive re-samples confirmed the number and what
-    host normalization was applied — so a reader can tell a confirmed
-    engine regression from a burst the sampler couldn't shake.
-
-    Band rule (r9, from the r8 six-flag post-mortem): a would-be flag on
-    UNTOUCHED code whose value sits inside the query's committed
-    cross-round band (_history_band) is environment oscillation by
-    definition — a real regression produces a value the host has never
-    recorded for this code — so it is reported in ``band_out`` as
-    evidence (never silently dropped) instead of hard-flagging. Queries
-    declared code-changed this round are exempt: they always hard-flag."""
-    prev = _prev_bench_queries(current_sf, here)
-    band = _history_band(current_sf, here)
-    changed = _code_changed_queries()
-    resamples = resamples or {}
-    regressions = {}
-
-    def entry(name, p, now):
-        return {
-            "prev": p,
-            "now": now,
-            "extra_samples": resamples.get(name, 0),
-            "host_shift": shift,
-        }
-
-    def within_band(name, now) -> bool:
-        if name in changed or name not in band:
-            return False
-        lo, hi, n = band[name]
-        # band values are settled-host normalized (_history_band), so the
-        # current raw reading is normalized by THIS run's shift before the
-        # comparison (rates deflate on a slow host, seconds inflate)
-        adj = now * shift if name.endswith("_per_sec") else now / shift
-        inside = adj >= lo if name.endswith("_per_sec") else adj <= hi
-        if inside and band_out is not None:
-            band_out[name] = {
-                "now": now,
-                "band_lo": lo,
-                "band_hi": hi,
-                "band_n": n,
-            }
-        return inside
-
-    for name, now in timings.items():
-        p = prev.get(name)
-        if p is None:
-            continue
-        if name.endswith("_build_s"):
-            continue  # rebuild-vs-fresh varies with testdata regen; not a probe cost
-        if name.endswith("_per_sec"):
-            if now < p / (shift * REGRESSION_FACTOR) and not within_band(name, now):
-                regressions[name] = entry(name, p, now)
-        elif (
-            p >= REGRESSION_FLOOR_S
-            and now > p * shift * REGRESSION_FACTOR
-            and not within_band(name, now)
-        ):
-            regressions[name] = entry(name, p, now)
-    return regressions
 
 
 def _events_as_frames(spark, sf_dir: str, limit: int | None = None):
@@ -821,10 +269,7 @@ def bench_delivery_fanout(
     the block-store release the query sampler uses, with the headline
     rate = the best complete measured burst (max across windows, the
     throughput analogue of min-of-N). The result carries runs/agg so the
-    committed history records the protocol alongside the number, and the
-    per-sub floor accumulating in BENCH_HISTORY.jsonl feeds the
-    rate-direction band (a dip above the committed floor is oscillation
-    evidence; below it hard-flags — tests/test_bench_guard.py)."""
+    committed record states the protocol alongside the number."""
     import shutil
     import tempfile
 
@@ -930,8 +375,7 @@ def bench_ingest_under_maintenance(spark, sf_dir: str, cap: int = 20000, n_batch
     shared session. Conservation is asserted after a deterministic final
     trim: surviving buckets hold exactly their ingested rows, strictly
     monotonic time_us (the ticker dropped nothing unexpired, duplicated
-    nothing). The per-sub rate accumulates its own committed floor band
-    in BENCH_HISTORY.jsonl like every extras metric."""
+    nothing)."""
     import shutil
     import tempfile
 
@@ -1291,6 +735,25 @@ def _phase(msg: str) -> None:
     print(f"[bench] {msg}", file=sys.stderr, flush=True)
 
 
+def _provenance() -> dict:
+    """The core count and commit that produced a bench record, so numbers
+    from different hosts or trees are never compared as like for like."""
+    import subprocess
+
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or 0) or os.cpu_count()
+    try:
+        commit = subprocess.run(
+            ["git", "rev-parse", "HEAD"],
+            cwd=os.path.dirname(os.path.abspath(__file__)),
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        commit = ""
+    return {"cpus": cpus, "commit": commit or "unknown"}
+
+
 def _release_memory(spark) -> None:
     """Between phases: drop cached frames and nudge both collectors. A
     single bench session runs ~60 query builds + a 10x sf1 block in one
@@ -1359,29 +822,19 @@ def main() -> None:
     # machine load once recorded a 12 s outlier for the same plan. min-of-2
     # reports steady-state engine cost — the number that scales.
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    prev_q = _prev_bench_queries(sf_val)
-    resample_counts: dict[str, int] = {}
+    provenance = _provenance()
 
     def timed(name: str) -> float:
-        """One query's reported time via the adaptive_min policy (min-of-2,
-        warmup-tail extras, clean-retest release before the first extra —
-        full rationale on adaptive_min). The pre-sample gc.collect drops
-        references to the previous query's frames: several operators hold
-        localCheckpoint blocks alive until Python GC releases the
-        DataFrame, and accumulated blocks bleed memory pressure into later
-        queries' timings."""
-        import gc
-
-        gc.collect()
-
-        def sample() -> float:
+        """One query's reported time: min-of-2 after a block-store release.
+        Several operators hold localCheckpoint blocks alive until Python GC
+        releases the DataFrame, and accumulated blocks bleed memory pressure
+        into later queries' timings."""
+        _release_memory(spark)
+        best = float("inf")
+        for _ in range(2):
             t0 = time.time()
             specs[name].build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            return time.time() - t0
-
-        best, extra = adaptive_min(sample, prev_q.get(name), lambda: _release_memory(spark))
-        if extra:
-            resample_counts[name] = extra
+            best = min(best, time.time() - t0)
         return round(best, 3)
 
     timings: dict[str, float] = {}
@@ -1398,8 +851,8 @@ def main() -> None:
     timings["ingest_events_per_sec"] = round(ingest_events / ingest_sec, 1)  # rate, not in total
 
     # Extras get the same min-of-2 treatment (a cold dedup_embedding_cosine
-    # measured 3.8x its settled time; the 1.15x regression guard would flag
-    # pure warmup noise on single samples).
+    # measured 3.8x its settled time; a single sample would record warmup
+    # noise).
     extras: dict[str, float] = {}
     for name in EXTRAS:
         _phase(f"extra {name}")
@@ -1413,7 +866,7 @@ def main() -> None:
     extras["delivery_fanout_events_per_sec"] = fanout["events_per_sec_per_sub"]
 
     # the ingest write path WITH the standing retention ticker active —
-    # the maintenance tax as a committed, floor-banded number
+    # the maintenance tax as a committed number
     _phase("ingest under maintenance")
     _release_memory(spark)
     ingmaint = bench_ingest_under_maintenance(spark, sf_dir)
@@ -1431,8 +884,7 @@ def main() -> None:
         for name in SF1_QUERIES:
             _phase(f"sf1 {name}")
             # min-of-2 (r9, was single-shot): sf1 rows land in the
-            # committed history that the variance criteria read, and a
-            # single 20-s sample on this host class can catch a
+            # committed record, and a single 20-s sample on this host class can catch a
             # minute-scale burst (label_propagation recorded 93.8 s in a
             # burst window vs 18.6-27.2 s across four same-day settled
             # probes of identical code) — one re-sample is the cheapest
@@ -1446,69 +898,6 @@ def main() -> None:
             sf1[name] = round(best, 3)
         sf1["replicas"] = SF1_REPLICAS
 
-    _phase("calibration")
-    _release_memory(spark)  # probe the host, not 30 min of block-store/GC debris
-    calibration_s = bench_calibration(spark)
-    calibration_serial_s = bench_calibration_serial(spark)
-    calibration_python_s = bench_calibration_python(spark)
-    prev_cal = _prev_calibration(sf_val)
-    shift_detail: dict = {}
-    shift = host_shift_factor(
-        {**timings, **extras},
-        prev_q,
-        calibration_s,
-        prev_cal.get("parallel"),
-        serial_now=calibration_serial_s,
-        serial_prev=prev_cal.get("serial"),
-        python_now=calibration_python_s,
-        python_prev=prev_cal.get("python"),
-        detail=shift_detail,
-    )
-    within_band: dict = {}
-    regressions = find_regressions(
-        {**timings, **extras}, sf_val, shift, resamples=resample_counts,
-        band_out=within_band,
-    )
-    second_window: list = []
-    if regressions:
-        _phase(f"second-window confirm: {sorted(regressions)}")
-        _release_memory(spark)
-
-        def remeasure(name: str):
-            if name in ("ingest_pipeline", "ingest_events_per_sec"):
-                sec2, n2, _ = bench_ingest_pipeline(spark, sf_dir)
-                timings["ingest_pipeline"] = min(timings["ingest_pipeline"], round(sec2, 3))
-                # rate is recomputed from the kept (best) pass time
-                return round(n2 / sec2, 1) if name == "ingest_events_per_sec" else None
-            if name == "delivery_fanout_events_per_sec":
-                f2 = bench_delivery_fanout(spark, sf_dir)
-                if f2["events_per_sec_per_sub"] > fanout["events_per_sec_per_sub"]:
-                    # keep the kept window's FULL record: the compact stdout
-                    # line and detail["delivery_fanout"] read this dict, and
-                    # a cleared burst flag used to leave them showing the
-                    # burst-depressed first window while extras carried the
-                    # remeasured rate (observed live: 6,175 printed vs
-                    # 17,784 rated in this round's fifth window)
-                    fanout.update(f2)
-                return f2["events_per_sec_per_sub"]
-            if name == "ingest_under_maintenance_events_per_sec":
-                m2 = bench_ingest_under_maintenance(spark, sf_dir)
-                if m2["events_per_sec"] > ingmaint["events_per_sec"]:
-                    ingmaint.update(m2)  # same record-consistency rule
-                return m2["events_per_sec"]
-            if name in timings or name in extras:
-                return timed(name)
-            return None
-
-        second_window = apply_second_window(timings, extras, regressions, remeasure)
-        within_band = {}
-        regressions = find_regressions(
-            {**timings, **extras}, sf_val, shift, resamples=resample_counts,
-            band_out=within_band,
-        )
-        total = round(
-            sum(v for k, v in timings.items() if k != "ingest_events_per_sec"), 3
-        )
     detail = {
         "metric": "headline_queries_total_wall",
         "value": total,
@@ -1519,35 +908,19 @@ def main() -> None:
         "ingest_under_maintenance": ingmaint,  # write path + standing ticker, conservation asserted
         "ingest_conservation": conservation,  # processed = sequenced = persisted, asserted
         "sf1_sample": sf1,
-        "regressions": regressions,
-        "within_band": within_band,  # would-be flags inside the committed cross-round band (environment oscillation, evidence kept)
-        "second_window_remeasured": second_window,  # flags re-tested minutes later
-        "host_shift": shift,  # >1: this VM is uniformly slower than last round's
-        "host_shift_detail": shift_detail,  # which signal won (probe vs median)
-        # this run's code-changed set, recorded so future bands can drop
-        # per-query values older than the query's most recent code change
-        # (ADVICE r9 #2 — see _history_band)
-        "code_changed": sorted(_code_changed_queries()),
-        "calibration_s": calibration_s,
-        "calibration_serial_s": calibration_serial_s,  # r8: single-thread axis
-        "calibration_python_s": calibration_python_s,  # r8: Python/Arrow axis
         "sf": sf_val,
-        "runs": 2,  # min-of-2 since r3 (+1 adaptive on would-be flags since r4)
+        **provenance,
+        "runs": 2,  # min-of-2 since r3
         "agg": "min",
     }
     # Full detail goes to a committed repo file; stdout gets ONE compact
-    # line (headline timings + rates + regression names). The r4 driver
-    # capture truncated the all-in-one line into unparseable JSON — the
-    # perf gate rests on this line staying small.
+    # line (headline timings + rates). An r4 capture truncated the
+    # all-in-one line into unparseable JSON — the perf gate rests on this
+    # line staying small.
     here = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
         f.write("\n")
-    # append-only run history: lets a future guard match extras baselines
-    # to the SAME RUN as the official BENCH_r* record by (sf, calibration_s)
-    # even after BENCH_DETAIL.json is overwritten by a later local run
-    with open(os.path.join(here, "BENCH_HISTORY.jsonl"), "a") as f:
-        f.write(json.dumps(detail, sort_keys=True) + "\n")
     print(
         json.dumps(
             {
@@ -1557,13 +930,8 @@ def main() -> None:
                 "queries": timings,
                 "ingest_events_per_sec": timings["ingest_events_per_sec"],
                 "delivery_fanout_events_per_sec": fanout["events_per_sec_per_sub"],
-                "regressions": sorted(regressions),
-                "within_band": sorted(within_band),
-                "host_shift": shift,
-                "calibration_s": calibration_s,
-                "calibration_serial_s": calibration_serial_s,
-                "calibration_python_s": calibration_python_s,
                 "sf": sf_val,
+                **provenance,
                 "runs": 2,
                 "agg": "min",
                 "detail": "BENCH_DETAIL.json",

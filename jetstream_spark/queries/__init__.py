@@ -10,205 +10,53 @@ name).
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
+
 from jetstream_spark.queries.spec import QuerySpec
 
 
-# Names the driver should check FIRST. The driver verifies the first ~50
-# registry entries in declaration order, so this window is re-curated every
-# round under a HARD rule (pinned by tests/test_registry_priority.py):
-#   1. never-driver-checked entries ALWAYS lead the window — a new operator
-#      debuts with driver evidence in its debut round, no exceptions;
-#   2. then entries whose code changed this round (declared in
-#      _CODE_CHANGED below so the rotation test can exempt them);
-#   3. then the rest, OLDEST driver evidence first — every in-window entry
-#      must be at least as stale as every out-of-window entry (pinned by
-#      tests/test_registry_priority.py::test_window_is_oldest_evidence_first).
-# Round-14 rotation (see r13 note in git history): after r13 the
-# evidence histogram reads r9:8 / r10:46 / r11:48 / r12:45 / r13:50;
-# this window takes the code-changed tier (grown through the round as
-# optimizations landed), the 8 r9-stale, then the oldest of the 46
-# r10-stale in r10 driver order up to exactly 50.
-# Previous narrative (r13): the 47
-# remaining entries whose latest driver evidence is r9 lead, in their r9
-# driver order, then the OLDEST 3 of the 50 r10-stale entries in their
-# r10 driver order (sample_split, doc_packing, embedding_downproject) —
-# exactly 50. After this round the evidence histogram reads r10:47 /
-# r11:50 / r12:50 / r13:50 and the ~50-due-per-round rotation is
-# steady-state for a third consecutive round.
+# Each round the external correctness check of `__spark_entry__.queries()`
+# verifies the first ~50 registry entries and writes CORRECTNESS_r{N}.json
+# at the repo root. The registry order is computed from that evidence
+# (window_order) so every entry rotates through the checked window.
+_REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Entries whose engine/oracle CODE changed this round: they re-enter the
-# window ahead of the staleness order so the change gets driver evidence
-# in the round it ships. Reset this tuple each round.
-# r14 (final optimization round), all oracle-verified BEFORE declaration:
-# - label_propagation: round body rewritten from the two-exchange
-#   count->struct-max argmax to ONE mode(label, deterministic=true)
-#   exchange (identical semantics: most frequent label, ties to the
-#   lowest). Hash-green at sf0.001 + sf0.01, row-identical at sf0.1.
-# - adamic_adar_linkpred: wedge join rebuilt to broadcast the query-edge
-#   frame (with deg pre-attached) instead of the corpus edge frame;
-#   same wedge multiset, same round-6 scores. Hash-green sf0.001+sf0.01.
-# - mutual_information: r13's reduce-from-joint-counts form reverted to
-#   the four independent fact scans (two A/Bs priced the one-scan form
-#   ~7% slower at bench SF). Hash-green at sf0.01.
-# - cusum_changepoint: baseline d0/(mu, sd) stats collapsed from two
-#   groupBy+broadcast round-trips into per-type window aggregates over
-#   the one daily frame (3 corpus scans -> 1). Hash-green sf0.001+sf0.01.
-# - markov_transitions: row totals/entropies ride one per-prev_type
-#   window over the tiny transition frame (4 corpus passes -> 1).
-# - zorder_layout: both layout audits melted into one exploded
-#   (layout, bucket) pass (4 orders scans -> 2).
-# - hbos_outliers: three per-feature bin-count broadcast joins replaced
-#   by one 30-column conditional aggregate + element_at lookups.
-# - weak_label_analysis: the 3-row union (each branch re-running the
-#   corpus tokenize+aggregate) became explode(array(structs)) over the
-#   ONE 1-row aggregate (3 corpus passes -> 1).
-# - embedding_drift_mmd: the 4-way self-join + 3-way union (12 corpus
-#   scans) became one groupBy(j) struct pivot + explode over the 1-row
-#   sum frame (-> 1 corpus scan pair).
-# - benford_audit: grand total + chi-square were two agg+crossJoin
-#   round-trips re-deriving the digit table (8 orders scans); both ride
-#   whole-frame windows over the 9-row aggregate (-> 1 scan).
-# - basket_lift_rules: the basket frame's four pruning-divergent
-#   consumers (no ReusedExchange fired) read a lazy in-run
-#   localCheckpoint instead (4 lineitem scans -> 1).
-# - attribution_last_touch: the conversion total was an agg+crossJoin
-#   re-deriving the events corpus + per-user window; it rides a
-#   whole-frame window over the |channels|-row aggregate (2 corpus
-#   window passes -> 1).
-# - survival_km_retention: the risk-set total (an agg+crossJoin
-#   re-deriving the user-span frame) is Σ(d+c) as a whole-frame window
-#   over the tiny per-lifetime frame (4 corpus scans -> 2).
-# - domain_temperature_sample: mixture totals ride a whole-frame window
-#   over the |domains|-row frame and the tiny mix frame is lazily
-#   checkpointed once per run (5 corpus scans -> 2).
-# - k_anonymity_audit: the four generalization levels form a strict
-#   coarsening chain (floor-composition identity), so L1-L3 class sizes
-#   re-aggregate the checkpointed L0 class frame (4 corpus scans -> 1).
-# - cms_heavy_hitters: the CMS sketch re-aggregates the checkpointed
-#   vocab-scale exact-count frame (a bucket count IS the sum of its
-#   terms' exact counts) — 2 corpus explodes -> 1, and the (j, b)
-#   exchange moves vocab x D rows instead of corpus x D.
-# - sketch_theta_setops: the <=2K-row sketch frame and the 1-row exact
-#   frame are lazily checkpointed, so the corpus scan + distinct
-#   exchanges + per-set hash sort run once instead of up to 6x
-#   (8 corpus scans -> 2).
-# - q21_sole_blame_suppliers: the EXISTS/NOT-EXISTS semi+anti self-joins
-#   (3 lineitem scans) collapsed into per-order supplier-set aggregates
-#   — one scan, one broadcast supplier join (PLAN_AUDIT sweep).
-# - tfidf_top_terms: tf/doc-length/df were three tokenize passes glued
-#   by joins; doc_tokens and doc_freq ride windows over the ONE
-#   (doc, term) count frame (3 tokenizes -> 1, joins gone).
-# - fuzzy_join_names: the vocab-scale distinct-names frame feeds six
-#   consumers; a lazy in-run localCheckpoint runs the part scan once
-#   (6 scans -> 1).
-# - skyline_parts: the frontier-sized survivor frame is lazily
-#   checkpointed; the exact pass and final join stop re-deriving the
-#   grid-prune chain (8 part scans -> 3).
-# All eighteen hash-green at sf0.001 + sf0.01 (record in
-# OPTIMIZATION_r14.md; A/B in BENCH_AB_r14_opt4..opt12.json).
-_CODE_CHANGED = (
-    "label_propagation",
-    "adamic_adar_linkpred",
-    "mutual_information",
-    "cusum_changepoint",
-    "markov_transitions",
-    "zorder_layout",
-    "hbos_outliers",
-    "weak_label_analysis",
-    "embedding_drift_mmd",
-    "benford_audit",
-    "basket_lift_rules",
-    "attribution_last_touch",
-    "survival_km_retention",
-    "domain_temperature_sample",
-    "k_anonymity_audit",
-    "cms_heavy_hitters",
-    "sketch_theta_setops",
-    "q21_sole_blame_suppliers",
-    "tfidf_top_terms",
-    "fuzzy_join_names",
-    "skyline_parts",
-)
+# Entries whose engine/oracle code changed since the last checked round:
+# they re-enter the window ahead of the staleness order so the change is
+# checked in the round it ships. Reset each round.
+_CODE_CHANGED: tuple[str, ...] = ()
 
-_PRIORITY = (
-    # ---- code-changed this round (rotation rule 2); to make room the 2
-    # youngest r10-stale fillers (ann_ivf_topk, ann_lsh_indexed) moved
-    # back out — they share r10 staleness with the out-of-window tail, so
-    # the oldest-first invariant still holds with max_in == min_out ----
-    "label_propagation",
-    "adamic_adar_linkpred",
-    "mutual_information",
-    "cusum_changepoint",
-    "markov_transitions",
-    "zorder_layout",
-    "hbos_outliers",
-    "weak_label_analysis",
-    "embedding_drift_mmd",
-    "benford_audit",
-    "basket_lift_rules",
-    "attribution_last_touch",
-    "survival_km_retention",
-    "domain_temperature_sample",
-    "k_anonymity_audit",
-    "cms_heavy_hitters",
-    "sketch_theta_setops",
-    # (PLAN_AUDIT sweep, late r14: 4 more rewrites — to make room the 4
-    # youngest r10-stale fillers (q15/q16/q17/q20) moved back out; they
-    # share r10 staleness with the out-of-window tail, so oldest-first
-    # still holds with max_in == min_out. q21 re-enters AS code-changed.)
-    "q21_sole_blame_suppliers",
-    "tfidf_top_terms",
-    "fuzzy_join_names",
-    "skyline_parts",
-    # ---- r9-latest driver evidence (the stalest block — the 8 entries
-    # evicted from the r13 window to make room for that round's
-    # code-changed tier), r9 driver order ----
-    "text_quality_score",
-    "embedding_norms",
-    "text_repetition",
-    "text_lang_id",
-    "text_fingerprint",
-    "multimodal_metadata",
-    "multimodal_byte_stats",
-    "multimodal_frame_sample",
-    # ---- r10-latest driver evidence, r10 driver order (the first 30 of
-    # the 46 r10-stale entries; the rest left out — ann_ivf_indexed,
-    # vocab_top_terms, text_pii_scrub, stratified_sample,
-    # dedup_incremental, and the youngest of this block evicted to make
-    # room for the r14 code-changed tier (q11_revenue_concentration,
-    # q21_sole_blame_suppliers, q22_idle_rich_customers,
-    # kmeans_cluster_stats, semdedup_pairs, curation_pipeline,
-    # quality_gopher_rules, unigram_perplexity, domain_mix_weights,
-    # importance_weights_dsir, sessionization, ann_lsh_topk;
-    # cms_heavy_hitters re-entered AS code-changed) — all sharing the
-    # same r10 staleness as the in-window tail, so the oldest-first
-    # invariant holds with max_in == min_out ----
-    "sample_split",
-    "doc_packing",
-    "embedding_downproject",
-    "hopping_window_hourly",
-    "zipf_alpha",
-    "quality_classifier_lr",
-    "ann_pq_topk",
-    "ann_ivfpq_topk",
-    "multimodal_phash_dedup",
-    "ab_bootstrap_ci",
-    "training_shards",
-    "dedup_exact",
-    "salted_join_revenue",
-    "bm25_topk",
-    "dedup_containment",
-    "q2_min_cost_supplier",
-    "q4_priority_checking",
-    "q6_forecast_revenue",
-    "q8_market_share",
-    "q9_product_profit",
-    "q12_priority_by_linestatus",
-    # ================= driver window boundary (50) ==================
-    # r15+ window: the 7 remaining r10-stale entries lead, then the 48
-    # r11-stale entries in r11 driver order.
-    # Everything else follows in module order.
-)
+
+def load_evidence(root: str) -> dict[str, tuple[int, int]]:
+    """name -> (latest round with a correctness row, the row's
+    position in that round's CORRECTNESS file)."""
+    evidence: dict[str, tuple[int, int]] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if not m:
+            continue
+        try:
+            with open(path) as f:
+                rows = json.load(f)
+        except (OSError, ValueError):
+            continue
+        if isinstance(rows, dict):
+            for pos, name in enumerate(rows):
+                evidence[name] = max(evidence.get(name, (0, 0)), (int(m.group(1)), pos))
+    return evidence
+
+
+def window_order(names, evidence: dict, changed) -> list[str]:
+    """The checked-window rotation: never-checked entries first (in the given
+    order), then code-changed ones, then the rest with the oldest evidence
+    first (ties in that round's file order)."""
+    never = [n for n in names if n not in evidence]
+    code = [n for n in names if n in evidence and n in changed]
+    rest = sorted((n for n in names if n in evidence and n not in changed), key=evidence.__getitem__)
+    return never + code + rest
 
 
 def all_queries() -> dict[str, QuerySpec]:
@@ -220,8 +68,4 @@ def all_queries() -> dict[str, QuerySpec]:
         for spec in module.QUERIES:
             assert spec.name not in collected, f"duplicate query name {spec.name}"
             collected[spec.name] = spec
-    missing = [n for n in _PRIORITY if n not in collected]
-    assert not missing, f"_PRIORITY names not declared: {missing}"
-    registry = {name: collected[name] for name in _PRIORITY}
-    registry.update({n: s for n, s in collected.items() if n not in registry})
-    return registry
+    return {n: collected[n] for n in window_order(collected, load_evidence(_REPO), _CODE_CHANGED)}

@@ -1,699 +1,20 @@
-"""Pin the bench regression guard (VERDICT r6 #2).
+"""Pin what remains of bench judging: the fan-out bench's burst pick, and
+the alternating A/B rule that is the repo's only regression judge.
 
-The r6 round shipped a +21% host-adjusted pagerank drift with an EMPTY
-regressions list because the guard's extras baseline came from whatever
-BENCH_DETAIL.json sat on disk — a different run, on a different host, than
-the BENCH_r* file the host_shift calibration was computed against. These
-tests pin the repaired contract:
-
-  1. extras baselines merge ONLY from a detail record provably from the
-     same run as the official BENCH_r* file ((sf, calibration_s) match);
-  2. a >15% host-adjusted drift on any stored-baseline query ALWAYS flags
-     (threshold pinned, both wall-time and throughput directions);
-  3. the thresholds themselves are pinned so a silent loosening fails CI.
-
-These tests pin steps 1-2 of the flag-disposition PROTOCOL documented in
-bench.py's module docstring (in-run retest -> band check -> settled
-worktree A/B); step 3's executed form is the committed BENCH_AB_r09.json.
+bench.py measures and reports; it calls no regression. A regression is
+attributed by ``python tools/probe_queries.py --ab COMMIT q1 q2 ...``:
+alternating HEAD/baseline probe windows, each a fresh process, judged
+by ``ab_verdict`` (head floor > 1.15x baseline floor) with self-
+escalation to 6 windows (``needs_escalation``) when a regression verdict
+is under-powered or drift-suspect.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from bench import (  # noqa: E402
-    REGRESSION_FACTOR,
-    REGRESSION_FLOOR_S,
-    _prev_bench_queries,
-    adaptive_min,
-    find_regressions,
-    host_shift_factor,
-)
-
-
-def _write(dirpath, name, payload):
-    with open(os.path.join(dirpath, name), "w") as f:
-        if name.endswith(".jsonl"):
-            for row in payload:
-                f.write(json.dumps(row) + "\n")
-        else:
-            json.dump(payload, f)
-
-
-def _fixture_dir(tmp_path, *, history=None, detail=None):
-    d = str(tmp_path)
-    _write(
-        d,
-        "BENCH_r06.json",
-        {
-            "sf": 0.1,
-            "calibration_s": 0.11,
-            "queries": {"q1_pricing_summary": 1.0, "ingest_events_per_sec": 79061.0},
-        },
-    )
-    if history is not None:
-        _write(d, "BENCH_HISTORY.jsonl", history)
-    if detail is not None:
-        _write(d, "BENCH_DETAIL.json", detail)
-    return d
-
-
-SAME_RUN = {
-    "sf": 0.1,
-    "calibration_s": 0.11,
-    "queries": {"q1_pricing_summary": 1.0},
-    "extras": {"pagerank_copurchase": 3.4},
-}
-OTHER_RUN = {
-    "sf": 0.1,
-    "calibration_s": 0.169,  # r6-snapshot shape: same SF, different host/run
-    "queries": {"q1_pricing_summary": 1.4},
-    "extras": {"pagerank_copurchase": 4.6},
-}
-
-
-def test_thresholds_pinned():
-    assert REGRESSION_FACTOR == 1.15
-    assert REGRESSION_FLOOR_S == 0.5
-
-
-def test_extras_baseline_requires_same_run_detail(tmp_path):
-    """The r6 miss, reproduced: a stale BENCH_DETAIL.json from a different
-    run must NOT provide extras baselines."""
-    d = _fixture_dir(tmp_path, detail=OTHER_RUN)
-    prev = _prev_bench_queries(0.1, here=d)
-    assert "q1_pricing_summary" in prev
-    assert "pagerank_copurchase" not in prev, (
-        "extras baseline leaked from a different run than the BENCH_r* file"
-    )
-
-
-def test_extras_baseline_found_in_history(tmp_path):
-    """The same-run detail is recovered from BENCH_HISTORY.jsonl even when
-    BENCH_DETAIL.json was overwritten by a later local run."""
-    d = _fixture_dir(tmp_path, history=[SAME_RUN, OTHER_RUN], detail=OTHER_RUN)
-    prev = _prev_bench_queries(0.1, here=d)
-    assert prev.get("pagerank_copurchase") == 3.4
-
-
-def test_host_adjusted_drift_always_flags(tmp_path):
-    """now > prev * shift * 1.15 flags, at exactly the boundary + epsilon."""
-    d = _fixture_dir(tmp_path, history=[SAME_RUN])
-    shift = 1.146
-    prev = 3.4
-    boundary = prev * shift * REGRESSION_FACTOR
-    flagged = find_regressions(
-        {"pagerank_copurchase": round(boundary + 0.01, 3)}, 0.1, shift, here=d
-    )
-    assert "pagerank_copurchase" in flagged
-    assert flagged["pagerank_copurchase"]["prev"] == prev
-    assert flagged["pagerank_copurchase"]["host_shift"] == shift
-    clean = find_regressions(
-        {"pagerank_copurchase": round(boundary - 0.01, 3)}, 0.1, shift, here=d
-    )
-    assert "pagerank_copurchase" not in clean
-
-
-def test_throughput_drift_flags_downward(tmp_path):
-    d = _fixture_dir(tmp_path, history=[SAME_RUN])
-    shift = 1.1
-    prev = 79061.0
-    boundary = prev / (shift * REGRESSION_FACTOR)
-    assert "ingest_events_per_sec" in find_regressions(
-        {"ingest_events_per_sec": round(boundary - 1, 1)}, 0.1, shift, here=d
-    )
-    assert "ingest_events_per_sec" not in find_regressions(
-        {"ingest_events_per_sec": round(boundary + 1, 1)}, 0.1, shift, here=d
-    )
-
-
-def test_sub_floor_queries_never_flag(tmp_path):
-    """Queries under the 0.5 s floor are noise-dominated — exempt."""
-    d = _fixture_dir(
-        tmp_path,
-        history=[{**SAME_RUN, "extras": {"tiny_q": 0.2}}],
-    )
-    assert not find_regressions({"tiny_q": 0.9}, 0.1, 1.0, here=d)
-
-
-def test_host_shift_prefers_calibration_ratio():
-    assert host_shift_factor({}, {}, 0.22, 0.11) == 2.0
-    # <5% shifts are noise
-    assert host_shift_factor({}, {}, 0.114, 0.11) == 1.0
-
-
-def test_host_shift_takes_worst_probe_axis():
-    """The r8 host lesson: a VM can read FASTER on the parallel probe
-    while its serial/Python axis is 2x slower (identical r7 code measured
-    both ways). The shift must follow the WORST degraded axis."""
-    shift = host_shift_factor(
-        {}, {}, 0.18, 0.215, serial_now=2.0, serial_prev=1.0
-    )
-    assert shift == 2.0
-    shift = host_shift_factor(
-        {}, {}, 0.18, 0.215, python_now=1.4, python_prev=1.0
-    )
-    assert shift == 1.4
-
-
-def test_host_shift_median_gated_by_probes():
-    """ADVICE r8: the cross-query median must NOT normalize a uniform
-    engine regression when the axis probes all read 1.0 and have
-    baselines. It joins (capped at 1.5) only when no serial/python probe
-    baseline exists, or when a probe corroborates a real host shift."""
-    timings = {f"q{i}": 2.0 for i in range(10)}
-    prev = {f"q{i}": 1.0 for i in range(10)}  # everything exactly 2x
-    # all three probe baselines exist and read equal -> median ignored:
-    # a 2x-everywhere drift with flat probes is an ENGINE change
-    detail: dict = {}
-    shift = host_shift_factor(
-        timings, prev, 0.1, 0.1,
-        serial_now=1.0, serial_prev=1.0,
-        python_now=1.0, python_prev=1.0,
-        detail=detail,
-    )
-    assert shift == 1.0, shift
-    assert "median_capped" not in detail["signals"]
-    # no serial/python baseline (pre-r8 rounds): median is the only
-    # signal covering that axis -> joins, capped at 1.5
-    detail = {}
-    shift = host_shift_factor(timings, prev, 0.1, 0.1, detail=detail)
-    assert shift == 1.5, shift
-    assert detail["winner"] == "median_capped"
-    # a probe corroborates (serial axis 1.4x) -> median may capture
-    # residual drift on an undersampled axis, still capped
-    detail = {}
-    shift = host_shift_factor(
-        timings, prev, 0.1, 0.1,
-        serial_now=1.4, serial_prev=1.0,
-        detail=detail,
-    )
-    assert shift == 1.5, shift
-    assert detail["signals"]["probe_serial"] == 1.4
-
-
-def test_second_window_clears_burst_flags_keeps_real_ones():
-    """An environment burst clears in the second window (min across
-    windows); a genuine regression persists. Throughput metrics keep the
-    max across windows."""
-    from bench import apply_second_window
-
-    timings = {"q_burst": 5.0, "ingest_events_per_sec": 53000.0}
-    extras = {"q_real": 4.0}
-    second = {"q_burst": 1.0, "q_real": 4.1, "ingest_events_per_sec": 80000.0}
-    redone = apply_second_window(
-        timings, extras, ["q_burst", "q_real", "ingest_events_per_sec"], second.get
-    )
-    assert redone == ["ingest_events_per_sec", "q_burst", "q_real"]
-    assert timings["q_burst"] == 1.0  # burst cleared
-    assert extras["q_real"] == 4.0  # real regression: min keeps the flag
-    assert timings["ingest_events_per_sec"] == 80000.0  # rate keeps max
-
-
-def test_second_window_skips_unremeasurable():
-    from bench import apply_second_window
-
-    timings = {"q": 5.0}
-    assert apply_second_window(timings, {}, ["q"], lambda n: None) == []
-    assert timings["q"] == 5.0
-
-
-def test_adaptive_min_two_strike_survives_cold_plateau():
-    """The r8 dedup_ngram_jaccard pattern: two cold samples agree (13.4,
-    13.4), a single-strike exit would record the plateau — the two-strike
-    rule keeps sampling and reaches the 4.8 s warm floor."""
-    s = _Sampler([13.4, 13.4, 13.3, 4.8])
-    best, extra = adaptive_min(s.sample, prev=3.75, release=s.release)
-    assert best == 4.8
-    assert s.released_at == [2]
-
-
-def test_wrong_sf_yields_no_baseline(tmp_path):
-    d = _fixture_dir(tmp_path, history=[SAME_RUN])
-    assert _prev_bench_queries(0.01, here=d) == {}
-
-
-class _Sampler:
-    """Scripted sample sequence that records when release() fires."""
-
-    def __init__(self, seq):
-        self.seq = list(seq)
-        self.released_at: list[int] = []
-        self.taken = 0
-
-    def sample(self):
-        v = self.seq[min(self.taken, len(self.seq) - 1)]
-        self.taken += 1
-        return v
-
-    def release(self):
-        self.released_at.append(self.taken)
-
-
-def test_adaptive_min_steady_query_never_releases():
-    """Fast queries exit after min-of-2: no extras, no memory release."""
-    s = _Sampler([1.0, 1.0])
-    best, extra = adaptive_min(s.sample, prev=1.0, release=s.release)
-    assert (best, extra) == (1.0, 0)
-    assert s.released_at == []
-
-
-def test_adaptive_min_clean_retest_clears_session_bleed():
-    """The r7 kmeans_train shape: both min-of-2 samples inflated by
-    session-state pressure, the post-release sample at true engine cost —
-    the flag must clear, and release must fire exactly once, before the
-    first extra."""
-    s = _Sampler([5.7, 5.6, 2.0])
-    best, extra = adaptive_min(s.sample, prev=1.766, release=s.release)
-    assert best == 2.0
-    assert extra == 1
-    assert s.released_at == [2], "release must precede the first extra sample"
-    assert best <= 1.766 * REGRESSION_FACTOR  # would no longer flag
-
-
-def test_adaptive_min_real_regression_survives_release():
-    """A genuine engine regression stays slow after the release: the
-    number stands (with its extras evidence), release still fires once."""
-    s = _Sampler([5.7, 5.6, 5.8, 5.7, 5.9])
-    best, extra = adaptive_min(s.sample, prev=1.766, release=s.release)
-    assert best > 1.766 * REGRESSION_FACTOR
-    assert s.released_at == [2]
-    assert extra >= 1
-
-
-def test_adaptive_min_no_baseline_no_extras():
-    s = _Sampler([9.0, 9.0])
-    best, extra = adaptive_min(s.sample, prev=None, release=s.release)
-    assert (best, extra) == (9.0, 0)
-    assert s.released_at == []
-
-
-# --- the r8 six-flag shape, reproduced with the committed numbers -----------
-# BENCH_HISTORY.jsonl rows 12 (r7 official, cal 0.215) and 17 (r8 driver
-# run, cal 0.123 / serial 1.446): the r7 run caught every serial-axis
-# query at its historical MINIMUM simultaneously, so the r8 driver bench
-# flagged all six at 1.23-1.39x — yet each r8 value sits inside the value
-# band this host had already recorded for identical code across r6-r8.
-
-R7_OFFICIAL = {
-    "cusum_changepoint": 0.553,
-    "dedup_embedding_cosine": 1.114,
-    "embedding_drift_mmd": 0.694,
-    "kneser_ney_perplexity": 1.038,
-    "textrank_keywords": 1.563,
-    "weak_label_analysis": 0.831,
-}
-R8_MEASURED = {
-    "cusum_changepoint": 0.744,
-    "dedup_embedding_cosine": 1.411,
-    "embedding_drift_mmd": 0.939,
-    "kneser_ney_perplexity": 1.324,
-    "textrank_keywords": 1.924,
-    "weak_label_analysis": 1.157,
-}
-# committed same-code runs around them (history rows 13-16)
-BAND_RUNS = [
-    {"cusum_changepoint": 0.771, "dedup_embedding_cosine": 1.237,
-     "embedding_drift_mmd": 0.805, "kneser_ney_perplexity": 1.142,
-     "textrank_keywords": 1.711, "weak_label_analysis": 1.051},
-    {"cusum_changepoint": 0.557, "dedup_embedding_cosine": 1.137,
-     "embedding_drift_mmd": 0.803, "kneser_ney_perplexity": 1.26,
-     "textrank_keywords": 2.037, "weak_label_analysis": 1.086},
-    {"cusum_changepoint": 0.607, "dedup_embedding_cosine": 1.242,
-     "embedding_drift_mmd": 0.864, "kneser_ney_perplexity": 1.307,
-     "textrank_keywords": 1.73, "weak_label_analysis": 0.876},
-    {"cusum_changepoint": 0.643, "dedup_embedding_cosine": 1.352,
-     "embedding_drift_mmd": 0.842, "kneser_ney_perplexity": 1.112,
-     "textrank_keywords": 1.693, "weak_label_analysis": 1.064},
-]
-
-
-def _r8_fixture(tmp_path, with_band: bool):
-    d = str(tmp_path)
-    _write(d, "BENCH_r07.json",
-           {"sf": 0.1, "calibration_s": 0.215, "queries": {"q_head": 1.0}})
-    history = [
-        # same-run detail for the official r7 record (extras baselines)
-        {"sf": 0.1, "calibration_s": 0.215, "queries": {"q_head": 1.0},
-         "extras": dict(R7_OFFICIAL)},
-    ]
-    if with_band:
-        history = [
-            {"sf": 0.1, "calibration_s": 0.1 + i * 0.01, "extras": dict(run)}
-            for i, run in enumerate(BAND_RUNS)
-        ] + history
-    _write(d, "BENCH_HISTORY.jsonl", history)
-    return d
-
-
-def test_r8_six_flag_shape_without_band_history(tmp_path):
-    """The r8 miss reproduced: min-of-band baselines + no band evidence
-    (single committed sample per query) -> all six hard-flag."""
-    d = _r8_fixture(tmp_path, with_band=False)
-    flags = find_regressions(dict(R8_MEASURED), 0.1, 1.0, here=d)
-    assert sorted(flags) == sorted(R7_OFFICIAL), flags
-
-
-def test_r8_six_flag_shape_cleared_by_serial_probe_normalization(tmp_path):
-    """VERDICT r8 #1, the primary fix: with the serial probe baseline now
-    committed (it exists from r8 on), the r8 host's measured serial axis
-    (calibration_serial_s 1.446 vs 1.064 on the settled closing run
-    minutes earlier — history row 16) normalizes the shift to ~1.36 even
-    though the PARALLEL probe read faster, and every one of the six
-    1.23-1.39x flags clears. kneser_ney measuring FASTER than baseline in
-    the builder's own closing run proves none of them was engine."""
-    d = _r8_fixture(tmp_path, with_band=False)
-    detail: dict = {}
-    shift = host_shift_factor(
-        dict(R8_MEASURED), dict(R7_OFFICIAL),
-        0.123, 0.215,  # parallel probe read FASTER on the r8 host
-        serial_now=1.446, serial_prev=1.064,
-        detail=detail,
-    )
-    assert detail["winner"] == "probe_serial"
-    assert 1.3 < shift < 1.4, shift
-    flags = find_regressions(dict(R8_MEASURED), 0.1, shift, here=d)
-    assert flags == {}, flags
-
-
-def test_band_suppresses_revisited_values_keeps_evidence(tmp_path, monkeypatch):
-    """Secondary fix: a would-be flag whose value sits inside the
-    committed cross-round band on untouched code (cusum 0.744 <= 0.771,
-    textrank 1.924 <= 2.037 across rows 13-16) is environment revisiting
-    its own band — reported as within_band evidence, not a hard flag.
-
-    The fixture queries must count as UNTOUCHED here regardless of what the
-    live round declares in _CODE_CHANGED (r13 declared textrank_keywords,
-    which correctly bypasses the band and broke the unpatched fixture), so
-    the code-changed set is pinned empty."""
-    import bench as bench_mod
-
-    monkeypatch.setattr(
-        bench_mod, "_code_changed_queries", lambda: frozenset()
-    )
-    d = _r8_fixture(tmp_path, with_band=True)
-    subset = {
-        "cusum_changepoint": R8_MEASURED["cusum_changepoint"],
-        "textrank_keywords": R8_MEASURED["textrank_keywords"],
-    }
-    band_out: dict = {}
-    flags = find_regressions(subset, 0.1, 1.0, here=d, band_out=band_out)
-    assert flags == {}, flags
-    assert sorted(band_out) == sorted(subset)
-    for name, ev in band_out.items():
-        assert ev["now"] <= ev["band_hi"], (name, ev)
-        assert ev["band_n"] >= 3
-
-
-def test_band_never_suppresses_out_of_band_or_changed_code(tmp_path, monkeypatch):
-    """A value ABOVE the committed band always hard-flags (a real
-    regression produces a number the host has never recorded), and a
-    code-changed query hard-flags even inside the band (band values
-    measured OLD code)."""
-    import bench as bench_mod
-
-    d = _r8_fixture(tmp_path, with_band=True)
-    beyond = {"cusum_changepoint": 0.90}  # > band hi 0.771
-    flags = find_regressions(beyond, 0.1, 1.0, here=d)
-    assert sorted(flags) == ["cusum_changepoint"], flags
-
-    monkeypatch.setattr(
-        bench_mod, "_code_changed_queries", lambda: frozenset({"textrank_keywords"})
-    )
-    flags = find_regressions(
-        {"textrank_keywords": R8_MEASURED["textrank_keywords"]}, 0.1, 1.0, here=d
-    )
-    assert sorted(flags) == ["textrank_keywords"], flags
-
-
-def test_band_rate_direction_and_reporting(tmp_path):
-    """Rates band on the LOW side (a throughput dip the host has already
-    recorded on identical code is oscillation; below the committed floor
-    it hard-flags), and suppressed entries are always REPORTED in
-    band_out — the band never silently hides a reading."""
-    d = str(tmp_path)
-    _write(d, "BENCH_r07.json",
-           {"sf": 0.1, "calibration_s": 0.2,
-            "queries": {"ingest_events_per_sec": 90000.0}})
-    history = [
-        {"sf": 0.1, "calibration_s": 0.2,
-         "queries": {"ingest_events_per_sec": 90000.0}},
-        {"sf": 0.1, "calibration_s": 0.15,
-         "queries": {"ingest_events_per_sec": 62000.0}},
-        {"sf": 0.1, "calibration_s": 0.16,
-         "queries": {"ingest_events_per_sec": 85000.0}},
-    ]
-    _write(d, "BENCH_HISTORY.jsonl", history)
-    # 70k is a >1.15x dip vs the 90k baseline but above the committed
-    # 62k floor -> within_band evidence, not a flag
-    band_out: dict = {}
-    flags = find_regressions(
-        {"ingest_events_per_sec": 70000.0}, 0.1, 1.0, here=d, band_out=band_out
-    )
-    assert flags == {}, flags
-    assert band_out["ingest_events_per_sec"]["band_lo"] == 62000.0
-    # below the committed floor -> hard flag
-    flags = find_regressions({"ingest_events_per_sec": 55000.0}, 0.1, 1.0, here=d)
-    assert sorted(flags) == ["ingest_events_per_sec"], flags
-
-
-def test_median_residual_cap_tracks_probe_magnitude():
-    """A 1.06 probe drift must not re-admit a 1.5 median: with EVERY axis
-    baselined the median may exceed the worst probe only by the residual
-    1.15 margin, so a large uniform engine regression cannot launder
-    itself through a mild real host shift."""
-    timings = {f"q{i}": 2.0 for i in range(10)}
-    prev = {f"q{i}": 1.0 for i in range(10)}
-    detail: dict = {}
-    shift = host_shift_factor(
-        timings, prev, 0.1, 0.1,
-        serial_now=1.06, serial_prev=1.0,
-        python_now=1.0, python_prev=1.0,
-        detail=detail,
-    )
-    assert detail["signals"]["median_capped"] <= round(1.06 * 1.15, 3) + 1e-9
-    assert shift <= 1.22, shift
-
-
-def test_median_admitted_when_any_axis_lacks_baseline():
-    """ADVICE r9 #3: with exactly one axis baselined (serial present,
-    python absent) and every present probe flat, a uniform drift on the
-    un-probed axis must still reach the median backstop — partial
-    baselines are treated the same as none for the admission gate."""
-    timings = {f"q{i}": 1.3 for i in range(10)}
-    prev = {f"q{i}": 1.0 for i in range(10)}
-    detail: dict = {}
-    shift = host_shift_factor(
-        timings, prev, 0.1, 0.1,
-        serial_now=1.0, serial_prev=1.0,  # python axis has NO baseline
-        detail=detail,
-    )
-    assert detail["signals"]["median_capped"] == 1.3
-    assert detail["winner"] == "median_capped"
-    assert shift == 1.3, shift
-
-
-def test_band_excludes_slow_host_rows(tmp_path):
-    """ADVICE r9 #1: a history row benched on a recognized-slow host
-    (host_shift > 1.05) committed raw values inflated by that shift —
-    they were unflagged only BECAUSE of shift normalization. As band_hi
-    they would hide a genuine engine regression of up to that ratio
-    measured later on a settled host. Slow-host rows contribute no band
-    evidence (excluded, not divided back — the recorded shift is a
-    global max-of-axes, not a per-query factor), so the settled-host
-    regression hard-flags while genuine settled-band revisits stay
-    suppressed."""
-    d = str(tmp_path)
-    _write(d, "BENCH_r07.json",
-           {"sf": 0.1, "calibration_s": 0.2, "queries": {"q_n": 0.9}})
-    history = [
-        {"sf": 0.1, "calibration_s": 0.2, "host_shift": 1.0, "queries": {"q_n": 1.0}},
-        {"sf": 0.1, "calibration_s": 0.19, "host_shift": 1.0, "queries": {"q_n": 1.1}},
-        {"sf": 0.1, "calibration_s": 0.18, "host_shift": 1.0, "queries": {"q_n": 1.05}},
-        # the slow-VM round: raw 1.9 s on a 1.894x host = settled ~1.0 s
-        {"sf": 0.1, "calibration_s": 0.38, "host_shift": 1.894, "queries": {"q_n": 1.9}},
-    ]
-    _write(d, "BENCH_HISTORY.jsonl", history)
-    # a settled-host 1.8 s reading is a real regression: it must NOT hide
-    # under the raw 1.9 band ceiling the slow host wrote
-    flags = find_regressions({"q_n": 1.8}, 0.1, 1.0, here=d)
-    assert sorted(flags) == ["q_n"], flags
-    # a reading inside the NORMALIZED band stays suppressed-with-evidence
-    band_out: dict = {}
-    flags = find_regressions({"q_n": 1.08}, 0.1, 1.0, here=d, band_out=band_out)
-    assert flags == {}, flags
-    assert band_out["q_n"]["band_hi"] <= 1.11, band_out
-
-
-def test_band_normalizes_current_slow_host_reading(tmp_path):
-    """The inverse direction: with the band settled-host normalized, a
-    raw reading taken on a CURRENTLY slow host (shift > 1) must be
-    deflated by the current shift before the band comparison — otherwise
-    pure host oscillation the band exists to absorb would hard-flag."""
-    d = str(tmp_path)
-    # the r8 shape: the baseline run caught the query at its band MINIMUM
-    _write(d, "BENCH_r07.json",
-           {"sf": 0.1, "calibration_s": 0.2, "queries": {"q_n": 0.95}})
-    history = [
-        {"sf": 0.1, "calibration_s": 0.2, "host_shift": 1.0, "queries": {"q_n": 0.95}},
-        {"sf": 0.1, "calibration_s": 0.19, "host_shift": 1.0, "queries": {"q_n": 1.3}},
-        {"sf": 0.1, "calibration_s": 0.18, "host_shift": 1.0, "queries": {"q_n": 1.05}},
-    ]
-    _write(d, "BENCH_HISTORY.jsonl", history)
-    # raw 1.75 on a 1.4x host clears the shifted flag threshold
-    # (0.95 * 1.4 * 1.15 = 1.53) but deflates to 1.25, inside the
-    # settled 0.95-1.3 band — oscillation, not a flag. Comparing the RAW
-    # reading against the normalized band would have hard-flagged it.
-    band_out: dict = {}
-    flags = find_regressions({"q_n": 1.75}, 0.1, 1.4, here=d, band_out=band_out)
-    assert flags == {}, flags
-    assert "q_n" in band_out
-
-
-def test_band_drops_values_older_than_code_change(tmp_path):
-    """ADVICE r9 #2: the 6-row band window can still contain rows that
-    predate a prior round's optimization of a query, so a regression that
-    reverts the optimization back to old-code speed would sit inside the
-    stale band and be suppressed as oscillation. Rows now record their
-    run's code-changed set, and a query's band starts at its most recent
-    change row."""
-    d = str(tmp_path)
-    _write(d, "BENCH_r07.json",
-           {"sf": 0.1, "calibration_s": 0.2, "queries": {"q_opt": 1.0}})
-    history = [
-        # old-code rows (pre-optimization): 2.0-2.1 s
-        {"sf": 0.1, "calibration_s": 0.2, "code_changed": [], "queries": {"q_opt": 2.0}},
-        {"sf": 0.1, "calibration_s": 0.19, "code_changed": [], "queries": {"q_opt": 2.1}},
-        {"sf": 0.1, "calibration_s": 0.18, "code_changed": [], "queries": {"q_opt": 2.05}},
-        # the optimization round: this row measured the NEW code
-        {"sf": 0.1, "calibration_s": 0.2, "code_changed": ["q_opt"], "queries": {"q_opt": 1.0}},
-        {"sf": 0.1, "calibration_s": 0.19, "code_changed": [], "queries": {"q_opt": 1.25}},
-        {"sf": 0.1, "calibration_s": 0.2, "code_changed": [], "queries": {"q_opt": 1.04}},
-    ]
-    _write(d, "BENCH_HISTORY.jsonl", history)
-    # a revert to old-code speed must hard-flag — the stale 2.1 ceiling
-    # is not evidence for the post-change code
-    flags = find_regressions({"q_opt": 2.0}, 0.1, 1.0, here=d)
-    assert sorted(flags) == ["q_opt"], flags
-    # post-change oscillation inside the fresh (post-change) band stays
-    # suppressed — the reset keeps the new-code rows as evidence
-    band_out: dict = {}
-    flags = find_regressions({"q_opt": 1.2}, 0.1, 1.0, here=d, band_out=band_out)
-    assert flags == {}, flags
-    assert band_out["q_opt"]["band_hi"] <= 1.25 + 1e-9, band_out
-
-
-def test_band_skips_legacy_rows_for_pre_log_changed_queries(tmp_path):
-    """Rows written before code-change recording existed cannot be
-    classified pre- or post-change; for queries whose last change
-    predates the recording (_BAND_PRE_LOG_CHANGED) they contribute no
-    band evidence — fail-closed: the revert scenario hard-flags."""
-    import bench as bench_mod
-
-    assert "kmeans_train" in bench_mod._BAND_PRE_LOG_CHANGED
-    d = str(tmp_path)
-    _write(d, "BENCH_r07.json",
-           {"sf": 0.1, "calibration_s": 0.2, "queries": {"kmeans_train": 1.766}})
-    history = [  # legacy rows (no code_changed key) at pre-rewrite speed
-        {"sf": 0.1, "calibration_s": 0.2, "queries": {"kmeans_train": 5.0}},
-        {"sf": 0.1, "calibration_s": 0.19, "queries": {"kmeans_train": 5.5}},
-        {"sf": 0.1, "calibration_s": 0.18, "queries": {"kmeans_train": 5.2}},
-        {"sf": 0.1, "calibration_s": 0.2, "queries": {"kmeans_train": 5.1}},
-    ]
-    _write(d, "BENCH_HISTORY.jsonl", history)
-    flags = find_regressions({"kmeans_train": 5.2}, 0.1, 1.0, here=d)
-    assert sorted(flags) == ["kmeans_train"], (
-        "legacy pre-change rows must not band-absorb an optimization revert",
-        flags,
-    )
-
-
-def test_uniform_regression_flags_end_to_end(tmp_path):
-    """VERDICT r9 #6, the adversarial probe of the band machinery itself:
-    a SYNTHETIC genuine 1.5x uniform slowdown must survive the WHOLE
-    guard chain — shift computation with all probe axes baselined and
-    flat (median excluded), band lookup against settled history — and
-    produce non-empty regressions. Second variant: a mild REAL 1.06 host
-    shift admits the residual-capped median, and the cap must preserve
-    detection (1.5 > 1.219 * 1.15)."""
-    d = str(tmp_path)
-    names = [f"q{i}" for i in range(10)]
-    _write(d, "BENCH_r07.json",
-           {"sf": 0.1, "calibration_s": 0.2,
-            "queries": {n: 1.0 for n in names}})
-    history = [
-        {"sf": 0.1, "calibration_s": 0.2, "host_shift": 1.0,
-         "queries": {n: v for n in names}}
-        for v in (0.95, 1.0, 1.05)
-    ]
-    _write(d, "BENCH_HISTORY.jsonl", history)
-    now = {n: 1.5 for n in names}
-    # variant 1: flat probes, every axis baselined -> shift stays 1.0
-    detail: dict = {}
-    shift = host_shift_factor(
-        dict(now), {n: 1.0 for n in names}, 0.1, 0.1,
-        serial_now=1.0, serial_prev=1.0,
-        python_now=1.0, python_prev=1.0,
-        detail=detail,
-    )
-    assert shift == 1.0, (shift, detail)
-    flags = find_regressions(dict(now), 0.1, shift, here=d)
-    assert sorted(flags) == sorted(names), flags
-    # variant 2: a real 1.06 serial drift -> residual-capped median joins,
-    # shift <= 1.22, and the uniform 1.5x still clears 1.22 * 1.15
-    detail = {}
-    shift = host_shift_factor(
-        dict(now), {n: 1.0 for n in names}, 0.1, 0.1,
-        serial_now=1.06, serial_prev=1.0,
-        python_now=1.0, python_prev=1.0,
-        detail=detail,
-    )
-    assert shift <= 1.22, (shift, detail)
-    flags = find_regressions(dict(now), 0.1, shift, here=d)
-    assert sorted(flags) == sorted(names), flags
-
-
-def test_fanout_below_floor_flags(tmp_path, monkeypatch):
-    """VERDICT r9 #2: the fan-out per-sub rate gets the same floor-band
-    machinery as every other metric — a dip above the committed floor is
-    within_band evidence, below the committed floor it hard-flags.
-    (The round-local _BENCH_CODE_CHANGED declaration is neutralized: this
-    test pins the steady-state band machinery, and a code-changed metric
-    correctly skips band suppression that round.)"""
-    import bench
-
-    monkeypatch.setattr(bench, "_BENCH_CODE_CHANGED", ())
-    d = str(tmp_path)
-    _write(d, "BENCH_r09.json",
-           {"sf": 0.1, "calibration_s": 0.2,
-            "queries": {"q_head": 1.0},
-            "extras": {"delivery_fanout_events_per_sec": 26514.0}})
-    history = [
-        {"sf": 0.1, "calibration_s": 0.2, "host_shift": 1.0,
-         "queries": {"q_head": 1.0},
-         "extras": {"delivery_fanout_events_per_sec": v}}
-        for v in (17566.0, 26514.0, 11600.0)
-    ]
-    _write(d, "BENCH_HISTORY.jsonl", history)
-    # 15000/sub: >1.15x below the 26514 baseline but above the 11600
-    # committed floor -> oscillation evidence, not a flag
-    band_out: dict = {}
-    flags = find_regressions(
-        {"delivery_fanout_events_per_sec": 15000.0}, 0.1, 1.0,
-        here=d, band_out=band_out,
-    )
-    assert flags == {}, flags
-    assert band_out["delivery_fanout_events_per_sec"]["band_lo"] == 11600.0
-    # below the committed floor -> hard flag
-    flags = find_regressions(
-        {"delivery_fanout_events_per_sec": 9000.0}, 0.1, 1.0, here=d
-    )
-    assert sorted(flags) == ["delivery_fanout_events_per_sec"], flags
-
 
 def test_fanout_burst_selection_excludes_warmup():
     """The fan-out warmup burst absorbs first-tick costs and must never
@@ -713,7 +34,7 @@ def test_fanout_burst_selection_excludes_warmup():
 
 
 def test_ab_verdict_attributes_engine_vs_host():
-    """PROTOCOL step 3's attribution rule (tools/probe_queries.py --ab):
+    """The A/B attribution rule (tools/probe_queries.py --ab):
     min-of-windows on both sides, engine regression iff the HEAD floor is
     >1.15x the baseline floor. The r9 shape: identical old code slow in
     one window (host burst) must NOT convict HEAD when another baseline
@@ -826,6 +147,35 @@ def test_pair_ratio_median_is_unbiased_for_even_pair_counts():
     assert v["q"]["pair_ratio_median"] == 1.1, v
 
 
+def test_ab_verdict_rate_direction():
+    """Rate metrics (*_per_sec) attribute in the throughput direction:
+    best = MAX across windows on both sides, ratio = baseline/head, so a
+    HEAD whose best rate is >1.15x below the baseline's best rate is the
+    engine, while rates that dip together are the host — the same
+    A/B rule the queries get."""
+    from tools.probe_queries import ab_verdict
+
+    windows = {
+        "W1_head": {"side": "head", "queries": {"host_r_per_sec": 20000.0, "eng_r_per_sec": 10000.0}},
+        "W2_base": {"side": "base", "queries": {"host_r_per_sec": 19000.0, "eng_r_per_sec": 21000.0}},
+        "W3_head": {"side": "head", "queries": {"host_r_per_sec": 26000.0, "eng_r_per_sec": 11000.0}},
+        "W4_base": {"side": "base", "queries": {"host_r_per_sec": 26500.0, "eng_r_per_sec": 22000.0}},
+    }
+    v = ab_verdict(windows)
+    # r_host: both sides reach ~26k in their best window -> host weather
+    assert not v["host_r_per_sec"]["engine_regression"], v
+    assert v["host_r_per_sec"]["head_best"] == 26000.0 and v["host_r_per_sec"]["baseline_best"] == 26500.0
+    # r_eng: head tops out at 11k while baseline reaches 22k -> engine
+    assert v["eng_r_per_sec"]["engine_regression"], v
+    assert v["eng_r_per_sec"]["ratio"] == 2.0
+    # boundary: exactly at the factor does not convict
+    at = ab_verdict({
+        "W1": {"side": "head", "queries": {"r_per_sec": 100.0}},
+        "W2": {"side": "base", "queries": {"r_per_sec": 115.0}},
+    })
+    assert not at["r_per_sec"]["engine_regression"], at
+
+
 def test_needs_escalation_rule():
     """VERDICT r12 #5: a regression verdict annotated low_power or
     drift_suspect self-escalates (run_ab extends the alternating run
@@ -851,103 +201,31 @@ def test_needs_escalation_rule():
     assert needs_escalation(mixed, 4)
 
 
-def test_weather_classify_gates_on_session_stable_axes():
-    """tools/weather.py settled-gate rule: serial + python probe ratios
-    gate at the 1.05 noise threshold (the same one host_shift_factor
-    uses); the parallel axis is advisory by default because a fresh
-    session samples it high vs bench.py's end-of-session read, and
-    joins only under --strict."""
-    from tools.weather import classify
+def test_ab_windows_forward_measurement_flags(monkeypatch):
+    """Every A/B window runs with the flags the A/B was started with: an
+    ``--ab X --sf1 --no-warmup`` run must not silently measure both sides
+    at the base SF or with warmup."""
+    import json
+    import subprocess
+    from types import SimpleNamespace
 
-    prev = {"parallel": 0.055, "serial": 0.973, "python": 0.425}
-    v = classify({"parallel": 0.2, "serial": 0.95, "python": 0.43}, prev)
-    assert v["settled"] and v["ratios"]["parallel"] > 1.05, v
-    assert not classify(
-        {"parallel": 0.2, "serial": 0.95, "python": 0.43}, prev, strict=True
-    )["settled"], "strict mode must gate on the parallel axis too"
-    v2 = classify({"parallel": 0.05, "serial": 1.25, "python": 0.43}, prev)
-    assert not v2["settled"] and v2["worst"][0] == "serial", v2
-    # no gating axis with a baseline -> never settled (vacuous pass is
-    # exactly the sf0.001 probe's misleading "shift 1.0, signals {}" read)
-    assert not classify({"parallel": 0.05}, {"parallel": 0.055})["settled"]
+    from tools import probe_queries
 
+    calls = []
 
-def test_band_excludes_self_flagged_values(tmp_path):
-    """A value a run ITSELF flagged must not become band evidence — else
-    a genuine regression's first flagged run poisons the band and the
-    next run demotes the same regression to oscillation."""
-    d = str(tmp_path)
-    _write(d, "BENCH_r07.json",
-           {"sf": 0.1, "calibration_s": 0.2, "queries": {"q_slow": 1.0}})
-    history = [
-        {"sf": 0.1, "calibration_s": 0.2, "queries": {"q_slow": 1.0}},
-        {"sf": 0.1, "calibration_s": 0.18, "queries": {"q_slow": 1.05}},
-        {"sf": 0.1, "calibration_s": 0.19, "queries": {"q_slow": 0.95}},
-        # the regression round: 2.0 was FLAGGED by its own run
-        {"sf": 0.1, "calibration_s": 0.2, "queries": {"q_slow": 2.0},
-         "regressions": {"q_slow": {"prev": 1.0, "now": 2.0}}},
-    ]
-    _write(d, "BENCH_HISTORY.jsonl", history)
-    flags = find_regressions({"q_slow": 1.95}, 0.1, 1.0, here=d)
-    assert sorted(flags) == ["q_slow"], (
-        "the band absorbed a self-flagged value and demoted a real regression",
-        flags,
+    def fake_run(cmd, **kw):
+        calls.append(cmd)
+        return SimpleNamespace(returncode=0, stdout=json.dumps({"queries": {}}) + "\n", stderr="")
+
+    monkeypatch.setattr(subprocess, "run", fake_run)
+    args = SimpleNamespace(
+        sf_dir="/data/sf0.1", runs=3, sf1=True, no_warmup=True, queries=["q1", "q3"]
     )
-
-
-def test_ingest_below_floor_flags(tmp_path):
-    """VERDICT r10 #2: the ingest rate gets the same committed floor-band
-    treatment as the fan-out rate (it lives in the QUERIES dict of history
-    rows, not extras) — a dip above the committed floor is within_band
-    evidence, below the committed floor it hard-flags, so a real ingest
-    regression cannot hide in the 79-92k ev/s host spread."""
-    d = str(tmp_path)
-    _write(d, "BENCH_r10.json",
-           {"sf": 0.1, "calibration_s": 0.2,
-            "queries": {"ingest_events_per_sec": 91700.0}})
-    history = [
-        {"sf": 0.1, "calibration_s": 0.2, "host_shift": 1.0,
-         "queries": {"ingest_events_per_sec": v}}
-        for v in (85900.0, 91700.0, 79200.0)
+    assert probe_queries._run_window("/tree", args) == {"queries": {}}
+    cmd = calls[-1]
+    assert cmd[1] == os.path.join("/tree", "tools", "probe_queries.py")
+    assert cmd[2:] == [
+        "--sf-dir", "/data/sf0.1", "--runs", "3", "--sf1", "--no-warmup", "q1", "q3"
     ]
-    _write(d, "BENCH_HISTORY.jsonl", history)
-    # 79.5k: >1.15x below the 91.7k baseline but above the 79.2k committed
-    # floor -> oscillation evidence, not a flag
-    band_out: dict = {}
-    flags = find_regressions(
-        {"ingest_events_per_sec": 79500.0}, 0.1, 1.0, here=d, band_out=band_out,
-    )
-    assert flags == {}, flags
-    assert band_out["ingest_events_per_sec"]["band_lo"] == 79200.0
-    # below the committed floor -> hard flag
-    flags = find_regressions({"ingest_events_per_sec": 65000.0}, 0.1, 1.0, here=d)
-    assert sorted(flags) == ["ingest_events_per_sec"], flags
-
-
-def test_ab_verdict_rate_direction():
-    """Rate metrics (*_per_sec) attribute in the throughput direction:
-    best = MAX across windows on both sides, ratio = baseline/head, so a
-    HEAD whose best rate is >1.15x below the baseline's best rate is the
-    engine, while rates that dip together are the host — the same
-    mechanical step-3 path the query flags get."""
-    from tools.probe_queries import ab_verdict
-
-    windows = {
-        "W1_head": {"side": "head", "queries": {"host_r_per_sec": 20000.0, "eng_r_per_sec": 10000.0}},
-        "W2_base": {"side": "base", "queries": {"host_r_per_sec": 19000.0, "eng_r_per_sec": 21000.0}},
-        "W3_head": {"side": "head", "queries": {"host_r_per_sec": 26000.0, "eng_r_per_sec": 11000.0}},
-        "W4_base": {"side": "base", "queries": {"host_r_per_sec": 26500.0, "eng_r_per_sec": 22000.0}},
-    }
-    v = ab_verdict(windows)
-    # r_host: both sides reach ~26k in their best window -> host weather
-    assert not v["host_r_per_sec"]["engine_regression"], v
-    assert v["host_r_per_sec"]["head_best"] == 26000.0 and v["host_r_per_sec"]["baseline_best"] == 26500.0
-    # r_eng: head tops out at 11k while baseline reaches 22k -> engine
-    assert v["eng_r_per_sec"]["engine_regression"], v
-    assert v["eng_r_per_sec"]["ratio"] == 2.0
-    # boundary: exactly at the factor does not convict
-    at = ab_verdict({
-        "W1": {"side": "head", "queries": {"r_per_sec": 100.0}},
-        "W2": {"side": "base", "queries": {"r_per_sec": 115.0}},
-    })
-    assert not at["r_per_sec"]["engine_regression"], at
+    probe_queries._run_window("/tree", SimpleNamespace(**{**vars(args), "sf1": False, "no_warmup": False}))
+    assert "--sf1" not in calls[-1] and "--no-warmup" not in calls[-1]

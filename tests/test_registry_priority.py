@@ -3,16 +3,16 @@
 The driver verifies only the first ~50 registry entries each round
 (CORRECTNESS_r{N}.json). Round 5 shipped 7 new operators at positions
 50-56 — one slot past the cutoff — so none got driver evidence in its
-debut round. These tests make that structurally impossible to repeat:
+debut round. The registry order is now computed from the committed
+evidence (``jetstream_spark.queries.window_order``); these tests pin the
+pure rule on synthetic evidence and its outcome on the committed files:
 
   1. every registry entry with ZERO driver evidence (no row in any
      committed CORRECTNESS_r*.json) must appear before EVERY entry that
      has evidence — new operators always lead the window;
-  2. all never-checked entries must fit inside the 50-entry window.
-
-The evidence map is derived from the committed CORRECTNESS files, so the
-test self-updates as rounds land: once the driver checks an entry, it is
-free to rotate back.
+  2. all never-checked entries must fit inside the 50-entry window;
+  3. after those and the declared code-changed entries, the window holds
+     the stalest evidence.
 """
 
 from __future__ import annotations
@@ -67,25 +67,6 @@ def test_never_checked_entries_fit_in_driver_window():
     assert not outside, (
         f"entries with zero driver evidence sit outside the {DRIVER_WINDOW}-entry "
         f"driver window and will miss their debut-round check: {outside}"
-    )
-
-
-def test_priority_names_unique():
-    from jetstream_spark.queries import _PRIORITY
-
-    assert len(_PRIORITY) == len(set(_PRIORITY)), "duplicate names in _PRIORITY"
-
-
-def test_priority_window_is_exactly_full():
-    """The curated head must fill the driver window exactly (ADVICE r6:
-    round 6 listed 54 names above the '(50)' boundary comment, so the last
-    four silently missed their intended re-check)."""
-    from jetstream_spark.queries import _PRIORITY
-
-    assert len(_PRIORITY) == DRIVER_WINDOW, (
-        f"_PRIORITY holds {len(_PRIORITY)} names; the driver checks exactly "
-        f"{DRIVER_WINDOW} — names past the boundary are silently skipped, "
-        "names short of it waste rotation slots"
     )
 
 
@@ -165,3 +146,53 @@ def test_window_is_oldest_evidence_first():
         f"rotation violated under the full evidence map ({full}) AND under "
         f"the curation-time map excluding round {newest} ({without_newest})"
     )
+
+
+def test_window_is_stalest_under_full_evidence():
+    """The computed order satisfies the rotation rule under the full
+    committed evidence map, not only under the curation-time fallback."""
+    assert _window_is_stalest_first(_registry_order(), _evidence_rounds()) is None
+
+
+def test_window_order_tiers_on_synthetic_evidence():
+    from jetstream_spark.queries import window_order
+
+    names = ["new_b", "r3_first", "new_a", "changed", "r2_late", "r4", "r2_early", "r3_second"]
+    evidence = {
+        "r3_first": (3, 0),
+        "r3_second": (3, 1),
+        "changed": (4, 2),
+        "r2_late": (2, 7),
+        "r4": (4, 0),
+        "r2_early": (2, 1),
+    }
+    order = window_order(names, evidence, ("changed", "new_a"))
+    assert order == [
+        "new_b", "new_a",  # never checked, in module order (changed or not)
+        "changed",  # code changed since its last check
+        "r2_early", "r2_late",  # oldest round first, its file order breaks the tie
+        "r3_first", "r3_second",
+        "r4",
+    ]
+
+
+def test_load_evidence_keeps_latest_round_and_file_order(tmp_path):
+    from jetstream_spark.queries import load_evidence
+
+    def write(name, rows):
+        (tmp_path / name).write_text(json.dumps({n: {"hash_match": True} for n in rows}))
+
+    write("CORRECTNESS_r2.json", ["b", "a", "c"])
+    write("CORRECTNESS_r10.json", ["c", "a"])  # round 10 sorts after round 2
+    (tmp_path / "CORRECTNESS_r11.json").write_text("not json")
+    write("CORRECTNESS_r12_notes.json", ["b"])  # not a round file
+    assert load_evidence(str(tmp_path)) == {"b": (2, 0), "c": (10, 0), "a": (10, 1)}
+
+
+def test_no_evidence_files_gives_module_order(tmp_path, monkeypatch):
+    import jetstream_spark.queries as registry
+    from jetstream_spark.queries import clustering, dedup, eventlog, multimodal, profiling, quality, relational, relational2, relational3, relational4, relational5, sampling, similarity, sketches, text, tokenizer
+
+    monkeypatch.setattr(registry, "_REPO", str(tmp_path))
+    modules = (relational, relational2, relational3, relational4, relational5, eventlog, dedup, similarity, clustering, sketches, text, quality, multimodal, sampling, tokenizer, profiling)
+    assert list(registry.all_queries()) == [spec.name for m in modules for spec in m.QUERIES]

@@ -12,7 +12,7 @@ trades off (write wall, file-count accumulation, scan-open overhead).
 Protocol: ONE process, every cell's batches interleaved across PASSES
 (pass 1 runs all cells once, pass 2 repeats; per-cell value = min of the
 per-pass mean batch seconds), so every cell samples the same span of host
-weather — the same reasoning as the bench's in-run retest. `disabled`
+weather — the same reasoning as the alternating A/B. `disabled`
 monkeypatches `_write_coalesce_k` to None (the pre-r11 status quo: one
 file per shuffle partition). This is an informational sensitivity table,
 not a regression gate — the committed gate for the coalesce itself is
@@ -155,7 +155,6 @@ def main() -> int:
         "default_parallelism": par,
         "batches_per_pass": BATCHES_PER_PASS,
         "passes": PASSES,
-        "calibration_s": bench.bench_calibration(spark),
         "cells": {k: v for k, v in sorted(results.items())},
     }
     print(json.dumps(out, indent=1))

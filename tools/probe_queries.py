@@ -1,38 +1,32 @@
-"""Settled-host probe of named queries: min-of-N wall times plus the three
-calibration probes, as ONE JSON line — the committed-evidence format for
-bench-flag attribution (VERDICT r8 #1: "weak until attributed with
-committed evidence").
+"""Probe named queries: min-of-N wall times as ONE JSON line, and the
+alternating A/B that is the repo's only regression judge.
 
 Usage:
-    python tools/probe_queries.py [--sf-dir DIR] [--runs N] [--sf1] q1 q2 ...
-    python tools/probe_queries.py --ab COMMIT [--windows N] q1 q2 ...
+    python tools/probe_queries.py [--sf-dir DIR] [--runs N] [--sf1] [--no-warmup] q1 q2 ...
+    python tools/probe_queries.py --ab COMMIT [--windows N] [--sf1] [--no-warmup] q1 q2 ...
 
 Bench RATE metrics are probe-able by their bench names alongside queries
 (ingest_events_per_sec, delivery_fanout_events_per_sec,
 ingest_under_maintenance_events_per_sec) — max-of-runs, and --ab
 attributes them in the rate direction (regression iff the baseline rate
-floor is >1.15x the HEAD rate floor), so a below-floor rate flag has the
-same mechanical step-3 path as a query flag.
+floor is >1.15x the HEAD rate floor).
 
 --sf1 scales the base dir 10x first (bench.ensure_scaled_sf1) and probes
-against the replica corpus — for sf1-variance attribution runs
-(e.g. label_propagation, VERDICT r8 #6).
+against the replica corpus. Each query is preceded by a block-store
+release so it measures a clean session.
 
-Each query is preceded by a block-store release so it measures a clean
-session (the bench's clean-retest discipline); calibration probes run
-LAST so they sample the same host window the queries did.
-
---ab mechanizes STEP 3 of the bench PROTOCOL (bench.py docstring): the
-settled worktree A/B that dispositions a flag surviving the in-run
-retest and the band check. It checks COMMIT out into a git worktree,
-copies THIS probe tool into it (identical measurement bytes on both
-sides), and runs alternating probe windows — HEAD, baseline, HEAD, ... —
-each in its own fresh process/JVM, so both code versions are sampled
-across the same span of host weather. Verdict per query: engine
-regression iff min(HEAD windows) > 1.15 x min(baseline windows); if the
-baseline code is slow too, it was the host. Output is one JSON document
-in the BENCH_AB_r09.json shape — redirect it to BENCH_AB_r{N}.json as
-the committed evidence.
+--ab checks COMMIT out into a git worktree, copies THIS probe tool into
+it (identical measurement bytes on both sides), and runs alternating
+probe windows — HEAD, baseline, HEAD, ... — each in its own fresh
+process/JVM with the same flags, so both code versions are sampled
+across the same span of host load. The rule (ab_verdict): per query,
+engine regression iff min over HEAD windows > 1.15 x min over baseline
+windows; if the baseline code is slow too, it was the host. A
+regression verdict resting on fewer than 3 windows per side, or whose
+time-adjacent pair median disagrees with the floor rule, escalates
+itself to 6 windows before it is printed (needs_escalation). Output is
+one JSON document in the BENCH_AB_r09.json shape — redirect it to
+BENCH_AB_*.json as the committed evidence.
 """
 
 from __future__ import annotations
@@ -47,14 +41,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-AB_FACTOR = 1.15  # same threshold as the bench regression guard
+AB_FACTOR = 1.15
 
 
 def ab_verdict(windows: dict, factor: float = AB_FACTOR) -> dict:
-    """Pure attribution rule over alternating A/B probe windows (PROTOCOL
-    step 3): per query, engine regression iff the best HEAD sample across
-    all HEAD windows is more than ``factor`` slower than the best
-    baseline sample across all baseline windows. Min-of-windows on BOTH
+    """Pure attribution rule over alternating A/B probe windows: per
+    query, engine regression iff the best HEAD sample across all HEAD
+    windows is more than ``factor`` slower than the best baseline sample
+    across all baseline windows. Min-of-windows on BOTH
     sides: host bursts inflate individual windows, and both sides sampled
     the same span of host weather, so comparing the two floors isolates
     the code difference. If the baseline floor is just as slow, it was
@@ -156,7 +150,7 @@ ESCALATE_WINDOWS = 6  # the r12 incident's decisive rerun size (3 per side)
 
 
 def needs_escalation(verdict: dict, n_windows: int, target: int = ESCALATE_WINDOWS) -> bool:
-    """PROTOCOL self-escalation (VERDICT r12 #5): a regression verdict
+    """Self-escalation (VERDICT r12 #5): a regression verdict
     annotated ``low_power`` or ``drift_suspect`` must not be BELIEVED at
     its current window count — the r12 window-4 incident showed a 2+2
     verdict gets acted on even with the flag printed. Instead of relying
@@ -172,10 +166,10 @@ def needs_escalation(verdict: dict, n_windows: int, target: int = ESCALATE_WINDO
     )
 
 
-# Bench rate metrics probe-able by name like queries — so a below-floor
-# rate flag has the same mechanical step-3 path as a query flag. Each
-# entry returns the rate from ONE measurement (the bench functions carry
-# their own internal warmup exclusion); the probe takes max-of-runs.
+# Bench rate metrics probe-able by name like queries, so a rate is judged
+# by the same A/B as a query. Each entry returns the rate from ONE
+# measurement (the bench functions carry their own internal warmup
+# exclusion); the probe takes max-of-runs.
 def _rate_probe(name: str):
     import bench
 
@@ -197,19 +191,22 @@ def _rate_probe(name: str):
     return None
 
 
-def _run_window(tree: str, queries: list[str], sf_dir: str, runs: int) -> dict:
+def _run_window(tree: str, args) -> dict:
     """One probe window in its own process/JVM rooted at ``tree`` (the
-    tool copy inside that tree imports that tree's engine)."""
+    tool copy inside that tree imports that tree's engine), with every
+    measurement flag of the A/B run forwarded."""
     import subprocess
 
     cmd = [
         sys.executable,
         os.path.join(tree, "tools", "probe_queries.py"),
         "--sf-dir",
-        sf_dir,
+        args.sf_dir,
         "--runs",
-        str(runs),
-        *queries,
+        str(args.runs),
+        *(["--sf1"] if args.sf1 else []),
+        *(["--no-warmup"] if args.no_warmup else []),
+        *args.queries,
     ]
     proc = subprocess.run(cmd, capture_output=True, text=True, cwd=tree)
     if proc.returncode != 0:
@@ -220,7 +217,7 @@ def _run_window(tree: str, queries: list[str], sf_dir: str, runs: int) -> dict:
 
 
 def run_ab(args) -> int:
-    """The mechanized settled-host worktree A/B (PROTOCOL step 3)."""
+    """The alternating worktree A/B (ab_verdict's rule, self-escalating)."""
     import shutil
     import subprocess
 
@@ -250,7 +247,7 @@ def run_ab(args) -> int:
     def _window(i: int, side: str) -> None:
         name = f"W{i}_{'head' if side == 'head' else 'baseline'}"
         print(f"[ab] window {name}", file=sys.stderr, flush=True)
-        w = _run_window(repo if side == "head" else tree, args.queries, args.sf_dir, args.runs)
+        w = _run_window(repo if side == "head" else tree, args)
         w["side"] = side
         windows[name] = w
 
@@ -262,7 +259,7 @@ def run_ab(args) -> int:
     # self-escalation (VERDICT r12 #5): a low_power/drift_suspect
     # regression verdict extends itself to ESCALATE_WINDOWS instead of
     # relying on the operator to read the annotation — both sides keep
-    # alternating, so the added windows sample the same host weather
+    # alternating, so the added windows sample the same host load
     while needs_escalation(verdict, len(windows)):
         if escalated_from is None:
             escalated_from = len(windows)
@@ -278,11 +275,12 @@ def run_ab(args) -> int:
         verdict = ab_verdict(windows)
     out = {
         "purpose": (
-            "PROTOCOL step 3 (bench.py): settled-host worktree A/B — "
-            "alternating HEAD/baseline probe windows, each a fresh "
-            "process/JVM with session warmup + min-of-N + block-store "
-            "release, sampling the same span of host weather. Engine "
-            f"regression iff head floor > {AB_FACTOR} x baseline floor."
+            "worktree A/B: alternating HEAD/baseline probe windows, each "
+            "a fresh process/JVM with session warmup + min-of-N + "
+            "block-store release, sampling the same span of host load. "
+            f"Engine regression iff head floor > {AB_FACTOR} x baseline "
+            "floor; an under-powered or drift-suspect regression "
+            f"escalates itself to {ESCALATE_WINDOWS} windows."
         ),
         "head_commit": head_sha,
         "head_uncommitted_changes": head_dirty,
@@ -305,7 +303,7 @@ def main() -> int:
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--sf1", action="store_true")
     ap.add_argument("--no-warmup", action="store_true")
-    ap.add_argument("--ab", metavar="COMMIT", help="worktree A/B against COMMIT (PROTOCOL step 3)")
+    ap.add_argument("--ab", metavar="COMMIT", help="alternating worktree A/B against COMMIT")
     ap.add_argument("--windows", type=int, default=4, help="alternating A/B windows (--ab only)")
     args = ap.parse_args()
     if args.ab:
@@ -359,15 +357,6 @@ def main() -> int:
             samples.append(probe(spark, sf_dir))
         out["queries"][name] = max(samples)
         out["samples"][name] = samples
-    # older checkouts (pre-r8) carry only the parallel probe — the tool
-    # must run inside an A/B worktree of any round's code
-    out["calibration_s"] = bench.bench_calibration(spark)
-    for key, fn in (
-        ("calibration_serial_s", "bench_calibration_serial"),
-        ("calibration_python_s", "bench_calibration_python"),
-    ):
-        probe = getattr(bench, fn, None)
-        out[key] = probe(spark) if probe else None
     out["wall_clock"] = time.strftime("%Y-%m-%dT%H:%M:%S")
     print(json.dumps(out, sort_keys=True))
     spark.stop()
