@@ -84,8 +84,8 @@ def cmd_ingest(args) -> int:
         )
 
         def handle(batch_df, batch_id):
-            if not batch_df.isEmpty():
-                ingest_batch(normalize_frames(batch_df), args.data_dir, batch_id=int(batch_id))
+            # a batch the sequencer counts empty returns without a write
+            ingest_batch(normalize_frames(batch_df), args.data_dir, batch_id=int(batch_id))
 
         q = (
             stream.writeStream.foreachBatch(handle)
@@ -557,7 +557,14 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--ws-url", default="", help="websocket relay host:port — the real protocol (main.go --ws-url)")
     p.add_argument("--source-url", default="", help="ndjson socket transport host:port (bridge wire)")
     p.add_argument("--frames-dir", default="./frames", help="JSONL frames drop directory (bridge transport)")
-    p.add_argument("--worker-count", type=int, default=8, help="source partitions (main.go --worker-count)")
+    p.add_argument(
+        "--worker-count", type=int, default=8,
+        help=(
+            "cap on source partitions per micro-batch (main.go --worker-count); partitions are sized "
+            "by seq span, at least 5000 seqs each, so a batch of at most 1000 seqs reads in one task "
+            "and the cap binds only on a first batch after a start that covers a large relay backlog"
+        ),
+    )
     p.add_argument(
         "--event-ttl-hours", type=int, default=24,
         help="standing retention: trim on a ticker like main.go:188-205 (0 disables maintenance)",

@@ -152,7 +152,8 @@ def ingest_batch(
 ) -> int:
     """Sequence a normalized batch and append it to the log, persisting
     sequencer state (the batch path of the standing pipeline §3.1).
-    Returns the new last_time_us.
+    Returns the new last_time_us; a batch the sequencer counts empty
+    returns the unchanged one, with no staging write and no state save.
 
     With batch_id set, the append is idempotent under crash-replay: a
     re-run first removes the batch's own files (delete-before-rewrite), so
@@ -178,8 +179,10 @@ def ingest_batch(
         frames_normalized, state.last_time_us, wall_clock_us=wall_clock_us
     )
     try:
-        out = sequenced.drop("_seq")
         n_rows = last - base + 1 if last >= base else 0
+        if n_rows == 0:
+            return state.last_time_us  # nothing to stage, state unchanged
+        out = sequenced.drop("_seq")
         k = _write_coalesce_k(out.sparkSession, n_rows)
         if k is not None:
             out = out.coalesce(k)

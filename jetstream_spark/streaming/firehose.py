@@ -6,9 +6,16 @@ main.go:150). Here that becomes a `DataSource`/`DataSourceStreamReader`:
 
   * offsets = the upstream relay `seq` (the reference's cursor unit for
     the *upstream* connection — persist.go:19-23): `{"seq": N}`
-  * partitions = seq sub-ranges per microbatch (`numPartitions` plays the
-    role of --worker-count; per-partition reads are independent, matching
-    the pool's per-repo independence guarantee, S2/P5)
+  * partitions = contiguous seq sub-ranges per microbatch, sized by the
+    batch's seq span: at least MIN_SEQS_PER_PARTITION seqs each, at most
+    `numPartitions` of them (the cap plays the role of --worker-count; a
+    small batch reads in one task, since each extra partition costs a
+    relay dial and a Python-worker round trip). Every batch after the
+    first spans at most `batch_size` seqs (default 1000: one partition),
+    so several partitions, and the `numPartitions` cap, apply only to the
+    first batch after a start, which `batch_size` does not limit and
+    which can cover a relay backlog. Per-partition reads are independent,
+    matching the pool's per-repo independence guarantee, S2/P5
   * each partition's `read()` yields RAW_FRAME_SCHEMA rows, running
     CAR/CBOR decode (S5/S8) inline via the pure-Python DAG-CBOR/CAR
     reader (atproto/carcbor.py — no libipld needed): frames carrying
@@ -61,6 +68,16 @@ from jetstream_spark.atproto.carcbor import (
 )
 from jetstream_spark.wsutil import send_masked_frame
 from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
+
+
+# Source partitions are sized by the batch's seq span: `numPartitions` is
+# a cap, and a partition covers at least this many seqs, because each
+# extra partition is one more relay dial and Python-worker task. Measured
+# on 4 cores with the perfbench relay frames through the ingest handler,
+# one partition was as fast or faster up to 5,000 seqs (a 1,000-seq batch
+# took 1.2 s in one or two, 1.8 s in eight), and about 5,000 seqs per
+# partition was fastest at 10,000-20,000 (numbers under ROADMAP item 2).
+MIN_SEQS_PER_PARTITION = 5000
 
 
 def _parse_dial_url(url: str) -> tuple[bool, str, int]:
@@ -372,8 +389,8 @@ class FirehoseStreamReader(DataSourceStreamReader):
         lo, hi = start["seq"], end["seq"]
         if hi <= lo:
             return [SeqRange(lo, lo, self.replay_dir, self.socket_url, self.ws_url, self.tls_ca)]
-        n = self.num_partitions
-        step = max(1, (hi - lo + n - 1) // n)
+        n = max(1, min(self.num_partitions, (hi - lo) // MIN_SEQS_PER_PARTITION))
+        step = -(-(hi - lo) // n)  # ceil div
         return [
             SeqRange(s, min(s + step, hi), self.replay_dir, self.socket_url, self.ws_url, self.tls_ca)
             for s in range(lo, hi, step)

@@ -7,10 +7,11 @@ import json
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from jetstream_spark.atproto import log as eventlog
 from jetstream_spark.atproto.normalize import normalize_frames
-from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
+from jetstream_spark.atproto.schema import ACCOUNT_STRUCT, IDENTITY_STRUCT, RAW_FRAME_SCHEMA
 from jetstream_spark.atproto.sequencer import SequencerState, sequence_events
 from jetstream_spark.atproto.subscribe import Subscription, SubscriptionError
 from jetstream_spark.atproto.wire import to_wire
@@ -60,6 +61,66 @@ def test_path_split(normalized):
     assert c["rkey"].startswith("rkey")
 
 
+def _op(action, path, cid=None, record_json=None, record_cid=None):
+    return (action, path, cid, record_json, record_cid)
+
+
+# one frame of every shape normalize dispatches on (S3/S4/S6/S7)
+MIXED_FRAMES = [
+    ("commit", "did:a", 1, "r1", False, [
+        _op("create", "app.bsky.feed.post/k1", "c1", '{"n":1}', "c1"),
+        _op("update", "app.bsky.feed.like/k2", "c2", '{"n":2}', "cX"),  # CID mismatch
+        _op("delete", "app.bsky.graph.follow/k3"),
+    ], None, None),
+    ("commit", "did:b", 2, "r2", True, [_op("create", "app.bsky.feed.post/k4", "c4", '{"n":4}', "c4")], None, None),
+    ("commit", "did:c", 3, "r3", None, None, None, None),  # null ops
+    ("account", "did:d", 4, None, None, None, (True, "did:d", 4, "t4", None), None),
+    ("identity", "did:e", 5, None, None, None, None, ("did:e", "e.test", 5, "t5")),
+    ("sync", "did:f", 6, None, None, None, None, None),  # unknown kind
+    ("commit", "did:g", 7, "r7", None, [_op("update", "app.bsky.feed.post/k7", "c7", '{"n":7}', "c7")], None, None),
+]
+
+# normalize's output schema, nullability included: every nested field nullable
+NORMALIZED_SCHEMA = T.StructType(
+    [
+        T.StructField("did", T.StringType(), False),
+        T.StructField("_seq", T.LongType(), False),
+        T.StructField("type", T.StringType(), False),
+        T.StructField(
+            "commit",
+            T.StructType(
+                [T.StructField(n, T.StringType(), True) for n in ("rev", "type", "collection", "rkey", "record", "cid")]
+            ),
+            True,
+        ),
+        T.StructField("account", ACCOUNT_STRUCT, True),
+        T.StructField("identity", IDENTITY_STRUCT, True),
+    ]
+)
+
+
+def test_normalize_mixed_batch_expected_rows(spark):
+    out = normalize_frames(spark.createDataFrame(MIXED_FRAMES, schema=RAW_FRAME_SCHEMA))
+    assert out.schema == NORMALIZED_SCHEMA
+    got = sorted((tuple(r) for r in out.collect()), key=repr)
+    assert got == [
+        ("did:a", 1, "com", ("r1", "c", "app.bsky.feed.post", "k1", '{"n":1}', "c1"), None, None),
+        ("did:a", 1, "com", ("r1", "d", "app.bsky.graph.follow", "k3", None, None), None, None),
+        ("did:d", 4, "acc", None, (True, "did:d", 4, "t4", None), None),
+        ("did:e", 5, "id", None, None, ("did:e", "e.test", 5, "t5")),
+        ("did:g", 7, "com", ("r7", "u", "app.bsky.feed.post", "k7", '{"n":7}', "c7"), None, None),
+    ]
+
+
+def test_normalize_reads_frames_once(spark):
+    """One leaf scan and no Union: a per-kind union re-reads the source
+    (for the firehose: re-dials and re-decodes) once per branch."""
+    out = normalize_frames(spark.createDataFrame(MIXED_FRAMES, schema=RAW_FRAME_SCHEMA))
+    plan = out._jdf.queryExecution().sparkPlan()
+    assert plan.collectLeaves().size() == 1, plan.toString()
+    assert "Union" not in plan.toString(), plan.toString()
+
+
 # --- sequencer (S10/H1) ---------------------------------------------------------
 def test_sequencer_strictly_monotonic(normalized):
     seq_df, last, _ = sequence_events(normalized, last_time_us=0, wall_clock_us=1_700_000_000_000_000)
@@ -91,6 +152,22 @@ def test_sequencer_restart_continuity(normalized, tmp_path):
     spark_times = eventlog.read_log(normalized.sparkSession, log_dir).select("time_us").collect()
     times = sorted(r["time_us"] for r in spark_times)
     assert len(times) == len(set(times)), "no duplicate time_us across batches"
+
+
+def test_ingest_empty_batch_writes_nothing(frames_df, tmp_path):
+    """A batch the sequencer counts empty is a no-op: the unchanged
+    last_time_us comes back, with no staged log files and no state save."""
+    import os
+
+    log_dir = str(tmp_path / "log")
+    SequencerState(last_time_us=5_000).save(log_dir)
+    state_path = os.path.join(log_dir, "_sequencer_state.json")
+    before = (open(state_path).read(), os.stat(state_path).st_mtime_ns)
+    empty = normalize_frames(frames_df.limit(0))
+    assert eventlog.ingest_batch(empty, log_dir, wall_clock_us=1_000_000, batch_id=3) == 5_000
+    assert (open(state_path).read(), os.stat(state_path).st_mtime_ns) == before
+    leftovers = [p for p, _, _ in os.walk(log_dir) if "hour_bucket=" in p]
+    assert leftovers == []
 
 
 # --- log + replay (S11/S13/S14) ----------------------------------------------------
