@@ -67,35 +67,26 @@ def cmd_serve(args) -> int:
 
 
 def cmd_ingest(args) -> int:
+    from jetstream_spark.streaming.pipeline import read_frame_stream, start_ingest
+
     spark = _spark(args.cpus)
     ckpt = os.path.join(args.data_dir, "_ingest_ckpt")
     if args.ws_url or args.source_url:
-        from jetstream_spark.atproto.log import ingest_batch
-        from jetstream_spark.atproto.normalize import normalize_frames
         from jetstream_spark.streaming.firehose import FirehoseDataSource
 
         spark.dataSource.register(FirehoseDataSource)
         transport = ("ws_url", args.ws_url) if args.ws_url else ("socket_url", args.source_url)
-        stream = (
+        frames = (
             spark.readStream.format("atproto_firehose")
             .option(*transport)
             .option("numPartitions", str(args.worker_count))
             .load()
         )
-
-        def handle(batch_df, batch_id):
-            # a batch the sequencer counts empty returns without a write
-            ingest_batch(normalize_frames(batch_df), args.data_dir, batch_id=int(batch_id))
-
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
     else:
-        from jetstream_spark.streaming.pipeline import start_ingest
+        from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
 
-        q = start_ingest(spark, args.frames_dir, args.data_dir, ckpt)
+        frames = read_frame_stream(spark, RAW_FRAME_SCHEMA, args.frames_dir)
+    q = start_ingest(spark, frames, args.data_dir, ckpt)
     # the reference trims expired events on a ticker INSIDE the consumer
     # process (main.go:188-205 → persist.go TrimEvents every 15 s); the
     # writer owns retention + sealed-bucket compaction here for the same
@@ -267,6 +258,22 @@ def _compact_owned(args, lost=None) -> int:
     return 0
 
 
+def _run_standing(q, drain: bool, report) -> int:
+    """Drive a standing query: with --drain, process the available input,
+    stop and print `report()`; otherwise run until terminated. Ctrl-C
+    stops the query either way."""
+    try:
+        if drain:
+            q.processAllAvailable()
+            q.stop()
+            report()
+        else:
+            q.awaitTermination()
+    except KeyboardInterrupt:
+        q.stop()
+    return 0
+
+
 def cmd_dedup_stream(args) -> int:
     from jetstream_spark.streaming.dedup_stream import (
         init_dedup_state,
@@ -275,36 +282,15 @@ def cmd_dedup_stream(args) -> int:
     )
 
     spark = _spark(args.cpus)
-    marker = os.path.join(args.state_dir, "docs")
-    if not os.path.isdir(marker):
-        init_dedup_state(spark, args.state_dir)
-    else:
-        # existing state from an earlier run: re-register the band table
-        from jetstream_spark.streaming.dedup_stream import _bands_table_name
-        from jetstream_spark.operators.dedup_index import N_BUCKETS
-
-        name = _bands_table_name(args.state_dir)
-        if not spark.catalog.tableExists(name):
-            spark.sql(
-                f"CREATE TABLE {name} (doc_id BIGINT, band_idx INT, band_key BIGINT) "
-                f"USING PARQUET CLUSTERED BY (band_idx, band_key) "
-                f"SORTED BY (band_idx, band_key) INTO {N_BUCKETS} BUCKETS "
-                f"LOCATION '{os.path.join(args.state_dir, 'bands')}'"
-            )
+    init_dedup_state(spark, args.state_dir)  # idempotent over an earlier run's state
     ckpt = os.path.join(args.state_dir, "_dedup_ckpt")
     q = start_streaming_dedup(spark, args.docs_dir, args.state_dir, ckpt)
     print(f"deduping {args.docs_dir} into {args.state_dir} (checkpoint {ckpt})", flush=True)
-    try:
-        if args.drain:
-            q.processAllAvailable()
-            q.stop()
-            n = read_pairs(spark, args.state_dir).count()
-            print(f"near-dup pairs so far: {n}")
-        else:
-            q.awaitTermination()
-    except KeyboardInterrupt:
-        q.stop()
-    return 0
+    return _run_standing(
+        q,
+        args.drain,
+        lambda: print(f"near-dup pairs so far: {read_pairs(spark, args.state_dir).count()}"),
+    )
 
 
 def cmd_ann_stream(args) -> int:
@@ -319,17 +305,11 @@ def cmd_ann_stream(args) -> int:
     ckpt = os.path.join(args.state_dir, "_ann_ckpt")
     q = start_streaming_ann(spark, args.queries_dir, args.sf_dir, args.state_dir, ckpt)
     print(f"probing {args.queries_dir} against {args.sf_dir} index (checkpoint {ckpt})", flush=True)
-    try:
-        if args.drain:
-            q.processAllAvailable()
-            q.stop()
-            n = read_results(spark, args.state_dir).count()
-            print(f"result rows so far: {n}")
-        else:
-            q.awaitTermination()
-    except KeyboardInterrupt:
-        q.stop()
-    return 0
+    return _run_standing(
+        q,
+        args.drain,
+        lambda: print(f"result rows so far: {read_results(spark, args.state_dir).count()}"),
+    )
 
 
 def cmd_funnel_stream(args) -> int:
@@ -361,30 +341,25 @@ def cmd_funnel_stream(args) -> int:
         .start()
     )
     print(f"funnel monitor on {args.events_dir} (checkpoint {args.checkpoint_dir})", flush=True)
-    try:
-        if args.drain:
-            q.processAllAvailable()
-            q.stop()
-            # an input with no funnel-step events writes no data files, so
-            # the read fails schema inference — that's an all-zero funnel,
-            # not an error (ADVICE r8)
-            try:
-                emitted = spark.read.parquet(args.out_dir)
-            except Exception as e:
-                if "PATH_NOT_FOUND" not in str(e) and "infer schema" not in str(e):
-                    raise
-                from jetstream_spark.queries.eventlog import _FUNNEL_STEPS
 
-                for i, step in enumerate(_FUNNEL_STEPS):
-                    print(f"step {i + 1} {step}: 0 users")
-                return 0
-            for r in funnel_counts(current_stages(emitted)).orderBy("step_no").collect():
-                print(f"step {r['step_no']} {r['step_name']}: {r['n_users']} users")
-        else:
-            q.awaitTermination()
-    except KeyboardInterrupt:
-        q.stop()
-    return 0
+    def report() -> None:
+        # an input with no funnel-step events writes no data files, so
+        # the read fails schema inference — that's an all-zero funnel,
+        # not an error (ADVICE r8)
+        try:
+            emitted = spark.read.parquet(args.out_dir)
+        except Exception as e:
+            if "PATH_NOT_FOUND" not in str(e) and "infer schema" not in str(e):
+                raise
+            from jetstream_spark.queries.eventlog import _FUNNEL_STEPS
+
+            for i, step in enumerate(_FUNNEL_STEPS):
+                print(f"step {i + 1} {step}: 0 users")
+            return
+        for r in funnel_counts(current_stages(emitted)).orderBy("step_no").collect():
+            print(f"step {r['step_no']} {r['step_name']}: {r['n_users']} users")
+
+    return _run_standing(q, args.drain, report)
 
 
 def cmd_anomaly_stream(args) -> int:
@@ -405,35 +380,24 @@ def cmd_anomaly_stream(args) -> int:
     ckpt = os.path.join(args.state_dir, "_anom_ckpt")
     q = start_streaming_anomaly(spark, args.events_dir, args.state_dir, ckpt)
     print(f"monitoring {args.events_dir} (checkpoint {ckpt})", flush=True)
-    try:
-        if args.drain:
-            q.processAllAvailable()
-            q.stop()
-            for r in detect_anomalies(spark, args.state_dir).orderBy(
-                "event_type", "hour_bucket"
-            ).collect():
-                print(
-                    f"{r['event_type']} {r['hour_bucket']} n={r['n']} z={r['zscore']}"
-                )
-            if getattr(args, "cusum", False):
-                # the drift monitor reads the SAME hourly state, one level up
-                from jetstream_spark.streaming.cusum_stream import detect_drift
 
-                for r in (
-                    detect_drift(spark, args.state_dir)
-                    .orderBy("event_type", "day")
-                    .collect()
-                ):
-                    flag = " DRIFT" if r["is_change"] else ""
-                    print(
-                        f"cusum {r['event_type']} {r['day']} n={r['n']} "
-                        f"s+={r['cusum_pos']} s-={r['cusum_neg']}{flag}"
-                    )
-        else:
-            q.awaitTermination()
-    except KeyboardInterrupt:
-        q.stop()
-    return 0
+    def report() -> None:
+        for r in detect_anomalies(spark, args.state_dir).orderBy(
+            "event_type", "hour_bucket"
+        ).collect():
+            print(f"{r['event_type']} {r['hour_bucket']} n={r['n']} z={r['zscore']}")
+        if getattr(args, "cusum", False):
+            # the drift monitor reads the SAME hourly state, one level up
+            from jetstream_spark.streaming.cusum_stream import detect_drift
+
+            for r in detect_drift(spark, args.state_dir).orderBy("event_type", "day").collect():
+                flag = " DRIFT" if r["is_change"] else ""
+                print(
+                    f"cusum {r['event_type']} {r['day']} n={r['n']} "
+                    f"s+={r['cusum_pos']} s-={r['cusum_neg']}{flag}"
+                )
+
+    return _run_standing(q, args.drain, report)
 
 
 def cmd_scd2_stream(args) -> int:
@@ -455,28 +419,21 @@ def cmd_scd2_stream(args) -> int:
     ckpt = os.path.join(args.state_dir, "_scd2_ckpt")
     q = start_streaming_scd2(spark, args.events_dir, args.state_dir, ckpt)
     print(f"maintaining SCD2 from {args.events_dir} (checkpoint {ckpt})", flush=True)
-    try:
-        if args.drain:
-            q.processAllAvailable()
-            q.stop()
-            n_bad = check_order(spark, args.state_dir).count()
-            if n_bad:
-                print(f"WARNING: {n_bad} ordering-contract violations", flush=True)
-            dim = current_scd2(spark, args.state_dir)
-            cur = dim.where("is_current").count()
-            print(f"dimension rows: {dim.count()} ({cur} current)")
-            for r in (
-                dim.orderBy("user_id", "version").limit(args.show).collect()
-            ):
-                print(
-                    f"u{r['user_id']} v{r['version']} tier={r['tier']}"
-                    f" [{r['valid_from_us']}, {r['valid_to_us']}) n={r['n_events']}"
-                )
-        else:
-            q.awaitTermination()
-    except KeyboardInterrupt:
-        q.stop()
-    return 0
+
+    def report() -> None:
+        n_bad = check_order(spark, args.state_dir).count()
+        if n_bad:
+            print(f"WARNING: {n_bad} ordering-contract violations", flush=True)
+        dim = current_scd2(spark, args.state_dir)
+        cur = dim.where("is_current").count()
+        print(f"dimension rows: {dim.count()} ({cur} current)")
+        for r in dim.orderBy("user_id", "version").limit(args.show).collect():
+            print(
+                f"u{r['user_id']} v{r['version']} tier={r['tier']}"
+                f" [{r['valid_from_us']}, {r['valid_to_us']}) n={r['n_events']}"
+            )
+
+    return _run_standing(q, args.drain, report)
 
 
 def cmd_sql(args) -> int:

@@ -14,8 +14,8 @@ stream. Each micro-batch:
      `ann_ivf_indexed` query;
   3. appends per-query top-k results under a batch-tagged directory.
 
-Results are exactly-once by the standing-pipeline contract used by every
-other stream here (dedup_stream, sketch_stream): batch-id markers +
+Results are exactly-once through the shared handler every stream here
+runs on (pipeline.py::commit_once): batch-id markers +
 delete-before-rewrite of the batch's own output directory, so a crash-
 replayed batch converges to one copy.
 
@@ -29,17 +29,19 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import partial
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from jetstream_spark.atproto.log import load_done_batches, mark_batch_done
+from jetstream_spark.atproto.log import load_done_batches
 from jetstream_spark.operators.ann_index import (
     ensure_ivf_index,
     ivf_centroids,
     probe_ivf_with,
 )
+from jetstream_spark.streaming.pipeline import read_frame_stream, start_exactly_once
 
 QUERY_STREAM_SCHEMA = "query_id long, embedding array<float>"
 
@@ -48,29 +50,20 @@ def init_ann_state(state_dir: str) -> None:
     os.makedirs(os.path.join(state_dir, "results"), exist_ok=True)
 
 
-def _handle_batch(
-    state_dir: str,
-    sf_dir: str,
-    index_path: str,
-    batch_df: DataFrame,
-    batch_id: int,
-    cents=None,
+def _commit_batch(
+    state_dir: str, index_path: str, cents, batch_df: DataFrame, batch_id: int
 ) -> None:
-    if batch_id in load_done_batches(state_dir):
-        return  # replay of a completed batch: outputs already converged
     spark = batch_df.sparkSession
     rows = batch_df.select("query_id", "embedding").collect()
+    if not rows:
+        return
+    q_ids = np.array([r["query_id"] for r in rows], dtype=np.int64)
+    q_mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    result = probe_ivf_with(spark, cents, q_ids, q_mat, index_path)
+    # delete-before-rewrite: a crashed attempt's partial output is replaced
     out_dir = os.path.join(state_dir, "results", f"b{batch_id}")
-    if rows:
-        q_ids = np.array([r["query_id"] for r in rows], dtype=np.int64)
-        q_mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
-        if cents is None:
-            cents = ivf_centroids(spark, sf_dir)
-        result = probe_ivf_with(spark, cents, q_ids, q_mat, index_path)
-        # delete-before-rewrite: a crashed attempt's partial output is replaced
-        shutil.rmtree(out_dir, ignore_errors=True)
-        result.write.mode("overwrite").parquet(out_dir)
-    mark_batch_done(state_dir, batch_id)
+    shutil.rmtree(out_dir, ignore_errors=True)
+    result.write.mode("overwrite").parquet(out_dir)
 
 
 def start_streaming_ann(
@@ -83,17 +76,11 @@ def start_streaming_ann(
     """Standing probe over an ndjson query-vector drop directory."""
     index_path = ensure_ivf_index(spark, sf_dir)
     cents = ivf_centroids(spark, sf_dir)  # static alongside the index: one collect, not per-batch
-    stream = (
-        spark.readStream.schema(QUERY_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(queries_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: _handle_batch(state_dir, sf_dir, index_path, df, bid, cents)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_exactly_once(
+        read_frame_stream(spark, QUERY_STREAM_SCHEMA, queries_dir, max_files_per_trigger=1),
+        state_dir,
+        checkpoint_dir,
+        partial(_commit_batch, state_dir, index_path, cents),
     )
 
 

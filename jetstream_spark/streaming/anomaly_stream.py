@@ -11,10 +11,9 @@ core as the batch `rate_anomaly` query (queries/eventlog.py::
 flag_rate_anomalies) over the merged counts, so the standing monitor and
 the declared operator can never disagree.
 
-Exactly-once by the standing-pipeline contract shared with
-dedup_stream/sketch_stream/ann_stream: batch-id markers +
-delete-before-rewrite of each batch's own part directory, so a
-crash-replayed batch converges to one copy.
+Exactly-once through the shared handler (pipeline.py::commit_once):
+batch-id markers + delete-before-rewrite of each batch's own part
+directory, so a crash-replayed batch converges to one copy.
 
 At 100 TB: per batch one (type, hour) count shuffle whose key space is
 |types| x |hours-touched-by-batch| (tiny); merged state grows with
@@ -27,13 +26,15 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from jetstream_spark.atproto.log import load_done_batches, mark_batch_done
+from jetstream_spark.atproto.log import load_done_batches
 from jetstream_spark.queries.eventlog import flag_rate_anomalies
+from jetstream_spark.streaming.pipeline import read_frame_stream, start_exactly_once
 
 EVENT_STREAM_SCHEMA = "event_id long, ts timestamp, event_type string"
 
@@ -42,11 +43,7 @@ def init_anomaly_state(state_dir: str) -> None:
     os.makedirs(os.path.join(state_dir, "counts"), exist_ok=True)
 
 
-def _handle_batch(state_dir: str, batch_df: DataFrame, batch_id: int) -> None:
-    if batch_id in load_done_batches(state_dir):
-        return
-    if batch_df.isEmpty():
-        return
+def _commit_batch(state_dir: str, batch_df: DataFrame, batch_id: int) -> None:
     out = os.path.join(state_dir, "counts", f"b{batch_id}")
     shutil.rmtree(out, ignore_errors=True)  # delete-before-rewrite
     (
@@ -54,7 +51,6 @@ def _handle_batch(state_dir: str, batch_df: DataFrame, batch_id: int) -> None:
         .agg(F.count(F.lit(1)).alias("n"))
         .write.parquet(out)
     )
-    mark_batch_done(state_dir, batch_id)
 
 
 def _merge_counts(df: DataFrame) -> DataFrame:
@@ -97,19 +93,12 @@ def start_streaming_anomaly(
     events_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 100,
 ) -> StreamingQuery:
-    stream = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(events_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: _handle_batch(state_dir, df, int(bid))
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_exactly_once(
+        read_frame_stream(spark, EVENT_STREAM_SCHEMA, events_dir),
+        state_dir,
+        checkpoint_dir,
+        partial(_commit_batch, state_dir),
     )
 
 

@@ -17,7 +17,8 @@ micro-batch
      against them.
 
 Exactly-once: the externally visible output (pairs/, docs/) uses the same
-delete-before-rewrite + batch-id marker contract as the ingest pipeline —
+delete-before-rewrite + batch-id marker handler as the ingest pipeline
+(pipeline.py::commit_once) —
 a crash-replayed batch first removes its own batch directory, so any crash
 point converges to one copy. The replay also excludes the batch's OWN
 docs/ directory from history (a crash after the docs write but before the
@@ -39,14 +40,15 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from jetstream_spark.atproto.log import load_done_batches, mark_batch_done
 from jetstream_spark.operators.dedup_index import N_BUCKETS, minhash_bands
 from jetstream_spark.queries.dedup import _SHINGLES_EXPR, JACCARD_T
+from jetstream_spark.streaming.pipeline import read_frame_stream, start_exactly_once
 
 DOC_STREAM_SCHEMA = "doc_id long, text string"
 _BANDS_TABLE = "streaming_band_index"
@@ -65,7 +67,10 @@ def _bands_table_name(state_dir: str) -> str:
 
 def init_dedup_state(spark: SparkSession, state_dir: str) -> None:
     """Create the empty state layout: docs/ + pairs/ batch dirs and the
-    bucketed band table (so the first batch's probe plans uniformly)."""
+    bucketed band table (so the first batch's probe plans uniformly).
+    Idempotent over existing state: the dirs are kept, and the band table
+    is an external LOCATION table, so DROP+CREATE re-registers it over the
+    same files."""
     os.makedirs(os.path.join(state_dir, "docs"), exist_ok=True)
     os.makedirs(os.path.join(state_dir, "pairs"), exist_ok=True)
     name = _bands_table_name(state_dir)
@@ -84,7 +89,7 @@ def _history_docs(
 ) -> DataFrame | None:
     """Docs ingested by prior batches. `exclude_batch_id` skips that
     batch's own docs/ directory: a crash between the docs write and
-    mark_batch_done would otherwise let the REPLAY see the batch's own
+    the batch's done-marker would otherwise let the REPLAY see the batch's own
     documents as history — emitting permanent self-pairs (jaccard 1.0)
     and within-batch pairs, which are out of scope by contract. Because
     verification inner-joins candidates to history shingles, excluding
@@ -109,11 +114,7 @@ def read_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
     return spark.read.parquet(*[os.path.join(pairs_dir, d) for d in batches])
 
 
-def _handle_batch(state_dir: str, batch_df: DataFrame, batch_id: int) -> None:
-    if batch_id in load_done_batches(state_dir):
-        return  # fully committed earlier — fast skip
-    if batch_df.isEmpty():
-        return
+def _commit_batch(state_dir: str, batch_df: DataFrame, batch_id: int) -> None:
     # the MICROBATCH session, not the outer one: sessions cache table file
     # listings independently, and an outer-session handle would keep serving
     # the listing from before earlier batches' band inserts (observed: a
@@ -164,26 +165,17 @@ def _handle_batch(state_dir: str, batch_df: DataFrame, batch_id: int) -> None:
     # 4. bands append (at-least-once inner state; see module docstring)
     bands.write.insertInto(name)
 
-    mark_batch_done(state_dir, batch_id)
-
 
 def start_streaming_dedup(
     spark: SparkSession,
     docs_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 100,
 ) -> StreamingQuery:
     """Launch the standing dedup query over a document drop directory."""
-    stream = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(docs_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: _handle_batch(state_dir, df, int(bid))
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_exactly_once(
+        read_frame_stream(spark, DOC_STREAM_SCHEMA, docs_dir),
+        state_dir,
+        checkpoint_dir,
+        partial(_commit_batch, state_dir),
     )

@@ -16,9 +16,9 @@ sequencer's monotonic time_us cursor). Late data violating the contract
 is DETECTED at read: `check_order(...)` reports users whose stored run
 spans interleave across parts, rather than silently mis-merging.
 
-Exactly-once by the standing-pipeline contract shared with
-dedup/sketch/ann/anomaly streams: batch-id markers + delete-before-
-rewrite of each batch's own part directory.
+Exactly-once through the shared handler (pipeline.py::commit_once):
+batch-id markers + delete-before-rewrite of each batch's own part
+directory.
 
 At 100 TB: per batch ONE user_id shuffle over the batch (not the
 history); state grows with run count (bounded by tier-change frequency,
@@ -29,13 +29,15 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from jetstream_spark.atproto.log import load_done_batches, mark_batch_done
+from jetstream_spark.atproto.log import load_done_batches
 from jetstream_spark.queries.eventlog import scd2_chain, scd2_collapse, scd2_tier_expr
+from jetstream_spark.streaming.pipeline import read_frame_stream, start_exactly_once
 
 SCD2_STREAM_SCHEMA = "event_id long, ts timestamp, user_id long, props string"
 
@@ -62,15 +64,10 @@ def _batch_runs(batch_df: DataFrame) -> DataFrame:
     return scd2_collapse(base)
 
 
-def _handle_batch(state_dir: str, batch_df: DataFrame, batch_id: int) -> None:
-    if batch_id in load_done_batches(state_dir):
-        return
-    if batch_df.isEmpty():
-        return
+def _commit_batch(state_dir: str, batch_df: DataFrame, batch_id: int) -> None:
     out = os.path.join(state_dir, "runs", f"b{batch_id}")
     shutil.rmtree(out, ignore_errors=True)  # delete-before-rewrite
     _batch_runs(batch_df).write.parquet(out)
-    mark_batch_done(state_dir, batch_id)
 
 
 def _stored_runs(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -153,17 +150,10 @@ def start_streaming_scd2(
     events_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 100,
 ) -> StreamingQuery:
-    stream = (
-        spark.readStream.schema(SCD2_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(events_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: _handle_batch(state_dir, df, int(bid))
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_exactly_once(
+        read_frame_stream(spark, SCD2_STREAM_SCHEMA, events_dir),
+        state_dir,
+        checkpoint_dir,
+        partial(_commit_batch, state_dir),
     )

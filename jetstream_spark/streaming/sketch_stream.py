@@ -7,8 +7,8 @@ under a batch-tagged directory, and the merged sketch (sum per cell across
 parts) is IDENTICAL to the sketch the one-shot query would build over all
 documents seen so far — asserted cell-for-cell in tests.
 
-Outputs are exactly-once by the same contract as the other standing
-pipelines: batch-id markers + delete-before-rewrite of each batch's own
+Outputs are exactly-once through the shared handler (pipeline.py::
+commit_once): batch-id markers + delete-before-rewrite of each batch's own
 part directories, so a crash-replayed batch converges to one copy.
 
 Heavy-hitter probing needs a candidate term set; an unbounded stream can't
@@ -28,14 +28,16 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from jetstream_spark.atproto.log import load_done_batches, mark_batch_done
+from jetstream_spark.atproto.log import load_done_batches
 from jetstream_spark.queries.sketches import CMS_DEPTH, CMS_TOP_N, _cms_bucket
 from jetstream_spark.queries.text import _tokens
+from jetstream_spark.streaming.pipeline import read_frame_stream, start_exactly_once
 
 DOC_STREAM_SCHEMA = "doc_id long, text string"
 CAND_PER_BATCH = 100
@@ -56,11 +58,7 @@ def _batch_sketch(terms: DataFrame) -> DataFrame:
     )
 
 
-def _handle_batch(state_dir: str, batch_df: DataFrame, batch_id: int) -> None:
-    if batch_id in load_done_batches(state_dir):
-        return
-    if batch_df.isEmpty():
-        return
+def _commit_batch(state_dir: str, batch_df: DataFrame, batch_id: int) -> None:
     terms = batch_df.select(F.explode(_tokens()).alias("term"))
 
     sk_out = os.path.join(state_dir, "sketch", f"b{batch_id}")
@@ -76,7 +74,6 @@ def _handle_batch(state_dir: str, batch_df: DataFrame, batch_id: int) -> None:
         .limit(CAND_PER_BATCH)
         .write.parquet(cand_out)
     )
-    mark_batch_done(state_dir, batch_id)
 
 
 def _parts(state_dir: str, kind: str) -> list[str]:
@@ -146,17 +143,10 @@ def start_streaming_sketch(
     docs_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 100,
 ) -> StreamingQuery:
-    stream = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(docs_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: _handle_batch(state_dir, df, int(bid))
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_exactly_once(
+        read_frame_stream(spark, DOC_STREAM_SCHEMA, docs_dir),
+        state_dir,
+        checkpoint_dir,
+        partial(_commit_batch, state_dir),
     )

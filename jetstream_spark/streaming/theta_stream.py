@@ -13,8 +13,8 @@ tests. Distinct estimates and the union/intersection/difference algebra
 read off the merged sketch with the same integer-theta rules as the
 batch operator.
 
-Outputs are exactly-once by the same contract as the other standing
-pipelines (CMS/anomaly/SCD2): batch-id markers + delete-before-rewrite
+Outputs are exactly-once through the shared handler every standing
+pipeline runs on (pipeline.py::commit_once): batch-id markers + delete-before-rewrite
 of each batch's own part directory, so a crash-replayed batch converges
 to one copy. Parts are compactable by the read side's own merge
 (distinct + per-set bottom-k), via the shared manifest-swap protocol.
@@ -29,13 +29,15 @@ from __future__ import annotations
 
 import os
 import shutil
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from jetstream_spark.atproto.log import load_done_batches, mark_batch_done
+from jetstream_spark.atproto.log import load_done_batches
 from jetstream_spark.queries.sketches import _KMV_A, _KMV_B, _KMV_SCALE, KMV_K, _kmv_hash
+from jetstream_spark.streaming.pipeline import read_frame_stream, start_exactly_once
 
 EVENT_STREAM_SCHEMA = "user_id long, event_type string, day string"
 _SETS = (_KMV_A, _KMV_B)
@@ -73,15 +75,10 @@ def _batch_sketch(events: DataFrame) -> DataFrame:
     return _bottom_k(hashed)
 
 
-def _handle_batch(state_dir: str, batch_df: DataFrame, batch_id: int) -> None:
-    if batch_id in load_done_batches(state_dir):
-        return
-    if batch_df.isEmpty():
-        return
+def _commit_batch(state_dir: str, batch_df: DataFrame, batch_id: int) -> None:
     out = os.path.join(state_dir, "sketch", f"b{batch_id}")
     shutil.rmtree(out, ignore_errors=True)  # delete-before-rewrite
     _batch_sketch(batch_df).write.parquet(out)
-    mark_batch_done(state_dir, batch_id)
 
 
 def _parts(state_dir: str) -> list[str]:
@@ -150,17 +147,10 @@ def start_streaming_theta(
     events_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 100,
 ) -> StreamingQuery:
-    stream = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(events_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, bid: _handle_batch(state_dir, df, int(bid))
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return start_exactly_once(
+        read_frame_stream(spark, EVENT_STREAM_SCHEMA, events_dir),
+        state_dir,
+        checkpoint_dir,
+        partial(_commit_batch, state_dir),
     )

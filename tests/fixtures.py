@@ -134,3 +134,14 @@ def drain_via_edge(spark, log_dir: str, sub, limit: int, deliver) -> int:
         delivered += len(batch)
         sub.advance(batch[-1]["time_us"])
     return delivered
+
+
+def commit_batch_once(body, state_dir: str, batch_df, batch_id: int) -> None:
+    """One micro-batch through the shared exactly-once handler, with a
+    stream module's commit body `body(state_dir, batch_df, batch_id)` —
+    what its standing query runs per batch, minus Structured Streaming."""
+    from functools import partial
+
+    from jetstream_spark.streaming.pipeline import commit_once
+
+    commit_once(state_dir, partial(body, state_dir), batch_df, batch_id)

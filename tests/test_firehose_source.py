@@ -9,8 +9,8 @@ import os
 import pytest
 
 from jetstream_spark.atproto import log as eventlog
-from jetstream_spark.atproto.normalize import normalize_frames
 from jetstream_spark.streaming.firehose import FirehoseDataSource
+from jetstream_spark.streaming.pipeline import start_ingest
 from tests.fixtures import make_frames
 
 
@@ -30,6 +30,15 @@ def registered(spark):
     return spark
 
 
+def _firehose_stream(spark, replay_dir: str):
+    return (
+        spark.readStream.format("atproto_firehose")
+        .option("replay_dir", replay_dir)
+        .option("numPartitions", "4")
+        .load()
+    )
+
+
 @pytest.mark.timeout(300)
 def test_firehose_source_end_to_end(registered, tmp_path):
     spark = registered
@@ -39,24 +48,9 @@ def test_firehose_source_end_to_end(registered, tmp_path):
     frames = make_frames()
     _write_replay_files(replay_dir, frames)
 
-    stream = (
-        spark.readStream.format("atproto_firehose")
-        .option("replay_dir", replay_dir)
-        .option("numPartitions", "4")
-        .load()
-    )
+    stream = _firehose_stream(spark, replay_dir)
     assert stream.isStreaming
-    normalized = normalize_frames(stream)
-
-    def handle(batch_df, batch_id):
-        if not batch_df.isEmpty():
-            eventlog.ingest_batch(batch_df, log_dir, wall_clock_us=1_000_000)
-
-    q = (
-        normalized.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
+    q = start_ingest(spark, stream, log_dir, ckpt, wall_clock_us=1_000_000)
     try:
         q.processAllAvailable()
     finally:
@@ -68,6 +62,44 @@ def test_firehose_source_end_to_end(registered, tmp_path):
     assert log_df.count() == expected
     times = [r["time_us"] for r in log_df.select("time_us").collect()]
     assert len(set(times)) == len(times)
+
+
+@pytest.mark.timeout(300)
+def test_firehose_ingest_marks_batches_done_and_bucket_compacts(registered, tmp_path):
+    """The firehose ingest path writes a done-marker for every batch it
+    commits, so a bucket it filled is compactable: with no marker every
+    batch-tagged file stays pending and compact_bucket refuses (-1)."""
+    spark = registered
+    replay_dir = str(tmp_path / "replay")
+    log_dir = str(tmp_path / "log")
+    ckpt = str(tmp_path / "ckpt")
+    frames = make_frames()
+    half = len(frames) // 2
+    _write_replay_files(replay_dir, frames[:half])
+
+    q = start_ingest(spark, _firehose_stream(spark, replay_dir), log_dir, ckpt, wall_clock_us=1_000_000)
+    try:
+        q.processAllAvailable()
+        _write_replay_files(replay_dir, frames[half:])
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    # every batch Spark committed is done-marked, and so is every batch
+    # that left a file in the (single) hour bucket
+    committed = {int(n) for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit()}
+    done = eventlog.load_done_batches(log_dir)
+    assert len(committed) >= 2 and committed <= done
+    part = os.path.join(log_dir, "hour_bucket=0")
+    files = [f for f in os.listdir(part) if f.endswith(".parquet")]
+    writers = {eventlog._batch_id_of(f) for f in files}
+    assert len(writers) >= 2 and writers <= done
+
+    before = sorted(r["time_us"] for r in eventlog.read_log(spark, log_dir).select("time_us").collect())
+    assert eventlog.compact_bucket(spark, log_dir, 0) == len(files)
+    assert len([f for f in os.listdir(part) if f.endswith(".parquet")]) == 1
+    after = sorted(r["time_us"] for r in eventlog.read_log(spark, log_dir).select("time_us").collect())
+    assert after == before
 
 
 @pytest.mark.timeout(300)

@@ -16,10 +16,12 @@ EVERY step all four monitor-equals-batch identities are asserted
 SIMULTANEOUSLY, so a state bug that one probe's aggregation happens to
 mask cannot hide from the others.
 
-Count-state handling runs at the _handle_batch level (the streaming
-sink's foreachBatch body — the same code path the per-monitor e2e drains
-exercise through Structured Streaming) so the crash window can be cut
-exactly between the part write and the done-marker. The funnel has no
+Count-state handling runs one batch at a time through the shared
+exactly-once handler with the anomaly stream's commit body (what the
+standing query's foreachBatch runs — the same code path the per-monitor
+e2e drains exercise through Structured Streaming); the crash window is
+the commit body alone, cut exactly between the part write and the
+done-marker. The funnel has no
 batch-level entry (its state lives in the state store), so it runs as
 the real applyInPandasWithState query over a file source, one file per
 soak batch."""
@@ -28,7 +30,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import functions as F
 
@@ -39,7 +40,7 @@ from jetstream_spark.queries.eventlog import (
     flag_rate_anomalies,
 )
 from jetstream_spark.streaming.anomaly_stream import (
-    _handle_batch,
+    _commit_batch,
     compact_state,
     detect_anomalies,
     init_anomaly_state,
@@ -50,6 +51,7 @@ from jetstream_spark.streaming.cusum_stream import detect_drift, read_daily_coun
 from jetstream_spark.streaming.funnel_stream import current_stages, funnel_stage_stream
 from jetstream_spark.streaming.seasonal_stream import detect_seasonal_anomalies
 from jetstream_spark.streaming.state_compact import list_parts
+from tests.fixtures import commit_batch_once
 
 # the funnel's user dimension over the soak's event stream: a bounded
 # pool so most users see many events and some complete view->click->
@@ -92,17 +94,6 @@ def _frame(spark, rows):
     return spark.createDataFrame(
         rows, "event_id long, ts string, event_type string"
     ).select("event_id", F.col("ts").cast("timestamp").alias("ts"), "event_type")
-
-
-def _part_write_only(state_dir: str, frame, batch_id: int) -> None:
-    """_handle_batch cut at the crash point: part written, marker NOT."""
-    out = os.path.join(state_dir, "counts", f"b{batch_id}")
-    shutil.rmtree(out, ignore_errors=True)
-    (
-        frame.groupBy("event_type", F.date_trunc("hour", "ts").alias("hb"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .write.parquet(out)
-    )
 
 
 def _user_events(frame):
@@ -218,9 +209,9 @@ def test_four_monitors_one_state_soak(spark, tmp_path):
                 _write_funnel_batch(fsrc, f"b{i}", rows)
                 q = _start_funnel(spark, fsrc, fck, fout)
                 q.processAllAvailable()
-                # count-state crash window: the batch's part lands but the
-                # marker doesn't.
-                _part_write_only(state_dir, frame, i)
+                # count-state crash window: the commit body runs (the
+                # batch's part lands) but the handler never marks it.
+                _commit_batch(state_dir, frame, i)
                 assert i not in load_done_batches(state_dir)
                 # a compaction cycle fired exactly in the window must NOT
                 # absorb the unmarked part (else its replay would
@@ -238,12 +229,12 @@ def test_four_monitors_one_state_soak(spark, tmp_path):
                 _assert_funnel_identity(spark, fout, mid)
                 seen_rows = seen_rows[: -len(rows)]
                 # replay converges by delete-before-rewrite, then marks
-                _handle_batch(state_dir, frame, i)
+                commit_batch_once(_commit_batch, state_dir, frame, i)
                 assert i in load_done_batches(state_dir)
             else:
                 _write_funnel_batch(fsrc, f"b{i}", rows)
                 q.processAllAvailable()
-                _handle_batch(state_dir, frame, i)
+                commit_batch_once(_commit_batch, state_dir, frame, i)
 
             seen_rows += rows
             if i % 2 == 1:
@@ -267,7 +258,7 @@ def test_four_monitors_one_state_soak(spark, tmp_path):
         # checkpoint replay of MARKED batches is a no-op by the marker gate;
         # likewise re-draining the funnel source is a no-op by its checkpoint
         for i, rows in enumerate(batches):
-            _handle_batch(state_dir, _frame(spark, rows), i)
+            commit_batch_once(_commit_batch, state_dir, _frame(spark, rows), i)
         q.processAllAvailable()
         _assert_all_three_identities(spark, state_dir, all_frame)
         _assert_funnel_identity(spark, fout, all_frame)

@@ -19,6 +19,7 @@ from jetstream_spark.streaming.state_compact import (
     list_parts,
     recover,
 )
+from tests.fixtures import commit_batch_once
 from tests.test_streaming_scd2 import BATCH1, BATCH2, BATCH3, _events_df
 
 
@@ -40,7 +41,7 @@ def _mk_anom_state(spark, tmp_path, n_batches=3):
             (b * 100 + i, f"2024-03-01T{(b + i) % 24:02d}:05:00", "click")
             for i in range(20)
         ]
-        anom._handle_batch(state, _anom_df(spark, rows), b)
+        commit_batch_once(anom._commit_batch, state, _anom_df(spark, rows), b)
     return state
 
 
@@ -55,12 +56,12 @@ def test_anomaly_compaction_preserves_counts(spark, tmp_path):
 
     # new batches land after compaction; a second compaction folds c + b
     rows = [(900 + i, "2024-03-01T03:05:00", "view") for i in range(5)]
-    anom._handle_batch(state, _anom_df(spark, rows), 7)
+    commit_batch_once(anom._commit_batch, state, _anom_df(spark, rows), 7)
     mid = _counts(spark, state)
     assert anom.compact_state(spark, state)
     assert _counts(spark, state) == mid
     # replay of an absorbed batch is marker-skipped: state unchanged
-    anom._handle_batch(state, _anom_df(spark, rows), 7)
+    commit_batch_once(anom._commit_batch, state, _anom_df(spark, rows), 7)
     assert _counts(spark, state) == mid
 
 
@@ -103,7 +104,7 @@ def test_scd2_compaction_preserves_dimension(spark, tmp_path):
     state = str(tmp_path / "scd2")
     scd2.init_scd2_state(state)
     for i, batch in enumerate((BATCH1, BATCH2, BATCH3)):
-        scd2._handle_batch(state, _events_df(spark, batch), i)
+        commit_batch_once(scd2._commit_batch, state, _events_df(spark, batch), i)
     before = sorted(map(tuple, scd2.current_scd2(spark, state).collect()))
     assert scd2.compact_state(spark, state)
     after = sorted(map(tuple, scd2.current_scd2(spark, state).collect()))
@@ -122,7 +123,7 @@ def test_sketch_compaction_preserves_heavy_hitters(spark, tmp_path):
             [(b * 10 + i, f"alpha beta gamma doc{b} tok{i} alpha") for i in range(8)],
             "doc_id long, text string",
         )
-        sk._handle_batch(state, docs, b)
+        commit_batch_once(sk._commit_batch, state, docs, b)
     before = sorted(map(tuple, sk.heavy_hitters(spark, state).collect()))
     assert sk.compact_state(spark, state)
     assert sorted(map(tuple, sk.heavy_hitters(spark, state).collect())) == before
@@ -139,10 +140,7 @@ def test_compaction_skips_undone_inflight_batch(spark, tmp_path):
     state = _mk_anom_state(spark, tmp_path)  # batches 0..2, all done-marked
     # simulate an in-flight batch: parquet present, marker absent
     inflight_rows = [(900 + i, "2024-03-01T09:05:00", "click") for i in range(5)]
-    inflight = os.path.join(state, "counts", "b99")
-    _anom_df(spark, inflight_rows).groupBy(
-        F.col("event_type"), F.date_trunc("hour", "ts").alias("hb")
-    ).agg(F.count(F.lit(1)).alias("n")).write.parquet(inflight)
+    anom._commit_batch(state, _anom_df(spark, inflight_rows), 99)
 
     assert anom.compact_state(spark, state)
     names = {os.path.basename(p) for p in list_parts(os.path.join(state, "counts"))}

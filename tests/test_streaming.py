@@ -11,8 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from jetstream_spark.atproto import log as eventlog
+from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
 from jetstream_spark.atproto.subscribe import Subscription
-from jetstream_spark.streaming.pipeline import start_ingest
+from jetstream_spark.streaming.pipeline import read_frame_stream, start_ingest
 from tests.fixtures import drain_via_edge, make_frames
 
 
@@ -34,7 +35,8 @@ def test_streaming_ingest_and_checkpoint_resume(spark, tmp_path):
 
     half = len(all_frames) // 2
     _write_frame_file(frames_dir, all_frames[:half], "batch1.jsonl")
-    q = start_ingest(spark, frames_dir, log_dir, ckpt, wall_clock_us=1_000_000)
+    frames = read_frame_stream(spark, RAW_FRAME_SCHEMA, frames_dir)
+    q = start_ingest(spark, frames, log_dir, ckpt, wall_clock_us=1_000_000)
     q.processAllAvailable()
     q.stop()
     n1 = eventlog.read_log(spark, log_dir).count()
@@ -42,7 +44,7 @@ def test_streaming_ingest_and_checkpoint_resume(spark, tmp_path):
 
     # restart from checkpoint: only the NEW file is processed (S12 resume)
     _write_frame_file(frames_dir, all_frames[half:], "batch2.jsonl")
-    q2 = start_ingest(spark, frames_dir, log_dir, ckpt, wall_clock_us=2_000_000)
+    q2 = start_ingest(spark, frames, log_dir, ckpt, wall_clock_us=2_000_000)
     q2.processAllAvailable()
     q2.stop()
 
@@ -59,7 +61,6 @@ def test_ingest_batch_idempotent_crash_replay(spark, tmp_path):
     The batch-tagged delete-before-rewrite commit must converge to ONE copy
     with strictly monotonic time_us — parquet append alone would not."""
     from jetstream_spark.atproto.normalize import normalize_frames
-    from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
 
     log_dir = str(tmp_path / "log")
     fdf = spark.createDataFrame(make_frames(), schema=RAW_FRAME_SCHEMA)
@@ -86,7 +87,6 @@ def test_ingest_batch_idempotent_crash_replay(spark, tmp_path):
 @pytest.mark.timeout(300)
 def test_backfill_respects_filters_and_seq(spark, tmp_path):
     from jetstream_spark.atproto.normalize import normalize_frames
-    from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
 
     log_dir = str(tmp_path / "log")
     fdf = spark.createDataFrame(make_frames(), schema=RAW_FRAME_SCHEMA)
@@ -128,8 +128,9 @@ def test_consumer_metrics_families(spark, tmp_path):
 
     metrics = ConsumerMetrics(socket_url="test-ingest")
     tracer = StageTracer()
+    frames = read_frame_stream(spark, RAW_FRAME_SCHEMA, frames_dir)
     q = start_ingest(
-        spark, frames_dir, log_dir, ckpt, wall_clock_us=1_000_000, metrics=metrics, tracer=tracer
+        spark, frames, log_dir, ckpt, wall_clock_us=1_000_000, metrics=metrics, tracer=tracer
     )
     q.processAllAvailable()
     q.stop()

@@ -83,29 +83,33 @@ def test_streaming_ann_matches_batch_probe(spark, tmp_path):
 
 @pytest.mark.timeout(300)
 def test_streaming_ann_replay_converges(spark, tmp_path):
+    from functools import partial
+
     from jetstream_spark.atproto.log import load_done_batches
     from jetstream_spark.streaming.ann_stream import (
-        _handle_batch,
+        _commit_batch,
         init_ann_state,
         read_results,
     )
-    from jetstream_spark.operators.ann_index import ensure_ivf_index
+    from jetstream_spark.operators.ann_index import ensure_ivf_index, ivf_centroids
+    from jetstream_spark.streaming.pipeline import commit_once
 
     state = str(tmp_path / "state")
     init_ann_state(state)
     index_path = ensure_ivf_index(spark, SF_DIR)
+    body = partial(_commit_batch, state, index_path, ivf_centroids(spark, SF_DIR))
 
     rows = _query_rows(spark, range(3))
     bdf = spark.createDataFrame(
         [(r["vec_id"], r["embedding"]) for r in rows],
         "query_id long, embedding array<float>",
     )
-    _handle_batch(state, SF_DIR, index_path, bdf, batch_id=0)
+    commit_once(state, body, bdf, 0)
     once = sorted(tuple(r) for r in read_results(spark, state).collect())
     assert once and 0 in load_done_batches(state)
 
     # replay of a COMPLETED batch is a no-op
-    _handle_batch(state, SF_DIR, index_path, bdf, batch_id=0)
+    commit_once(state, body, bdf, 0)
     assert sorted(tuple(r) for r in read_results(spark, state).collect()) == once
 
     # crash before the marker: output exists, marker doesn't; the replay
@@ -116,6 +120,6 @@ def test_streaming_ann_replay_converges(spark, tmp_path):
 
     with open(os.path.join(state, BATCH_STATE_FILE), "w") as f:
         _json.dump([], f)
-    _handle_batch(state, SF_DIR, index_path, bdf, batch_id=0)
+    commit_once(state, body, bdf, 0)
     assert sorted(tuple(r) for r in read_results(spark, state).collect()) == once
     assert 0 in load_done_batches(state)

@@ -92,7 +92,8 @@ def test_anomaly_stream_exactly_once_replay(spark, tmp_path):
     """Re-running an already-marked batch must not duplicate its counts
     (marker skip), and a crash AFTER the part write but BEFORE the marker
     converges to one copy via delete-before-rewrite."""
-    from jetstream_spark.streaming.anomaly_stream import _handle_batch
+    from jetstream_spark.streaming.anomaly_stream import _commit_batch
+    from tests.fixtures import commit_batch_once
 
     events_dir, state_dir = str(tmp_path / "drop"), str(tmp_path / "state")
     os.makedirs(events_dir)
@@ -102,19 +103,19 @@ def test_anomaly_stream_exactly_once_replay(spark, tmp_path):
         BATCH1, "event_id long, ts string, event_type string"
     ).select("event_id", F.col("ts").cast("timestamp").alias("ts"), "event_type")
 
-    _handle_batch(state_dir, rows, 0)
+    commit_batch_once(_commit_batch, state_dir, rows, 0)
     before = sorted(
         (r["event_type"], r["hb"], r["n"])
         for r in read_hourly_counts(spark, state_dir).collect()
     )
     # marked-done replay: no-op
-    _handle_batch(state_dir, rows, 0)
+    commit_batch_once(_commit_batch, state_dir, rows, 0)
     # crash-window replay: marker lost, part present -> rewrite, not append
     from jetstream_spark.atproto.log import BATCH_STATE_FILE, load_done_batches
 
     assert 0 in load_done_batches(state_dir)
     os.remove(os.path.join(state_dir, BATCH_STATE_FILE))
-    _handle_batch(state_dir, rows, 0)
+    commit_batch_once(_commit_batch, state_dir, rows, 0)
     after = sorted(
         (r["event_type"], r["hb"], r["n"])
         for r in read_hourly_counts(spark, state_dir).collect()

@@ -87,7 +87,8 @@ def test_crash_after_state_writes_before_marker_replays_clean(spark, tmp_path):
     pairs, output identical to the uncrashed run."""
     import os as _os
 
-    from jetstream_spark.streaming.dedup_stream import _handle_batch
+    from jetstream_spark.streaming.dedup_stream import _commit_batch
+    from tests.fixtures import commit_batch_once
     from jetstream_spark.atproto.log import BATCH_STATE_FILE, load_done_batches
 
     state_dir = str(tmp_path / "state")
@@ -95,7 +96,7 @@ def test_crash_after_state_writes_before_marker_replays_clean(spark, tmp_path):
 
     base = NOVEL[1].format(i=7) * 3
     b0 = spark.createDataFrame([(1, base)], "doc_id long, text string")
-    _handle_batch(state_dir, b0, 0)
+    commit_batch_once(_commit_batch, state_dir, b0, 0)
 
     # batch 1: a near-dup of history doc 1 plus TWO near-identical docs
     # within the batch (the within-batch pair must never appear)
@@ -103,7 +104,7 @@ def test_crash_after_state_writes_before_marker_replays_clean(spark, tmp_path):
         [(10, base + " z"), (20, NOVEL[2].format(i=9) * 3), (21, NOVEL[2].format(i=9) * 3 + " q")],
         "doc_id long, text string",
     )
-    _handle_batch(state_dir, b1, 1)
+    commit_batch_once(_commit_batch, state_dir, b1, 1)
     expected = sorted(map(tuple, read_pairs(spark, state_dir).collect()))
     assert [(b, n) for b, n, _ in expected] == [(1, 10)]
 
@@ -116,7 +117,7 @@ def test_crash_after_state_writes_before_marker_replays_clean(spark, tmp_path):
     with open(_os.path.join(state_dir, BATCH_STATE_FILE), "w") as f:
         _json.dump([0], f)
 
-    _handle_batch(state_dir, b1, 1)  # crash-replay
+    commit_batch_once(_commit_batch, state_dir, b1, 1)  # crash-replay
     replayed = sorted(map(tuple, read_pairs(spark, state_dir).collect()))
     assert replayed == expected, "replay emitted self- or within-batch pairs"
     assert load_done_batches(state_dir) == {0, 1}

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from jetstream_spark.streaming.scd2_stream import (
     _batch_runs,
-    _handle_batch,
+    _commit_batch,
     _stored_runs,
     check_order,
     current_scd2,
@@ -19,6 +19,7 @@ from jetstream_spark.streaming.scd2_stream import (
     start_streaming_scd2,
 )
 from jetstream_spark.queries.eventlog import scd2_chain
+from tests.fixtures import commit_batch_once
 
 SCHEMA = "event_id long, ts timestamp, user_id long, props string"
 
@@ -95,15 +96,15 @@ def test_exactly_once_replay(spark, tmp_path):
     state_dir = str(tmp_path / "state")
     init_scd2_state(state_dir)
     df = _events_df(spark, BATCH1)
-    _handle_batch(state_dir, df, 0)
+    commit_batch_once(_commit_batch, state_dir, df, 0)
     before = _table(current_scd2(spark, state_dir))
     # marker present: replay is a no-op
-    _handle_batch(state_dir, df, 0)
+    commit_batch_once(_commit_batch, state_dir, df, 0)
     assert _table(current_scd2(spark, state_dir)) == before
     # crash window: part written but marker lost -> rerun converges
     # (delete-before-rewrite replaces the part)
     os.remove(os.path.join(state_dir, "_ingest_batches.json"))
-    _handle_batch(state_dir, df, 0)
+    commit_batch_once(_commit_batch, state_dir, df, 0)
     assert _table(current_scd2(spark, state_dir)) == before
 
 
@@ -114,16 +115,17 @@ def test_check_order_flags_interleaved_parts(spark, tmp_path):
     state_dir = str(tmp_path / "state")
     init_scd2_state(state_dir)
     # disjoint late arrival: batch2-time first, then batch1-time -> clean
-    _handle_batch(state_dir, _events_df(spark, BATCH2), 0)
-    _handle_batch(state_dir, _events_df(spark, BATCH1), 1)
+    commit_batch_once(_commit_batch, state_dir, _events_df(spark, BATCH2), 0)
+    commit_batch_once(_commit_batch, state_dir, _events_df(spark, BATCH1), 1)
     assert check_order(spark, state_dir).isEmpty()
 
     state2 = str(tmp_path / "state2")
     init_scd2_state(state2)
     # run span [0, 10] for user 7 (same tier), then a late event at
     # minute 5 with a different tier: lands inside the stored span
-    _handle_batch(state2, _events_df(spark, [_row(1, 0, 7, 5), _row(2, 10, 7, 7)]), 0)
-    _handle_batch(state2, _events_df(spark, [_row(3, 5, 7, 90)]), 1)
+    early = _events_df(spark, [_row(1, 0, 7, 5), _row(2, 10, 7, 7)])
+    commit_batch_once(_commit_batch, state2, early, 0)
+    commit_batch_once(_commit_batch, state2, _events_df(spark, [_row(3, 5, 7, 90)]), 1)
     bad = check_order(spark, state2)
     assert {r["user_id"] for r in bad.collect()} == {7}
 
@@ -145,7 +147,7 @@ def test_random_batch_splits_equal_batch_operator(spark, tmp_path):
         cuts = sorted(rng.sample(range(1, 40), rng.randrange(1, 4)))
         chunks = [events[a:b] for a, b in zip([0] + cuts, cuts + [40])]
         for bid, chunk in enumerate(chunks):
-            _handle_batch(state, _events_df(spark, chunk), bid)
+            commit_batch_once(_commit_batch, state, _events_df(spark, chunk), bid)
         got = _table(current_scd2(spark, state))
         want = _table(scd2_chain(_batch_runs(_events_df(spark, events))))
         assert got == want, f"seed={seed} cuts={cuts}"
@@ -177,8 +179,8 @@ def test_equal_timestamp_boundary_ties_match_batch(spark, tmp_path):
     # has events at the SAME minute 5 (tier 9, id 2) then minute 6
     b0 = [_row(1, 5, 9, 5)]
     b1 = [_row(2, 5, 9, 95), _row(3, 6, 9, 97)]
-    _handle_batch(state, _events_df(spark, b0), 0)
-    _handle_batch(state, _events_df(spark, b1), 1)
+    commit_batch_once(_commit_batch, state, _events_df(spark, b0), 0)
+    commit_batch_once(_commit_batch, state, _events_df(spark, b1), 1)
     got = _table(current_scd2(spark, state))
     want = _table(scd2_chain(_batch_runs(_events_df(spark, b0 + b1))))
     assert got == want

@@ -14,13 +14,14 @@ from jetstream_spark.queries.sketches import _KMV_SCALE, KMV_K
 from jetstream_spark.streaming.theta_stream import (
     EVENT_STREAM_SCHEMA,
     _batch_sketch,
-    _handle_batch,
+    _commit_batch,
     compact_state,
     distinct_estimates,
     init_theta_state,
     read_sketch,
     start_streaming_theta,
 )
+from tests.fixtures import commit_batch_once
 
 
 def _write_batch(events_dir: str, tag: str, rows: list[tuple[int, str, str]]) -> None:
@@ -112,7 +113,7 @@ def test_exactly_once_replay_and_compaction(spark, tmp_path):
 
     # crash-replay of an already-marked batch is a no-op
     replay = spark.createDataFrame(BATCH1, EVENT_STREAM_SCHEMA)
-    _handle_batch(state_dir, replay, 0)
+    commit_batch_once(_commit_batch, state_dir, replay, 0)
     assert sorted(map(tuple, read_sketch(spark, state_dir).collect())) == before
 
     # compaction folds parts by the read-side merge: estimates unchanged
