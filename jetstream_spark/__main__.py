@@ -86,7 +86,7 @@ def cmd_ingest(args) -> int:
         from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
 
         frames = read_frame_stream(spark, RAW_FRAME_SCHEMA, args.frames_dir)
-    q = start_ingest(spark, frames, args.data_dir, ckpt)
+    q = start_ingest(frames, args.data_dir, ckpt)
     # the reference trims expired events on a ticker INSIDE the consumer
     # process (main.go:188-205 → persist.go TrimEvents every 15 s); the
     # writer owns retention + sealed-bucket compaction here for the same
@@ -448,10 +448,9 @@ def cmd_sql(args) -> int:
 
         read_log(spark, args.data_dir).createOrReplaceTempView("events_log")
     if args.sf_dir:
-        from jetstream_spark.tables import TABLE_NAMES, table
+        from jetstream_spark.tables import register_views
 
-        for name in TABLE_NAMES:
-            table(spark, args.sf_dir, name).createOrReplaceTempView(name)
+        register_views(spark, args.sf_dir)
     df = spark.sql(args.query)
     if args.limit:
         df = df.limit(args.limit)

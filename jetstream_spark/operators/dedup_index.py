@@ -8,8 +8,7 @@ probes that table. The scale contract of the probe join:
 
 - the index side is a bucketed scan — Catalyst plans NO Exchange under it,
   because the table's bucket spec already hash-partitions it on the join
-  keys (same mechanism as operators/bucketing.py, asserted in
-  tests/test_dedup_index.py);
+  keys (Spark's bucketBy, asserted in tests/test_dedup_index.py);
 - only the incoming batch (a vanishing fraction of history) is shuffled,
   so probe cost is O(batch) + a bucketed read of matching index rows, not
   O(corpus);

@@ -224,7 +224,7 @@ def _minhash_pairs(docs: DataFrame, sh: DataFrame) -> DataFrame:
     its shingle frame — shared by the full-corpus query and the two-tier
     representative pass.
 
-    r13 plan audit (plans/r13/dedup_minhash_lsh_before.txt): the band
+    The r13 plan audit found the band
     self-join planned as a BroadcastHashJoin, so the ReuseExchange this
     code used to count on never fired — the Arrow signature kernel ran
     TWICE over the corpus — and each verification join independently
@@ -1144,110 +1144,6 @@ def q_dedup_containment(
         F.round(F.col("inter") / F.col("n_b"), 6).alias("containment"),
     )
     return fwd.unionByName(rev)
-
-
-# WARN-only df-tail advisory for the exact containment tier (r14, VERDICT r13
-# #6): q_dedup_containment's docstring documents a measured production rule —
-# "profile df first; enable the ceiling only when per-doc above-ceiling mass
-# is small (<10%), otherwise run exact or the KMV tier" — but the rule was
-# manual. These thresholds encode it; the advisory is NOT called from the
-# declared query path (it is the profile-first step an operator runs before
-# pointing the exact tier at an unknown corpus, priced as one diagnostic
-# aggregate over the shingle index).
-CONTAIN_FANOUT_WARN = 1000.0  # Σdf²/Σdf: pair-exchange rows per input occurrence
-CONTAIN_DF_MASS_CROSSOVER = 0.10  # measured sf0.1 crossover: ceiling pays only below ~10% hot mass
-
-
-def _df_tail_stats(df_freq: DataFrame, df_ceiling: int | None = None) -> dict:
-    """Pure decision core over a (s, df) shingle document-frequency frame:
-    one aggregate → {distinct, occurrences, df quantiles, pair fanout,
-    above-ceiling mass/volume, recommendation}. Split from the sf_dir
-    wrapper so the warning path is testable on synthetic distributions.
-
-    The warn trigger is the pair-join FANOUT Σdf²/Σdf — the rows the
-    Σdf² candidate exchange materializes per input occurrence, which is
-    what actually explodes under boilerplate (a df=10⁶ shingle yields
-    10¹² pairs no matter what the median looks like). The bench corpus
-    reads ~200× and the exact tier streams it in seconds (the measured
-    winner there), so the threshold sits at 1000×.
-    Max/median skew alone deliberately does NOT warn: the bench corpus
-    is ~100× skewed by that measure yet exact still wins — skew only
-    hurts when it shows up in the volume."""
-    row = df_freq.agg(
-        F.count(F.lit(1)).alias("distinct_shingles"),
-        F.sum("df").alias("occurrences"),
-        F.sum(F.col("df") * F.col("df")).alias("pair_volume"),
-        F.max("df").alias("max_df"),
-        F.expr("percentile(df, 0.99)").alias("p99_df"),
-        F.expr("percentile(df, 0.5)").alias("median_df"),
-    ).collect()[0]
-    ceiling = int(df_ceiling) if df_ceiling is not None else max(int(10 * row["median_df"]), 1)
-    hot = df_freq.where(F.col("df") > F.lit(ceiling)).agg(
-        F.coalesce(F.sum("df"), F.lit(0)).alias("hot_occ"),
-        F.coalesce(F.sum(F.col("df") * F.col("df")), F.lit(0)).alias("hot_vol"),
-    ).collect()[0]
-    occ = float(row["occurrences"]) or 1.0
-    mass = float(hot["hot_occ"]) / occ
-    fanout = float(row["pair_volume"]) / occ
-    warn = fanout >= CONTAIN_FANOUT_WARN
-    if not warn:
-        rec = "exact"
-    elif mass < CONTAIN_DF_MASS_CROSSOVER:
-        rec = "df_ceiling"
-    else:
-        rec = "kmv"
-    return {
-        "distinct_shingles": int(row["distinct_shingles"]),
-        "occurrences": int(row["occurrences"]),
-        "pair_volume": int(row["pair_volume"]),
-        "pair_fanout": round(fanout, 2),
-        "median_df": float(row["median_df"]),
-        "p99_df": float(row["p99_df"]),
-        "max_df": int(row["max_df"]),
-        "df_ceiling": ceiling,
-        "above_ceiling_mass": round(mass, 4),
-        "above_ceiling_volume_share": round(float(hot["hot_vol"]) / max(float(row["pair_volume"]), 1.0), 4),
-        "heavy_tail": warn,
-        "recommendation": rec,
-    }
-
-
-def containment_df_advisory(
-    spark: SparkSession, sf_dir: str, *, df_ceiling: int | None = None
-) -> dict:
-    """Profile the corpus shingle-df distribution and WARN (logging only,
-    nothing changed) when the exact containment tier's Σ df(s)² pair
-    exchange would be dominated by hot boilerplate shingles. The warning
-    names the documented mitigation the stats select: ``df_ceiling`` when
-    the above-ceiling mass sits under the measured ~10% crossover
-    (candidates shrink WITH the index and exact re-verification
-    stays near the output size), the KMV tier otherwise. A light tail gets
-    no warning — on such corpora the exact tier is the measured winner
-    (q_dedup_containment docstring) and the ceiling costs more than it
-    saves."""
-    import logging
-
-    sh = _doc_shingles(spark, sf_dir)
-    freq = (
-        sh.select(F.explode("shingles").alias("s"))
-        .groupBy("s")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    stats = _df_tail_stats(freq, df_ceiling)
-    if stats["heavy_tail"]:
-        logging.getLogger(__name__).warning(
-            "dedup_containment: shingle-df tail is pair-join-heavy (fanout "
-            "%.0fx candidate rows per occurrence; above-ceiling mass "
-            "%.1f%% at ceiling %d) — the exact tier's Σ df² exchange will be "
-            "dominated by hot boilerplate shingles; recommended tier: %s "
-            "(df_ceiling= re-verifies exactly, dedup_containment_kmv is the "
-            "approximate tier). AQE skew-split owns moderate skew only.",
-            stats["pair_fanout"],
-            100.0 * stats["above_ceiling_mass"],
-            stats["df_ceiling"],
-            stats["recommendation"],
-        )
-    return stats
 
 
 Q_CONTAINMENT_ORACLE = f"""

@@ -1202,9 +1202,9 @@ def q_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def decompose_seasonal(per: DataFrame) -> DataFrame:
     """The STL-lite decomposition core over an (event_type, hb, n)
-    hourly-count frame — shared by the batch query above and the
-    standing streaming monitor (streaming/seasonal_stream.py), so both
-    flag identically."""
+    hourly-count frame — the batch query above, or the streaming anomaly
+    monitor's merged state (`read_hourly_counts`), which flags
+    identically (tests/test_streaming_cusum.py)."""
     wt = Window.partitionBy("event_type").orderBy("hb").rowsBetween(-SEAS_W, SEAS_W)
     t = per.withColumn("trend", F.round(F.avg("n").over(wt), 6))
     t = t.withColumn(

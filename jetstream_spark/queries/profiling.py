@@ -1840,7 +1840,7 @@ def q_profile_columns_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     rendering (r13: the counts previously came from a SECOND full stack
     scan that re-rendered every canonical string just to count nulls —
     folding them into the register aggregate halves the SCANS; wall-neutral
-    at local[32]/sf0.1 (A/B 1.007, BENCH_AB_r13_opt1) because the md5
+    at local[32]/sf0.1 (r13 A/B: 1.007) because the md5
     canonical pipeline dominates there — the scan halving is the at-scale
     payoff). Topology now matches q_profile_columns_fast exactly
     (the structural-parity contract, r9 review): null values land in a

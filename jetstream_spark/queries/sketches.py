@@ -415,7 +415,7 @@ FROM unioned
 # distincts, this = distribution shape): keep the K rows whose md5 rank
 # is smallest — a deterministic uniform sample that is EXACTLY mergeable
 # (bottom-k of a union == bottom-k of the concatenated per-split
-# bottom-k's, proven in tests the way theta_stream proves its merge) —
+# bottom-k's, pinned in tests/test_r7_ops.py) —
 # and read quantiles off the sample. The engine-side selection is a
 # TakeOrdered(K) (no global sort); the exact column is the audit tier a
 # production run samples or drops. Estimator error follows the order-

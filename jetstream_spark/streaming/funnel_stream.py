@@ -1,13 +1,12 @@
 """Streaming strict-funnel monitor — the per-user stateful twin of the
 batch `funnel_steps_strict` operator (queries/eventlog.py).
 
-Unlike the count-shaped monitors (rate/CUSUM/seasonal share ONE additive
+Unlike the count-shaped monitors (rate/CUSUM share ONE additive
 hourly-count state), funnel progress is an ORDER-dependent per-user fold:
 stage i advances only on the next step's event type STRICTLY AFTER the
 event that satisfied stage i−1. That state is not additive, so this
 monitor holds it where Spark holds order-dependent state — the state
-store, via `applyInPandasWithState` keyed on user (the S18
-monotonic_per_key pattern, streaming/windows.py): per user a (stage,
+store, via `applyInPandasWithState` keyed on user: per user a (stage,
 last_us) pair, exactly the accumulator of the batch operator's
 sorted-array fold.
 

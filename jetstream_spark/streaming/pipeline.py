@@ -109,7 +109,6 @@ def _commit_ingest(
 
 
 def start_ingest(
-    spark: SparkSession,
     frames: DataFrame,
     log_dir: str,
     checkpoint_dir: str,

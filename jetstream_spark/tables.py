@@ -82,10 +82,6 @@ def events_since(spark: SparkSession, sf_dir: str, cursor_ts: str) -> DataFrame:
     ).withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all tables as temp views for spark.sql() queries."""
     for name in TABLE_NAMES:

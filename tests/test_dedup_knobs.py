@@ -241,83 +241,3 @@ def test_embedding_lsh_band_width_tracks_corpus_size(spark):
     assert _rhp_params(2**35) == (37, 4)
     assert _rhp_params(2**40) == (42, 5)
     assert _rhp_params(2**46) == (48, 6)
-
-
-# --- r14: WARN-only df-tail advisory (VERDICT r13 #6) --------------------------
-
-
-def _df_frame(spark, dfs):
-    return spark.createDataFrame([(f"s{i}", d) for i, d in enumerate(dfs)], "s string, df long")
-
-
-def test_df_tail_stats_boilerplate_triggers_ceiling_recommendation(spark):
-    """One boilerplate shingle at df=1e5 over a df=2 background: the pair
-    fanout blows past the 1000x warn line while the hot occurrence mass
-    stays under the measured ~10% crossover -> df_ceiling tier."""
-    from pyspark.sql import functions as F
-
-    from jetstream_spark.queries.dedup import _df_tail_stats
-
-    background = spark.range(500_000).select(
-        F.col("id").cast("string").alias("s"), F.lit(2).cast("long").alias("df")
-    )
-    hot = spark.createDataFrame([("boiler", 100_000)], "s string, df long")
-    stats = _df_tail_stats(background.unionByName(hot))
-    assert stats["heavy_tail"] is True
-    assert stats["pair_fanout"] > 1000
-    assert stats["above_ceiling_mass"] < 0.10
-    assert stats["recommendation"] == "df_ceiling"
-
-
-def test_df_tail_stats_hot_mass_everywhere_recommends_kmv(spark):
-    """When above-ceiling shingles carry most of the occurrence mass the
-    ceiling's exact re-verify fans out to corpus scale (the measured 121 s
-    vs 5.5 s case) -> the approximate KMV tier is the pointer instead."""
-    from jetstream_spark.queries.dedup import _df_tail_stats
-
-    stats = _df_tail_stats(_df_frame(spark, [50_000] * 40 + [2] * 100))
-    assert stats["heavy_tail"] is True
-    assert stats["above_ceiling_mass"] >= 0.10
-    assert stats["recommendation"] == "kmv"
-
-
-def test_df_tail_stats_quiet_on_low_fanout(spark):
-    """A skewed-by-ratio but volume-light distribution (the bench corpus
-    shape: ~100x max/median, fanout ~200x) must NOT warn -- the exact tier
-    is the measured winner there and the advisory must not chase ratio
-    skew that never shows up in the join volume."""
-    from jetstream_spark.queries.dedup import _df_tail_stats
-
-    stats = _df_tail_stats(_df_frame(spark, [400] + [4] * 2000))
-    assert stats["heavy_tail"] is False
-    assert stats["recommendation"] == "exact"
-
-
-def test_containment_advisory_warns_and_matches_core(spark, hot_shingle_dir, caplog):
-    """End-to-end wrapper over a real corpus: stats come back coherent and
-    the warning fires iff the decision core says heavy. The hot-shingle
-    fixture is tiny, so its fanout is small: no warning -- the warning
-    path itself is pinned by the synthetic-core tests above; here we pin
-    the no-false-positive side plus the log wiring via a forced-low
-    threshold monkeypatch-free check on stats consistency."""
-    import logging
-
-    from jetstream_spark.queries import dedup
-    from jetstream_spark.queries.dedup import containment_df_advisory
-
-    with caplog.at_level(logging.WARNING, logger="jetstream_spark.queries.dedup"):
-        stats = containment_df_advisory(spark, hot_shingle_dir)
-    assert stats["max_df"] == 20  # the boilerplate sentence is in all 20 docs
-    fired = any("dedup_containment" in r.message for r in caplog.records)
-    assert fired == stats["heavy_tail"]
-    # warn wiring: drop the threshold below this corpus's fanout and the
-    # warning must fire with the recommendation in the message
-    old = dedup.CONTAIN_FANOUT_WARN
-    try:
-        dedup.CONTAIN_FANOUT_WARN = 0.5
-        with caplog.at_level(logging.WARNING, logger="jetstream_spark.queries.dedup"):
-            stats2 = containment_df_advisory(spark, hot_shingle_dir)
-        assert stats2["heavy_tail"] is True
-        assert any(stats2["recommendation"] in r.message for r in caplog.records)
-    finally:
-        dedup.CONTAIN_FANOUT_WARN = old

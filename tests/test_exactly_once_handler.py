@@ -62,24 +62,6 @@ def _anomaly(spark):
     )
 
 
-def _theta(spark):
-    from jetstream_spark.streaming import theta_stream as m
-
-    def batch(rows):
-        return spark.createDataFrame(rows, m.EVENT_STREAM_SCHEMA)
-
-    return dict(
-        init=m.init_theta_state,
-        body=lambda d: partial(m._commit_batch, d),
-        batches=(
-            batch([(u, "click", "2026-01-01") for u in range(30)]),
-            batch([]),
-            batch([(u, "purchase", "2026-01-02") for u in range(10, 25)]),
-        ),
-        read=lambda d: m.read_sketch(spark, d),
-    )
-
-
 def _scd2(spark):
     from jetstream_spark.streaming import scd2_stream as m
     from tests.test_streaming_scd2 import BATCH1, BATCH2, _events_df
@@ -89,24 +71,6 @@ def _scd2(spark):
         body=lambda d: partial(m._commit_batch, d),
         batches=(_events_df(spark, BATCH1), _events_df(spark, []), _events_df(spark, BATCH2)),
         read=lambda d: m.current_scd2(spark, d),
-    )
-
-
-def _sketch(spark):
-    from jetstream_spark.streaming import sketch_stream as m
-
-    def batch(rows):
-        return spark.createDataFrame(rows, m.DOC_STREAM_SCHEMA)
-
-    return dict(
-        init=m.init_sketch_state,
-        body=lambda d: partial(m._commit_batch, d),
-        batches=(
-            batch([(i, f"alpha beta gamma tok{i} alpha") for i in range(8)]),
-            batch([]),
-            batch([(10 + i, f"beta delta tok{i} beta beta") for i in range(6)]),
-        ),
-        read=lambda d: m.heavy_hitters(spark, d),
     )
 
 
@@ -157,9 +121,7 @@ def _ann(spark):
 CASES = {
     "ingest": _ingest,
     "anomaly": _anomaly,
-    "theta": _theta,
     "scd2": _scd2,
-    "sketch": _sketch,
     "dedup": _dedup,
     "ann": _ann,
 }

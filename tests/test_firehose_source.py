@@ -50,7 +50,7 @@ def test_firehose_source_end_to_end(registered, tmp_path):
 
     stream = _firehose_stream(spark, replay_dir)
     assert stream.isStreaming
-    q = start_ingest(spark, stream, log_dir, ckpt, wall_clock_us=1_000_000)
+    q = start_ingest(stream, log_dir, ckpt, wall_clock_us=1_000_000)
     try:
         q.processAllAvailable()
     finally:
@@ -77,7 +77,7 @@ def test_firehose_ingest_marks_batches_done_and_bucket_compacts(registered, tmp_
     half = len(frames) // 2
     _write_replay_files(replay_dir, frames[:half])
 
-    q = start_ingest(spark, _firehose_stream(spark, replay_dir), log_dir, ckpt, wall_clock_us=1_000_000)
+    q = start_ingest(_firehose_stream(spark, replay_dir), log_dir, ckpt, wall_clock_us=1_000_000)
     try:
         q.processAllAvailable()
         _write_replay_files(replay_dir, frames[half:])

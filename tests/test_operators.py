@@ -151,38 +151,6 @@ def test_approx_aggregates_error_bounds(spark):
     assert abs(ap_med - ex_med) <= 0.02 * spread, f"approx median off: {ap_med} vs {ex_med}"
 
 
-def test_bucketed_join_no_shuffle(spark, tmp_path):
-    """Co-located join: orders ⋈ lineitem both bucketed by orderkey must
-    plan WITHOUT any Exchange — the shuffle was paid once at write time.
-    Contrast asserted: the same join on plain parquet DOES shuffle."""
-    from jetstream_spark.operators.bucketing import (
-        bucketed_join,
-        plan_has_shuffle,
-        write_bucketed,
-    )
-    from jetstream_spark.tables import table
-
-    orders = table(spark, SF_DIR, "orders").select("o_orderkey", "o_orderdate")
-    lineitem = table(spark, SF_DIR, "lineitem").select(
-        F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        write_bucketed(orders, "orders_b", "o_orderkey", num_buckets=8)
-        write_bucketed(lineitem, "lineitem_b", "o_orderkey", num_buckets=8)
-        joined = bucketed_join(spark, "orders_b", "lineitem_b", "o_orderkey")
-        assert not plan_has_shuffle(joined), "bucketed join must not shuffle"
-        assert joined.count() == lineitem.count()
-
-        plain = orders.join(lineitem, "o_orderkey")
-        assert plan_has_shuffle(plain), "sanity: the unbucketed join shuffles"
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
-
-
 def test_ann_ivf_recall_vs_brute_force(spark):
     """IVF probe path: recall floor vs the exact baseline, so cell/probe
     config regressions get caught."""

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from jetstream_spark.streaming import anomaly_stream as anom
 from jetstream_spark.streaming import scd2_stream as scd2
-from jetstream_spark.streaming import sketch_stream as sk
 from jetstream_spark.streaming.state_compact import (
     MANIFEST,
     TMP,
@@ -113,22 +112,6 @@ def test_scd2_compaction_preserves_dimension(spark, tmp_path):
     # the compacted part holds FEWER rows than the three raw parts did
     # (cross-boundary runs merged by the collapse)
     assert scd2._stored_runs(spark, state).count() == len(before)
-
-
-def test_sketch_compaction_preserves_heavy_hitters(spark, tmp_path):
-    state = str(tmp_path / "sk")
-    sk.init_sketch_state(state)
-    for b in range(3):
-        docs = spark.createDataFrame(
-            [(b * 10 + i, f"alpha beta gamma doc{b} tok{i} alpha") for i in range(8)],
-            "doc_id long, text string",
-        )
-        commit_batch_once(sk._commit_batch, state, docs, b)
-    before = sorted(map(tuple, sk.heavy_hitters(spark, state).collect()))
-    assert sk.compact_state(spark, state)
-    assert sorted(map(tuple, sk.heavy_hitters(spark, state).collect())) == before
-    assert len(list_parts(os.path.join(state, "sketch"))) == 1
-    assert len(list_parts(os.path.join(state, "cands"))) == 1
 
 
 def test_compaction_skips_undone_inflight_batch(spark, tmp_path):

@@ -36,7 +36,7 @@ def test_streaming_ingest_and_checkpoint_resume(spark, tmp_path):
     half = len(all_frames) // 2
     _write_frame_file(frames_dir, all_frames[:half], "batch1.jsonl")
     frames = read_frame_stream(spark, RAW_FRAME_SCHEMA, frames_dir)
-    q = start_ingest(spark, frames, log_dir, ckpt, wall_clock_us=1_000_000)
+    q = start_ingest(frames, log_dir, ckpt, wall_clock_us=1_000_000)
     q.processAllAvailable()
     q.stop()
     n1 = eventlog.read_log(spark, log_dir).count()
@@ -44,7 +44,7 @@ def test_streaming_ingest_and_checkpoint_resume(spark, tmp_path):
 
     # restart from checkpoint: only the NEW file is processed (S12 resume)
     _write_frame_file(frames_dir, all_frames[half:], "batch2.jsonl")
-    q2 = start_ingest(spark, frames, log_dir, ckpt, wall_clock_us=2_000_000)
+    q2 = start_ingest(frames, log_dir, ckpt, wall_clock_us=2_000_000)
     q2.processAllAvailable()
     q2.stop()
 
@@ -129,9 +129,7 @@ def test_consumer_metrics_families(spark, tmp_path):
     metrics = ConsumerMetrics(socket_url="test-ingest")
     tracer = StageTracer()
     frames = read_frame_stream(spark, RAW_FRAME_SCHEMA, frames_dir)
-    q = start_ingest(
-        spark, frames, log_dir, ckpt, wall_clock_us=1_000_000, metrics=metrics, tracer=tracer
-    )
+    q = start_ingest(frames, log_dir, ckpt, wall_clock_us=1_000_000, metrics=metrics, tracer=tracer)
     q.processAllAvailable()
     q.stop()
 

@@ -12,7 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from jetstream_spark.queries.quality import gopher_pass
-from jetstream_spark.streaming.windows import dedup_stream
 from jetstream_spark.tables import table
 from tests.conftest import SF_DIR
 
@@ -43,8 +42,10 @@ def docs_stream_dir(spark, tmp_path):
 def test_streaming_curation_matches_batch(spark, docs_stream_dir, tmp_path):
     schema = "doc_id bigint, text string, lang string, source string, n_chars bigint, ts timestamp"
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(docs_stream_dir)
-    curated = dedup_stream(stream, ["doc_id"], watermark_col="ts", watermark="10 hours").filter(
-        gopher_pass()
+    curated = (
+        stream.withWatermark("ts", "10 hours")
+        .dropDuplicatesWithinWatermark(["doc_id"])
+        .filter(gopher_pass())
     )
     q = (
         curated.writeStream.format("memory")

@@ -114,10 +114,11 @@ def test_drift_state_is_replay_safe(spark, tmp_path):
 
 
 def test_seasonal_monitor_matches_batch_core(spark, tmp_path):
-    """The third monitor on the shared state: the streaming seasonal
-    decomposition equals the batch core over all events seen."""
+    """The third monitor on the shared state: the seasonal decomposition
+    of the merged hourly-count state equals the batch core over all
+    events seen."""
     from jetstream_spark.queries.eventlog import decompose_seasonal
-    from jetstream_spark.streaming.seasonal_stream import detect_seasonal_anomalies
+    from jetstream_spark.streaming.anomaly_stream import read_hourly_counts
 
     events_dir, state_dir = str(tmp_path / "drop"), str(tmp_path / "state")
     os.makedirs(events_dir)
@@ -135,7 +136,9 @@ def test_seasonal_monitor_matches_batch_core(spark, tmp_path):
         "event_type", F.date_trunc("hour", "ts").alias("hb")
     ).agg(F.count(F.lit(1)).alias("n"))
 
-    got = sorted(tuple(r) for r in detect_seasonal_anomalies(spark, state_dir).collect())
+    got = sorted(
+        tuple(r) for r in decompose_seasonal(read_hourly_counts(spark, state_dir)).collect()
+    )
     want = sorted(tuple(r) for r in decompose_seasonal(per).collect())
     assert got == want
     assert got  # non-empty decomposition

@@ -1,15 +1,13 @@
 """Regenerate QUERIES.md — the auto-generated operator catalog.
 
 One row per declared registry query (name, verification kind, tags, doc),
-grouped by primary tag, plus the standing streaming jobs and CLI surface.
-Run after adding operators; CI-of-one: the file is committed so the judge
-reads an inventory that CANNOT drift from the code (it is derived from it).
+grouped by primary tag. Run after adding operators: the file is committed
+so readers get an inventory derived from the code.
 
 Usage: python tools/gen_catalog.py            # regenerate QUERIES.md
+                                              # (.githooks/pre-commit runs this)
        python tools/gen_catalog.py --check    # exit 1 if QUERIES.md is stale
-                                              # (wired into .git/hooks/pre-commit
-                                              # so a registry change can never
-                                              # ship with stale generated docs)
+                                              # (tests/test_cli.py runs this)
 """
 
 from __future__ import annotations

@@ -25,8 +25,7 @@ windows; if the baseline code is slow too, it was the host. A
 regression verdict resting on fewer than 3 windows per side, or whose
 time-adjacent pair median disagrees with the floor rule, escalates
 itself to 6 windows before it is printed (needs_escalation). Output is
-one JSON document in the BENCH_AB_r09.json shape — redirect it to
-BENCH_AB_*.json as the committed evidence.
+one JSON document on stdout.
 """
 
 from __future__ import annotations
