@@ -6,7 +6,7 @@ Mirrors the reference's cmd/jetstream flags (main.go:31-89: --ws-url /
 of the reference can run the same lifecycle:
 
     python -m jetstream_spark serve  --data-dir ./data --listen-addr :6008
-    python -m jetstream_spark ingest --data-dir ./data --source-url host:port
+    python -m jetstream_spark ingest --data-dir ./data --ws-url wss://host:port
     python -m jetstream_spark replay --data-dir ./data --cursor 0
     python -m jetstream_spark trim   --data-dir ./data --event-ttl-hours 24
     python -m jetstream_spark compact --data-dir ./data
@@ -14,8 +14,8 @@ of the reference can run the same lifecycle:
 
 `serve` runs the /subscribe + /metrics edge fed by the shared LiveTailHub;
 `ingest` runs the standing exactly-once pipeline from either a frames drop
-directory or the live socket transport; `replay` prints wire frames from a
-cursor (the debugging read path).
+directory or the relay's subscribeRepos websocket; `replay` prints wire
+frames from a cursor (the debugging read path).
 """
 
 from __future__ import annotations
@@ -71,14 +71,13 @@ def cmd_ingest(args) -> int:
 
     spark = _spark(args.cpus)
     ckpt = os.path.join(args.data_dir, "_ingest_ckpt")
-    if args.ws_url or args.source_url:
+    if args.ws_url:
         from jetstream_spark.streaming.firehose import FirehoseDataSource
 
         spark.dataSource.register(FirehoseDataSource)
-        transport = ("ws_url", args.ws_url) if args.ws_url else ("socket_url", args.source_url)
         frames = (
             spark.readStream.format("atproto_firehose")
-            .option(*transport)
+            .option("ws_url", args.ws_url)
             .option("numPartitions", str(args.worker_count))
             .load()
         )
@@ -511,8 +510,7 @@ def main(argv: list[str] | None = None) -> int:
     p = sub.add_parser("ingest", help="run the standing exactly-once ingest pipeline")
     p.add_argument("--data-dir", **common["--data-dir"])
     p.add_argument("--ws-url", default="", help="websocket relay host:port — the real protocol (main.go --ws-url)")
-    p.add_argument("--source-url", default="", help="ndjson socket transport host:port (bridge wire)")
-    p.add_argument("--frames-dir", default="./frames", help="JSONL frames drop directory (bridge transport)")
+    p.add_argument("--frames-dir", default="./frames", help="JSONL frames drop directory, read when --ws-url is empty")
     p.add_argument(
         "--worker-count", type=int, default=8,
         help=(

@@ -19,9 +19,11 @@ does, implemented from the public specs:
 Simplification vs the reference: records are resolved by the op's record
 CID against the block index rather than walking the repo MST by path —
 the op carries the CID of the record it references, so the lookup lands
-on the same block (the MST walk matters only for path queries without a
-CID, which the firehose ops always have). JSON mapping follows the
-atproto data model: bytes → {"$bytes": base64}, links → {"$link": cid}.
+on the same block. Only when that CID names no block in the CAR does the
+decoder walk the MST by path, and then the record carries the CID of the
+block it found, so the S7 check still compares real bytes against the
+op's claim. JSON mapping follows the atproto data model: bytes →
+{"$bytes": base64}, links → {"$link": cid}.
 
 The decoder runs inside DataSource partitions / mapInPandas — the Python
 boundary the transport already owns — so it adds no new serialization
@@ -480,12 +482,18 @@ def decode_xrpc_frame(data: bytes) -> dict | None:
         for op in body.get("ops") or []:
             cid = str(op["cid"]) if op.get("cid") is not None else None
             record_json = None
+            record_cid = cid
             record_bytes = index.get(cid) if cid is not None else None
             if record_bytes is None and op.get("action") in ("create", "update") and roots:
                 # path-only resolution: walk the repo MST from the commit
                 # root, the reference's GetRecordBytes(op.Path) behavior
-                # (consumer.go:222) for ops without a usable CID.
+                # (consumer.go:222) for ops without a usable CID. The block
+                # found need not be the one the op names, so its own CID
+                # goes to the S7 check, which drops the op unless the two
+                # agree (consumer.go:229-231).
                 record_bytes = mst_get_record_bytes(index, str(roots[0]), op.get("path") or "")
+                if record_bytes is not None:
+                    record_cid = cid_str(cid_for_block(record_bytes))
             if record_bytes is not None:
                 record_json = json.dumps(to_json_value(cbor_decode(record_bytes)), separators=(",", ":"))
             ops.append(
@@ -494,7 +502,7 @@ def decode_xrpc_frame(data: bytes) -> dict | None:
                     "path": op.get("path"),
                     "cid": cid,
                     "record_json": record_json,
-                    "record_cid": cid,
+                    "record_cid": record_cid,
                 }
             )
         return {
@@ -541,30 +549,3 @@ def decode_xrpc_frame(data: bytes) -> dict | None:
             },
         }
     return None  # unknown/info frame — skipped, like the reference's default case
-
-
-# --- frame decode (the S5/S8 slot in the firehose read path) --------------------
-
-
-def decode_frame(frame: dict) -> dict:
-    """Resolve a commit frame's ops against its CAR `blocks_b64`: for each
-    op carrying a record CID, decode the block to JSON (S8 transcode) and
-    splice it as `record_json` — the exact HandleRepoCommit record path
-    (consumer.go:223-243). Frames without blocks pass through unchanged
-    (the pre-decoded JSONL transport)."""
-    blocks_b64 = frame.get("blocks_b64")
-    if not blocks_b64 or frame.get("kind") != "commit":
-        return frame
-    _, index = decode_car(base64.b64decode(blocks_b64))
-    frame = dict(frame)
-    ops = []
-    for op in frame.get("ops") or []:
-        op = dict(op)
-        rcid = op.get("record_cid")
-        if op.get("record_json") is None and rcid in index:
-            record = cbor_decode(index[rcid])
-            op["record_json"] = json.dumps(to_json_value(record), separators=(",", ":"))
-        ops.append(op)
-    frame["ops"] = ops
-    frame.pop("blocks_b64", None)
-    return frame

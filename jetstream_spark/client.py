@@ -16,19 +16,19 @@ concurrent) as the reference's dynamic active-map without its bookkeeping;
 the trade-off is that a single hot repo can head-of-line block its worker's
 other repos, which the reference shares via its per-repo pending queues.
 
-Transport: websocket text frames (use_websocket=True — the reference
-client's actual protocol, RFC 6455 over the stdlib) or the edge's HTTP
-chunked ndjson; identical frame JSON either way."""
+Transport: the reference client's protocol, one JSON websocket text frame
+per event, read through the engine's one RFC 6455 client (wsutil.py).
+"""
 
 from __future__ import annotations
 
-import http.client
 import json
 import queue
 import threading
 from collections.abc import Callable
+from itertools import islice
 
-from jetstream_spark.wsutil import send_masked_frame
+from jetstream_spark import wsutil
 
 
 class SequentialScheduler:
@@ -95,7 +95,6 @@ class JetstreamClient:
         scheduler,
         wanted_collections: list[str] | None = None,
         wanted_dids: list[str] | None = None,
-        use_websocket: bool = False,
         use_tls: bool = False,
         tls_ca: str | None = None,
     ):
@@ -104,7 +103,6 @@ class JetstreamClient:
         self.scheduler = scheduler
         self.wanted_collections = wanted_collections or []
         self.wanted_dids = wanted_dids or []
-        self.use_websocket = use_websocket  # the reference's wire protocol
         self.use_tls = use_tls  # wss:// upstreams; system trust unless tls_ca given
         self.tls_ca = tls_ca
         self.cursor: int | None = None  # last delivered time_us
@@ -129,92 +127,15 @@ class JetstreamClient:
         (the client-side S12 analogue)."""
         if cursor is not None:
             self.cursor = cursor if cursor == 0 else cursor - 1
-        if self.use_websocket:
-            return self._read_websocket(cursor, max_events, timeout)
-        conn = http.client.HTTPConnection(self.host, self.port, timeout=timeout)
-        conn.request("GET", self._path(cursor))
-        resp = conn.getresponse()
-        if resp.status != 200:
-            body = resp.read().decode()
-            conn.close()
-            raise ConnectionError(f"subscribe rejected ({resp.status}): {body.strip()}")
+        scheme = "wss" if self.use_tls else "ws"
+        sock, f = wsutil.dial(f"{scheme}://{self.host}:{self.port}", self._path(cursor), self.tls_ca, timeout)
         n = 0
         try:
-            while max_events is None or n < max_events:
-                line = resp.readline()
-                if not line:
-                    break
-                frame = json.loads(line)
-                self.scheduler.add_work(frame["did"], frame)
-                self.cursor = frame["time_us"]
-                n += 1
-        finally:
-            conn.close()
-        return n
-
-    def _read_websocket(self, cursor: int | None, max_events: int | None, timeout: float) -> int:
-        """RFC 6455 client: handshake, then one JSON text frame per event —
-        the reference client's actual transport (client.go websocket dial)."""
-        import base64
-        import os
-        import socket
-
-        key = base64.b64encode(os.urandom(16)).decode()
-        sock = socket.create_connection((self.host, self.port), timeout=timeout)
-        if self.use_tls:
-            import ssl
-
-            ctx = ssl.create_default_context(cafile=self.tls_ca)
-            sock = ctx.wrap_socket(sock, server_hostname=self.host)
-        try:
-            sock.sendall(
-                (
-                    f"GET {self._path(cursor)} HTTP/1.1\r\nHost: {self.host}\r\n"
-                    f"Upgrade: websocket\r\nConnection: Upgrade\r\n"
-                    f"Sec-WebSocket-Key: {key}\r\nSec-WebSocket-Version: 13\r\n\r\n"
-                ).encode()
-            )
-            f = sock.makefile("rb")
-            status = f.readline().decode()
-            if "101" not in status:
-                raise ConnectionError(f"websocket upgrade rejected: {status.strip()}")
-            while f.readline().strip():
-                pass  # drain handshake headers
-
-            def read_exact(k: int) -> bytes:
-                buf = f.read(k)
-                if buf is None or len(buf) < k:
-                    raise EOFError
-                return buf
-
-            n = 0
-            while max_events is None or n < max_events:
-                try:
-                    h = read_exact(2)
-                except EOFError:
-                    break
-                opcode = h[0] & 0x0F
-                ln = h[1] & 0x7F
-                if ln == 126:
-                    ln = int.from_bytes(read_exact(2), "big")
-                elif ln == 127:
-                    ln = int.from_bytes(read_exact(8), "big")
-                payload = read_exact(ln) if ln else b""
-                if opcode == 0x9:  # server ping → masked pong (RFC 6455 §5.5.3)
-                    send_masked_frame(sock, 0xA, payload)
-                    continue
-                if opcode == 0x8:  # server close → masked close echo
-                    try:
-                        send_masked_frame(sock, 0x8)
-                    except OSError:
-                        pass
-                    break
-                if opcode != 0x1:  # ignore pongs/continuations from the server
-                    continue
+            for payload in islice(wsutil.read_messages(sock, f, wsutil.TEXT), max_events):
                 frame = json.loads(payload)
                 self.scheduler.add_work(frame["did"], frame)
                 self.cursor = frame["time_us"]
                 n += 1
-            return n
         finally:
             sock.close()
+        return n

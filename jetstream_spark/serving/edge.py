@@ -1,12 +1,12 @@
-"""H4 — the serving edge: `/subscribe` as websocket text frames (the
-reference's wire protocol) or HTTP chunked ndjson.
+"""H4 — the serving edge: `/subscribe` as websocket text frames, the
+reference's wire protocol and the only one served here.
 
 The reference serves websocket text frames (cmd/jetstream/server.go:240-356,
-upgrade at server.go:244). The edge implements RFC 6455 directly on the
-stdlib (SHA1 handshake, unmasked server frames, ping→pong, close) — a GET
-with `Upgrade: websocket` gets the reference's exact framing, one JSON text
-frame per event; a plain GET gets HTTP/1.1 chunked ndjson. Same query
-semantics and per-subscriber policies either way:
+upgrade at server.go:244). The edge implements the server side of RFC 6455
+directly on the stdlib (SHA1 handshake, unmasked server frames, ping→pong,
+close): one JSON text frame per event. A `/subscribe` GET without
+`Upgrade: websocket` gets 400, the answer gorilla's Upgrader gives; the
+engine's client side is wsutil.py. Per-subscriber policies:
 
   S19  bounded buffer + drop-slow-consumer: per-sub asyncio.Queue(10_000);
        live enqueue is non-blocking — full queue closes the connection
@@ -210,7 +210,7 @@ class SubscribeServer:
                 if info.dropped:
                     return
                 for row in rows:
-                    frame = row["value"].encode() + b"\n"
+                    frame = row["value"].encode()
                     try:
                         queue.put_nowait(frame)
                         self._note_enqueued(frame)  # emitted noted by on_slice
@@ -275,13 +275,12 @@ class SubscribeServer:
             except SubscriptionError as e:
                 await self._respond(writer, 400, str(e))
                 return
-            # the reference's actual wire protocol is websocket text frames
-            # (server.go:244 upgrade); plain GETs keep the chunked-ndjson form
-            ws_key = (
-                headers.get("sec-websocket-key")
-                if "websocket" in headers.get("upgrade", "").lower()
-                else None
-            )
+            # the reference's wire protocol is websocket text frames
+            # (server.go:244 upgrade), and its Upgrader refuses a plain GET
+            ws_key = headers.get("sec-websocket-key")
+            if "websocket" not in headers.get("upgrade", "").lower() or not ws_key:
+                await self._respond(writer, 400, "/subscribe speaks websocket only: send Upgrade: websocket")
+                return
             peer = writer.get_extra_info("peername")
             ip = peer[0] if peer else ""
             await self._stream(reader, writer, sub, ws_key=ws_key, ip=ip)
@@ -346,7 +345,7 @@ class SubscribeServer:
                 if row["time_us"] > self._emitted_head_us:
                     self._emitted_head_us = row["time_us"]
                     self.events_emitted_total += 1
-                    self.bytes_emitted_total += len(row["value"].encode()) + 1
+                    self.bytes_emitted_total += len(row["value"].encode())
 
     def _metrics_text(self) -> str:
         """Prometheus text exposition — the scrape surface the reference
@@ -443,7 +442,7 @@ class SubscribeServer:
         reader: asyncio.StreamReader,
         writer: asyncio.StreamWriter,
         sub: Subscription,
-        ws_key: str | None = None,
+        ws_key: str,
         ip: str = "",
     ) -> None:
         if sub.cursor is None:
@@ -461,18 +460,12 @@ class SubscribeServer:
         # rate and everything after at the live rate (server.go:307)
         replayed = 0
         queue: asyncio.Queue[bytes] = asyncio.Queue(maxsize=self.sub_buffer)
-        if ws_key is not None:
-            writer.write(
-                (
-                    "HTTP/1.1 101 Switching Protocols\r\nUpgrade: websocket\r\n"
-                    f"Connection: Upgrade\r\nSec-WebSocket-Accept: {self._ws_accept(ws_key)}\r\n\r\n"
-                ).encode()
-            )
-        else:
-            writer.write(
-                b"HTTP/1.1 200 OK\r\nContent-Type: application/x-ndjson\r\n"
-                b"Transfer-Encoding: chunked\r\nConnection: close\r\n\r\n"
-            )
+        writer.write(
+            (
+                "HTTP/1.1 101 Switching Protocols\r\nUpgrade: websocket\r\n"
+                f"Connection: Upgrade\r\nSec-WebSocket-Accept: {self._ws_accept(ws_key)}\r\n\r\n"
+            ).encode()
+        )
         await writer.drain()
 
         async def producer() -> None:
@@ -487,7 +480,7 @@ class SubscribeServer:
                     if not batch:
                         break
                     for row in batch:
-                        frame = row["value"].encode() + b"\n"
+                        frame = row["value"].encode()
                         replayed += 1
                         await queue.put(frame)  # replay: blocking = backpressure
                         self._note_enqueued(frame)
@@ -501,20 +494,17 @@ class SubscribeServer:
 
         async def read_pump() -> None:
             """server.go:291-300: client close/EOF cancels the subscription
-            even when nothing is being delivered (idle live tail). In
-            websocket mode, control frames are honored: ping → pong,
-            close → cancel; other frames are drained and ignored."""
+            even when nothing is being delivered (idle live tail). Control
+            frames are honored: ping → pong, close → cancel; other frames
+            are drained and ignored."""
             try:
-                if ws_key is None:
-                    await reader.read(1)
-                else:
-                    while True:
-                        opcode, data = await self._ws_read_frame(reader)
-                        if opcode == 0x8:  # close
-                            break
-                        if opcode == 0x9:  # ping → pong
-                            writer.write(self._ws_frame(data, opcode=0xA))
-                            await writer.drain()
+                while True:
+                    opcode, data = await self._ws_read_frame(reader)
+                    if opcode == 0x8:  # close
+                        break
+                    if opcode == 0x9:  # ping → pong
+                        writer.write(self._ws_frame(data, opcode=0xA))
+                        await writer.drain()
             except (ConnectionResetError, BrokenPipeError, asyncio.IncompleteReadError):
                 pass
             info.dropped = True
@@ -532,11 +522,8 @@ class SubscribeServer:
                 else:
                     limiter.rate = self.max_sub_rate
                 await limiter.wait()
-                if ws_key is not None:
-                    # the reference's framing: one JSON text frame per event
-                    writer.write(self._ws_frame(frame.rstrip(b"\n")))
-                else:
-                    writer.write(f"{len(frame):x}\r\n".encode() + frame + b"\r\n")
+                # the reference's framing: one JSON text frame per event
+                writer.write(self._ws_frame(frame))
                 await writer.drain()
                 self.registry.note_delivered(info, len(frame))
                 self.events_delivered_total += 1
@@ -549,7 +536,7 @@ class SubscribeServer:
             pump.cancel()
             self.registry.remove(info.sub_id)
             try:
-                writer.write(self._ws_frame(b"", opcode=0x8) if ws_key is not None else b"0\r\n\r\n")
+                writer.write(self._ws_frame(b"", opcode=0x8))
                 await writer.drain()
             except (ConnectionResetError, BrokenPipeError):
                 pass

@@ -2,10 +2,19 @@
 
 The reference dials `com.atproto.sync.subscribeRepos` over a websocket and
 fans frames to a worker pool (cmd/jetstream/main.go:294-328, worker pool
-main.go:150). Here that becomes a `DataSource`/`DataSourceStreamReader`:
+main.go:150). Here that becomes a `DataSource`/`DataSourceStreamReader`
+on the same wire, and only that wire:
 
+  * `ws_url` ("host:port", "ws://host:port", or "wss://host:port" for
+    TLS, the real relay's form; `tls_ca` names a CA bundle for private
+    relays): an RFC 6455 dial (wsutil.py) to
+    `/xrpc/com.atproto.sync.subscribeRepos?cursor=N`, BINARY frames of
+    DAG-CBOR header+body events with CAR blocks. A stream without it
+    raises ValueError.
   * offsets = the upstream relay `seq` (the reference's cursor unit for
-    the *upstream* connection — persist.go:19-23): `{"seq": N}`
+    the *upstream* connection — persist.go:19-23): `{"seq": N}`. The
+    relay serves nothing but the subscribe socket, so the driver learns
+    the head from one persistent tail subscription (_WsTail).
   * partitions = contiguous seq sub-ranges per microbatch, sized by the
     batch's seq span: at least MIN_SEQS_PER_PARTITION seqs each, at most
     `numPartitions` of them (the cap plays the role of --worker-count; a
@@ -16,43 +25,24 @@ main.go:150). Here that becomes a `DataSource`/`DataSourceStreamReader`:
     first batch after a start, which `batch_size` does not limit and
     which can cover a relay backlog. Per-partition reads are independent,
     matching the pool's per-repo independence guarantee, S2/P5
-  * each partition's `read()` yields RAW_FRAME_SCHEMA rows, running
-    CAR/CBOR decode (S5/S8) inline via the pure-Python DAG-CBOR/CAR
-    reader (atproto/carcbor.py — no libipld needed): frames carrying
-    `blocks_b64` have their ops' records resolved from the CAR block
-    index and transcoded to JSON; pre-decoded JSONL frames pass through.
-    The transport is pluggable. Three transports exist:
-
-    - `ws_url` ("host:port", "ws://host:port", or "wss://host:port" for
-      TLS — the real relay's form; `tls_ca` option for private CAs): the
-      REAL upstream protocol — RFC 6455 websocket dial (stdlib
-      implementation) to `/xrpc/com.atproto.sync.subscribeRepos?cursor=N`,
-      BINARY frames of DAG-CBOR header+body events with CAR blocks,
-      decoded per partition by carcbor.decode_xrpc_frame
-      (tests/test_firehose_ws.py and test_firehose_wss.py drive it against
-      local plaintext and TLS relays end-to-end);
-    - `socket_url` ("host:port"): the same dial/cursor semantics over
-      HTTP-flavored ndjson lines (a simpler bridge wire;
-      tests/test_firehose_socket.py, incl. checkpoint resume);
-    - `replay_dir`: JSONL files (one per seq range, as a websocket→file
-      bridge would produce), optionally carrying CAR via `blocks_b64`.
+  * each partition's `read()` dials by cursor and yields RAW_FRAME_SCHEMA
+    rows, running CAR/CBOR decode (S5/S8) inline via the pure-Python
+    DAG-CBOR/CAR reader (atproto/carcbor.py::decode_xrpc_frame — no
+    libipld needed).
 
 Register + use:
 
     spark.dataSource.register(FirehoseDataSource)
     spark.readStream.format("atproto_firehose")
-         .option("replay_dir", path).option("batch_size", 500).load()
-    # or .option("socket_url", "127.0.0.1:9944") for the live dial
+         .option("ws_url", "wss://bsky.network:443").option("batch_size", 500).load()
 
 The stream composes with normalize_frames → sequencer → log exactly like
-the file-backed pipeline (tested in tests/test_firehose_source.py).
+the file-backed pipeline (tests/test_firehose_source.py,
+test_firehose_ws.py and test_firehose_wss.py drive it against local
+plaintext and TLS relays).
 """
 
 from __future__ import annotations
-
-import json
-import os
-import socket
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -60,15 +50,11 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from jetstream_spark.atproto.carcbor import (
-    CborError,
-    decode_frame,
-    decode_xrpc_frame,
-    decode_xrpc_frame_seq,
-)
-from jetstream_spark.wsutil import send_masked_frame
+from jetstream_spark import wsutil
+from jetstream_spark.atproto.carcbor import CborError, decode_xrpc_frame, decode_xrpc_frame_seq
 from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
 
+SUBSCRIBE_REPOS = "/xrpc/com.atproto.sync.subscribeRepos"
 
 # Source partitions are sized by the batch's seq span: `numPartitions` is
 # a cap, and a partition covers at least this many seqs, because each
@@ -80,139 +66,15 @@ from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
 MIN_SEQS_PER_PARTITION = 5000
 
 
-def _parse_dial_url(url: str) -> tuple[bool, str, int]:
-    """`[ws://|wss://]host:port` → (tls, host, port). A `wss://` scheme
-    turns on TLS — the real relay (wss://bsky.network) is TLS-only."""
-    tls = False
-    if url.startswith("wss://"):
-        tls, url = True, url[len("wss://"):]
-    elif url.startswith("ws://"):
-        url = url[len("ws://"):]
-    host, port = url.rsplit(":", 1)
-    return tls, host, int(port)
-
-
-def _dial(url: str, tls_ca: str = "") -> tuple[socket.socket, str]:
-    """Connect (optionally TLS-wrapped) → (socket, host). `tls_ca` points
-    at a CA bundle for private relays/tests; default = system trust +
-    hostname verification (ssl.create_default_context)."""
-    tls, host, port = _parse_dial_url(url)
-    conn = socket.create_connection((host, port), timeout=60)
-    if tls:
-        import ssl
-
-        ctx = ssl.create_default_context(cafile=tls_ca or None)
-        conn = ctx.wrap_socket(conn, server_hostname=host)
-    return conn, host
-
-
-def _socket_request(socket_url: str, path: str, tls_ca: str = ""):
-    """Dial `host:port`, send a GET, return a text file object positioned
-    after the response headers (the body)."""
-    conn, host = _dial(socket_url, tls_ca)
-    conn.sendall(f"GET {path} HTTP/1.1\r\nHost: {host}\r\n\r\n".encode())
-    f = conn.makefile("r", encoding="utf-8")
-    f.readline()  # status line
-    while f.readline().strip():  # drain headers
-        pass
-    return conn, f
-
-
-def _socket_head(socket_url: str, tls_ca: str = "") -> int:
-    """Relay head seq — the upstream equivalent of 'how far can this
-    microbatch go'."""
-    conn, f = _socket_request(socket_url, "/head", tls_ca)
-    try:
-        return int(f.readline().strip() or 0)
-    finally:
-        conn.close()
-
-
-def _socket_fetch(socket_url: str, start: int, end: int):
-    """The reference's dial semantics (main.go:294-328): connect with
-    `?cursor=start`, receive frames with seq > start in seq order, detach
-    after passing `end`. Each partition dials independently — the S2
-    worker-pool shape."""
-    conn, f = _socket_request(socket_url, f"/subscribe?cursor={start}")
-    try:
-        for line in f:
-            if not line.strip():
-                continue
-            frame = json.loads(line)
-            seq = frame["seq"]
-            if seq > end:
-                break
-            if seq > start:
-                yield frame
-            if seq >= end:
-                break
-    finally:
-        conn.close()
-
-
-def _ws_dial(ws_url: str, path: str, tls_ca: str = ""):
-    """RFC 6455 client handshake → (socket, buffered reader past headers).
-    A `wss://` scheme in ws_url dials through TLS (the real relay's form)."""
-    import base64 as _b64
-    import os as _os
-
-    key = _b64.b64encode(_os.urandom(16)).decode()
-    conn, host = _dial(ws_url, tls_ca)
-    conn.sendall(
-        (
-            f"GET {path} HTTP/1.1\r\nHost: {host}\r\nUpgrade: websocket\r\n"
-            f"Connection: Upgrade\r\nSec-WebSocket-Key: {key}\r\nSec-WebSocket-Version: 13\r\n\r\n"
-        ).encode()
-    )
-    f = conn.makefile("rb")
-    status = f.readline().decode()
-    if "101" not in status:
-        conn.close()
-        raise ConnectionError(f"websocket upgrade rejected: {status.strip()}")
-    while f.readline().strip():
-        pass
-    return conn, f
-
-
-def _ws_binary_payloads(conn, f):
-    """Yield the BINARY payloads of one websocket connection, answering
-    pings with masked pongs (RFC 6455 §5.5.3) and stopping on close/EOF."""
-    def read_exact(k: int) -> bytes:
-        buf = f.read(k)
-        if buf is None or len(buf) < k:
-            raise EOFError
-        return buf
-
-    while True:
-        try:
-            h = read_exact(2)
-        except EOFError:
-            return
-        opcode = h[0] & 0x0F
-        ln = h[1] & 0x7F
-        if ln == 126:
-            ln = int.from_bytes(read_exact(2), "big")
-        elif ln == 127:
-            ln = int.from_bytes(read_exact(8), "big")
-        payload = read_exact(ln) if ln else b""
-        if opcode == 0x9:  # relay ping → masked pong (RFC 6455 §5.5.3)
-            send_masked_frame(conn, 0xA, payload)
-            continue
-        if opcode == 0x8:  # server close
-            return
-        if opcode != 0x2:  # subscribeRepos frames are binary
-            continue
-        yield payload
-
-
 def _ws_fetch(ws_url: str, start: int, end: int, tls_ca: str = ""):
-    """The REAL upstream protocol (cmd/jetstream/main.go:294-328):
+    """The reference's dial semantics (cmd/jetstream/main.go:294-328):
     websocket dial with `?cursor=start`, each BINARY frame a DAG-CBOR
-    header+body event (`com.atproto.sync.subscribeRepos`), decoded by
-    carcbor.decode_xrpc_frame — CAR blocks and all. Detach past `end`."""
-    conn, f = _ws_dial(ws_url, f"/xrpc/com.atproto.sync.subscribeRepos?cursor={start}", tls_ca)
+    header+body event, decoded by carcbor.decode_xrpc_frame — CAR blocks
+    and all. Detach past `end`. Each partition dials independently — the
+    S2 worker-pool shape."""
+    conn, f = wsutil.dial(ws_url, f"{SUBSCRIBE_REPOS}?cursor={start}", tls_ca)
     try:
-        for payload in _ws_binary_payloads(conn, f):
+        for payload in wsutil.read_messages(conn, f, wsutil.BINARY):
             try:
                 frame = decode_xrpc_frame(payload)
             except CborError:
@@ -235,7 +97,7 @@ def _ws_fetch(ws_url: str, start: int, end: int, tls_ca: str = ""):
 
 
 class _WsTail:
-    """Planning-side head tracker for the ws transport. The real
+    """Planning-side head tracker. The real
     `com.atproto.sync.subscribeRepos` relay serves NOTHING but the
     subscribe socket (cmd/jetstream/main.go:294-328), so microbatch
     planning can't ask an out-of-band route how far it may read. Instead
@@ -263,12 +125,8 @@ class _WsTail:
         while not self._stop.is_set():
             conn = None
             try:
-                conn, f = _ws_dial(
-                    self.ws_url,
-                    f"/xrpc/com.atproto.sync.subscribeRepos?cursor={self.seq}",
-                    self.tls_ca,
-                )
-                for payload in _ws_binary_payloads(conn, f):
+                conn, f = wsutil.dial(self.ws_url, f"{SUBSCRIBE_REPOS}?cursor={self.seq}", self.tls_ca)
+                for payload in wsutil.read_messages(conn, f, wsutil.BINARY):
                     try:
                         seq = decode_xrpc_frame_seq(payload)
                     except CborError:
@@ -311,19 +169,9 @@ class _WsTail:
 
 
 class SeqRange(InputPartition):
-    def __init__(
-        self,
-        start: int,
-        end: int,
-        replay_dir: str,
-        socket_url: str = "",
-        ws_url: str = "",
-        tls_ca: str = "",
-    ):
+    def __init__(self, start: int, end: int, ws_url: str, tls_ca: str = ""):
         self.start = start
         self.end = end
-        self.replay_dir = replay_dir
-        self.socket_url = socket_url
         self.ws_url = ws_url
         self.tls_ca = tls_ca
 
@@ -334,9 +182,16 @@ class FirehoseStreamReader(DataSourceStreamReader):
     `override-relay-cursor`/cursor-resume logic (main.go:280-297)."""
 
     def __init__(self, options: dict):
-        self.replay_dir = options.get("replay_dir", "")
-        self.socket_url = options.get("socket_url", "")
         self.ws_url = options.get("ws_url", "")
+        # checked here: a missing or malformed URL would otherwise fail
+        # only inside the planning tail's thread, and the query would
+        # silently read nothing
+        try:
+            wsutil.parse_url(self.ws_url)
+        except ValueError:
+            raise ValueError(
+                f"atproto_firehose needs a ws_url option of the form [ws://|wss://]host:port, got {self.ws_url!r}"
+            ) from None
         self.batch_size = int(options.get("batch_size", "1000"))
         self.num_partitions = int(options.get("numPartitions", "4"))
         self.tls_ca = options.get("tls_ca", "")
@@ -344,33 +199,19 @@ class FirehoseStreamReader(DataSourceStreamReader):
         self._tail: _WsTail | None = None
 
     def _head_seq(self) -> int:
-        """Highest seq available from the transport (relay head).
-
-        ws_url: derived from a persistent tail subscription (_WsTail) — the
-        ONLY thing a real `com.atproto.sync.subscribeRepos` relay offers is
-        the subscribe socket itself (cmd/jetstream/main.go:294-328), so
-        planning needs no out-of-band route. socket_url (the ndjson bridge
-        wire, our own protocol) keeps its plain HTTP GET `/head` probe."""
-        if self.ws_url:
-            if self._tail is None:
-                self._tail = _WsTail(self.ws_url, 0, self.tls_ca)
-                # cold start: give the tail one chance to observe the
-                # backlog before the first plan, else an empty relay (or a
-                # slow dial) would make batch 0 a no-op and
-                # processAllAvailable could return before any data flows
-                return self._tail.head(wait_first=5.0)
-            return self._tail.head()
-        if self.socket_url:
-            return _socket_head(self.socket_url, self.tls_ca)
-        head = 0
-        if os.path.isdir(self.replay_dir):
-            for name in os.listdir(self.replay_dir):
-                if name.endswith(".jsonl"):
-                    try:
-                        head = max(head, int(name.split(".")[0].split("_")[-1]))
-                    except ValueError:
-                        continue
-        return head
+        """Highest seq the relay has shown, from a persistent tail
+        subscription (_WsTail): the ONLY thing a real
+        `com.atproto.sync.subscribeRepos` relay offers is the subscribe
+        socket itself (cmd/jetstream/main.go:294-328), so planning needs
+        no out-of-band route."""
+        if self._tail is None:
+            self._tail = _WsTail(self.ws_url, 0, self.tls_ca)
+            # cold start: give the tail one chance to observe the backlog
+            # before the first plan, else an empty relay (or a slow dial)
+            # would make batch 0 a no-op and processAllAvailable could
+            # return before any data flows
+            return self._tail.head(wait_first=5.0)
+        return self._tail.head()
 
     def initialOffset(self) -> dict:
         return {"seq": 0}
@@ -388,47 +229,19 @@ class FirehoseStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict):
         lo, hi = start["seq"], end["seq"]
         if hi <= lo:
-            return [SeqRange(lo, lo, self.replay_dir, self.socket_url, self.ws_url, self.tls_ca)]
+            return [SeqRange(lo, lo, self.ws_url, self.tls_ca)]
         n = max(1, min(self.num_partitions, (hi - lo) // MIN_SEQS_PER_PARTITION))
         step = -(-(hi - lo) // n)  # ceil div
         return [
-            SeqRange(s, min(s + step, hi), self.replay_dir, self.socket_url, self.ws_url, self.tls_ca)
+            SeqRange(s, min(s + step, hi), self.ws_url, self.tls_ca)
             for s in range(lo, hi, step)
         ]
 
     def read(self, partition: SeqRange):
-        """Yield frames with start < seq <= end. Decode (S5/S8) happens
-        here in a real transport; the JSONL stand-in is already decoded."""
-        if partition.ws_url:
-            for frame in _ws_fetch(partition.ws_url, partition.start, partition.end, partition.tls_ca):
-                yield tuple(
-                    _to_row_value(frame.get(field.name), field.name)
-                    for field in RAW_FRAME_SCHEMA.fields
-                )
-            return
-        if partition.socket_url:
-            for frame in _socket_fetch(partition.socket_url, partition.start, partition.end):
-                frame = decode_frame(frame)  # S5/S8: CAR blocks → record JSON
-                yield tuple(
-                    _to_row_value(frame.get(field.name), field.name)
-                    for field in RAW_FRAME_SCHEMA.fields
-                )
-            return
-        if not os.path.isdir(partition.replay_dir):
-            return
-        for name in sorted(os.listdir(partition.replay_dir)):
-            if not name.endswith(".jsonl"):
-                continue
-            with open(os.path.join(partition.replay_dir, name)) as f:
-                for line in f:
-                    frame = json.loads(line)
-                    seq = frame["seq"]
-                    if partition.start < seq <= partition.end:
-                        frame = decode_frame(frame)  # S5/S8: CAR → record JSON
-                        yield tuple(
-                            _to_row_value(frame.get(field.name), field.name)
-                            for field in RAW_FRAME_SCHEMA.fields
-                        )
+        """Yield frames with start < seq <= end, decoded (S5/S8) here in
+        the executor."""
+        for frame in _ws_fetch(partition.ws_url, partition.start, partition.end, partition.tls_ca):
+            yield tuple(_to_row_value(frame.get(field.name), field.name) for field in RAW_FRAME_SCHEMA.fields)
 
     def commit(self, end: dict) -> None:
         # offsets live in the Spark checkpoint (the S12 analogue); the

@@ -4,13 +4,13 @@ one exactly-once micro-batch handler every standing query runs on.
   source (S1/S2) → normalize (S3-S9) → foreachBatch: sequence (S10/H1)
   → hour-partitioned log append (S11); checkpointLocation = cursor (S12).
 
-`start_ingest` takes the raw-frame stream, so both sources share it: the
-file-backed drop directory (`read_frame_stream` with RAW_FRAME_SCHEMA —
-the shape a websocket→file/Kafka bridge produces) and the real firehose
-source, streaming/firehose.py's DataSourceStreamReader, whose ws_url
-transport dials the relay and decodes CAR/CBOR frames per partition
-(S5/S8, atproto/carcbor.py). The CLI's `ingest` builds one or the other
-and hands it to `start_ingest`.
+`start_ingest` takes the raw-frame stream, so both sources share it: a
+drop directory of decoded JSONL frames (`read_frame_stream` with
+RAW_FRAME_SCHEMA, Spark's built-in JSON file source) and the firehose
+source, streaming/firehose.py's DataSourceStreamReader, which dials the
+relay's subscribeRepos websocket (`ws_url`) and decodes CAR/CBOR frames
+per partition (S5/S8, atproto/carcbor.py). The CLI's `ingest` builds one
+or the other and hands it to `start_ingest`.
 
 Exactly-once: Spark checkpoints source offsets per microbatch; the
 sequencer state file carries last_time_us. foreachBatch can re-run a

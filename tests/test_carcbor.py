@@ -1,13 +1,10 @@
 """S5/S8: pure-Python DAG-CBOR + CAR v1 codec — round-trips, CID
-verification, the atproto JSON mapping, and the full firehose path with
-CAR-carrying frames (decode inside DataSource partitions)."""
+verification and the atproto JSON mapping. The wire frames that carry
+them are decoded in test_firehose_ws.py and test_mst.py."""
 
 from __future__ import annotations
 
 import base64
-import json
-
-import pytest
 
 from jetstream_spark.atproto.carcbor import (
     cbor_decode,
@@ -15,7 +12,6 @@ from jetstream_spark.atproto.carcbor import (
     cid_for_block,
     cid_str,
     decode_car,
-    decode_frame,
     encode_car,
     link,
     to_json_value,
@@ -71,88 +67,3 @@ def test_car_roundtrip_and_verification():
     bad[-1] ^= 0xFF
     _, index2 = decode_car(bytes(bad))
     assert len(index2) == 2, "corrupted block must fail CID verification"
-
-
-def test_decode_frame_resolves_records():
-    record = {"$type": "app.bsky.feed.post", "text": "hello from CAR"}
-    block = cbor_encode(record)
-    rcid = cid_str(cid_for_block(block))
-    frame = {
-        "kind": "commit",
-        "did": "did:plc:cartest",
-        "seq": 1,
-        "rev": "rev1",
-        "too_big": False,
-        "blocks_b64": base64.b64encode(encode_car([block])).decode(),
-        "ops": [
-            {"action": "create", "path": "app.bsky.feed.post/rkey1", "cid": rcid,
-             "record_json": None, "record_cid": rcid},
-            {"action": "delete", "path": "app.bsky.feed.post/rkey2", "cid": None,
-             "record_json": None, "record_cid": None},
-        ],
-    }
-    out = decode_frame(frame)
-    assert "blocks_b64" not in out
-    assert json.loads(out["ops"][0]["record_json"]) == record
-    assert out["ops"][1]["record_json"] is None, "deletes carry no record"
-    # non-commit and no-blocks frames pass through untouched
-    acct = {"kind": "account", "seq": 2}
-    assert decode_frame(acct) is acct
-
-
-@pytest.mark.timeout(300)
-def test_firehose_replay_with_car_blocks(spark, tmp_path):
-    """End-to-end S1+S5+S8: JSONL frames carrying CAR archives (no
-    pre-decoded records) stream through the DataSource, which decodes the
-    blocks per partition; normalize sees ordinary record JSON."""
-    import os
-
-    from jetstream_spark.atproto.normalize import normalize_frames
-    from jetstream_spark.streaming.firehose import FirehoseDataSource
-    from pyspark.sql import functions as F
-
-    spark.dataSource.register(FirehoseDataSource)
-    replay_dir = str(tmp_path / "replay")
-    os.makedirs(replay_dir)
-    frames = []
-    for i in range(1, 21):
-        record = {"$type": "app.bsky.feed.post", "text": f"post {i}"}
-        block = cbor_encode(record)
-        rcid = cid_str(cid_for_block(block))
-        frames.append({
-            "kind": "commit",
-            "did": f"did:plc:user{i % 3}",
-            "seq": i,
-            "rev": f"rev{i}",
-            "too_big": False,
-            "blocks_b64": base64.b64encode(encode_car([block])).decode(),
-            "ops": [{"action": "create", "path": f"app.bsky.feed.post/rk{i}",
-                     "cid": rcid, "record_json": None, "record_cid": rcid}],
-        })
-    with open(os.path.join(replay_dir, f"frames_{len(frames)}.jsonl"), "w") as f:
-        for fr in frames:
-            f.write(json.dumps(fr) + "\n")
-
-    stream = (
-        spark.readStream.format("atproto_firehose")
-        .option("replay_dir", replay_dir)
-        .load()
-    )
-    out_dir = str(tmp_path / "out")
-    q = (
-        normalize_frames(stream).writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    df = spark.read.parquet(out_dir)
-    assert df.count() == 20
-    texts = {
-        json.loads(r["record"])["text"]
-        for r in df.select(F.col("commit.record").alias("record")).collect()
-    }
-    assert texts == {f"post {i}" for i in range(1, 21)}, "decoded records must flow through"

@@ -1,5 +1,5 @@
 """Client library (S23) + sequential/parallel schedulers (S24/S25) against
-the serving edge, and the /metrics scrape endpoint."""
+the serving edge over its websocket, and the /metrics scrape endpoint."""
 
 from __future__ import annotations
 
@@ -83,37 +83,6 @@ def test_client_cursor_resume(edge, spark):
     assert len(times) == total
     assert len(set(times)) == total, "resume must not re-deliver"
     assert times == sorted(times)
-
-
-def test_websocket_transport_matches_http(edge, spark):
-    """The reference's actual wire protocol: RFC 6455 text frames. Same
-    events, same order, cursor resume — byte-identical frame JSON to the
-    chunked-ndjson transport."""
-    server, log_dir = edge
-    total = eventlog.read_log(spark, log_dir).count()
-    got_ws: list[dict] = []
-    ws = JetstreamClient(
-        "127.0.0.1", server.port, SequentialScheduler(got_ws.append), use_websocket=True
-    )
-    n = ws.connect_and_read(cursor=0, max_events=total)
-    assert n == total
-    times = [f["time_us"] for f in got_ws]
-    assert times == sorted(times) and len(set(times)) == total
-
-    got_http: list[dict] = []
-    http_client = JetstreamClient("127.0.0.1", server.port, SequentialScheduler(got_http.append))
-    http_client.connect_and_read(cursor=0, max_events=total)
-    assert got_ws == got_http, "same frames over both transports"
-
-    # cursor resume over websocket
-    got2: list[dict] = []
-    ws2 = JetstreamClient(
-        "127.0.0.1", server.port, SequentialScheduler(got2.append), use_websocket=True
-    )
-    k = total // 2
-    ws2.connect_and_read(cursor=0, max_events=k)
-    ws2.connect_and_read(cursor=ws2.cursor + 1, max_events=total - k)
-    assert [f["time_us"] for f in got2] == times, "ws resume must be gapless"
 
 
 def _scrape(server) -> tuple[str, dict[str, float]]:

@@ -4,10 +4,9 @@ writes (the reference's single-live-pipeline topology, server.go:187-238)."""
 
 from __future__ import annotations
 
-import http.client
-import json
 import threading
 import time
+from itertools import islice
 
 import pytest
 
@@ -16,7 +15,7 @@ from jetstream_spark.atproto.normalize import normalize_frames
 from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
 from jetstream_spark.serving.edge import run_server_in_thread
 from jetstream_spark.serving.hub import LiveTailHub
-from tests.fixtures import make_frames
+from tests.fixtures import make_frames, read_subscribe, subscribe_ws
 
 
 @pytest.mark.timeout(300)
@@ -31,29 +30,20 @@ def test_edge_hub_cutover_no_dup_no_gap_under_concurrent_writes(spark, tmp_path)
     hub.start()
     server, _ = run_server_in_thread(spark, log_dir, hub=hub)
     try:
-        conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=120)
-        conn.request("GET", "/subscribe?cursor=0")
-        resp = conn.getresponse()
-        assert resp.status == 200
+        with subscribe_ws(server.port, "cursor=0", timeout=120) as frames:
 
-        def writer() -> None:
-            h = head
-            for i in range(1, 4):
-                h = eventlog.ingest_batch(normalized, log_dir, wall_clock_us=h + 1, batch_id=i)
-                time.sleep(0.5)
+            def writer() -> None:
+                h = head
+                for i in range(1, 4):
+                    h = eventlog.ingest_batch(normalized, log_dir, wall_clock_us=h + 1, batch_id=i)
+                    time.sleep(0.5)
 
-        wt = threading.Thread(target=writer)
-        wt.start()
+            wt = threading.Thread(target=writer)
+            wt.start()
 
-        total = 4 * n
-        got: list[dict] = []
-        while len(got) < total:
-            line = resp.readline()
-            if not line:
-                break
-            got.append(json.loads(line))
-        wt.join()
-        conn.close()
+            total = 4 * n
+            got = list(islice(frames, total))
+            wt.join()
 
         times = [f["time_us"] for f in got]
         assert len(got) == total, f"gap across cutover: delivered {len(got)}/{total}"
@@ -85,25 +75,21 @@ def test_edge_hub_drops_slow_consumer(spark, tmp_path):
     # tiny buffer: the first live batch (hundreds of events) must overflow it
     server, _ = run_server_in_thread(spark, log_dir, hub=hub, sub_buffer=5)
     try:
-        conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=60)
-        conn.request("GET", "/subscribe")  # live tail, starts at head
-        resp = conn.getresponse()
-        assert resp.status == 200
-        deadline = time.time() + 60
-        while time.time() < deadline and not server.registry.subscribers:
-            time.sleep(0.1)
-        assert server.registry.subscribers, "subscriber never registered"
-        # do NOT read: the subscriber is slow; append a burst
-        eventlog.ingest_batch(normalized, log_dir, wall_clock_us=head + 1, batch_id=1)
-        dropped = False
-        while time.time() < deadline:
-            infos = list(server.registry.subscribers.values())
-            if not infos or any(i.dropped for i in infos):
-                dropped = True  # flagged, or already dropped AND unregistered
-                break
-            time.sleep(0.2)
-        assert dropped, "slow consumer must be dropped when its buffer overflows"
-        conn.close()
+        with subscribe_ws(server.port):  # live tail, starts at head
+            deadline = time.time() + 60
+            while time.time() < deadline and not server.registry.subscribers:
+                time.sleep(0.1)
+            assert server.registry.subscribers, "subscriber never registered"
+            # do NOT read: the subscriber is slow; append a burst
+            eventlog.ingest_batch(normalized, log_dir, wall_clock_us=head + 1, batch_id=1)
+            dropped = False
+            while time.time() < deadline:
+                infos = list(server.registry.subscribers.values())
+                if not infos or any(i.dropped for i in infos):
+                    dropped = True  # flagged, or already dropped AND unregistered
+                    break
+                time.sleep(0.2)
+            assert dropped, "slow consumer must be dropped when its buffer overflows"
     finally:
         import asyncio
 
@@ -148,17 +134,7 @@ def test_edge_hub_filters_applied_at_emit(spark, tmp_path):
         expected = eventlog.replay(
             spark, log_dir, wanted_collections=["app.bsky.feed.like"]
         ).count()
-        conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=120)
-        conn.request("GET", "/subscribe?cursor=0&wantedCollections=app.bsky.feed.like")
-        resp = conn.getresponse()
-        assert resp.status == 200
-        got: list[dict] = []
-        while len(got) < expected:
-            line = resp.readline()
-            if not line:
-                break
-            got.append(json.loads(line))
-        conn.close()
+        got = read_subscribe(server.port, "cursor=0&wantedCollections=app.bsky.feed.like", expected, timeout=120)
         assert len(got) == expected
         kinds = {f["type"] for f in got}
         assert {"acc", "id"} <= kinds, "account/identity must bypass collection filters"
@@ -250,24 +226,15 @@ def test_cursor_past_last_match_never_backfills_history(spark, tmp_path):
     hub.start()
     server, _ = run_server_in_thread(spark, log_dir, hub=hub)
     try:
-        conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=120)
-        conn.request("GET", f"/subscribe?cursor={head}&wantedDids={did}")
-        resp = conn.getresponse()
-        assert resp.status == 200
-        deadline = time.time() + 60
-        while time.time() < deadline and not hub._subs:
-            time.sleep(0.1)
-        assert hub._subs, "subscriber never reached the hub"
-        head2 = eventlog.ingest_batch(normalized, log_dir, wall_clock_us=head + 1, batch_id=1)
-        expected = eventlog.replay(spark, log_dir, cursor=head, wanted_dids=[did]).count()
-        assert expected > 0
-        got: list[dict] = []
-        while len(got) < expected:
-            line = resp.readline()
-            if not line:
-                break
-            got.append(json.loads(line))
-        conn.close()
+        with subscribe_ws(server.port, f"cursor={head}&wantedDids={did}", timeout=120) as frames:
+            deadline = time.time() + 60
+            while time.time() < deadline and not hub._subs:
+                time.sleep(0.1)
+            assert hub._subs, "subscriber never reached the hub"
+            head2 = eventlog.ingest_batch(normalized, log_dir, wall_clock_us=head + 1, batch_id=1)
+            expected = eventlog.replay(spark, log_dir, cursor=head, wanted_dids=[did]).count()
+            assert expected > 0
+            got = list(islice(frames, expected))
     finally:
         import asyncio
 

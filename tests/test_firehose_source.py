@@ -1,27 +1,24 @@
-"""The custom firehose data source (S1): offset progression, resume, and
-composition with the normalize→sequence→log pipeline."""
+"""The custom firehose data source (S1): the golden frame set over the
+relay's websocket, composed with the normalize→sequence→log pipeline,
+and partition sizing and coverage."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
 
 from jetstream_spark.atproto import log as eventlog
-from jetstream_spark.streaming.firehose import FirehoseDataSource
+from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
+from jetstream_spark.streaming.firehose import FirehoseDataSource, FirehoseStreamReader
 from jetstream_spark.streaming.pipeline import start_ingest
-from tests.fixtures import make_frames
-
-
-def _write_replay_files(replay_dir: str, frames: list[dict], per_file: int = 25) -> None:
-    os.makedirs(replay_dir, exist_ok=True)
-    for i in range(0, len(frames), per_file):
-        chunk = frames[i : i + per_file]
-        hi = max(f["seq"] for f in chunk)
-        with open(os.path.join(replay_dir, f"frames_{hi}.jsonl"), "w") as f:
-            for fr in chunk:
-                f.write(json.dumps(fr) + "\n")
+from tests.fixtures import (
+    WsRelay,
+    commit_frame_bytes,
+    identity_frame_bytes,
+    make_frames,
+    wire_frame,
+)
 
 
 @pytest.fixture(scope="module")
@@ -30,31 +27,48 @@ def registered(spark):
     return spark
 
 
-def _firehose_stream(spark, replay_dir: str):
+def _golden_relay(frames: list[dict]) -> WsRelay:
+    relay = WsRelay()
+    for frame in frames:
+        relay.append(frame["seq"], wire_frame(frame))
+    return relay
+
+
+def _firehose_stream(spark, relay: WsRelay):
     return (
         spark.readStream.format("atproto_firehose")
-        .option("replay_dir", replay_dir)
+        .option("ws_url", f"127.0.0.1:{relay.port}")
         .option("numPartitions", "4")
         .load()
     )
 
 
+def test_stream_without_ws_url_raises():
+    """The relay's websocket is the source's only wire: a stream without
+    (or with a malformed) ws_url fails when the reader is built, naming
+    the option, instead of reading nothing forever."""
+    for options in ({}, {"ws_url": ""}, {"ws_url": "no-port"}, {"replay_dir": "/tmp/frames"}):
+        with pytest.raises(ValueError, match="ws_url"):
+            FirehoseDataSource(options).streamReader(RAW_FRAME_SCHEMA)
+
+
 @pytest.mark.timeout(300)
 def test_firehose_source_end_to_end(registered, tmp_path):
     spark = registered
-    replay_dir = str(tmp_path / "replay")
     log_dir = str(tmp_path / "log")
     ckpt = str(tmp_path / "ckpt")
     frames = make_frames()
-    _write_replay_files(replay_dir, frames)
-
-    stream = _firehose_stream(spark, replay_dir)
-    assert stream.isStreaming
-    q = start_ingest(stream, log_dir, ckpt, wall_clock_us=1_000_000)
+    relay = _golden_relay(frames)
     try:
-        q.processAllAvailable()
+        stream = _firehose_stream(spark, relay)
+        assert stream.isStreaming
+        q = start_ingest(stream, log_dir, ckpt, wall_clock_us=1_000_000)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     finally:
-        q.stop()
+        relay.stop()
 
     valid = [f for f in frames if f["did"] not in ("did:plc:toobig", "did:plc:badcid")]
     expected = sum(len(f["ops"] or []) if f["kind"] == "commit" else 1 for f in valid)
@@ -68,22 +82,29 @@ def test_firehose_source_end_to_end(registered, tmp_path):
 def test_firehose_ingest_marks_batches_done_and_bucket_compacts(registered, tmp_path):
     """The firehose ingest path writes a done-marker for every batch it
     commits, so a bucket it filled is compactable: with no marker every
-    batch-tagged file stays pending and compact_bucket refuses (-1)."""
+    batch-tagged file stays pending and compact_bucket refuses (-1).
+
+    Two runs on one checkpoint make the two batches: `batch_size` bounds
+    only the batches after a start's first, which reads the whole backlog
+    the relay holds, and a restart's first plan waits for the relay to go
+    quiet, so neither run can finish before its frames arrive."""
     spark = registered
-    replay_dir = str(tmp_path / "replay")
     log_dir = str(tmp_path / "log")
     ckpt = str(tmp_path / "ckpt")
     frames = make_frames()
     half = len(frames) // 2
-    _write_replay_files(replay_dir, frames[:half])
-
-    q = start_ingest(_firehose_stream(spark, replay_dir), log_dir, ckpt, wall_clock_us=1_000_000)
+    relay = WsRelay()
     try:
-        q.processAllAvailable()
-        _write_replay_files(replay_dir, frames[half:])
-        q.processAllAvailable()
+        for part in (frames[:half], frames[half:]):
+            for frame in part:
+                relay.append(frame["seq"], wire_frame(frame))
+            q = start_ingest(_firehose_stream(spark, relay), log_dir, ckpt, wall_clock_us=1_000_000)
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
     finally:
-        q.stop()
+        relay.stop()
 
     # every batch Spark committed is done-marked, and so is every batch
     # that left a file in the (single) hour bucket
@@ -102,50 +123,8 @@ def test_firehose_ingest_marks_batches_done_and_bucket_compacts(registered, tmp_
     assert after == before
 
 
-@pytest.mark.timeout(300)
-def test_firehose_source_resume_from_checkpoint(registered, tmp_path):
-    """New replay files after restart are picked up from the checkpointed
-    seq offset — no reprocessing (the S12 cursor-resume contract)."""
-    spark = registered
-    replay_dir = str(tmp_path / "replay")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    frames = make_frames()
-    half = len(frames) // 2
-    _write_replay_files(replay_dir, frames[:half])
-
-    def run_until_drained():
-        stream = (
-            spark.readStream.format("atproto_firehose")
-            .option("replay_dir", replay_dir)
-            .load()
-        )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    run_until_drained()
-    n1 = spark.read.parquet(out_dir).count()
-    assert n1 == half
-
-    _write_replay_files(replay_dir, frames[half:])
-    run_until_drained()
-    df = spark.read.parquet(out_dir)
-    assert df.count() == len(frames), "resume must process exactly the new frames"
-    assert df.select("seq").distinct().count() == len(frames), "no duplicate seqs"
-
-
 # --- partition sizing (S2): seq span, capped by numPartitions ----------------
 def _ranges(n_partitions: str, lo: int, hi: int) -> list[tuple[int, int]]:
-    from jetstream_spark.streaming.firehose import FirehoseStreamReader
-
     reader = FirehoseStreamReader({"ws_url": "h:1", "numPartitions": n_partitions})
     return [(p.start, p.end) for p in reader.partitions({"seq": lo}, {"seq": hi})]
 
@@ -172,35 +151,16 @@ def test_partitions_sized_by_seq_span():
     assert _ranges("8", 50, 50) == [(50, 50)] and _ranges("8", 50, 40) == [(50, 50)]
 
 
-def _identity_frame(seq: int) -> dict:
-    did = f"did:plc:u{seq % 5}"
-    return {"kind": "identity", "did": did, "seq": seq,
-            "identity": {"did": did, "handle": "h.test", "seq": seq, "time": "t"}}
-
-
-@pytest.fixture(params=["replay_dir", "ws_url", "socket_url"])
-def transport(request, tmp_path):
-    """(options, head) for a relay holding seqs 1..head on one transport."""
+@pytest.fixture(params=["ws_url"])
+def transport(request):
+    """(options, head) for a relay holding seqs 1..head."""
     from jetstream_spark.streaming.firehose import MIN_SEQS_PER_PARTITION
 
     head = 100 + 2 * MIN_SEQS_PER_PARTITION + 200  # 2 partitions over (100, head]
-    if request.param == "replay_dir":
-        replay_dir = str(tmp_path / "replay")
-        _write_replay_files(replay_dir, [_identity_frame(s) for s in range(1, head + 1)], per_file=400)
-        yield {"replay_dir": replay_dir}, head
-        return
-    if request.param == "ws_url":
-        from tests.test_firehose_ws import _commit_frame_bytes, _identity_frame_bytes, _WsRelay
-
-        relay = _WsRelay()
-        for s in range(1, head + 1):
-            did = f"did:plc:u{s % 5}"
-            relay.append(s, _commit_frame_bytes(s, did, f"post {s}") if s % 3 else _identity_frame_bytes(s, did))
-    else:
-        from tests.test_firehose_socket import _Relay
-
-        relay = _Relay()
-        relay.append([_identity_frame(s) for s in range(1, head + 1)])
+    relay = WsRelay()
+    for s in range(1, head + 1):
+        did = f"did:plc:u{s % 5}"
+        relay.append(s, commit_frame_bytes(s, did, f"post {s}") if s % 3 else identity_frame_bytes(s, did))
     try:
         yield {request.param: f"127.0.0.1:{relay.port}"}, head
     finally:
@@ -212,8 +172,6 @@ def test_partition_reads_cover_each_frame_once(transport):
     """Reading every partition of a multi-partition batch yields each frame
     of (lo, hi] exactly once: the first partition stops before the relay
     head and the next resumes mid-stream by cursor."""
-    from jetstream_spark.streaming.firehose import FirehoseStreamReader
-
     options, head = transport
     reader = FirehoseStreamReader({**options, "numPartitions": "8"})
     parts = reader.partitions({"seq": 100}, {"seq": head})

@@ -7,63 +7,46 @@ inside partitions."""
 from __future__ import annotations
 
 import json
-import socketserver
-import threading
-import time
 
 import pytest
 
-from jetstream_spark.atproto.carcbor import (
-    cbor_encode,
-    cid_for_block,
-    cid_str,
-    decode_xrpc_frame,
-    encode_car,
-    link,
-)
-from jetstream_spark.serving.edge import SubscribeServer
+from jetstream_spark.atproto.carcbor import cbor_encode, decode_xrpc_frame
 from jetstream_spark.streaming.firehose import FirehoseDataSource
-
-
-def _commit_frame_bytes(seq: int, did: str, text: str) -> bytes:
-    """One subscribeRepos #commit wire frame: CBOR header + CBOR body with a
-    real CAR in `blocks` and a tag-42 CID link in ops."""
-    record = {"$type": "app.bsky.feed.post", "text": text}
-    block = cbor_encode(record)
-    cid = cid_for_block(block)
-    body = {
-        "seq": seq,
-        "repo": did,
-        "rev": f"rev{seq}",
-        "time": "2024-01-01T00:00:00Z",
-        "blocks": encode_car([block]),
-        "ops": [{"action": "create", "path": f"app.bsky.feed.post/rk{seq}", "cid": link(cid)}],
-        "tooBig": False,
-    }
-    return cbor_encode({"op": 1, "t": "#commit"}) + cbor_encode(body)
-
-
-def _account_frame_bytes(seq: int, did: str) -> bytes:
-    body = {"seq": seq, "did": did, "time": "2024-01-01T00:00:00Z", "active": True}
-    return cbor_encode({"op": 1, "t": "#account"}) + cbor_encode(body)
-
-
-def _identity_frame_bytes(seq: int, did: str) -> bytes:
-    body = {"seq": seq, "did": did, "handle": f"user{seq}.test", "time": "2024-01-01T00:00:00Z"}
-    return cbor_encode({"op": 1, "t": "#identity"}) + cbor_encode(body)
+from tests.fixtures import (
+    WsRelay,
+    account_frame_bytes,
+    commit_frame_bytes,
+    identity_frame_bytes,
+    wire_frame,
+)
 
 
 def test_decode_xrpc_frame_kinds():
-    f = decode_xrpc_frame(_commit_frame_bytes(7, "did:plc:x", "hello"))
+    f = decode_xrpc_frame(commit_frame_bytes(7, "did:plc:x", "hello"))
     assert f["kind"] == "commit" and f["seq"] == 7 and f["did"] == "did:plc:x"
     op = f["ops"][0]
     assert op["cid"] == op["record_cid"] and op["cid"].startswith("baf")
     assert json.loads(op["record_json"])["text"] == "hello"
 
-    a = decode_xrpc_frame(_account_frame_bytes(8, "did:plc:a"))
+    record = {"$type": "app.bsky.feed.post", "text": "kept"}
+    two_ops = {
+        "kind": "commit", "did": "did:plc:x", "seq": 10, "rev": "rev10", "too_big": False,
+        "ops": [
+            {"action": "create", "path": "app.bsky.feed.post/rk1", "cid": "c1",
+             "record_json": json.dumps(record), "record_cid": "c1"},
+            {"action": "delete", "path": "app.bsky.feed.post/rk2", "cid": None,
+             "record_json": None, "record_cid": None},
+        ],
+    }
+    created, deleted = decode_xrpc_frame(wire_frame(two_ops))["ops"]
+    assert json.loads(created["record_json"]) == record
+    assert deleted["action"] == "delete" and deleted["cid"] is None
+    assert deleted["record_json"] is None, "deletes carry no record"
+
+    a = decode_xrpc_frame(account_frame_bytes(8, "did:plc:a"))
     assert a["kind"] == "account" and a["account"]["active"] is True
 
-    i = decode_xrpc_frame(_identity_frame_bytes(9, "did:plc:i"))
+    i = decode_xrpc_frame(identity_frame_bytes(9, "did:plc:i"))
     assert i["kind"] == "identity" and i["identity"]["handle"] == "user9.test"
 
     info = cbor_encode({"op": 1, "t": "#info"}) + cbor_encode({"name": "OutdatedCursor"})
@@ -74,94 +57,6 @@ def test_decode_xrpc_frame_kinds():
         decode_xrpc_frame(err)
 
 
-class _WsRelay:
-    """Local subscribeRepos stand-in: websocket upgrade on the xrpc path,
-    binary CBOR frames with seq > cursor — and NOTHING else. Like the real
-    relay (cmd/jetstream/main.go:294-328) it serves no `/head` or other
-    out-of-band planning route: any non-upgrade request gets a 404 and is
-    counted, so tests can assert the client never needed one."""
-
-    def __init__(self):
-        self.frames: list[tuple[int, bytes]] = []  # (seq, wire bytes)
-        self.pongs: list[tuple[bool, bytes]] = []  # (was_masked, payload)
-        self.non_ws_requests: list[str] = []  # paths probed without upgrade
-        self.lock = threading.Lock()
-        outer = self
-
-        class Handler(socketserver.StreamRequestHandler):
-            def handle(self) -> None:
-                try:
-                    request_line = self.rfile.readline().decode()
-                    headers = {}
-                    while True:
-                        line = self.rfile.readline().decode()
-                        if not line.strip():
-                            break
-                        k, _, v = line.partition(":")
-                        headers[k.strip().lower()] = v.strip()
-                    path = request_line.split()[1]
-                    if headers.get("upgrade", "").lower() != "websocket":
-                        with outer.lock:
-                            outer.non_ws_requests.append(path)
-                        self.wfile.write(b"HTTP/1.1 404 Not Found\r\n\r\n")
-                        return
-                    key = headers.get("sec-websocket-key", "")
-                    accept = SubscribeServer._ws_accept(key)
-                    self.wfile.write(
-                        (
-                            "HTTP/1.1 101 Switching Protocols\r\nUpgrade: websocket\r\n"
-                            f"Connection: Upgrade\r\nSec-WebSocket-Accept: {accept}\r\n\r\n"
-                        ).encode()
-                    )
-                    cursor = 0
-                    if "cursor=" in path:
-                        cursor = int(path.split("cursor=")[1].split("&")[0])
-                    # a spec-conforming relay pings idle clients; the client
-                    # MUST answer with a MASKED pong (RFC 6455 §5.1/§5.5.3)
-                    self.wfile.write(SubscribeServer._ws_frame(b"hb", opcode=0x9))
-                    self.wfile.flush()
-                    self.connection.settimeout(10)
-                    h = self.rfile.read(2)
-                    if len(h) == 2 and (h[0] & 0x0F) == 0xA:
-                        masked = bool(h[1] & 0x80)
-                        ln = h[1] & 0x7F
-                        mask = self.rfile.read(4) if masked else b""
-                        body = self.rfile.read(ln)
-                        if masked:
-                            body = bytes(b ^ mask[i & 3] for i, b in enumerate(body))
-                        with outer.lock:
-                            outer.pongs.append((masked, body))
-                    sent = cursor
-                    idle = 0
-                    while idle < 40:
-                        with outer.lock:
-                            out = [(s, w) for s, w in outer.frames if s > sent]
-                        if out:
-                            idle = 0
-                            for s, wire in out:
-                                self.wfile.write(SubscribeServer._ws_frame(wire, opcode=0x2))
-                                sent = s
-                            self.wfile.flush()
-                        else:
-                            idle += 1
-                            time.sleep(0.05)
-                except (BrokenPipeError, ConnectionResetError):
-                    pass
-
-        self.server = socketserver.ThreadingTCPServer(("127.0.0.1", 0), Handler)
-        self.server.daemon_threads = True
-        self.port = self.server.server_address[1]
-        threading.Thread(target=self.server.serve_forever, daemon=True).start()
-
-    def append(self, seq: int, wire: bytes) -> None:
-        with self.lock:
-            self.frames.append((seq, wire))
-
-    def stop(self) -> None:
-        self.server.shutdown()
-        self.server.server_close()
-
-
 @pytest.mark.timeout(300)
 def test_firehose_ws_binary_cbor_end_to_end(spark, tmp_path):
     from pyspark.sql import functions as F
@@ -169,12 +64,12 @@ def test_firehose_ws_binary_cbor_end_to_end(spark, tmp_path):
     from jetstream_spark.atproto.normalize import normalize_frames
 
     spark.dataSource.register(FirehoseDataSource)
-    relay = _WsRelay()
+    relay = WsRelay()
     n_commits, dids = 12, 3
     for i in range(1, n_commits + 1):
-        relay.append(i, _commit_frame_bytes(i, f"did:plc:user{i % dids}", f"ws post {i}"))
-    relay.append(n_commits + 1, _account_frame_bytes(n_commits + 1, "did:plc:acct"))
-    relay.append(n_commits + 2, _identity_frame_bytes(n_commits + 2, "did:plc:iden"))
+        relay.append(i, commit_frame_bytes(i, f"did:plc:user{i % dids}", f"ws post {i}"))
+    relay.append(n_commits + 1, account_frame_bytes(n_commits + 1, "did:plc:acct"))
+    relay.append(n_commits + 2, identity_frame_bytes(n_commits + 2, "did:plc:iden"))
 
     out_dir = str(tmp_path / "out")
     try:
@@ -228,9 +123,9 @@ def test_firehose_ws_checkpoint_resume_without_head_route(spark, tmp_path):
     from jetstream_spark.atproto.normalize import normalize_frames
 
     spark.dataSource.register(FirehoseDataSource)
-    relay = _WsRelay()
+    relay = WsRelay()
     for i in range(1, 9):
-        relay.append(i, _commit_frame_bytes(i, f"did:plc:u{i % 2}", f"resume post {i}"))
+        relay.append(i, commit_frame_bytes(i, f"did:plc:u{i % 2}", f"resume post {i}"))
 
     out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
 
@@ -256,7 +151,7 @@ def test_firehose_ws_checkpoint_resume_without_head_route(spark, tmp_path):
         run_until_drained()
         assert spark.read.parquet(out_dir).count() == 8
         for i in range(9, 15):
-            relay.append(i, _commit_frame_bytes(i, "did:plc:late", f"resume post {i}"))
+            relay.append(i, commit_frame_bytes(i, "did:plc:late", f"resume post {i}"))
         run_until_drained()
     finally:
         relay.stop()

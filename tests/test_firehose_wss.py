@@ -4,16 +4,14 @@ with a self-signed cert, dialed via the `wss://host:port` URL form + a
 
 from __future__ import annotations
 
-import socketserver
 import ssl
 import subprocess
-import threading
 
 import pytest
 from pyspark.sql import functions as F
 
 from jetstream_spark.streaming.firehose import FirehoseDataSource, _ws_fetch
-from tests.test_firehose_ws import _WsRelay, _commit_frame_bytes
+from tests.fixtures import WsRelay, commit_frame_bytes
 
 
 @pytest.fixture(scope="module")
@@ -33,7 +31,7 @@ def certs(tmp_path_factory):
     return key, crt
 
 
-class _TlsWsRelay(_WsRelay):
+class _TlsWsRelay(WsRelay):
     """The plaintext test relay with its listening socket TLS-wrapped."""
 
     def __init__(self, key: str, crt: str):
@@ -49,7 +47,7 @@ def test_wss_fetch_over_tls(certs, spark):
     relay = _TlsWsRelay(key, crt)
     try:
         for i in range(1, 6):
-            relay.append(i, _commit_frame_bytes(i, f"did:plc:user{i}", f"tls post {i}"))
+            relay.append(i, commit_frame_bytes(i, f"did:plc:user{i}", f"tls post {i}"))
         frames = list(_ws_fetch(f"wss://127.0.0.1:{relay.port}", 0, 5, tls_ca=crt))
         assert [f["seq"] for f in frames] == [1, 2, 3, 4, 5]
         assert all(f["kind"] == "commit" for f in frames)
@@ -64,7 +62,7 @@ def test_wss_rejects_untrusted_cert(certs):
     key, crt = certs
     relay = _TlsWsRelay(key, crt)
     try:
-        relay.append(1, _commit_frame_bytes(1, "did:plc:u", "x"))
+        relay.append(1, commit_frame_bytes(1, "did:plc:u", "x"))
         with pytest.raises(ssl.SSLError):
             # no tls_ca → system trust → self-signed must be REJECTED
             list(_ws_fetch(f"wss://127.0.0.1:{relay.port}", 0, 1))
@@ -81,7 +79,7 @@ def test_wss_streaming_source_end_to_end(certs, spark, tmp_path):
     relay = _TlsWsRelay(key, crt)
     n = 8
     for i in range(1, n + 1):
-        relay.append(i, _commit_frame_bytes(i, f"did:plc:user{i % 3}", f"wss post {i}"))
+        relay.append(i, commit_frame_bytes(i, f"did:plc:user{i % 3}", f"wss post {i}"))
     out_dir = str(tmp_path / "out")
     try:
         stream = (

@@ -118,6 +118,40 @@ def test_xrpc_commit_resolves_record_by_path_without_cid():
     assert rec["text"] == f"rec {path}"
 
 
+def test_mst_resolved_record_must_match_claimed_cid(spark):
+    """S7 on the path fallback (consumer.go:229-231): an op whose claimed
+    CID names no block in the CAR gets its record by walking the MST, and
+    that record's own CID, not the claim, meets the CID check, so a record
+    whose bytes hash elsewhere yields no row. Its sibling op, whose CID is
+    in the CAR, still does."""
+    from jetstream_spark.atproto.normalize import normalize_frames
+    from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
+
+    paths = _paths(2)
+    records = _records(paths)
+    root_cid, blocks = mst_build(records)
+    commit = cbor_encode({"version": 3, "data": link(root_cid), "rev": "r9"})
+    car = encode_car([commit] + list(blocks.values()), roots=[cid_for_block(commit)])
+    claimed = cid_for_block(cbor_encode({"text": "not the record"}))
+    assert cid_str(claimed) not in blocks
+    body = cbor_encode(
+        {
+            "repo": "did:plc:alice",
+            "seq": 7,
+            "rev": "r9",
+            "tooBig": False,
+            "blocks": car,
+            "ops": [
+                {"action": "create", "path": paths[0], "cid": link(cid_for_block(records[paths[0]]))},
+                {"action": "create", "path": paths[1], "cid": link(claimed)},
+            ],
+        }
+    )
+    frame = decode_xrpc_frame(cbor_encode({"op": 1, "t": "#commit"}) + body)
+    rows = normalize_frames(spark.createDataFrame([frame], schema=RAW_FRAME_SCHEMA)).collect()
+    assert [r["commit"]["rkey"] for r in rows] == [paths[0].split("/")[1]]
+
+
 @settings(max_examples=200, deadline=None)
 @given(st.binary(max_size=200))
 def test_cbor_decode_malformed_raises_cborerror_only(data):

@@ -1,10 +1,10 @@
-"""The serving edge (H4): /subscribe over HTTP chunked ndjson — validation,
-cursor replay, filters, live tail, registry."""
+"""The serving edge (H4): /subscribe over websocket text frames —
+validation, cursor replay, filters, live tail, registry."""
 
 from __future__ import annotations
 
 import http.client
-import json
+from itertools import islice
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,7 +14,7 @@ from jetstream_spark.atproto.normalize import normalize_frames
 from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
 from jetstream_spark.serving.edge import run_server_in_thread
 from jetstream_spark.serving.hub import LiveTailHub
-from tests.fixtures import make_frames
+from tests.fixtures import make_frames, read_subscribe, subscribe_ws
 
 
 @pytest.fixture(scope="module")
@@ -33,25 +33,10 @@ def edge(spark, tmp_path_factory):
     hub.stop()
 
 
-def _read_frames(port: int, path: str, n: int, timeout: float = 60.0) -> list[dict]:
-    conn = http.client.HTTPConnection("127.0.0.1", port, timeout=timeout)
-    conn.request("GET", path)
-    resp = conn.getresponse()
-    assert resp.status == 200, resp.read().decode()
-    frames = []
-    while len(frames) < n:
-        line = resp.readline()
-        if not line:
-            break
-        frames.append(json.loads(line))
-    conn.close()
-    return frames
-
-
 def test_subscribe_replay_from_cursor(edge, spark):
     server, log_dir, _ = edge
     total = eventlog.read_log(spark, log_dir).count()
-    frames = _read_frames(server.port, "/subscribe?cursor=0", total)
+    frames = read_subscribe(server.port, "cursor=0", total)
     assert len(frames) == total
     times = [f["time_us"] for f in frames]
     assert times == sorted(times) and len(set(times)) == total
@@ -62,9 +47,7 @@ def test_subscribe_filters_and_bypass(edge, spark):
     server, log_dir, _ = edge
     df = eventlog.replay(spark, log_dir, wanted_collections=["app.bsky.feed.like"])
     expected = df.count()
-    frames = _read_frames(
-        server.port, "/subscribe?cursor=0&wantedCollections=app.bsky.feed.like", expected
-    )
+    frames = read_subscribe(server.port, "cursor=0&wantedCollections=app.bsky.feed.like", expected)
     assert len(frames) == expected
     kinds = {f["type"] for f in frames}
     assert {"acc", "id"} <= kinds, "account/identity must bypass collection filters"
@@ -84,23 +67,29 @@ def test_subscribe_invalid_params_rejected(edge):
         conn.close()
 
 
+def test_plain_get_subscribe_is_400_while_metrics_stays_http(edge):
+    """/subscribe speaks only websocket, like the reference (gorilla's
+    Upgrader answers a GET without `Upgrade: websocket` with 400); the
+    scrape and debug routes stay plain HTTP."""
+    server, _, _ = edge
+    for path, status in (("/subscribe?cursor=0", 400), ("/subscribe", 400), ("/metrics", 200)):
+        conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=30)
+        conn.request("GET", path)
+        resp = conn.getresponse()
+        assert resp.status == status, path
+        resp.read()
+        conn.close()
+    assert _wait_registry_empty(server), "a refused GET must not register a subscriber"
+
+
 def test_live_tail_receives_new_events(edge, spark):
     server, log_dir, normalized = edge
-    conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=60)
-    conn.request("GET", "/subscribe")  # no cursor = live tail
-    resp = conn.getresponse()
-    assert resp.status == 200
-    head_before = eventlog.read_log(spark, log_dir).agg(F.max("time_us")).first()[0]
-    # append new events while subscribed
-    eventlog.ingest_batch(normalized, log_dir, wall_clock_us=head_before + 1)
-    new_count = eventlog.read_log(spark, log_dir).where(F.col("time_us") > head_before).count()
-    frames = []
-    while len(frames) < new_count:
-        line = resp.readline()
-        if not line:
-            break
-        frames.append(json.loads(line))
-    conn.close()
+    with subscribe_ws(server.port) as live:  # no cursor = live tail
+        head_before = eventlog.read_log(spark, log_dir).agg(F.max("time_us")).first()[0]
+        # append new events while subscribed
+        eventlog.ingest_batch(normalized, log_dir, wall_clock_us=head_before + 1)
+        new_count = eventlog.read_log(spark, log_dir).where(F.col("time_us") > head_before).count()
+        frames = list(islice(live, new_count))
     assert len(frames) == new_count
     assert all(f["time_us"] > head_before for f in frames), "live tail must skip history"
 
@@ -121,17 +110,12 @@ def test_emitted_counts_once_per_event_across_subscribers(edge, spark):
     head_before = eventlog.read_log(spark, log_dir).agg(F.max("time_us")).first()[0]
 
     def tail(slot: int, expect: list[int]) -> None:
-        conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=60)
-        conn.request("GET", "/subscribe")  # live tail
-        resp = conn.getresponse()
-        assert resp.status == 200
-        ready.wait()
-        while len(results[slot]) < expect[0]:
-            line = resp.readline()
-            if not line:
-                break
-            results[slot].append(json.loads(line))
-        conn.close()
+        with subscribe_ws(server.port) as live:  # live tail
+            ready.wait()
+            for frame in live:
+                results[slot].append(frame)
+                if len(results[slot]) >= expect[0]:
+                    break
 
     expect = [1 << 30]  # patched once new_count is known
     threads = [threading.Thread(target=tail, args=(i, expect)) for i in range(2)]
@@ -168,7 +152,7 @@ def test_registry_tracks_and_clears(edge, spark):
     server, log_dir, _ = edge
     assert _wait_registry_empty(server), "stale subscribers from earlier tests not cleaned"
     total = eventlog.read_log(spark, log_dir).count()
-    _read_frames(server.port, "/subscribe?cursor=0", total)
+    read_subscribe(server.port, "cursor=0", total)
     assert _wait_registry_empty(server), "registry must clear on disconnect"
 
 
@@ -194,18 +178,11 @@ def test_cursor_replay_paced_at_playback_rate(spark, tmp_path):
     hub.start()
     server, _ = run_server_in_thread(spark, log_dir, hub=hub, max_sub_rate=live_rate)
     try:
-        conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=120)
-        conn.request("GET", "/subscribe?cursor=0")
-        resp = conn.getresponse()
-        assert resp.status == 200
         got, stamps = [], []
-        while len(got) < total:
-            line = resp.readline()
-            if not line:
-                break
-            got.append(json.loads(line))
-            stamps.append(time.monotonic())
-        conn.close()
+        with subscribe_ws(server.port, "cursor=0", timeout=120) as frames:
+            for frame in islice(frames, total):
+                got.append(frame)
+                stamps.append(time.monotonic())
     finally:
         asyncio.run_coroutine_threadsafe(server.stop(), server._loop).result(timeout=10)
         hub.stop()
