@@ -143,40 +143,33 @@ def cmd_replay(args) -> int:
     return 0
 
 
-def _claim_for_oneshot(data_dir: str, force: bool) -> str | None:
+def _lock_or_refuse(data_dir: str):
     """One-shot maintenance vs the standing ticker: trim/compact are not
-    safe against a SECOND maintenance actor, so the one-shot commands
-    CLAIM the lease for their duration (checking without claiming left
-    the contract one-directional: a standing loop starting right after
-    the check would tick concurrently with the still-running one-shot —
-    now it fails fast on the one-shot's fresh marker instead). Returns
-    the owner token to release in a finally block, or None after
-    printing the refusal. --force claims over a fresh foreign marker,
-    fencing the standing loop (its next tick refuses into its error
-    counter) rather than racing it."""
-    from jetstream_spark.atproto.maintenance import claim_owner, new_owner_token
+    safe beside a SECOND maintenance actor, so a one-shot holds the log's
+    maintenance lock for its whole run. Returns the held lock, or None
+    after printing the refusal (before any Spark session starts)."""
+    from jetstream_spark.atproto.maintenance import MaintenanceLock
 
-    owner = new_owner_token()
     try:
-        claim_owner(data_dir, interval_s=0.0, owner=owner, force=force)
+        return MaintenanceLock(data_dir)
     except RuntimeError as e:
-        print(f"refusing: {e}; or pass --force.", flush=True)
+        print(
+            f"refusing: {e}; stop ingest or run it with --event-ttl-hours 0",
+            flush=True,
+        )
         return None
-    return owner
 
 
 def cmd_trim(args) -> int:
     from jetstream_spark.atproto.log import TrimPartialFailure, trim_events
-    from jetstream_spark.atproto.maintenance import heartbeat_owner, release_owner
 
     if not os.path.isdir(args.data_dir):
         print("dropped 0 expired hour partitions")
         return 0
-    owner = _claim_for_oneshot(args.data_dir, args.force)
-    if owner is None:
+    lock = _lock_or_refuse(args.data_dir)
+    if lock is None:
         return 1
-    hb_stop = heartbeat_owner(args.data_dir, owner)
-    try:
+    with lock:
         spark = _spark(args.cpus)
         try:
             dropped = trim_events(
@@ -196,52 +189,25 @@ def cmd_trim(args) -> int:
             return 1
         print(f"dropped {dropped} expired hour partitions")
         return 0
-    finally:
-        hb_stop.set()
-        release_owner(args.data_dir, owner)
 
 
 def cmd_compact(args) -> int:
-    import threading
-
-    from jetstream_spark.atproto.maintenance import heartbeat_owner, release_owner
+    from jetstream_spark.atproto.log import compact_bucket, recover_compaction
+    from jetstream_spark.atproto.maintenance import sealed_buckets
 
     if not os.path.isdir(args.data_dir):
         print("compacted 0 partitions, skipped 0 unsafe")
         return 0
-    owner = _claim_for_oneshot(args.data_dir, args.force)
-    if owner is None:
+    lock = _lock_or_refuse(args.data_dir)
+    if lock is None:
         return 1
-    # lease-lost signal: a forced takeover fences this one-shot mid-run;
-    # the bucket loop polls it and aborts between rewrites (ADVICE r12 #1)
-    lost = threading.Event()
-    hb_stop = heartbeat_owner(args.data_dir, owner, lost=lost)
-    try:
-        return _compact_owned(args, lost)
-    finally:
-        hb_stop.set()
-        release_owner(args.data_dir, owner)
-
-
-def _compact_owned(args, lost=None) -> int:
-    from jetstream_spark.atproto.log import US_PER_HOUR, compact_bucket, recover_compaction
-
-    spark = _spark(args.cpus)
-    recovered = recover_compaction(args.data_dir)
-    if recovered:
-        print(f"recovered {recovered} interrupted compaction(s)")
-    current = int(time.time() * 1_000_000) // US_PER_HOUR
-    n = skipped = 0
-    for entry in sorted(os.listdir(args.data_dir)):
-        if lost is not None and lost.is_set():
-            # lease no longer ours (forced takeover / marker swept): stop
-            # between rewrites rather than finish a full run unfenced
-            print(f"aborting: maintenance lease lost after {n} compaction(s)")
-            return 1
-        if not entry.startswith("hour_bucket="):
-            continue
-        bucket = int(entry.split("=", 1)[1])
-        if bucket < current:  # sealed buckets only
+    with lock:
+        spark = _spark(args.cpus)
+        recovered = recover_compaction(args.data_dir)
+        if recovered:
+            print(f"recovered {recovered} interrupted compaction(s)")
+        n = skipped = 0
+        for bucket in sealed_buckets(args.data_dir, int(time.time() * 1_000_000)):
             before = compact_bucket(spark, args.data_dir, bucket)
             if before == -1:
                 # an un-marked batch wrote here (crash between commit and
@@ -253,8 +219,8 @@ def _compact_owned(args, lost=None) -> int:
             elif before > 1:
                 print(f"hour_bucket={bucket}: {before} files -> 1")
                 n += 1
-    print(f"compacted {n} partitions, skipped {skipped} unsafe")
-    return 0
+        print(f"compacted {n} partitions, skipped {skipped} unsafe")
+        return 0
 
 
 def _run_standing(q, drain: bool, report) -> int:
@@ -541,15 +507,23 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--wanted-dids", nargs="*", default=[])
     p.set_defaults(fn=cmd_replay)
 
-    p = sub.add_parser("trim", help="drop hour partitions past the TTL")
+    oneshot = (
+        "; refuses (exit 1) while another maintenance actor, such as ingest's standing "
+        "loop, holds the log's maintenance lock"
+    )
+    p = sub.add_parser(
+        "trim", help="drop hour partitions past the TTL",
+        description="drop hour partitions past the TTL" + oneshot,
+    )
     p.add_argument("--data-dir", **common["--data-dir"])
     p.add_argument("--event-ttl-hours", type=int, default=24, help="main.go --event-ttl")
-    p.add_argument("--force", action="store_true", help="run even if a standing maintenance loop owns the log")
     p.set_defaults(fn=cmd_trim)
 
-    p = sub.add_parser("compact", help="compact sealed hour partitions")
+    p = sub.add_parser(
+        "compact", help="compact sealed hour partitions",
+        description="recover interrupted compactions, then compact every sealed hour partition" + oneshot,
+    )
     p.add_argument("--data-dir", **common["--data-dir"])
-    p.add_argument("--force", action="store_true", help="run even if a standing maintenance loop owns the log")
     p.set_defaults(fn=cmd_compact)
 
     p = sub.add_parser("sql", help="run ANSI SQL over the log (events_log) and analytics tables")

@@ -372,8 +372,9 @@ def recover_compaction(log_dir: str) -> int:
         crash before cleanup → drop the old copy;
       - `_compact_old_{b}` WITHOUT the live partition: crashed BETWEEN the
         two renames — the old copy IS the data; rename it back.
-    Idempotent; returns the number of leftovers resolved. Run before
-    compacting (cmd_compact does)."""
+    Idempotent; returns the number of leftovers resolved. Run under the
+    maintenance lock before compacting (MaintenanceLoop.start and
+    cmd_compact do)."""
     resolved = 0
     if not os.path.isdir(log_dir):
         return 0
@@ -403,11 +404,9 @@ def _batch_id_of(filename: str) -> int | None:
     return int(head) if head.isdigit() else None
 
 
-def compact_bucket(
-    spark: SparkSession, log_dir: str, bucket: int, target_files: int = 1
-) -> int:
+def compact_bucket(spark: SparkSession, log_dir: str, bucket: int) -> int:
     """S11 maintenance: rewrite one hour partition's many per-batch files
-    into `target_files` time-sorted files (the small-file problem — every
+    into one time-sorted file (the small-file problem — every
     micro-batch appends a file; a day of 5 s batches is 17k files/partition
     at scale, and scan/open cost dominates).
 
@@ -430,7 +429,7 @@ def compact_bucket(
     if not os.path.isdir(part):
         return 0
     old_files = [f for f in os.listdir(part) if f.endswith(".parquet")]
-    if len(old_files) <= target_files:
+    if len(old_files) <= 1:
         return len(old_files)
     done = load_done_batches(log_dir)
     pending = {
@@ -446,7 +445,7 @@ def compact_bucket(
     try:
         (
             spark.read.parquet(part)
-            .coalesce(target_files)
+            .coalesce(1)
             .sortWithinPartitions("time_us")
             .write.mode("overwrite")
             .parquet(tmp)

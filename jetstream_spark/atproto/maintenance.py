@@ -20,9 +20,13 @@ vs reader/compactor races and compaction-swap vs reader races are each
 absorbed by the engine (replay_rows' rebuilt-frame retry, read_log's
 aside-fallback, compact_bucket's vanished-partition no-op — pinned in
 tests/test_trim_concurrent.py and tests/test_log_compaction_concurrent.py).
-Exactly one maintenance loop per log (the writer's): trim and compaction
-are not mutually concurrency-safe with a SECOND maintenance process, the
-same single-owner contract as the reference's embedded store.
+Exactly one maintenance actor per log: trim and compaction are not
+concurrency-safe against a SECOND maintenance actor, so the standing loop
+and the one-shot `trim`/`compact` commands each hold the log's
+MaintenanceLock (an exclusive flock) for their whole life, the same
+single-owner contract as the reference's embedded store. The loop takes
+it in start() and then resolves any interrupted compaction swap
+(log.recover_compaction), the one point where no actor can be mid-swap.
 
 A tick failure is counted and retried next tick, never raised out of the
 thread — transient Spark failures must not silently end retention (the
@@ -33,17 +37,11 @@ ticker survives as long as the process does).
 from __future__ import annotations
 
 import contextlib
-import errno
-import json
+import fcntl
 import os
 import threading
 import time
 from collections.abc import Callable
-
-try:
-    import fcntl
-except ImportError:  # non-POSIX: takeover degrades to replace-then-verify
-    fcntl = None  # type: ignore[assignment]
 
 from pyspark.sql import SparkSession
 
@@ -52,6 +50,7 @@ from jetstream_spark.atproto.log import (
     US_PER_HOUR,
     TrimPartialFailure,
     compact_bucket,
+    recover_compaction,
     trim_events,
 )
 from jetstream_spark.operators.observability import prom_label
@@ -61,270 +60,68 @@ def _now_us() -> int:
     return time.time_ns() // 1_000
 
 
-# --- single-owner marker (VERDICT r10 "What's wrong" #1) ----------------------
+# --- the maintenance lock ---------------------------------------------------
 #
 # Trim and compaction are concurrency-safe against READERS and the ingest
 # WRITER, but not against a SECOND maintenance actor over the same log
-# (e.g. a one-shot `trim`/`compact` CLI run while the ingest process's
-# standing ticker is live: the CLI's trim can sweep the ticker's
-# _compact_tmp_ stage mid-swap). The reference cannot hit this — its
-# store is embedded, single-process. Here the contract is enforced with
-# an owner marker under the log dir: the standing loop claims it on
-# start, touches it every tick AND heartbeats it from a side thread
-# while a tick is in flight (a single slow trim+compact pass must not
-# let the lease expire while the loop is alive), and releases it on
-# clean stop; anything else doing maintenance refuses while the marker
-# is FRESH (touched within OWNER_FRESH_S — generous multiples of the
-# 15 s tick, so a wedged-but-alive loop keeps ownership but a dead
-# process's marker expires and the log is adoptable). The `_` prefix
-# keeps the marker invisible to Spark's directory listings, like the
-# compaction stages.
+# (a one-shot `trim` beside the standing ticker could sweep the ticker's
+# _compact_tmp_ stage mid-swap). The reference cannot hit this: Pebble
+# lets one process open a data dir at a time. Here every actor holds an
+# exclusive flock on `<log_dir>/_maintenance.lock` for its whole life.
+# The kernel drops the lock when the process dies, so a crashed actor's
+# log is adoptable at once, and a live one (however slow its tick) keeps
+# it. The `_` prefix keeps the file out of Spark's listings; the file is
+# never removed, because a flock on an unlinked file stops excluding.
 
-OWNER_MARKER = "_maintenance.owner"
-OWNER_FRESH_S = 120.0
+LOCK_FILE = "_maintenance.lock"
 
 
-def _owner_path(log_dir: str) -> str:
-    return os.path.join(log_dir, OWNER_MARKER)
+class MaintenanceLock:
+    """The log's maintenance lock, taken in the constructor (RuntimeError
+    naming the holder's pid when another actor has it) and released by
+    ``release()`` or on leaving a ``with`` block. ``os.open`` fds are not
+    inheritable, so an exec'd child never holds the lock."""
 
-
-def owner_info(log_dir: str) -> dict | None:
-    """The marker's contents plus its age in seconds, or None when absent."""
-    path = _owner_path(log_dir)
-    try:
-        age_s = time.time() - os.stat(path).st_mtime
-        with open(path) as f:
-            info = json.load(f)
-    except (OSError, ValueError):
-        return None
-    info["age_s"] = age_s
-    return info
-
-
-def _pid_alive(pid) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except (OSError, TypeError):
-        return True  # EPERM etc.: somebody's process — treat as alive
-    return True
-
-
-def _marker_fences(info: dict | None, fresh_s: float = OWNER_FRESH_S) -> bool:
-    """A marker fences other actors only while it is fresh AND its
-    recording process is still alive — a crashed ingest must not fence
-    its own immediate restart for the freshness window (the log is a
-    local directory, so pid liveness is checkable on the same host)."""
-    return (
-        info is not None
-        and info["age_s"] < fresh_s
-        and _pid_alive(info.get("pid"))
-    )
-
-
-def owner_is_fresh(log_dir: str, fresh_s: float = OWNER_FRESH_S) -> bool:
-    return _marker_fences(owner_info(log_dir), fresh_s)
-
-
-_owner_seq = 0
-_owner_seq_lock = threading.Lock()
-
-
-def new_owner_token() -> str:
-    """A process-unique owner identity: pid alone cannot tell two loops in
-    the SAME process apart (both must not tick the same log)."""
-    global _owner_seq
-    with _owner_seq_lock:
-        _owner_seq += 1
-        return f"{os.getpid()}:{_owner_seq}"
-
-
-def _refuse_claim(log_dir: str, info: dict | None) -> None:
-    holder = info.get("owner") if info else "unknown"
-    age = f"{info['age_s']:.0f}s ago" if info and "age_s" in info else "just now"
-    raise RuntimeError(
-        f"another maintenance owner ({holder}) holds {log_dir} "
-        f"(marker touched {age}); exactly one maintenance "
-        "actor per log — stop it, wait for the marker to expire, or override "
-        "explicitly"
-    )
-
-
-TAKEOVER_LOCK = OWNER_MARKER + ".lock"
-
-
-@contextlib.contextmanager
-def _takeover_lock(log_dir: str):
-    """Mutual exclusion for the marker-TAKEOVER path (ADVICE r12 #1): an
-    fcntl.flock on a sidecar lock file serializes check-then-replace, so
-    two stale-takeovers (or two one-shot CLIs racing over a dead owner's
-    marker) can never both see their own marker and proceed — the r12
-    replace-then-verify narrowed but could not close that window, and
-    one-shots hold the lease for their whole run, so a residual overlap
-    there was a full-duration double-maintenance. The lock file is tiny,
-    `_`-prefixed (invisible to Spark listings like the marker), and never
-    removed — flock on an unlinked file would silently stop excluding.
-    Without fcntl (non-POSIX) this degrades to the r12 replace+verify."""
-    if fcntl is None:
-        yield
-        return
-    fd = os.open(os.path.join(log_dir, TAKEOVER_LOCK), os.O_CREAT | os.O_RDWR, 0o644)
-    try:
-        fcntl.flock(fd, fcntl.LOCK_EX)
-        yield
-    finally:
-        os.close(fd)  # releases the flock
-
-
-def _sweep_stale_claims(log_dir: str, aged_s: float = OWNER_FRESH_S) -> None:
-    """Remove `.claim.*` staging litter older than the freshness window —
-    a claimant that crashed between writing and removing its staging file
-    (ADVICE r12 #3) must not leave it in the log dir forever. Age-gated
-    so a live concurrent claimant's fresh staging file is never swept."""
-    prefix = OWNER_MARKER + ".claim."
-    try:
-        entries = os.listdir(log_dir)
-    except OSError:
-        return
-    for e in entries:
-        if not e.startswith(prefix):
-            continue
-        p = os.path.join(log_dir, e)
+    def __init__(self, log_dir: str):
+        os.makedirs(log_dir, exist_ok=True)
+        fd = os.open(os.path.join(log_dir, LOCK_FILE), os.O_CREAT | os.O_RDWR, 0o644)
         try:
-            if time.time() - os.stat(p).st_mtime > aged_s:
-                os.remove(p)
-        except OSError:
-            continue  # raced with its owner or another sweeper: fine
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            os.ftruncate(fd, 0)
+            os.pwrite(fd, str(os.getpid()).encode(), 0)
+        except BlockingIOError:
+            holder = os.pread(fd, 32, 0).decode(errors="replace").strip() or "unknown"
+            os.close(fd)
+            raise RuntimeError(
+                f"{log_dir} is held by another maintenance actor (pid {holder}); "
+                "exactly one maintenance actor per log"
+            ) from None
+        except BaseException:
+            os.close(fd)
+            raise
+        self._fd: int | None = fd
+
+    def release(self) -> None:
+        if self._fd is not None:
+            os.close(self._fd)  # closing the last fd drops the flock
+            self._fd = None
+
+    def __enter__(self) -> "MaintenanceLock":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release()
 
 
-def claim_owner(log_dir: str, interval_s: float, owner: str, force: bool = False) -> None:
-    """Write (or re-assert) the owner marker. Raises RuntimeError when a
-    FRESH marker belongs to a different owner — the enforced form of the
-    single-maintenance-owner contract. ``force=True`` is the explicit
-    operator override (`--force`): it claims over a fresh foreign marker,
-    which FENCES the previous owner (its next tick sees a foreign marker
-    and refuses) instead of racing it.
-
-    Two racing claimants cannot both win the CREATE path: the marker is
-    made with an atomic exclusive hard-link (so check-then-write cannot
-    interleave, and a concurrent reader never sees a half-written
-    marker). The TAKEOVER path (stale / own / forced marker) runs under
-    an fcntl.flock (`_takeover_lock`), so check-then-replace is mutually
-    exclusive — the r12 two-replacer window (both takeovers verify their
-    own marker) is closed; the post-replace re-read stays as a
-    belt-and-braces verify and as the whole guard on filesystems without
-    flock. On filesystems without hard-link support (EPERM/EOPNOTSUPP —
-    ADVICE r12 #3) the create falls through to the locked takeover path,
-    which handles the marker-absent case too. The staging file is
-    removed on ALL exit paths, and aged `.claim.*` litter from crashed
-    claimants is swept opportunistically."""
-    os.makedirs(log_dir, exist_ok=True)
-    _sweep_stale_claims(log_dir)
-    path = _owner_path(log_dir)
-    # per-claimant staging name: concurrent claimants must not share it
-    tmp = f"{path}.claim.{owner.replace(':', '-')}"
-    with open(tmp, "w") as f:
-        json.dump({"owner": owner, "pid": os.getpid(), "interval_s": interval_s}, f)
-    try:
-        try:
-            os.link(tmp, path)  # atomic exclusive create, full content visible
-        except FileExistsError:
-            pass
-        except OSError:
-            # no hard-link support on this filesystem: the flock below is
-            # itself exclusive, and os.replace covers the absent-marker case
-            pass
-        else:
-            return
-        with _takeover_lock(log_dir):
-            info = owner_info(log_dir)
-            if _marker_fences(info) and info.get("owner") != owner and not force:
-                _refuse_claim(log_dir, info)
-            os.replace(tmp, path)
-            # verify the takeover stuck: redundant under the flock, the
-            # whole guard without it (non-POSIX degradation)
-            after = owner_info(log_dir)
-        if after is None or after.get("owner") != owner:
-            _refuse_claim(log_dir, after)
-    finally:
-        try:
-            os.remove(tmp)  # already gone when os.replace consumed it
-        except OSError:
-            pass
-
-
-def touch_owner(log_dir: str) -> None:
-    try:
-        os.utime(_owner_path(log_dir))
-    except OSError:
-        pass  # marker swept (e.g. log dir recreated): reclaimed next tick
-
-
-def touch_owner_if_held(log_dir: str, owner: str) -> bool:
-    """Atomic check-then-touch under the takeover lock: re-read the marker
-    and touch it only while it is still OURS. Plain read+touch has a
-    TOCTOU — a touch landing just after a forced takeover's os.replace
-    refreshes the NEW owner's marker — which the flock closes, since the
-    takeover itself replaces under the same lock. Used by the heartbeat
-    and the tick re-assert; returns False when the lease is no longer
-    ours (fenced / released / swept)."""
-    with _takeover_lock(log_dir):
-        info = owner_info(log_dir)
-        if info is None or info.get("owner") != owner:
-            return False
-        touch_owner(log_dir)
-        return True
-
-
-HEARTBEAT_S = OWNER_FRESH_S / 4.0
-
-
-def heartbeat_owner(
-    log_dir: str,
-    owner: str,
-    interval_s: float = HEARTBEAT_S,
-    lost: threading.Event | None = None,
-) -> threading.Event:
-    """Keep a HELD lease fresh from a side thread while long maintenance
-    work is in flight — per-tick touches alone let the lease expire
-    mid-work whenever a single trim+compact pass runs longer than
-    OWNER_FRESH_S (plausible for a large-bucket Spark rewrite on a loaded
-    host), at which point a one-shot trim passes the freshness check and
-    can sweep the live _compact_tmp_ stage mid-swap. The beat re-reads
-    the marker and touches it only while it is still OURS, so a
-    heartbeat can never fight a forced takeover or a post-release
-    adopter. Returns the stop Event; set it when the work completes.
-
-    ``lost`` (optional) is set by the beat when it observes the marker is
-    no longer ours (a forced takeover fenced us, or the marker vanished)
-    — one-shot holders poll it between work units and abort instead of
-    finishing a full run under somebody else's lease (ADVICE r12 #1)."""
-    stop = threading.Event()
-
-    def _beat() -> None:
-        while not stop.wait(interval_s):
-            # atomic under the takeover lock: a beat can never land a
-            # touch on a marker a forced takeover replaced mid-check
-            if not touch_owner_if_held(log_dir, owner):
-                if lost is not None:
-                    lost.set()
-                return  # no longer ours: never heartbeat a foreign marker
-
-    threading.Thread(
-        target=_beat, daemon=True, name="jetstream-maintenance-heartbeat"
-    ).start()
-    return stop
-
-
-def release_owner(log_dir: str, owner: str) -> None:
-    """Remove the marker iff ``owner`` holds it."""
-    info = owner_info(log_dir)
-    if info is not None and info.get("owner") == owner:
-        try:
-            os.remove(_owner_path(log_dir))
-        except OSError:
-            pass
+def sealed_buckets(log_dir: str, now_us: int) -> list[int]:
+    """The log's sealed hour buckets, oldest first. Sealed = strictly
+    before the active hour: the writer only appends at the head, matching
+    the sequencer's monotonic clock, so a sealed bucket never grows."""
+    if not os.path.isdir(log_dir):
+        return []
+    names = (e.split("=", 1)[1] for e in os.listdir(log_dir) if e.startswith("hour_bucket="))
+    active = now_us // US_PER_HOUR
+    return sorted(b for b in (int(n) for n in names if n.lstrip("-").isdigit()) if b < active)
 
 
 # Prometheus families for the loop's counters (S27: the reference's trim
@@ -356,18 +153,14 @@ class MaintenanceLoop:
         ttl_us: int = DEFAULT_TTL_US,
         interval_s: float = 15.0,  # the reference's ticker (main.go:188)
         compact: bool = True,
-        target_files: int = 1,
         now_fn: Callable[[], int] = _now_us,
-        heartbeat_s: float = HEARTBEAT_S,
     ):
         self.spark = spark
         self.log_dir = log_dir
         self.ttl_us = ttl_us
         self.interval_s = interval_s
         self.compact = compact
-        self.target_files = target_files
         self.now_fn = now_fn
-        self._heartbeat_s = heartbeat_s  # injectable so tests shrink it
         # observability: scraped by callers the same way the consumer
         # metrics families are (S27) — counts, not gauges, so deltas
         # survive scrape gaps
@@ -381,26 +174,14 @@ class MaintenanceLoop:
         self._stop = threading.Event()
         self._woke = threading.Event()  # test hook: set after every tick
         self._thread: threading.Thread | None = None
-        # this loop's identity on the owner marker (pid alone cannot tell
-        # two loops in the same process apart)
-        self._owner = new_owner_token()
+        self._lock: MaintenanceLock | None = None  # held from start() to a clean stop()
 
     # --- one tick (public so tests and operators can drive it directly) ----
 
     def tick(self) -> None:
-        # re-assert ownership first: touch when ours (atomic under the
-        # takeover lock), claim when the marker is missing/stale (fresh
-        # log dir, or swept with a recreated directory), and REFUSE the
-        # tick when a different live owner holds the log (raises -> the
-        # error counter; trimming under a foreign owner is the exact race
-        # the marker exists to prevent)
-        if not touch_owner_if_held(self.log_dir, self._owner):
-            claim_owner(self.log_dir, self.interval_s, self._owner)  # adopts only if absent/stale
-        # heartbeat for the tick's duration: a single slow trim+compact
-        # pass must not outlive the freshness window while the loop is
-        # alive (the lease exists to fence exactly that window)
-        hb_stop = heartbeat_owner(self.log_dir, self._owner, self._heartbeat_s)
-        try:
+        """One trim + compaction pass. The started loop runs it under the
+        lock start() took; on an unstarted loop it takes the lock itself."""
+        with contextlib.nullcontext() if self._lock else MaintenanceLock(self.log_dir):
             now = self.now_fn()
             try:
                 self.counters["partitions_trimmed"] += trim_events(
@@ -414,51 +195,35 @@ class MaintenanceLoop:
             if self.compact:
                 self._compact_one_sealed(now)
             self.counters["ticks"] += 1
-        finally:
-            hb_stop.set()
 
     def _compact_one_sealed(self, now_us: int) -> None:
         """Compact the OLDEST fragmented sealed bucket, at most one per
-        tick. Sealed = strictly before the active hour (the writer only
-        appends at the head, matching the sequencer's monotonic clock);
-        the active bucket is never touched."""
-        active = now_us // US_PER_HOUR
-        if not os.path.isdir(self.log_dir):
-            return
-        buckets = sorted(
-            int(e.split("=", 1)[1])
-            for e in os.listdir(self.log_dir)
-            if e.startswith("hour_bucket=") and e.split("=", 1)[1].lstrip("-").isdigit()
-        )
-        for b in buckets:
-            if b >= active:
-                return  # active (or future-skewed) bucket: writer territory
-            part = os.path.join(self.log_dir, f"hour_bucket={b}")
-            try:
-                n_files = sum(1 for f in os.listdir(part) if f.endswith(".parquet"))
-            except OSError:
-                continue  # trimmed between listing and here
-            if n_files <= self.target_files:
-                continue
-            got = compact_bucket(
-                self.spark, self.log_dir, bucket=b, target_files=self.target_files
-            )
+        tick; the active bucket is never touched."""
+        for b in sealed_buckets(self.log_dir, now_us):
+            got = compact_bucket(self.spark, self.log_dir, bucket=b)
             if got == -1:
                 # an unmarked batch is still replayable into this bucket —
                 # ineligible until the pipeline marks it; try the next one
                 self.counters["buckets_skipped_unsafe"] += 1
-                continue
-            if got > self.target_files:
+            elif got > 1:
                 self.counters["buckets_compacted"] += 1
-            return  # one Spark rewrite per tick, fragmented or not
+                return  # one Spark rewrite per tick
 
     # --- lifecycle ----------------------------------------------------------
 
     def start(self) -> "MaintenanceLoop":
         assert self._thread is None, "maintenance loop already started"
-        # claim BEFORE the thread exists: a second loop (same or another
-        # process) fails fast here instead of racing the first ticker
-        claim_owner(self.log_dir, self.interval_s, self._owner)
+        # lock BEFORE the thread exists: a second actor (same or another
+        # process) fails fast here instead of racing this ticker
+        lock = MaintenanceLock(self.log_dir)
+        try:
+            # with the lock held no actor is mid-swap, so a leftover
+            # _compact_old_/_compact_tmp_ is a crashed compaction's
+            recover_compaction(self.log_dir)
+        except BaseException:
+            lock.release()
+            raise
+        self._lock = lock
         self._thread = threading.Thread(target=self._run, daemon=True, name="jetstream-maintenance")
         self._thread.start()
         return self
@@ -478,21 +243,19 @@ class MaintenanceLoop:
         (a wedged Spark tick). A hang is REPORTED, not raised: stop() runs
         in shutdown paths (cmd_ingest's finally), where a raise would
         mask the original exception and turn a clean Ctrl-C into a
-        traceback. The thread handle is kept on a hang so a later start()
-        still refuses to spawn a SECOND loop over the same log
-        (single-owner contract)."""
+        traceback. On a hang the thread handle and the lock are both
+        kept: the wedged tick may still be mid-trim/compact, so neither a
+        later start() nor another actor may run beside it until a later
+        stop() finds the thread gone, or the process exits."""
         self._stop.set()
-        if self._thread is None:
-            release_owner(self.log_dir, self._owner)
-            return "stopped"
-        self._thread.join(timeout=join_timeout_s)
-        if self._thread.is_alive():
-            # a hung tick may still be mid-trim/compact: ownership is NOT
-            # released — the marker ages out naturally if the tick never
-            # returns, which is exactly the adoptable-after-death contract
-            return "hung"
-        self._thread = None
-        release_owner(self.log_dir, self._owner)
+        if self._thread is not None:
+            self._thread.join(timeout=join_timeout_s)
+            if self._thread.is_alive():
+                return "hung"
+            self._thread = None
+        if self._lock is not None:
+            self._lock.release()
+            self._lock = None
         return "stopped"
 
     def render(self) -> str:

@@ -9,8 +9,9 @@ assertions are unchanged, but independent chains now run CONCURRENTLY
 from one module-scoped pool (each chain's own invocations stay strictly
 ordered — state handoffs inside a chain are the thing under test), and
 the tests assert on the captured results. Wall cost: longest chain
-instead of the sum. Chains each run at SPARK_GRAFT_CPUS=4, pool of 8 →
-≤32 requested cores, matching the box.
+instead of the sum. The pool width and each chain's SPARK_GRAFT_CPUS are
+derived from the host so that width × cores ≤ host cores: up to 8 chains
+at once, each given an equal share (8 × 4 on 32 cores, 4 × 1 on 4).
 """
 
 from __future__ import annotations
@@ -31,7 +32,10 @@ from jetstream_spark.atproto.normalize import normalize_frames
 from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
 from tests.fixtures import make_frames
 
-ENV = {**os.environ, "SPARK_GRAFT_CPUS": "4", "SPARK_GRAFT_DRIVER_MEM": "2g"}
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+POOL_WIDTH = min(8, os.cpu_count() or 1)
+CHAIN_CPUS = max(1, (os.cpu_count() or 1) // POOL_WIDTH)
+ENV = {**os.environ, "SPARK_GRAFT_CPUS": str(CHAIN_CPUS), "SPARK_GRAFT_DRIVER_MEM": "2g"}
 
 
 @pytest.fixture(scope="module")
@@ -53,7 +57,7 @@ def _run(*args: str, timeout: int = 300) -> subprocess.CompletedProcess:
         text=True,
         timeout=timeout,
         env=ENV,
-        cwd="/root/repo",
+        cwd=REPO,
     )
 
 
@@ -84,7 +88,7 @@ def _chain_log(log_dir: str) -> dict:
         stderr=subprocess.DEVNULL,
         text=True,
         env=ENV,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     try:
         port = None
@@ -300,7 +304,7 @@ def cli(spark, log_dir, tmp_path_factory):
         "scd2c": (_chain_scd2_compact, (mk("scd2c"),)),
         "query": (_chain_query, ()),
     }
-    with ThreadPoolExecutor(max_workers=8) as pool:
+    with ThreadPoolExecutor(max_workers=POOL_WIDTH) as pool:
         futs = {k: pool.submit(fn, *args) for k, (fn, args) in jobs.items()}
         out = {k: f.result(timeout=1200) for k, f in futs.items()}
     out["sql"]["n_log"] = n_sql_log

@@ -1,82 +1,65 @@
-"""The enforced single-maintenance-owner contract (VERDICT r10 asks #4).
+"""The enforced single-maintenance-owner contract.
 
 Trim and compaction are safe against readers and the ingest writer but
 not against a SECOND maintenance actor over the same log (a one-shot
 `trim` CLI can sweep a standing ticker's _compact_tmp_ stage mid-swap).
 The reference cannot hit this — its store is embedded and single-process
-(cmd/jetstream/main.go:188-205 runs trim inside the consumer). Here the
-contract is a lease: an owner marker under the log dir, claimed on
-start, touched every tick, released on clean stop, adoptable once stale.
+(cmd/jetstream/main.go:188-205 runs trim inside the consumer). Here every
+maintenance actor holds an exclusive flock on `<log_dir>/_maintenance.lock`
+for its whole life; the kernel drops it when the holder dies.
 """
 
 from __future__ import annotations
 
-import errno
 import os
+import subprocess
+import sys
 import threading
-import time
 
 import pytest
 
 from jetstream_spark.atproto import log as eventlog
-from jetstream_spark.atproto import maintenance as maint_mod
-from jetstream_spark.atproto.maintenance import (
-    OWNER_FRESH_S,
-    MaintenanceLoop,
-    claim_owner,
-    new_owner_token,
-    owner_info,
-    owner_is_fresh,
-    release_owner,
-)
+from jetstream_spark.atproto.maintenance import LOCK_FILE, MaintenanceLock, MaintenanceLoop
 from jetstream_spark.atproto.normalize import normalize_frames
 from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
 from tests.fixtures import make_frames
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _quiet_loop(spark, log_dir) -> MaintenanceLoop:
-    # huge interval + no compaction: the thread claims, ticks once over an
+    # huge interval + no compaction: the thread locks, ticks once over an
     # empty/static log, then sleeps — the test drives everything else
     return MaintenanceLoop(spark, log_dir, interval_s=3600, compact=False)
+
+
+def _is_free(log_dir: str) -> bool:
+    try:
+        MaintenanceLock(log_dir).release()
+    except RuntimeError:
+        return False
+    return True
 
 
 def test_second_loop_refused_until_first_releases(spark, tmp_path):
     log_dir = str(tmp_path / "log")
     first = _quiet_loop(spark, log_dir).start()
     try:
-        assert owner_is_fresh(log_dir)
-        with pytest.raises(RuntimeError, match="another maintenance owner"):
+        with pytest.raises(RuntimeError, match=f"held by another maintenance actor \\(pid {os.getpid()}\\)"):
             _quiet_loop(spark, log_dir).start()
     finally:
         assert first.stop() == "stopped"
-    # clean stop releases the lease: the log is claimable again
-    assert owner_info(log_dir) is None
+    # clean stop releases the lock: the log is lockable again
+    assert _is_free(log_dir)
     second = _quiet_loop(spark, log_dir).start()
-    assert owner_is_fresh(log_dir)
+    assert not _is_free(log_dir)
     assert second.stop() == "stopped"
-
-
-def test_stale_marker_is_adopted(spark, tmp_path):
-    """A dead process's marker must not fence the log forever: past the
-    freshness window the lease is adoptable (the standing loop touches its
-    marker every 15 s tick, so a live owner never goes stale)."""
-    log_dir = str(tmp_path / "log")
-    claim_owner(log_dir, interval_s=15.0, owner="dead-process:1")
-    path = os.path.join(log_dir, maint_mod.OWNER_MARKER)
-    old = time.time() - OWNER_FRESH_S - 1
-    os.utime(path, (old, old))
-    assert not owner_is_fresh(log_dir)
-    loop = _quiet_loop(spark, log_dir).start()
-    try:
-        assert owner_info(log_dir)["owner"] != "dead-process:1"
-    finally:
-        loop.stop()
 
 
 def test_hung_loop_keeps_the_lease(spark, tmp_path, monkeypatch):
     """A wedged tick may still be mid-trim/compact: stop() reporting
-    "hung" must NOT release the marker — a second actor stays fenced
-    until the marker ages out (the adoptable-after-death path)."""
+    "hung" must NOT release the lock — a second actor stays refused until
+    the tick returns and a later stop() completes."""
     log_dir = str(tmp_path / "log")
     loop = _quiet_loop(spark, log_dir)
     entered, release = threading.Event(), threading.Event()
@@ -92,49 +75,36 @@ def test_hung_loop_keeps_the_lease(spark, tmp_path, monkeypatch):
     try:
         assert entered.wait(10)
         assert loop.stop(join_timeout_s=0.5) == "hung"
-        assert owner_is_fresh(log_dir), "hung owner must keep the lease"
-        with pytest.raises(RuntimeError, match="another maintenance owner"):
-            claim_owner(log_dir, 15.0, new_owner_token())
+        with pytest.raises(RuntimeError, match="held by another maintenance actor"):
+            MaintenanceLock(log_dir)
     finally:
         release.set()
-        loop.stop(join_timeout_s=30)
+        assert loop.stop(join_timeout_s=30) == "stopped"
+    assert _is_free(log_dir)
 
 
-def test_release_requires_matching_owner(tmp_path):
+def test_oneshot_cli_refuses_under_fresh_owner(tmp_path, capsys, monkeypatch):
+    """The one-shot trim/compact commands refuse while a standing loop
+    holds the lock, and bail before any Spark session starts."""
+    from jetstream_spark import __main__ as cli
+
+    def no_spark(cpus):
+        raise AssertionError("a refused one-shot must not start Spark")
+
+    monkeypatch.setattr(cli, "_spark", no_spark)
     log_dir = str(tmp_path / "log")
-    claim_owner(log_dir, 15.0, owner="a:1")
-    release_owner(log_dir, "b:2")
-    assert owner_is_fresh(log_dir), "a non-owner's release must be a no-op"
-    release_owner(log_dir, "a:1")
-    assert owner_info(log_dir) is None
-
-
-def test_oneshot_cli_refuses_under_fresh_owner(tmp_path, capsys):
-    """The one-shot trim/compact commands respect the lease (and bail
-    before touching Spark); --force is the explicit override."""
-    from jetstream_spark.__main__ import _claim_for_oneshot, main
-
-    log_dir = str(tmp_path / "log")
-    claim_owner(log_dir, 15.0, owner=f"{os.getpid()}:standing")
-    assert main(["trim", "--data-dir", log_dir]) == 1
-    assert main(["compact", "--data-dir", log_dir]) == 1
+    with MaintenanceLock(log_dir):
+        assert cli.main(["trim", "--data-dir", log_dir]) == 1
+        assert cli.main(["compact", "--data-dir", log_dir]) == 1
     out = capsys.readouterr().out
-    assert "refusing" in out and "--force" in out
-    forced = _claim_for_oneshot(log_dir, force=True)
-    assert forced is not None, "--force must claim over a fresh foreign marker"
-    # the forced claim FENCES the standing actor: the marker is now the
-    # one-shot's, so the standing loop's next re-assert would refuse
-    assert owner_info(log_dir)["owner"] == forced
-    release_owner(log_dir, forced)
-    unforced = _claim_for_oneshot(log_dir, force=False)
-    assert unforced is not None, "a released lease is claimable without force"
-    release_owner(log_dir, unforced)
+    assert out.count("refusing: ") == 2 and f"pid {os.getpid()}" in out
+    assert _is_free(log_dir), "a refused one-shot must not leave the lock held"
 
 
 def test_oneshot_holds_lease_for_duration(tmp_path, monkeypatch, capsys):
-    """ADVICE r11 #3: the one-shot must CLAIM the lease, not just check it
-    — a standing loop starting mid-run must fail fast on the one-shot's
-    fresh marker instead of ticking concurrently."""
+    """The one-shot holds the lock for its whole run — a standing loop
+    starting mid-run must fail fast instead of ticking concurrently — and
+    releases it when done."""
     from jetstream_spark import __main__ as cli
 
     log_dir = str(tmp_path / "log")
@@ -142,183 +112,115 @@ def test_oneshot_holds_lease_for_duration(tmp_path, monkeypatch, capsys):
     seen: dict = {}
 
     def observing_trim(spark, data_dir, now_us, ttl_us):
-        seen["fresh_during_run"] = owner_is_fresh(data_dir)
-        info = owner_info(data_dir)
-        seen["owner_during_run"] = info and info.get("owner")
-        # a rival claim DURING the one-shot must refuse
-        try:
-            claim_owner(data_dir, 15.0, new_owner_token())
-            seen["rival_refused"] = False
-        except RuntimeError:
-            seen["rival_refused"] = True
+        seen["rival_refused"] = not _is_free(data_dir)
         return 0
 
     monkeypatch.setattr(cli, "_spark", lambda cpus: None)
     monkeypatch.setattr(eventlog, "trim_events", observing_trim)
     assert cli.main(["trim", "--data-dir", log_dir]) == 0
-    assert seen["fresh_during_run"], "one-shot must hold a fresh lease while working"
     assert seen["rival_refused"], "a standing loop starting mid-run must be refused"
-    assert owner_info(log_dir) is None, "one-shot must release the lease when done"
-
-
-def test_forced_oneshot_fences_standing_loop(spark, tmp_path):
-    """--force fences the standing loop instead of racing it: while the
-    forced claimant holds the marker, the loop's tick refuses (lands in
-    its error counter via _run); once released, the loop re-adopts."""
-    log_dir = str(tmp_path / "log")
-    loop = _quiet_loop(spark, log_dir)
-    claim_owner(log_dir, 15.0, loop._owner)  # simulate the started loop's claim
-    claim_owner(log_dir, 0.0, "oneshot:force", force=True)
-    with pytest.raises(RuntimeError, match="another maintenance owner"):
-        loop.tick()
-    assert loop.counters["ticks"] == 0, "a fenced tick must not run maintenance"
-    release_owner(log_dir, "oneshot:force")
-    loop.tick()  # re-adopts the released lease
-    assert loop.counters["ticks"] == 1
-    release_owner(log_dir, loop._owner)
-
-
-def test_heartbeat_keeps_lease_fresh_during_long_tick(spark, tmp_path, monkeypatch):
-    """ADVICE r11 #1 (medium): a single trim+compact tick longer than
-    OWNER_FRESH_S must NOT let the lease expire while the loop is alive —
-    the marker is heartbeat from a side thread for the tick's duration,
-    independent of tick length."""
-    log_dir = str(tmp_path / "log")
-    entered, release = threading.Event(), threading.Event()
-
-    def slow_trim(spark_, data_dir, now_us, ttl_us):
-        entered.set()
-        release.wait(30)
-        return 0
-
-    monkeypatch.setattr(maint_mod, "trim_events", slow_trim)
-    loop = MaintenanceLoop(
-        spark, log_dir, interval_s=3600, compact=False, heartbeat_s=0.05
-    )
-    loop.start()
-    try:
-        assert entered.wait(10)
-        path = os.path.join(log_dir, maint_mod.OWNER_MARKER)
-        m0 = os.stat(path).st_mtime
-        deadline = time.time() + 10
-        while os.stat(path).st_mtime <= m0 and time.time() < deadline:
-            time.sleep(0.05)
-        assert os.stat(path).st_mtime > m0, (
-            "the marker must be touched DURING a long tick, not only at its start"
-        )
-    finally:
-        release.set()
-        loop.stop()
+    assert _is_free(log_dir), "one-shot must release the lock when done"
 
 
 def test_claim_is_atomic_under_racing_claimants(tmp_path):
-    """ADVICE r11 #2: two actors starting in the same window must not both
-    win the claim. The marker is created with an atomic exclusive link, so
-    exactly one racing claimant succeeds and the rest refuse."""
+    """Actors starting in the same window must not both win: of 8 threads
+    racing to take the lock, exactly one succeeds and the rest refuse."""
     log_dir = str(tmp_path / "log")
     n = 8
     barrier = threading.Barrier(n)
-    results: list = [None] * n
+    locks: list = [None] * n
 
     def racer(i: int) -> None:
-        owner = f"racer:{i}"
         barrier.wait()
         try:
-            claim_owner(log_dir, 15.0, owner)
-            results[i] = owner
+            locks[i] = MaintenanceLock(log_dir)
         except RuntimeError:
-            results[i] = None
+            pass
 
     threads = [threading.Thread(target=racer, args=(i,)) for i in range(n)]
     for t in threads:
         t.start()
     for t in threads:
-        t.join()
-    winners = [r for r in results if r is not None]
-    assert len(winners) == 1, f"exactly one racing claimant may win, got {winners}"
-    assert owner_info(log_dir)["owner"] == winners[0]
-    # no staging leftovers from the losers (the persistent takeover lock
-    # file is deliberate infrastructure, not litter)
-    allowed = {maint_mod.OWNER_MARKER, maint_mod.TAKEOVER_LOCK}
-    leftovers = [e for e in os.listdir(log_dir) if e not in allowed]
-    assert not leftovers, f"losers must clean their staging files: {leftovers}"
-
-
-def test_stale_takeover_verifies_it_stuck(tmp_path, monkeypatch):
-    """ADVICE r11 #2, takeover half: when two actors replace a STALE marker
-    concurrently, the last writer wins — the loser must re-read, see the
-    rival's marker, and refuse instead of proceeding unfenced."""
-    log_dir = str(tmp_path / "log")
-    claim_owner(log_dir, 15.0, owner="dead:1")
-    path = os.path.join(log_dir, maint_mod.OWNER_MARKER)
-    old = time.time() - OWNER_FRESH_S - 1
-    os.utime(path, (old, old))
-    import json as _json
-
-    orig_replace = os.replace
-
-    def racing_replace(src, dst):
-        orig_replace(src, dst)
-        # a rival takeover lands right after ours
-        _json.dump({"owner": "rival:1", "pid": os.getpid(), "interval_s": 15.0},
-                   open(dst, "w"))
-
-    monkeypatch.setattr(maint_mod.os, "replace", racing_replace)
-    with pytest.raises(RuntimeError, match="another maintenance owner"):
-        claim_owner(log_dir, 15.0, owner="loser:1")
-    assert owner_info(log_dir)["owner"] == "rival:1"
+        t.join(timeout=30)
+        assert not t.is_alive()
+    winners = [lock for lock in locks if lock is not None]
+    assert len(winners) == 1, f"exactly one racing actor may win, got {len(winners)}"
+    assert os.listdir(log_dir) == [LOCK_FILE]
+    winners[0].release()
+    assert _is_free(log_dir)
 
 
 def test_kill9_owner_adopted_live_owner_fences(spark, tmp_path):
-    """VERDICT r11 ask #6: adopt under a LIVE owner, not just a dead-pid
-    marker. While a separate PROCESS holds and heartbeats the lease, a
-    local loop must refuse to start (no tick double-runs); after kill -9
-    the restart adopts immediately (pid-liveness beats the 120 s age
-    bound)."""
-    import subprocess
-    import sys
-
+    """While a separate PROCESS holds the lock, a local loop must refuse
+    to start; after kill -9 the kernel has dropped the lock and the
+    restart adopts the log at once."""
     log_dir = str(tmp_path / "log")
     script = (
-        "import sys, time\n"
-        "from jetstream_spark.atproto.maintenance import claim_owner, touch_owner\n"
-        f"log_dir = {log_dir!r}\n"
-        "claim_owner(log_dir, 0.2, owner='child-loop:1')\n"
-        "print('claimed', flush=True)\n"
-        "while True:\n"
-        "    time.sleep(0.1)\n"
-        "    touch_owner(log_dir)\n"
+        "import time\n"
+        "from jetstream_spark.atproto.maintenance import MaintenanceLock\n"
+        f"lock = MaintenanceLock({log_dir!r})\n"
+        "print('locked', flush=True)\n"
+        "time.sleep(300)\n"
     )
     child = subprocess.Popen(
-        [sys.executable, "-c", script],
-        stdout=subprocess.PIPE,
-        text=True,
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        [sys.executable, "-c", script], stdout=subprocess.PIPE, text=True, cwd=REPO
     )
     try:
-        assert child.stdout.readline().strip() == "claimed"
-        assert owner_is_fresh(log_dir)
-        with pytest.raises(RuntimeError, match="another maintenance owner"):
+        assert child.stdout.readline().strip() == "locked"
+        with pytest.raises(RuntimeError, match=f"\\(pid {child.pid}\\)"):
             _quiet_loop(spark, log_dir).start()
-        child.kill()  # SIGKILL: no release, marker left fresh by mtime
+        child.kill()  # SIGKILL: no release step runs
         child.wait(timeout=10)
-        # fresh-aged marker + dead pid -> adoptable NOW
-        assert not owner_is_fresh(log_dir)
         loop = _quiet_loop(spark, log_dir).start()
         try:
-            assert owner_info(log_dir)["pid"] == os.getpid()
+            with open(os.path.join(log_dir, LOCK_FILE)) as f:
+                assert f.read() == str(os.getpid())
         finally:
             assert loop.stop() == "stopped"
     finally:
         if child.poll() is None:
             child.kill()
             child.wait(timeout=10)
+        child.stdout.close()
+
+
+def test_start_recovers_crashed_compaction(spark, tmp_path):
+    """A crash between compact_bucket's two renames leaves the bucket only
+    at `_compact_old_N`, and an abandoned `_compact_tmp_M` stage keeps a
+    full copy on disk. The standing loop resolves both when it starts,
+    under the lock, instead of leaving them until the TTL trim."""
+    import shutil
+
+    log_dir = str(tmp_path / "log")
+    normalized = normalize_frames(
+        spark.createDataFrame(make_frames(), schema=RAW_FRAME_SCHEMA)
+    )
+    eventlog.ingest_batch(
+        normalized, log_dir, wall_clock_us=26 * eventlog.US_PER_HOUR + 1, batch_id=0
+    )
+    eventlog.mark_batch_done(log_dir, 0)
+    n = eventlog.replay(spark, log_dir, cursor=0).count()
+    part = os.path.join(log_dir, "hour_bucket=26")
+    shutil.copytree(part, os.path.join(log_dir, "_compact_tmp_27"))
+    os.rename(part, os.path.join(log_dir, "_compact_old_26"))
+
+    now_us = 30 * eventlog.US_PER_HOUR  # nothing expired, bucket 26 sealed
+    loop = MaintenanceLoop(spark, log_dir, interval_s=3600, now_fn=lambda: now_us).start()
+    try:
+        assert loop.wait_for_tick(60)
+    finally:
+        assert loop.stop() == "stopped"
+    entries = os.listdir(log_dir)
+    assert "hour_bucket=26" in entries, "the aside copy is the data: it must be renamed back"
+    assert not [e for e in entries if e.startswith("_compact_")], entries
+    assert loop.counters["errors"] == 0
+    assert eventlog.replay(spark, log_dir, cursor=0).count() == n
 
 
 def test_trim_partial_failure_credits_dropped(spark, tmp_path, monkeypatch):
-    """ADVICE r11 #4: partitions removed in a partially-failed trim pass
-    must still be counted — the tick credits TrimPartialFailure.dropped
-    before the error surfaces."""
+    """Partitions removed in a partially-failed trim pass must still be
+    counted — the tick credits TrimPartialFailure.dropped before the
+    error surfaces."""
     log_dir = str(tmp_path / "log")
     for b in (1, 2, 3):
         os.makedirs(os.path.join(log_dir, f"hour_bucket={b}"))
@@ -343,20 +245,19 @@ def test_trim_partial_failure_credits_dropped(spark, tmp_path, monkeypatch):
     loop = MaintenanceLoop(
         spark, log_dir, compact=False, interval_s=3600, now_fn=lambda: now_us
     )
-    claim_owner(log_dir, 3600, loop._owner)
     with pytest.raises(eventlog.TrimPartialFailure):
         loop.tick()
     assert loop.counters["partitions_trimmed"] == 2, (
         "the two removals that DID land must be credited despite the error"
     )
     assert loop.counters["ticks"] == 0
-    release_owner(log_dir, loop._owner)
+    assert _is_free(log_dir), "an unstarted loop's tick releases the lock it took"
 
 
 def test_render_escapes_label_values(tmp_path):
-    """ADVICE r11 #5: a log_dir containing a quote/backslash/newline must
-    render as VALID Prometheus text exposition (escaped label value), not
-    take the whole /metrics page down."""
+    """A log_dir containing a quote/backslash/newline must render as
+    VALID Prometheus text exposition (escaped label value), not take the
+    whole /metrics page down."""
     import re
 
     from jetstream_spark.operators.observability import prom_label
@@ -375,158 +276,23 @@ def test_render_escapes_label_values(tmp_path):
 
 
 def test_marker_invisible_to_log_readers(spark, tmp_path):
-    """The `_`-prefixed marker must never surface as data: replay over a
-    log with a live lease reads exactly the ingested events (same hidden-
-    file contract the _compact_* stages rely on)."""
+    """The `_`-prefixed lock file must never surface as data: replay over
+    a log whose lock is held reads exactly the ingested events (the same
+    hidden-file contract the _compact_* stages rely on)."""
     log_dir = str(tmp_path / "log")
     normalized = normalize_frames(
         spark.createDataFrame(make_frames(), schema=RAW_FRAME_SCHEMA)
     )
     n = normalized.count()
     eventlog.ingest_batch(normalized, log_dir, wall_clock_us=1_000_000, batch_id=0)
-    claim_owner(log_dir, 15.0, owner="reader-test:1")
-    assert eventlog.replay(spark, log_dir, cursor=0).count() == n
-
-
-def test_heartbeat_vs_forced_takeover_interleave(spark, tmp_path, monkeypatch):
-    """VERDICT r12 ask #4 (the last untested lease branch): --force claims
-    WHILE the previous owner's heartbeat thread is live mid-tick. The
-    beat's foreign-marker early-return (maintenance.py _beat) must fire —
-    it never touches the forced owner's marker — and the fenced loop's
-    next tick must refuse into tick_errors, then re-adopt once the forced
-    claimant releases."""
-    log_dir = str(tmp_path / "log")
-    entered, release = threading.Event(), threading.Event()
-    calls = {"n": 0}
-
-    def trim(spark_, data_dir, now_us, ttl_us):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            entered.set()
-            release.wait(30)
-        return 0
-
-    monkeypatch.setattr(maint_mod, "trim_events", trim)
-    loop = MaintenanceLoop(
-        spark, log_dir, interval_s=0.1, compact=False, heartbeat_s=0.05
-    )
-    loop.start()
-    try:
-        assert entered.wait(10)
-        # the forced takeover lands while tick 1's heartbeat is beating;
-        # check-then-touch is atomic under the takeover lock
-        # (touch_owner_if_held), so NO beat can land a touch after the
-        # replace — m0 is stable from the moment the claim returns
-        claim_owner(log_dir, 0.0, "oneshot:force", force=True)
-        path = os.path.join(log_dir, maint_mod.OWNER_MARKER)
-        m0 = os.stat(path).st_mtime
-        time.sleep(0.5)  # ~10 beat intervals
-        assert owner_info(log_dir)["owner"] == "oneshot:force"
-        assert os.stat(path).st_mtime == m0, (
-            "the fenced heartbeat must never touch the forced owner's marker"
-        )
-        release.set()  # in-flight tick completes; the NEXT tick is fenced
-        deadline = time.time() + 10
-        while loop.counters["errors"] == 0 and time.time() < deadline:
-            time.sleep(0.05)
-        assert loop.counters["errors"] >= 1, (
-            "the fenced loop's next tick must refuse into tick_errors"
-        )
-        ticks_fenced = loop.counters["ticks"]
-        release_owner(log_dir, "oneshot:force")
-        deadline = time.time() + 10
-        while loop.counters["ticks"] <= ticks_fenced and time.time() < deadline:
-            time.sleep(0.05)
-        assert loop.counters["ticks"] > ticks_fenced, (
-            "the loop must re-adopt once the forced claimant releases"
-        )
-    finally:
-        release.set()
-        loop.stop()
-
-
-def test_concurrent_stale_takeovers_exactly_one_wins(tmp_path):
-    """ADVICE r12 #1: the two-replacer window is CLOSED — the takeover
-    path runs under an fcntl.flock, so N claimants racing over a STALE
-    marker (e.g. two one-shot CLIs after the owner died) serialize:
-    exactly one wins and every loser refuses under the winner's fresh
-    lease; no interleaving lets two actors each verify their own marker."""
-    log_dir = str(tmp_path / "log")
-    claim_owner(log_dir, 15.0, owner="dead:1")
-    path = os.path.join(log_dir, maint_mod.OWNER_MARKER)
-    old = time.time() - OWNER_FRESH_S - 1
-    os.utime(path, (old, old))
-    n = 8
-    barrier = threading.Barrier(n)
-    results: list = [None] * n
-
-    def racer(i: int) -> None:
-        owner = f"takeover:{i}"
-        barrier.wait()
-        try:
-            claim_owner(log_dir, 15.0, owner)
-            results[i] = owner
-        except RuntimeError:
-            results[i] = None
-
-    threads = [threading.Thread(target=racer, args=(i,)) for i in range(n)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    winners = [r for r in results if r is not None]
-    assert len(winners) == 1, f"exactly one takeover may win, got {winners}"
-    assert owner_info(log_dir)["owner"] == winners[0]
-
-
-def test_claim_without_hardlink_support(tmp_path, monkeypatch):
-    """ADVICE r12 #3: on filesystems without hard links os.link raises a
-    plain OSError (EPERM/EOPNOTSUPP) — claiming must fall through to the
-    flock-guarded takeover path instead of failing outright, leave no
-    staging litter, and still fence rivals."""
-
-    def no_link(src, dst):
-        raise OSError(errno.EPERM, "Operation not permitted")
-
-    monkeypatch.setattr(maint_mod.os, "link", no_link)
-    log_dir = str(tmp_path / "log")
-    claim_owner(log_dir, 15.0, owner="nolink:1")
-    assert owner_info(log_dir)["owner"] == "nolink:1"
-    with pytest.raises(RuntimeError, match="another maintenance owner"):
-        claim_owner(log_dir, 15.0, owner="rival:1")
-    litter = [e for e in os.listdir(log_dir) if ".claim." in e]
-    assert not litter, f"staging files must be removed on all exit paths: {litter}"
-
-
-def test_aged_claim_litter_swept(tmp_path):
-    """ADVICE r12 #3: a claimant that crashed between writing and removing
-    its staging file leaves `.claim.*` litter; the next claim sweeps
-    entries older than the freshness window and keeps fresh ones (a live
-    concurrent claimant's staging must never be swept)."""
-    log_dir = str(tmp_path / "log")
-    os.makedirs(log_dir)
-    aged = os.path.join(log_dir, maint_mod.OWNER_MARKER + ".claim.crashed-1")
-    fresh = os.path.join(log_dir, maint_mod.OWNER_MARKER + ".claim.live-2")
-    for p in (aged, fresh):
-        with open(p, "w") as f:
-            f.write("{}")
-    old = time.time() - OWNER_FRESH_S - 1
-    os.utime(aged, (old, old))
-    claim_owner(log_dir, 15.0, owner="sweeper:1")
-    assert not os.path.exists(aged), "aged claim litter must be swept"
-    assert os.path.exists(fresh), "a fresh rival's staging file must be kept"
-    # a REFUSED claim also leaves no staging behind (the finally path)
-    with pytest.raises(RuntimeError, match="another maintenance owner"):
-        claim_owner(log_dir, 15.0, owner="loser:9")
-    assert not os.path.exists(
-        os.path.join(log_dir, maint_mod.OWNER_MARKER + ".claim.loser-9")
-    ), "a refused claimant must remove its staging file"
+    with MaintenanceLock(log_dir):
+        assert eventlog.replay(spark, log_dir, cursor=0).count() == n
 
 
 def test_oneshot_trim_reports_partial_failure(tmp_path, monkeypatch, capsys):
-    """ADVICE r12 #2: a partially-failed one-shot trim must print the
-    partitions that DID drop and the entries that failed, exit nonzero
-    cleanly (no traceback), and release the lease."""
+    """A partially-failed one-shot trim must print the partitions that
+    DID drop and the entries that failed, exit nonzero cleanly (no
+    traceback), and release the lock."""
     from jetstream_spark import __main__ as cli
 
     log_dir = str(tmp_path / "log")
@@ -540,67 +306,4 @@ def test_oneshot_trim_reports_partial_failure(tmp_path, monkeypatch, capsys):
     assert cli.main(["trim", "--data-dir", log_dir]) == 1
     out = capsys.readouterr().out
     assert "dropped 2" in out and "hour_bucket=2" in out
-    assert owner_info(log_dir) is None, "lease must be released after a partial failure"
-
-
-def test_heartbeat_signals_lost_on_foreign_marker(tmp_path):
-    """The one-shot's heartbeat sets ``lost`` when a forced takeover
-    fences it mid-run (ADVICE r12 #1) — the abort signal the compact
-    bucket loop polls between rewrites."""
-    from jetstream_spark.atproto.maintenance import heartbeat_owner
-
-    log_dir = str(tmp_path / "log")
-    claim_owner(log_dir, 0.0, owner="oneshot:1")
-    lost = threading.Event()
-    hb = heartbeat_owner(log_dir, "oneshot:1", interval_s=0.05, lost=lost)
-    try:
-        assert not lost.wait(0.3), "lost must not fire while the lease is ours"
-        claim_owner(log_dir, 0.0, owner="forcer:1", force=True)
-        assert lost.wait(5), "the beat must signal the lease loss"
-    finally:
-        hb.set()
-        release_owner(log_dir, "forcer:1")
-
-
-def test_oneshot_compact_aborts_when_lease_lost(tmp_path, monkeypatch, capsys):
-    """A fenced one-shot compact stops between bucket rewrites instead of
-    finishing a full run under somebody else's lease (ADVICE r12 #1)."""
-    import argparse
-
-    from jetstream_spark import __main__ as cli
-
-    log_dir = str(tmp_path / "log")
-    os.makedirs(os.path.join(log_dir, "hour_bucket=1"))
-    monkeypatch.setattr(cli, "_spark", lambda cpus: None)
-    monkeypatch.setattr(eventlog, "recover_compaction", lambda d: 0)
-    lost = threading.Event()
-    lost.set()
-    args = argparse.Namespace(data_dir=log_dir, cpus=1)
-    assert cli._compact_owned(args, lost) == 1
-    assert "lease lost" in capsys.readouterr().out
-
-
-def test_dead_pid_marker_is_adopted_immediately(spark, tmp_path):
-    """A crashed ingest must not fence its own restart for the freshness
-    window: a FRESH marker whose recording pid is gone is adoptable now."""
-    import subprocess
-    import sys
-
-    log_dir = str(tmp_path / "log")
-    dead = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
-                          capture_output=True, text=True)
-    dead_pid = int(dead.stdout.strip())
-    claim_owner(log_dir, 15.0, owner=f"{dead_pid}:1")
-    # rewrite the pid field to the exited process (claim records OUR pid)
-    import json as _json
-
-    path = os.path.join(log_dir, maint_mod.OWNER_MARKER)
-    info = _json.load(open(path))
-    info["pid"] = dead_pid
-    _json.dump(info, open(path, "w"))
-    assert not owner_is_fresh(log_dir), "dead-pid marker must not fence"
-    loop = _quiet_loop(spark, log_dir).start()
-    try:
-        assert owner_info(log_dir)["pid"] == os.getpid()
-    finally:
-        loop.stop()
+    assert _is_free(log_dir), "lock must be released after a partial failure"
