@@ -2,7 +2,7 @@
 
 Mirrors the reference's cmd/jetstream flags (main.go:31-89: --ws-url /
 --listen-addr / --data-dir / --event-ttl / --max-sub-rate /
---override-relay-cursor / --worker-count) on the Spark engine, so a user
+--override-relay-cursor) on the Spark engine, so a user
 of the reference can run the same lifecycle:
 
     python -m jetstream_spark serve  --data-dir ./data --listen-addr :6008
@@ -75,12 +75,7 @@ def cmd_ingest(args) -> int:
         from jetstream_spark.streaming.firehose import FirehoseDataSource
 
         spark.dataSource.register(FirehoseDataSource)
-        frames = (
-            spark.readStream.format("atproto_firehose")
-            .option("ws_url", args.ws_url)
-            .option("numPartitions", str(args.worker_count))
-            .load()
-        )
+        frames = spark.readStream.format("atproto_firehose").option("ws_url", args.ws_url).load()
     else:
         from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
 
@@ -405,10 +400,13 @@ def cmd_sql(args) -> int:
     """Ad-hoc ANSI SQL over the engine's tables — the interactive read
     surface the reference never had (its only read path is /subscribe).
     Registers the event log as `events_log` (hour-partition pruning and
-    filter pushdown apply exactly as in replay) and, with --sf-dir, the
-    analytics tables as views; then hands the statement to Catalyst."""
+    filter pushdown apply exactly as in replay) once the log holds a
+    bucket, and, with --sf-dir, the analytics tables as views; then hands
+    the statement to Catalyst."""
     spark = _spark(args.cpus)
-    if os.path.isdir(args.data_dir):
+    if os.path.isdir(args.data_dir) and any(
+        entry.startswith(("hour_bucket=", "_compact_old_")) for entry in os.listdir(args.data_dir)
+    ):
         from jetstream_spark.atproto.log import read_log
 
         read_log(spark, args.data_dir).createOrReplaceTempView("events_log")
@@ -477,14 +475,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--data-dir", **common["--data-dir"])
     p.add_argument("--ws-url", default="", help="websocket relay host:port — the real protocol (main.go --ws-url)")
     p.add_argument("--frames-dir", default="./frames", help="JSONL frames drop directory, read when --ws-url is empty")
-    p.add_argument(
-        "--worker-count", type=int, default=8,
-        help=(
-            "cap on source partitions per micro-batch (main.go --worker-count); partitions are sized "
-            "by seq span, at least 5000 seqs each, so a batch of at most 1000 seqs reads in one task "
-            "and the cap binds only on a first batch after a start that covers a large relay backlog"
-        ),
-    )
     p.add_argument(
         "--event-ttl-hours", type=int, default=24,
         help="standing retention: trim on a ticker like main.go:188-205 (0 disables maintenance)",

@@ -445,19 +445,6 @@ def mst_get_record_bytes(index: dict[str, bytes], commit_cid: str, path: str) ->
 # --- XRPC event-stream frame decode (the real upstream framing) -----------------
 
 
-def decode_xrpc_frame_seq(data: bytes) -> int | None:
-    """Just the `seq` of one subscribeRepos wire frame — the cheap decode
-    used by the planning tail connection (streaming/firehose.py), which
-    needs cursor positions but never the CAR payload. Error frames and
-    unknown/seq-less bodies return None."""
-    header, pos = cbor_decode_prefix(data, 0)
-    if header.get("op") == -1:
-        return None
-    body, _ = cbor_decode_prefix(data, pos)
-    seq = body.get("seq") if isinstance(body, dict) else None
-    return seq if isinstance(seq, int) else None
-
-
 def decode_xrpc_frame(data: bytes) -> dict | None:
     """One `com.atproto.sync.subscribeRepos` websocket BINARY frame → the
     engine's RAW_FRAME_SCHEMA dict. The wire is two concatenated DAG-CBOR

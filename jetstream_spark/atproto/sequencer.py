@@ -10,7 +10,7 @@ Spark version — two-phase distributed sequencing, no single-partition stage:
      (SURVEY §1.5 option b: the tiebreak makes assignment reproducible;
      the reference's own order is arrival order, i.e. weaker),
   2. one cheap job counts rows per partition → cumulative offsets
-     (driver-side array of numPartitions longs — trivially small),
+     (driver-side array of one long per partition — trivially small),
   3. an Arrow-batched pass assigns
      time_us = base + global_rank, where
      base = max(last_time_us + 1, wall_clock_us)

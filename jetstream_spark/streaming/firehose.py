@@ -1,9 +1,10 @@
 """S1/S2 — the firehose as a Spark 4 Python data source.
 
 The reference dials `com.atproto.sync.subscribeRepos` over a websocket and
-fans frames to a worker pool (cmd/jetstream/main.go:294-328, worker pool
-main.go:150). Here that becomes a `DataSource`/`DataSourceStreamReader`
-on the same wire, and only that wire:
+hands each frame to its worker queue, capped at 1,000 frames
+(cmd/jetstream/main.go:294-328, queue cap main.go:49-54). Here that
+becomes a `SimpleDataSourceStreamReader` on the same wire, and only that
+wire:
 
   * `ws_url` ("host:port", "ws://host:port", or "wss://host:port" for
     TLS, the real relay's form; `tls_ca` names a CA bundle for private
@@ -12,23 +13,22 @@ on the same wire, and only that wire:
     DAG-CBOR header+body events with CAR blocks. A stream without it
     raises ValueError.
   * offsets = the upstream relay `seq` (the reference's cursor unit for
-    the *upstream* connection — persist.go:19-23): `{"seq": N}`. The
-    relay serves nothing but the subscribe socket, so the driver learns
-    the head from one persistent tail subscription (_WsTail).
-  * partitions = contiguous seq sub-ranges per microbatch, sized by the
-    batch's seq span: at least MIN_SEQS_PER_PARTITION seqs each, at most
-    `numPartitions` of them (the cap plays the role of --worker-count; a
-    small batch reads in one task, since each extra partition costs a
-    relay dial and a Python-worker round trip). Every batch after the
-    first spans at most `batch_size` seqs (default 1000: one partition),
-    so several partitions, and the `numPartitions` cap, apply only to the
-    first batch after a start, which `batch_size` does not limit and
-    which can cover a relay backlog. Per-partition reads are independent,
-    matching the pool's per-repo independence guarantee, S2/P5
-  * each partition's `read()` dials by cursor and yields RAW_FRAME_SCHEMA
-    rows, running CAR/CBOR decode (S5/S8) inline via the pure-Python
-    DAG-CBOR/CAR reader (atproto/carcbor.py::decode_xrpc_frame — no
-    libipld needed).
+    the *upstream* connection — persist.go:19-23): `{"seq": N}`.
+  * reading: the driver keeps ONE relay connection (_WsTail). It puts
+    each frame it receives into a buffer of at most `batch_size` frames
+    (default 1000, the reference's queue cap) and stops reading while
+    the buffer is full, so memory stays bounded behind any backlog. Each
+    micro-batch's `read(start)` takes at most `batch_size` buffered
+    frames, decodes them (S5/S8: CAR/CBOR via the pure-Python reader,
+    atproto/carcbor.py::decode_xrpc_frame — no libipld needed) and
+    returns the rows with `{"seq": <last seq>}`. Spark ships those rows
+    with the batch's plan and serves every read of the batch from its
+    block manager: no Python worker task and no second dial per batch.
+    `batch_size` is also the ingest throttle (maxOffsetsPerTrigger in
+    Spark terms, S20), and it bounds every batch, the first after a
+    restart included.
+  * crash replay: a batch that is in the offset log but not committed is
+    re-read by `readBetweenOffsets`, which dials by cursor (_ws_fetch).
 
 Register + use:
 
@@ -44,45 +44,39 @@ plaintext and TLS relays).
 
 from __future__ import annotations
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+import collections
+import threading
+import time
+
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 from jetstream_spark import wsutil
-from jetstream_spark.atproto.carcbor import CborError, decode_xrpc_frame, decode_xrpc_frame_seq
+from jetstream_spark.atproto.carcbor import CborError, decode_xrpc_frame
 from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
 
 SUBSCRIBE_REPOS = "/xrpc/com.atproto.sync.subscribeRepos"
 
-# Source partitions are sized by the batch's seq span: `numPartitions` is
-# a cap, and a partition covers at least this many seqs, because each
-# extra partition is one more relay dial and Python-worker task. Measured
-# on 4 cores with the perfbench relay frames through the ingest handler,
-# one partition was as fast or faster up to 5,000 seqs (a 1,000-seq batch
-# took 1.2 s in one or two, 1.8 s in eight), and about 5,000 seqs per
-# partition was fastest at 10,000-20,000 (numbers under ROADMAP item 2).
-MIN_SEQS_PER_PARTITION = 5000
+
+def _decode(payload: bytes) -> dict | None:
+    """One wire frame → its RAW_FRAME_SCHEMA dict, or None for a frame to
+    skip. A corrupt frame is data, not a query-killing event: it is
+    skipped like an unknown event type (the reference's HandleRepoStream
+    default case); an error FRAME (op = -1) still raises via
+    decode_xrpc_frame itself (consumer.go:156-159)."""
+    try:
+        return decode_xrpc_frame(payload)
+    except CborError:
+        return None
 
 
 def _ws_fetch(ws_url: str, start: int, end: int, tls_ca: str = ""):
     """The reference's dial semantics (cmd/jetstream/main.go:294-328):
-    websocket dial with `?cursor=start`, each BINARY frame a DAG-CBOR
-    header+body event, decoded by carcbor.decode_xrpc_frame — CAR blocks
-    and all. Detach past `end`. Each partition dials independently — the
-    S2 worker-pool shape."""
+    websocket dial with `?cursor=start`, each BINARY frame decoded, and
+    the frames with start < seq <= end yielded. Detach past `end`."""
     conn, f = wsutil.dial(ws_url, f"{SUBSCRIBE_REPOS}?cursor={start}", tls_ca)
     try:
         for payload in wsutil.read_messages(conn, f, wsutil.BINARY):
-            try:
-                frame = decode_xrpc_frame(payload)
-            except CborError:
-                # one corrupt wire frame is data, not a task-killing event:
-                # skip it exactly like unknown event types (the reference's
-                # HandleRepoStream default case); error FRAMES (op = -1)
-                # still raise via decode_xrpc_frame itself.
-                continue
+            frame = _decode(payload)
             if frame is None:
                 continue
             seq = frame["seq"]
@@ -97,24 +91,23 @@ def _ws_fetch(ws_url: str, start: int, end: int, tls_ca: str = ""):
 
 
 class _WsTail:
-    """Planning-side head tracker. The real
+    """The driver's one relay connection. The real
     `com.atproto.sync.subscribeRepos` relay serves NOTHING but the
-    subscribe socket (cmd/jetstream/main.go:294-328), so microbatch
-    planning can't ask an out-of-band route how far it may read. Instead
-    the driver keeps ONE persistent tail subscription and uses the highest
-    seq it has observed on the wire as `latestOffset` — exactly the
-    information the reference's consumer loop has. The tail decodes only
-    each frame's seq (decode_xrpc_frame_seq — no CAR walk); full decode
-    stays in the executor partitions. Reconnects with `?cursor=<last
-    seen>` on any socket error, so planning survives relay restarts."""
+    subscribe socket (cmd/jetstream/main.go:294-328), so the frames a
+    micro-batch reads are the frames this connection has received. It
+    buffers at most `capacity` raw frames and blocks while the buffer is
+    full, which stops reading the socket (the reference's bounded queue).
+    On any socket error it re-dials with `?cursor=<last seq read>`,
+    dropping what it had buffered past that seq (the new connection
+    sends it again), so reading survives relay restarts."""
 
-    def __init__(self, ws_url: str, cursor: int, tls_ca: str = ""):
-        import threading
-
+    def __init__(self, ws_url: str, cursor: int, capacity: int, tls_ca: str = ""):
         self.ws_url = ws_url
         self.tls_ca = tls_ca
-        self.seq = cursor
-        self._seen_frame = threading.Event()
+        self.capacity = capacity
+        self.cursor = cursor  # highest seq the reader has taken
+        self._frames: collections.deque[bytes] = collections.deque()
+        self._cv = threading.Condition()
         self._stop = threading.Event()
         self._thread = threading.Thread(
             target=self._run, name="firehose-ws-tail", daemon=True
@@ -123,17 +116,17 @@ class _WsTail:
 
     def _run(self) -> None:
         while not self._stop.is_set():
+            with self._cv:
+                self._frames.clear()
+                cursor = self.cursor
             conn = None
             try:
-                conn, f = wsutil.dial(self.ws_url, f"{SUBSCRIBE_REPOS}?cursor={self.seq}", self.tls_ca)
+                conn, f = wsutil.dial(self.ws_url, f"{SUBSCRIBE_REPOS}?cursor={cursor}", self.tls_ca)
                 for payload in wsutil.read_messages(conn, f, wsutil.BINARY):
-                    try:
-                        seq = decode_xrpc_frame_seq(payload)
-                    except CborError:
-                        continue
-                    if seq is not None and seq > self.seq:
-                        self.seq = seq
-                        self._seen_frame.set()
+                    with self._cv:
+                        while len(self._frames) >= self.capacity and not self._stop.is_set():
+                            self._cv.wait(0.2)
+                        self._frames.append(payload)
                     if self._stop.is_set():
                         return
             except (OSError, EOFError, ConnectionError):
@@ -143,48 +136,45 @@ class _WsTail:
                     conn.close()
             self._stop.wait(0.2)  # backoff before re-dial
 
-    def head(self, wait_first: float = 0.0) -> int:
-        """Current head. `wait_first` (cold start only) blocks until the
-        tail has both seen a frame AND gone quiet for one poll interval —
-        i.e. the reconnect replay of the relay's backlog has drained — so
-        the first plan after a (re)start sees the real head, not whatever
-        prefix the thread happened to have replayed when asked. Capped at
-        `wait_first` seconds: on a relay that never goes quiet (a live
-        firehose) any snapshot is valid, the next microbatch plans further."""
-        if wait_first > 0:
-            import time
+    def settle(self, timeout: float) -> None:
+        """Cold start only: block until the buffer is full, or has frames
+        and received none for one poll interval — i.e. the relay's backlog up
+        to the buffer's capacity has arrived — so the first batch after a
+        (re)start is not whatever prefix the connection happened to have
+        read. Capped at `timeout` seconds: on a relay that never goes
+        quiet (a live firehose) any prefix is valid, the next batch reads
+        further."""
+        deadline = time.monotonic() + timeout
+        last = -1
+        while time.monotonic() < deadline:
+            n = len(self._frames)
+            if n >= self.capacity or (n > 0 and n == last):
+                return
+            last = n
+            time.sleep(0.25)
 
-            deadline = time.monotonic() + wait_first
-            last = -1
-            while time.monotonic() < deadline:
-                cur = self.seq
-                if cur == last and self._seen_frame.is_set():
-                    break
-                last = cur
-                time.sleep(0.25)
-        return self.seq
+    def take(self, n: int) -> list[bytes]:
+        """Up to `n` buffered frames, oldest first."""
+        with self._cv:
+            out = [self._frames.popleft() for _ in range(min(n, len(self._frames)))]
+            self._cv.notify()
+        return out
 
     def stop(self) -> None:
         self._stop.set()
 
 
-class SeqRange(InputPartition):
-    def __init__(self, start: int, end: int, ws_url: str, tls_ca: str = ""):
-        self.start = start
-        self.end = end
-        self.ws_url = ws_url
-        self.tls_ca = tls_ca
-
-
-class FirehoseStreamReader(DataSourceStreamReader):
+class FirehoseStreamReader(SimpleDataSourceStreamReader):
     """Offsets are upstream seq numbers; progress is monotone and resumes
     from the checkpointed offset exactly like the reference's
-    `override-relay-cursor`/cursor-resume logic (main.go:280-297)."""
+    `override-relay-cursor`/cursor-resume logic (main.go:280-297). The
+    offsets live in the Spark checkpoint (the S12 analogue), so the relay
+    needs no ack: its replay is by cursor."""
 
     def __init__(self, options: dict):
         self.ws_url = options.get("ws_url", "")
         # checked here: a missing or malformed URL would otherwise fail
-        # only inside the planning tail's thread, and the query would
+        # only inside the relay connection's thread, and the query would
         # silently read nothing
         try:
             wsutil.parse_url(self.ws_url)
@@ -193,65 +183,51 @@ class FirehoseStreamReader(DataSourceStreamReader):
                 f"atproto_firehose needs a ws_url option of the form [ws://|wss://]host:port, got {self.ws_url!r}"
             ) from None
         self.batch_size = int(options.get("batch_size", "1000"))
-        self.num_partitions = int(options.get("numPartitions", "4"))
         self.tls_ca = options.get("tls_ca", "")
-        self._last_end: int | None = None
         self._tail: _WsTail | None = None
-
-    def _head_seq(self) -> int:
-        """Highest seq the relay has shown, from a persistent tail
-        subscription (_WsTail): the ONLY thing a real
-        `com.atproto.sync.subscribeRepos` relay offers is the subscribe
-        socket itself (cmd/jetstream/main.go:294-328), so planning needs
-        no out-of-band route."""
-        if self._tail is None:
-            self._tail = _WsTail(self.ws_url, 0, self.tls_ca)
-            # cold start: give the tail one chance to observe the backlog
-            # before the first plan, else an empty relay (or a slow dial)
-            # would make batch 0 a no-op and processAllAvailable could
-            # return before any data flows
-            return self._tail.head(wait_first=5.0)
-        return self._tail.head()
 
     def initialOffset(self) -> dict:
         return {"seq": 0}
 
-    def latestOffset(self) -> dict:
-        # advance at most batch_size seqs per microbatch — the ingest
-        # throttle (the reference's queue cap, main.go:49-54 / P6-P7;
-        # maxOffsetsPerTrigger in Spark terms)
-        head = self._head_seq()
-        if self._last_end is not None:
-            head = min(head, self._last_end + self.batch_size)
-        self._last_end = head
-        return {"seq": head}
+    def read(self, start: dict):
+        """The next micro-batch: at most `batch_size` of the frames the
+        relay connection has received past `start`, decoded here on the
+        driver, and the seq of the last one as the batch's end offset."""
+        hi = start["seq"]
+        if self._tail is None:
+            # the connection opens at the first read, from the offset
+            # Spark resumes at; the cold start gives it one chance to
+            # receive the backlog, else an empty relay (or a slow dial)
+            # would make batch 0 a no-op and processAllAvailable could
+            # return before any data flows
+            self._tail = _WsTail(self.ws_url, hi, self.batch_size, self.tls_ca)
+            self._tail.settle(timeout=5.0)
+        rows = []
+        for payload in self._tail.take(self.batch_size):
+            frame = _decode(payload)
+            # a re-dial sends again what was taken before it
+            if frame is not None and frame["seq"] > hi:
+                rows.append(_to_row(frame))
+                hi = frame["seq"]
+        self._tail.cursor = hi
+        return iter(rows), {"seq": hi}
 
-    def partitions(self, start: dict, end: dict):
-        lo, hi = start["seq"], end["seq"]
-        if hi <= lo:
-            return [SeqRange(lo, lo, self.ws_url, self.tls_ca)]
-        n = max(1, min(self.num_partitions, (hi - lo) // MIN_SEQS_PER_PARTITION))
-        step = -(-(hi - lo) // n)  # ceil div
-        return [
-            SeqRange(s, min(s + step, hi), self.ws_url, self.tls_ca)
-            for s in range(lo, hi, step)
-        ]
-
-    def read(self, partition: SeqRange):
-        """Yield frames with start < seq <= end, decoded (S5/S8) here in
-        the executor."""
-        for frame in _ws_fetch(partition.ws_url, partition.start, partition.end, partition.tls_ca):
-            yield tuple(_to_row_value(frame.get(field.name), field.name) for field in RAW_FRAME_SCHEMA.fields)
-
-    def commit(self, end: dict) -> None:
-        # offsets live in the Spark checkpoint (the S12 analogue); the
-        # transport needs no server-side ack (websocket replay is by cursor)
-        pass
+    def readBetweenOffsets(self, start: dict, end: dict):
+        """Crash replay of a batch in the offset log but not committed:
+        re-dial the relay by cursor for start < seq <= end."""
+        return (_to_row(frame) for frame in _ws_fetch(self.ws_url, start["seq"], end["seq"], self.tls_ca))
 
     def stop(self) -> None:
+        # for callers that drive the reader themselves: Spark does not
+        # forward stop to a simple reader, and the connection's daemon
+        # thread ends with the query's planner process
         if self._tail is not None:
             self._tail.stop()
             self._tail = None
+
+
+def _to_row(frame: dict) -> tuple:
+    return tuple(_to_row_value(frame.get(field.name), field.name) for field in RAW_FRAME_SCHEMA.fields)
 
 
 def _to_row_value(value, field_name: str):
@@ -277,5 +253,5 @@ class FirehoseDataSource(DataSource):
     def schema(self):
         return RAW_FRAME_SCHEMA
 
-    def streamReader(self, schema) -> FirehoseStreamReader:
+    def simpleStreamReader(self, schema) -> FirehoseStreamReader:
         return FirehoseStreamReader(self.options)

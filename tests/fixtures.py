@@ -211,6 +211,7 @@ class WsRelay:
         self.frames: list[tuple[int, bytes]] = []  # (seq, wire bytes)
         self.pongs: list[tuple[bool, bytes]] = []  # (was_masked, payload)
         self.non_ws_requests: list[str] = []  # paths probed without upgrade
+        self.dials: list[int] = []  # the cursor of every subscribe upgrade
         self.lock = threading.Lock()
         outer = self
 
@@ -242,6 +243,8 @@ class WsRelay:
                     cursor = 0
                     if "cursor=" in path:
                         cursor = int(path.split("cursor=")[1].split("&")[0])
+                    with outer.lock:
+                        outer.dials.append(cursor)
                     # a spec-conforming relay pings idle clients; the client
                     # MUST answer with a MASKED pong (RFC 6455 §5.1/§5.5.3)
                     self.wfile.write(SubscribeServer._ws_frame(b"hb", opcode=0x9))

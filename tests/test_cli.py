@@ -364,6 +364,20 @@ def test_cli_sql(cli):
 
 
 @pytest.mark.timeout(300)
+def test_cli_sql_on_a_log_dir_without_buckets(spark, tmp_path, capsys):
+    """A fresh ingest's data dir holds no bucket before its first commit:
+    `sql` still runs a statement that does not read the log, instead of
+    failing to infer the empty log's schema."""
+    from jetstream_spark.__main__ import main
+
+    spark.catalog.dropTempView("events_log")
+    (tmp_path / "_maintenance.lock").write_text("1\n")
+    assert main(["sql", "SELECT 1 AS one", "--data-dir", str(tmp_path), "--format", "json"]) == 0
+    assert json.loads(capsys.readouterr().out.splitlines()[-1]) == {"one": 1}
+    assert not spark.catalog.tableExists("events_log")
+
+
+@pytest.mark.timeout(300)
 def test_cli_ann_stream_drain(cli):
     out = cli["ann"]["run"]
     assert out.returncode == 0, out.stderr[-2000:]

@@ -1,24 +1,21 @@
 """The custom firehose data source (S1): the golden frame set over the
-relay's websocket, composed with the normalize→sequence→log pipeline,
-and partition sizing and coverage."""
+relay's websocket, composed with the normalize→sequence→log pipeline;
+the `batch_size` bound on every batch, crash replay by re-dial, and an
+error frame failing the query."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
 
 from jetstream_spark.atproto import log as eventlog
+from jetstream_spark.atproto.carcbor import cbor_encode
 from jetstream_spark.atproto.schema import RAW_FRAME_SCHEMA
-from jetstream_spark.streaming.firehose import FirehoseDataSource, FirehoseStreamReader
+from jetstream_spark.streaming.firehose import FirehoseDataSource
 from jetstream_spark.streaming.pipeline import start_ingest
-from tests.fixtures import (
-    WsRelay,
-    commit_frame_bytes,
-    identity_frame_bytes,
-    make_frames,
-    wire_frame,
-)
+from tests.fixtures import WsRelay, commit_frame_bytes, make_frames, wire_frame
 
 
 @pytest.fixture(scope="module")
@@ -34,13 +31,47 @@ def _golden_relay(frames: list[dict]) -> WsRelay:
     return relay
 
 
-def _firehose_stream(spark, relay: WsRelay):
-    return (
-        spark.readStream.format("atproto_firehose")
-        .option("ws_url", f"127.0.0.1:{relay.port}")
-        .option("numPartitions", "4")
-        .load()
-    )
+def _commit_relay(n: int) -> WsRelay:
+    """A relay holding seqs 1..n, one #commit each, record key `rk{seq}`."""
+    relay = WsRelay()
+    for s in range(1, n + 1):
+        relay.append(s, commit_frame_bytes(s, f"did:plc:u{s % 5}", f"post {s}"))
+    return relay
+
+
+def _firehose_stream(spark, relay: WsRelay, batch_size: int | None = None):
+    reader = spark.readStream.format("atproto_firehose").option("ws_url", f"127.0.0.1:{relay.port}")
+    if batch_size is not None:
+        reader = reader.option("batch_size", str(batch_size))
+    return reader.load()
+
+
+def _ingest_until_drained(spark, relay: WsRelay, log_dir: str, ckpt: str, batch_size: int) -> None:
+    q = start_ingest(_firehose_stream(spark, relay, batch_size), log_dir, ckpt, wall_clock_us=1_000_000)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def _source_offsets(ckpt: str) -> dict[int, int]:
+    """batch id → the end seq the offset log planned for it."""
+    out = {}
+    for name in os.listdir(os.path.join(ckpt, "offsets")):
+        if name.isdigit():
+            with open(os.path.join(ckpt, "offsets", name)) as f:
+                out[int(name)] = json.loads(f.read().splitlines()[-1])["seq"]
+    return out
+
+
+def _committed(ckpt: str) -> set[int]:
+    return {int(n) for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit()}
+
+
+def _assert_each_commit_once(spark, log_dir: str, n: int) -> None:
+    rows = eventlog.read_log(spark, log_dir).select("time_us", "commit.rkey").collect()
+    assert sorted(r["rkey"] for r in rows) == sorted(f"rk{s}" for s in range(1, n + 1))
+    assert len({r["time_us"] for r in rows}) == n
 
 
 def test_stream_without_ws_url_raises():
@@ -49,7 +80,51 @@ def test_stream_without_ws_url_raises():
     the option, instead of reading nothing forever."""
     for options in ({}, {"ws_url": ""}, {"ws_url": "no-port"}, {"replay_dir": "/tmp/frames"}):
         with pytest.raises(ValueError, match="ws_url"):
-            FirehoseDataSource(options).streamReader(RAW_FRAME_SCHEMA)
+            FirehoseDataSource(options).simpleStreamReader(RAW_FRAME_SCHEMA)
+
+
+@pytest.mark.timeout(120)
+def test_reads_take_each_frame_once_across_a_redial():
+    """The relay connection's thread fills the buffer while `read` drains
+    it, with the interpreter switching threads as often as it can. The
+    test relay closes a connection after 2 s without new frames, so a
+    pause in reading makes the connection re-dial from the last seq read,
+    dropping what it had buffered past it, and the second half of the
+    frames arrives on the new connection. The batches still hold each
+    seq once, in order, at most `batch_size` frames each."""
+    import sys
+    import time
+
+    half, batch_size = 150, 7
+    relay = _commit_relay(half)
+    options = {"ws_url": f"127.0.0.1:{relay.port}", "batch_size": str(batch_size)}
+    reader = FirehoseDataSource(options).simpleStreamReader(RAW_FRAME_SCHEMA)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    seqs, offset, paused = [], reader.initialOffset(), False
+    deadline = time.monotonic() + 60
+    try:
+        while offset["seq"] < 2 * half and time.monotonic() < deadline:
+            rows, end = reader.read(offset)
+            batch = [row[2] for row in rows]
+            assert len(batch) <= batch_size
+            assert end["seq"] == (batch[-1] if batch else offset["seq"])
+            seqs += batch
+            offset = end
+            if not batch:
+                time.sleep(0.01)
+            if not paused and len(seqs) >= 10 * batch_size:
+                paused = True
+                time.sleep(2.5)  # the relay closes the idle connection
+            if offset["seq"] == half and len(relay.frames) == half:
+                for s in range(half + 1, 2 * half + 1):
+                    relay.append(s, commit_frame_bytes(s, "did:plc:late", f"post {s}"))
+    finally:
+        sys.setswitchinterval(interval)
+        reader.stop()
+        relay.stop()
+    assert seqs == list(range(1, 2 * half + 1))
+    assert len(relay.dials) >= 2 and 0 < relay.dials[1] <= half, relay.dials
 
 
 @pytest.mark.timeout(300)
@@ -83,32 +158,19 @@ def test_firehose_ingest_marks_batches_done_and_bucket_compacts(registered, tmp_
     """The firehose ingest path writes a done-marker for every batch it
     commits, so a bucket it filled is compactable: with no marker every
     batch-tagged file stays pending and compact_bucket refuses (-1).
-
-    Two runs on one checkpoint make the two batches: `batch_size` bounds
-    only the batches after a start's first, which reads the whole backlog
-    the relay holds, and a restart's first plan waits for the relay to go
-    quiet, so neither run can finish before its frames arrive."""
+    A `batch_size` below the golden set's frame count makes the batches."""
     spark = registered
     log_dir = str(tmp_path / "log")
     ckpt = str(tmp_path / "ckpt")
-    frames = make_frames()
-    half = len(frames) // 2
-    relay = WsRelay()
+    relay = _golden_relay(make_frames())
     try:
-        for part in (frames[:half], frames[half:]):
-            for frame in part:
-                relay.append(frame["seq"], wire_frame(frame))
-            q = start_ingest(_firehose_stream(spark, relay), log_dir, ckpt, wall_clock_us=1_000_000)
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        _ingest_until_drained(spark, relay, log_dir, ckpt, batch_size=20)
     finally:
         relay.stop()
 
     # every batch Spark committed is done-marked, and so is every batch
     # that left a file in the (single) hour bucket
-    committed = {int(n) for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit()}
+    committed = _committed(ckpt)
     done = eventlog.load_done_batches(log_dir)
     assert len(committed) >= 2 and committed <= done
     part = os.path.join(log_dir, "hour_bucket=0")
@@ -123,58 +185,81 @@ def test_firehose_ingest_marks_batches_done_and_bucket_compacts(registered, tmp_
     assert after == before
 
 
-# --- partition sizing (S2): seq span, capped by numPartitions ----------------
-def _ranges(n_partitions: str, lo: int, hi: int) -> list[tuple[int, int]]:
-    reader = FirehoseStreamReader({"ws_url": "h:1", "numPartitions": n_partitions})
-    return [(p.start, p.end) for p in reader.partitions({"seq": lo}, {"seq": hi})]
-
-
-def _assert_tiles(ranges: list[tuple[int, int]], lo: int, hi: int) -> None:
-    """Contiguous, gap-free, non-overlapping cover of (lo, hi]."""
-    assert ranges[0][0] == lo and ranges[-1][1] == hi
-    assert all(a_end == b_start for (_, a_end), (b_start, _) in zip(ranges, ranges[1:]))
-    assert all(start < end for start, end in ranges)
-
-
-def test_partitions_sized_by_seq_span():
-    from jetstream_spark.streaming.firehose import MIN_SEQS_PER_PARTITION
-
-    small = _ranges("8", 1_000, 1_200)
-    assert small == [(1_000, 1_200)]
-    big = _ranges("8", 0, 100_000)
-    assert len(big) == 8
-    _assert_tiles(big, 0, 100_000)
-    odd_hi = 7 + 3 * MIN_SEQS_PER_PARTITION + 101  # 3 partitions, last one short
-    odd = _ranges("8", 7, odd_hi)
-    assert len(odd) == 3 and odd[-1][1] - odd[-1][0] < odd[0][1] - odd[0][0]
-    _assert_tiles(odd, 7, odd_hi)
-    assert _ranges("8", 50, 50) == [(50, 50)] and _ranges("8", 50, 40) == [(50, 50)]
-
-
-@pytest.fixture(params=["ws_url"])
-def transport(request):
-    """(options, head) for a relay holding seqs 1..head."""
-    from jetstream_spark.streaming.firehose import MIN_SEQS_PER_PARTITION
-
-    head = 100 + 2 * MIN_SEQS_PER_PARTITION + 200  # 2 partitions over (100, head]
-    relay = WsRelay()
-    for s in range(1, head + 1):
-        did = f"did:plc:u{s % 5}"
-        relay.append(s, commit_frame_bytes(s, did, f"post {s}") if s % 3 else identity_frame_bytes(s, did))
+@pytest.mark.timeout(300)
+def test_first_batch_bounded_by_batch_size(registered, tmp_path):
+    """A relay backlog of 2.5 × `batch_size` frames waiting before the
+    query starts is read in batches of at most `batch_size` seqs, the
+    first batch included, and every frame lands in the log once."""
+    spark = registered
+    batch_size = 40
+    n = batch_size * 5 // 2
+    log_dir, ckpt = str(tmp_path / "log"), str(tmp_path / "ckpt")
+    relay = _commit_relay(n)
     try:
-        yield {request.param: f"127.0.0.1:{relay.port}"}, head
+        _ingest_until_drained(spark, relay, log_dir, ckpt, batch_size)
     finally:
         relay.stop()
 
+    ends = _source_offsets(ckpt)
+    assert sorted(ends) == sorted(_committed(ckpt)) and len(ends) >= 3
+    starts = [0] + [ends[b] for b in sorted(ends)][:-1]
+    spans = [ends[b] - lo for b, lo in zip(sorted(ends), starts)]
+    assert all(0 < span <= batch_size for span in spans), spans
+    assert ends[max(ends)] == n
+    _assert_each_commit_once(spark, log_dir, n)
 
-@pytest.mark.timeout(120)
-def test_partition_reads_cover_each_frame_once(transport):
-    """Reading every partition of a multi-partition batch yields each frame
-    of (lo, hi] exactly once: the first partition stops before the relay
-    head and the next resumes mid-stream by cursor."""
-    options, head = transport
-    reader = FirehoseStreamReader({**options, "numPartitions": "8"})
-    parts = reader.partitions({"seq": 100}, {"seq": head})
-    assert len(parts) == 2 and parts[0].end < head
-    seqs = [row[2] for p in parts for row in reader.read(p)]
-    assert sorted(seqs) == list(range(101, head + 1))
+
+@pytest.mark.timeout(300)
+def test_crash_replay_rereads_batch_by_redial(registered, tmp_path):
+    """A batch in the offset log but not committed (a crash after its log
+    append, before its commit and done-marker) is re-read on restart by
+    readBetweenOffsets, which dials the relay from the batch's start
+    seq, and its delete-before-rewrite leaves every event once."""
+    spark = registered
+    batch_size = 40
+    n = batch_size * 5 // 2
+    log_dir, ckpt = str(tmp_path / "log"), str(tmp_path / "ckpt")
+    relay = _commit_relay(n)
+    try:
+        _ingest_until_drained(spark, relay, log_dir, ckpt, batch_size)
+        ends = _source_offsets(ckpt)
+        last = max(ends)
+        assert last >= 1 and _committed(ckpt) == set(ends)
+        for name in (str(last), f".{last}.crc"):  # the commit and its checksum
+            os.remove(os.path.join(ckpt, "commits", name))
+        done = sorted(eventlog.load_done_batches(log_dir) - {last})
+        with open(os.path.join(log_dir, eventlog.BATCH_STATE_FILE), "w") as f:
+            json.dump(done, f)
+        dials_before = len(relay.dials)
+
+        _ingest_until_drained(spark, relay, log_dir, ckpt, batch_size)
+        redials = relay.dials[dials_before:]
+    finally:
+        relay.stop()
+
+    assert ends[last - 1] in redials, (ends, redials)
+    assert _source_offsets(ckpt) == ends, "the replay re-planned nothing new"
+    assert set(ends) <= _committed(ckpt) <= eventlog.load_done_batches(log_dir)
+    _assert_each_commit_once(spark, log_dir, n)
+
+
+@pytest.mark.timeout(300)
+def test_error_frame_fails_the_query(registered, tmp_path):
+    """An error frame (op = -1) mid-stream fails the ingest query, as it
+    fails the reference's consumer (consumer.go:156-159): the frames
+    before it land, and none after it is read past it."""
+    from pyspark.errors import StreamingQueryException
+
+    spark = registered
+    batch_size = 10
+    log_dir, ckpt = str(tmp_path / "log"), str(tmp_path / "ckpt")
+    relay = _commit_relay(batch_size)
+    relay.append(batch_size + 1, cbor_encode({"op": -1}) + cbor_encode({"error": "FutureCursor", "message": "nope"}))
+    for s in range(batch_size + 2, batch_size + 6):
+        relay.append(s, commit_frame_bytes(s, "did:plc:late", f"post {s}"))
+    try:
+        with pytest.raises(StreamingQueryException, match="error frame from firehose"):
+            _ingest_until_drained(spark, relay, log_dir, ckpt, batch_size)
+    finally:
+        relay.stop()
+    _assert_each_commit_once(spark, log_dir, batch_size)

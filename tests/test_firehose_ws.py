@@ -2,7 +2,7 @@
 `com.atproto.sync.subscribeRepos`-style BINARY frames (DAG-CBOR header+body,
 commits carrying genuine CAR archives), consumed by the firehose DataSource
 via its ws_url transport — RFC 6455 dial, cursor semantics, CAR/CBOR decode
-inside partitions."""
+of the frames the driver's relay connection received."""
 
 from __future__ import annotations
 
@@ -76,7 +76,6 @@ def test_firehose_ws_binary_cbor_end_to_end(spark, tmp_path):
         stream = (
             spark.readStream.format("atproto_firehose")
             .option("ws_url", f"127.0.0.1:{relay.port}")
-            .option("numPartitions", "3")
             .load()
         )
         q = (
@@ -109,9 +108,10 @@ def test_firehose_ws_binary_cbor_end_to_end(spark, tmp_path):
     assert relay.pongs, "client never answered the relay's ping"
     assert all(masked and body == b"hb" for masked, body in relay.pongs)
 
-    # the relay served ONLY the subscribe socket: planning must not have
-    # probed /head (or any other plain-HTTP route) — head came from the
-    # persistent tail subscription, the reference's own information source
+    # the relay served ONLY the subscribe socket: the source must not have
+    # probed /head (or any other plain-HTTP route) — every batch came from
+    # the driver's one relay connection, the reference's own information
+    # source
     assert relay.non_ws_requests == [], relay.non_ws_requests
 
 
@@ -133,7 +133,6 @@ def test_firehose_ws_checkpoint_resume_without_head_route(spark, tmp_path):
         stream = (
             spark.readStream.format("atproto_firehose")
             .option("ws_url", f"127.0.0.1:{relay.port}")
-            .option("numPartitions", "2")
             .load()
         )
         q = (

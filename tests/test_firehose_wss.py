@@ -86,7 +86,6 @@ def test_wss_streaming_source_end_to_end(certs, spark, tmp_path):
             spark.readStream.format("atproto_firehose")
             .option("ws_url", f"wss://127.0.0.1:{relay.port}")
             .option("tls_ca", crt)
-            .option("numPartitions", "2")
             .load()
         )
         q = (
