@@ -200,7 +200,7 @@ def bench_ingest_pipeline(spark, sf_dir: str) -> tuple[float, int, dict]:
     for i in range(passes):
         t0 = time.time()
         normalized = normalize_frames(frames)
-        sequenced, last, cached = sequence_events(normalized, last_time_us=0, wall_clock_us=1_000_000)
+        sequenced, last, _ = sequence_events(normalized, last_time_us=0, wall_clock_us=1_000_000)
         to_wire(sequenced).write.format("noop").mode("overwrite").save()
         dt = time.time() - t0
         pass_secs.append(round(dt, 3))
@@ -212,7 +212,6 @@ def bench_ingest_pipeline(spark, sf_dir: str) -> tuple[float, int, dict]:
             metrics.observe_batch(sequenced, dt, last)
             if i == passes - 1:
                 wire_n = to_wire(sequenced).count()
-        cached.unpersist()
     processed = sum(metrics.events_processed.values())
     conservation = {
         "events_in": passes * n,

@@ -29,7 +29,7 @@ import shutil
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from jetstream_spark.atproto.sequencer import SequencerState, sequence_events
@@ -61,7 +61,8 @@ def mark_batch_done(log_dir: str, batch_id: int) -> None:
 
 
 def write_events(df: DataFrame, log_dir: str) -> None:
-    """Append sequenced envelopes to the hour-partitioned log (S11)."""
+    """Append sequenced envelopes to the hour-partitioned log (S11): one
+    hour_bucket directory per hour, files sorted by time_us."""
     (
         df.withColumn("hour_bucket", F.expr(f"time_us div {US_PER_HOUR}"))
         .sortWithinPartitions("time_us")
@@ -87,7 +88,7 @@ def _remove_batch_files(log_dir: str, batch_id: int) -> None:
                 os.remove(os.path.join(part_dir, fn))
 
 
-def _commit_batch(df: DataFrame, log_dir: str, batch_id: int) -> None:
+def _commit_batch(df: DataFrame, log_dir: str, batch_id: int, n_rows: int) -> None:
     """Idempotent batch append: stage the batch under a batch-id directory,
     delete any files a previous attempt of the SAME batch left in the log,
     then move the staged files in under batch-tagged names. Re-running any
@@ -96,16 +97,20 @@ def _commit_batch(df: DataFrame, log_dir: str, batch_id: int) -> None:
     (persist.go:101-108, P8), which plain `mode("append")` does not give.
     Spark ignores `_`-prefixed directories, so the staging area is invisible
     to log readers. On a cluster this role belongs to the FileSystem commit
-    protocol or a transactional table format; local-FS rename here."""
+    protocol or a transactional table format; local-FS rename here.
+
+    The staged write observes its own row count (no extra job) and must see
+    the `n_rows` the sequencer counted: an input that reads differently on
+    its second read would leave time_us sparse or overlapping the next
+    batch, so the commit raises before any staged file moves into the log."""
     staging = os.path.join(log_dir, "_staging", f"batch-{batch_id}")
     shutil.rmtree(staging, ignore_errors=True)
-    (
-        df.withColumn("hour_bucket", F.expr(f"time_us div {US_PER_HOUR}"))
-        .sortWithinPartitions("time_us")
-        .write.mode("overwrite")
-        .partitionBy("hour_bucket")
-        .parquet(staging)
-    )
+    written = Observation()
+    write_events(df.observe(written, F.count(F.lit(1)).alias("rows")), staging)
+    seen = written.get["rows"]
+    if seen != n_rows:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise RuntimeError(f"batch {batch_id}: the write saw {seen} rows, the sequencer counted {n_rows}")
     _remove_batch_files(log_dir, batch_id)
     for entry in sorted(os.listdir(staging)):
         if not entry.startswith("hour_bucket="):
@@ -117,31 +122,6 @@ def _commit_batch(df: DataFrame, log_dir: str, batch_id: int) -> None:
         for i, fn in enumerate(files):
             os.replace(os.path.join(src_dir, fn), os.path.join(dst_dir, f"b{batch_id}-{i}.parquet"))
     shutil.rmtree(staging, ignore_errors=True)
-
-
-# Micro-batch file-count control: a small batch written at full shuffle
-# parallelism appends `defaultParallelism` tiny parquet files per bucket
-# per batch (a day of 5 s batches at 32 partitions is 17k files/bucket —
-# the exact accumulation the maintenance loop compacts), and per-file
-# open/footer/commit overhead dominates the write itself at that size.
-# Batches coalesce to ~this many rows per file; a batch big enough to
-# want full write parallelism (rows >= target x parallelism) is left
-# untouched, so the hot path at scale pays nothing. Measured A/B at the
-# bench's 20k-row batches (sf0.1, two position-alternated windows):
-# coalesce-to-4 writes 14% FASTER than 32-file status quo (mean batch
-# 0.634 s vs 0.736 s floors), cuts files 8x (192 -> 24 across 6
-# batches), and reads back ~1.6x faster (0.14 s vs 0.22-0.25 s) — the
-# per-file overhead outweighs the lost sort/encode parallelism until
-# well past this row count.
-SMALL_BATCH_ROWS_PER_FILE = 5_000
-
-
-def _write_coalesce_k(spark: SparkSession, n_rows: int) -> int | None:
-    """Target file count for a sequenced batch of ``n_rows``, or None when
-    the batch should keep full write parallelism."""
-    par = spark.sparkContext.defaultParallelism
-    k = max(1, -(-n_rows // SMALL_BATCH_ROWS_PER_FILE))  # ceil div
-    return k if k < par else None
 
 
 def ingest_batch(
@@ -163,37 +143,22 @@ def ingest_batch(
     last+1; the old copy is deleted first). Without batch_id the write is a
     plain append (one-shot/test usage).
 
-    Small batches are coalesced before the write (_write_coalesce_k): the
-    sequencer's dense assignment makes the row count free
-    (last - base + 1). Safe on the sequenced frame because the
-    nondeterministic time_us projection cannot be reordered across the
-    coalesce (it evaluates per PARENT partition at the RDD boundary —
-    verified dense/distinct at bench scale), and the write path's
-    sortWithinPartitions keeps every file time-sorted regardless of which
-    partitions merged."""
+    The sequencer ranks the batch in one task, so the write produces one
+    file per hour bucket."""
     if wall_clock_us is None:
         wall_clock_us = int(time.time() * 1_000_000)
     state = SequencerState.load(log_dir)
     base = max(state.last_time_us + 1, wall_clock_us)
-    sequenced, last, cached = sequence_events(
-        frames_normalized, state.last_time_us, wall_clock_us=wall_clock_us
-    )
-    try:
-        n_rows = last - base + 1 if last >= base else 0
-        if n_rows == 0:
-            return state.last_time_us  # nothing to stage, state unchanged
-        out = sequenced.drop("_seq")
-        k = _write_coalesce_k(out.sparkSession, n_rows)
-        if k is not None:
-            out = out.coalesce(k)
-        if batch_id is None:
-            write_events(out, log_dir)
-        else:
-            _commit_batch(out, log_dir, batch_id)
-        state.last_time_us = last
-        state.save(log_dir)
-    finally:
-        cached.unpersist()
+    sequenced, last, _ = sequence_events(frames_normalized, state.last_time_us, wall_clock_us=wall_clock_us)
+    if last < base:
+        return state.last_time_us  # nothing to stage, state unchanged
+    out = sequenced.drop("_seq")
+    if batch_id is None:
+        write_events(out, log_dir)
+    else:
+        _commit_batch(out, log_dir, batch_id, last - base + 1)
+    state.last_time_us = last
+    state.save(log_dir)
     return last
 
 

@@ -943,8 +943,8 @@ def q_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     function of the corpus.
 
     Scale shape: the rank table here is a global row_number (oracle-parity
-    form); at 100 TB it becomes the two-phase per-partition-counts +
-    offsets rank the S10 sequencer already implements. Draws are map-only
+    form); at 100 TB it becomes a two-phase rank (per-partition counts,
+    then each partition's cumulative offset). Draws are map-only
     codegen; resolving rank→doc is one join against the node-scale rank
     table."""
     from pyspark.sql.window import Window

@@ -7,10 +7,11 @@ one exactly-once micro-batch handler every standing query runs on.
 `start_ingest` takes the raw-frame stream, so both sources share it: a
 drop directory of decoded JSONL frames (`read_frame_stream` with
 RAW_FRAME_SCHEMA, Spark's built-in JSON file source) and the firehose
-source, streaming/firehose.py's DataSourceStreamReader, which dials the
-relay's subscribeRepos websocket (`ws_url`) and decodes CAR/CBOR frames
-per partition (S5/S8, atproto/carcbor.py). The CLI's `ingest` builds one
-or the other and hands it to `start_ingest`.
+source, streaming/firehose.py's SimpleDataSourceStreamReader, whose one
+driver connection to the relay's subscribeRepos websocket (`ws_url`)
+buffers raw frames, and whose `read` decodes each micro-batch's CAR/CBOR
+frames on the driver (S5/S8, atproto/carcbor.py). The CLI's `ingest`
+builds one or the other and hands it to `start_ingest`.
 
 Exactly-once: Spark checkpoints source offsets per microbatch; the
 sequencer state file carries last_time_us. foreachBatch can re-run a

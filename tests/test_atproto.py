@@ -124,10 +124,14 @@ def test_normalize_reads_frames_once(spark):
 # --- sequencer (S10/H1) ---------------------------------------------------------
 def test_sequencer_strictly_monotonic(normalized):
     seq_df, last, _ = sequence_events(normalized, last_time_us=0, wall_clock_us=1_700_000_000_000_000)
-    times = [r["time_us"] for r in seq_df.orderBy("time_us").collect()]
+    rows = seq_df.orderBy("time_us").collect()
+    times = [r["time_us"] for r in rows]
     assert len(times) == normalized.count()
     assert all(b > a for a, b in zip(times, times[1:])), "time_us must be strictly increasing"
     assert last == max(times)
+    # relay-arrival order, as the reference's single sequencer keeps it
+    seqs = [r["_seq"] for r in rows]
+    assert seqs == sorted(seqs), "_seq must be non-decreasing in time_us order"
 
 
 def test_sequencer_deterministic_order(normalized):
@@ -388,31 +392,11 @@ def test_recover_compaction_all_crash_points(spark, normalized, tmp_path):
     assert eventlog.recover_compaction(log_dir) == 0, "idempotent when clean"
 
 
-# --- micro-batch write coalesce (S11 file-count control) ----------------------
-def test_write_coalesce_k_thresholds(spark):
-    """Small batches coalesce to ceil(rows / SMALL_BATCH_ROWS_PER_FILE)
-    files; a batch big enough for full write parallelism is left alone
-    (None) — the 100 TB hot path pays nothing."""
-    from jetstream_spark.atproto.log import SMALL_BATCH_ROWS_PER_FILE, _write_coalesce_k
-
-    par = spark.sparkContext.defaultParallelism
-    assert _write_coalesce_k(spark, 0) == 1
-    assert _write_coalesce_k(spark, 1) == 1
-    assert _write_coalesce_k(spark, SMALL_BATCH_ROWS_PER_FILE) == 1
-    assert _write_coalesce_k(spark, SMALL_BATCH_ROWS_PER_FILE + 1) == 2
-    assert _write_coalesce_k(spark, (par - 1) * SMALL_BATCH_ROWS_PER_FILE) == par - 1
-    assert _write_coalesce_k(spark, par * SMALL_BATCH_ROWS_PER_FILE) is None
-    assert _write_coalesce_k(spark, 10 * par * SMALL_BATCH_ROWS_PER_FILE) is None
-
-
+# --- micro-batch write (S11 file count, commit check) -------------------------
 def test_small_batch_writes_few_files_and_stays_dense(spark, tmp_path, normalized):
     """A micro-batch append produces ONE file per bucket (not one per
-    shuffle partition), and the sequencer contract survives the coalesce:
-    time_us stays dense, distinct, and files time-sorted. Pins the
-    RDD-boundary safety argument in ingest_batch's docstring — the
-    nondeterministic time_us projection must evaluate per PARENT
-    partition, not per merged task (a per-task counter would collide
-    offsets across merged partitions)."""
+    shuffle partition), and the sequencer contract survives the write:
+    time_us stays dense, distinct, and files time-sorted."""
     import os
 
     log_dir = str(tmp_path / "log")
@@ -428,6 +412,51 @@ def test_small_batch_writes_few_files_and_stays_dense(spark, tmp_path, normalize
     rows = eventlog.read_log(spark, log_dir)
     ts = sorted(r["time_us"] for r in rows.select("time_us").collect())
     assert len(ts) == 2 * n
-    assert len(set(ts)) == 2 * n, "coalesced write duplicated time_us"
-    assert ts == list(range(ts[0], ts[0] + 2 * n)), "coalesced write broke density"
+    assert len(set(ts)) == 2 * n, "batch write duplicated time_us"
+    assert ts == list(range(ts[0], ts[0] + 2 * n)), "batch write broke density"
     assert ts[-1] == last
+
+
+def test_commit_refuses_an_input_that_reads_differently(spark, tmp_path, normalized):
+    """The sequencer's count and the log write each read the batch's input.
+    An input that serves fewer rows on its second read must fail the
+    commit: no file reaches the log and the sequencer state is unchanged."""
+    import os
+
+    log_dir = str(tmp_path / "log")
+    SequencerState(last_time_us=5_000).save(log_dir)
+    state_path = os.path.join(log_dir, "_sequencer_state.json")
+    before = (open(state_path).read(), os.stat(state_path).st_mtime_ns)
+    marks = str(tmp_path / "reads")
+    os.makedirs(marks)
+
+    def kept(seq):
+        # the first evaluation for a seq keeps its row, every later one
+        # keeps only even seqs: the count reads more rows than the write
+        try:
+            os.close(os.open(os.path.join(marks, str(seq)), os.O_CREAT | os.O_EXCL))
+            return True
+        except FileExistsError:
+            return seq % 2 == 0
+
+    keep = F.udf(kept, T.BooleanType()).asNondeterministic()
+    shifting = normalized.where(keep("_seq"))
+    with pytest.raises(RuntimeError, match="the write saw"):
+        eventlog.ingest_batch(shifting, log_dir, wall_clock_us=1_000_000, batch_id=0)
+    assert (open(state_path).read(), os.stat(state_path).st_mtime_ns) == before
+    assert [p for p, _, _ in os.walk(log_dir) if "hour_bucket=" in p] == []
+
+
+def test_ingest_batch_runs_at_most_four_jobs(spark, tmp_path, normalized):
+    """One non-empty batch costs the sequencer's count and the log write:
+    no sampling, checkpoint or per-partition collect job."""
+    sc = spark.sparkContext
+    group = f"ingest-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "one ingest_batch")
+    try:
+        eventlog.ingest_batch(normalized, str(tmp_path / "log"), wall_clock_us=1_000_000, batch_id=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 4, sorted(jobs)
