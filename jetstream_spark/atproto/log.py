@@ -19,6 +19,14 @@ only the hour directories ≥ cursor's hour, reads only the envelope columns
 the filters need, and streams in file order. Writing sorted-by-time_us
 within partitions keeps parquet row-group min/max stats tight, so even
 intra-hour seeks skip row groups.
+
+The serving read (LogWindow) uses the same layout without Spark: the live
+hub's slice (lo, hi] lists the hour dirs it spans, keeps only the files
+whose footer time_us min/max meets it (footer stats cached per file
+version), and reads those with pyarrow on the driver — for a live round
+that is the one batch file just committed, wherever the hour's file count
+stands. Anything it cannot read as a stable snapshot goes back to
+`replay`.
 """
 
 from __future__ import annotations
@@ -29,9 +37,14 @@ import shutil
 import time
 from collections.abc import Callable
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from jetstream_spark.atproto.schema import EVENT_SCHEMA
 from jetstream_spark.atproto.sequencer import SequencerState, sequence_events
 
 US_PER_HOUR = 3_600_000_000
@@ -202,6 +215,112 @@ def read_log(spark: SparkSession, log_dir: str) -> DataFrame:
         )
         df = recovered if df is None else df.unionByName(recovered)
     return df
+
+
+_WINDOW_COLUMNS = EVENT_SCHEMA.fieldNames()
+_EMPTY_WINDOW = to_arrow_schema(EVENT_SCHEMA).empty_table()
+
+
+def _file_key(st: os.stat_result) -> tuple[int, int, int]:
+    """Identity of one version of a log file: a crash-replay rewrite or a
+    compaction replaces the inode, an in-place change moves mtime/size."""
+    return (st.st_ino, st.st_mtime_ns, st.st_size)
+
+
+def _footer(path: str) -> tuple[tuple[int, int, int], int, float, float]:
+    """(key, rows, min time_us, max time_us) from one file's footer. A
+    file whose time_us has no stats spans everything, so it is always a
+    candidate."""
+    with open(path, "rb") as f:
+        key = _file_key(os.fstat(f.fileno()))
+        md = pq.ParquetFile(f).metadata
+    t_min, t_max = float("inf"), float("-inf")
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        if rg.num_rows == 0:
+            continue
+        col = next(rg.column(j) for j in range(rg.num_columns) if rg.column(j).path_in_schema == "time_us")
+        stats = col.statistics
+        if stats is None or not stats.has_min_max:
+            return key, md.num_rows, float("-inf"), float("inf")
+        t_min, t_max = min(t_min, stats.min), max(t_max, stats.max)
+    return key, md.num_rows, t_min, t_max
+
+
+def _read_file(path: str, key: tuple[int, int, int]) -> pa.Table | None:
+    """One listed file, read through a handle whose stat still matches the
+    listing; None when it vanished or was replaced since."""
+    try:
+        with open(path, "rb") as f:
+            if _file_key(os.fstat(f.fileno())) != key:
+                return None
+            return pq.ParquetFile(f).read(columns=_WINDOW_COLUMNS).select(_WINDOW_COLUMNS)
+    except FileNotFoundError:
+        return None
+
+
+class LogWindow:
+    """The hub's serving read: the rows lo < time_us <= hi of one log in
+    time order, read on the driver with pyarrow.
+
+    It lists the `hour_bucket=` dirs the window spans and reads only the
+    files whose footer time_us range meets the window. Footer stats are
+    cached per file version and pruned to the files each read lists, so a
+    live round that follows a commit opens the one new batch file.
+
+    `read` returns None, and the caller falls back to `replay`, whenever
+    the layout is in motion or the read would be large: a compaction
+    entry (`_compact_old_`/`_compact_tmp_`) for a bucket in range, a
+    listed file that vanished or was replaced before its read (a swap, a
+    TTL trim, a crash-replay rewrite), or candidate files holding more
+    than `limit` rows. A served window therefore holds at most `limit`
+    rows, all of (lo, hi]."""
+
+    def __init__(self, log_dir: str):
+        self.log_dir = log_dir
+        self._footers: dict[str, tuple] = {}
+
+    def read(self, lo: int, hi: int, limit: int) -> pa.Table | None:
+        first, last = (lo + 1) // US_PER_HOUR, hi // US_PER_HOUR
+        parts, footers, picked, rows = [], {}, [], 0
+        try:
+            for entry in os.listdir(self.log_dir):
+                if entry.startswith(("_compact_old_", "_compact_tmp_")):
+                    bucket = entry.rsplit("_", 1)[1]
+                    if bucket.lstrip("-").isdigit() and first <= int(bucket) <= last:
+                        return None
+                elif entry.startswith("hour_bucket="):
+                    if first <= int(entry[len("hour_bucket="):]) <= last:
+                        parts.append(os.path.join(self.log_dir, entry))
+            for part in parts:
+                for e in os.scandir(part):
+                    # the files Spark's reader would list
+                    if e.name.startswith(("_", ".")) or not e.name.endswith(".parquet"):
+                        continue
+                    known = self._footers.get(e.path)
+                    if known is None or known[0] != _file_key(e.stat()):
+                        known = _footer(e.path)
+                    footers[e.path] = known
+                    key, n, t_min, t_max = known
+                    if n and t_min <= hi and t_max > lo:
+                        picked.append((e.path, key))
+                        rows += n
+        except FileNotFoundError:
+            return None
+        self._footers = footers
+        if rows > limit:
+            return None
+        tables = []
+        for path, key in picked:
+            table = _read_file(path, key)
+            if table is None:
+                return None
+            tables.append(table)
+        if not tables:
+            return _EMPTY_WINDOW
+        window = pa.concat_tables(tables, promote_options="default")
+        t = window["time_us"]
+        return window.filter(pc.and_(pc.greater(t, lo), pc.less_equal(t, hi))).sort_by("time_us")
 
 
 def _is_swap_retryable(msg: str) -> bool:

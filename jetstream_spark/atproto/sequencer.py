@@ -3,7 +3,8 @@
 The reference creates total order with ONE goroutine and a mutex clock
 (consumer.go:311-342, clock.go:34-56): every event funnels through a single
 thread. A micro-batch holds at most `batch_size` frames, so the Spark
-version keeps that shape per batch — one ordered pass in one task:
+version keeps that shape per batch — one ordered pass in one task. The
+input is coalesced to one partition, so neither step below shuffles:
 
   1. a count of the batch gives the new last_time_us up front,
   2. the action that reads the sequenced frame (the log write) evaluates,
@@ -70,6 +71,9 @@ def sequence_events(
     if wall_clock_us is None:
         wall_clock_us = int(time.time() * 1_000_000)
     base = max(last_time_us + 1, wall_clock_us)
+    # one partition satisfies both the count's and the rank's all-rows
+    # distribution, so neither plans an Exchange
+    df = df.coalesce(1)
     total = df.count()
     rank = F.row_number().over(Window.orderBy("_seq", "did"))
     sequenced = df.withColumn("time_us", (F.lit(base) + rank - 1).cast("long"))

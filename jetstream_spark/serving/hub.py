@@ -10,9 +10,17 @@ evaluated at emit time against envelope fields — never re-serializing
 Spark shape: a Structured Streaming tick query watches the log directory;
 each tick computes ONE ordered incremental slice (min subscriber watermark,
 sequencer head] and the Python fan-out loop routes rows by the S17 filter
-semantics + each subscriber's S18 monotonic guard. Per-round driver
-materialization is bounded by batch_limit (the 10×-sub-rate replay
-contract, persist.go:149) — a subscriber far behind head never forces an
+semantics + each subscriber's S18 monotonic guard. The slice is read on
+the driver (log.py::LogWindow: only the files whose footer time_us range
+meets the slice, usually the one batch file just committed) and handed
+to to_wire as a local relation, so a live slice runs no Spark job — the
+analogue of the reference emitting from memory right after the persist
+(server.go:62-116). When the window cannot be served (a compaction or
+trim in motion, a file replaced under the listing, or more candidate
+rows than batch_limit) the slice is the Spark replay scan, with
+replay_rows' re-plan retry. Per-round driver materialization is bounded
+by batch_limit either way (the 10×-sub-rate replay contract,
+persist.go:149) — a subscriber far behind head never forces an
 unbounded collect.
 
 Registration does an inline catch-up round so a subscriber attaching
@@ -31,11 +39,11 @@ import threading
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from jetstream_spark.atproto.log import replay, replay_rows
+from jetstream_spark.atproto.log import LogWindow, replay, replay_rows
 from jetstream_spark.atproto.sequencer import SequencerState
 from jetstream_spark.atproto.subscribe import Subscription
 from jetstream_spark.atproto.wire import to_wire
@@ -89,6 +97,7 @@ class LiveTailHub:
         # analogue of the reference's Subscribers RWMutex
         self._lock = threading.Lock()
         self._query: StreamingQuery | None = None
+        self._window = LogWindow(log_dir)
 
     # --- subscriber lifecycle -------------------------------------------------
 
@@ -151,6 +160,19 @@ class LiveTailHub:
             subs = list(self._subs.values())
         self._deliver(subs, hi)
 
+    def _slice(self, lo: int, hi: int) -> DataFrame:
+        """The wire frame of (lo, hi], at most batch_limit rows in time
+        order: the driver-read window as a local relation when LogWindow
+        can serve it, the Spark replay scan otherwise."""
+        window = self._window.read(lo, hi, self.batch_limit)
+        if window is not None:
+            return to_wire(self.spark.createDataFrame(window))
+        return (
+            to_wire(replay(self.spark, self.log_dir, cursor=lo + 1).where(F.col("time_us") <= hi))
+            .orderBy("time_us")
+            .limit(self.batch_limit)
+        )
+
     def _deliver(self, subs: list[_HubSub], hi: int) -> None:
         """Bounded rounds: each round collects ONE ordered slice
         (min watermark, hi] of ≤ batch_limit rows and fans it out.
@@ -180,17 +202,7 @@ class LiveTailHub:
             # (same contract as the edge's replay rounds; watermarks
             # advance only after a delivered slice, so the retry is
             # exactly-once)
-            rows = replay_rows(
-                self.spark,
-                self.log_dir,
-                lambda: to_wire(
-                    replay(self.spark, self.log_dir, cursor=lo + 1).where(
-                        F.col("time_us") <= hi
-                    )
-                )
-                .orderBy("time_us")
-                .limit(self.batch_limit),
-            )
+            rows = replay_rows(self.spark, self.log_dir, lambda: self._slice(lo, hi))
             if not rows:
                 return
             if self.on_slice is not None:

@@ -447,9 +447,12 @@ def test_commit_refuses_an_input_that_reads_differently(spark, tmp_path, normali
     assert [p for p, _, _ in os.walk(log_dir) if "hour_bucket=" in p] == []
 
 
-def test_ingest_batch_runs_at_most_four_jobs(spark, tmp_path, normalized):
+def test_ingest_batch_runs_at_most_two_jobs(spark, tmp_path, normalized):
     """One non-empty batch costs the sequencer's count and the log write:
-    no sampling, checkpoint or per-partition collect job."""
+    no sampling, checkpoint or per-partition collect job, and no shuffle
+    stage under either (the input is one partition). The fixture's cache
+    is filled first: that job belongs to the fixture, not to the batch."""
+    normalized.count()
     sc = spark.sparkContext
     group = f"ingest-jobs-{tmp_path.name}"
     sc.setJobGroup(group, "one ingest_batch")
@@ -459,4 +462,4 @@ def test_ingest_batch_runs_at_most_four_jobs(spark, tmp_path, normalized):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 4, sorted(jobs)
+    assert 0 < len(jobs) <= 2, sorted(jobs)

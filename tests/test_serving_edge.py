@@ -128,9 +128,13 @@ def test_emitted_counts_once_per_event_across_subscribers(edge, spark):
     while len(server.registry.subscribers) != 2 and _time.time() < deadline:
         _time.sleep(0.1)  # earlier tests' subscribers must finish deregistering
     assert len(server.registry.subscribers) == 2
-    eventlog.ingest_batch(normalized, log_dir, wall_clock_us=head_before + 1)
-    new_count = eventlog.read_log(spark, log_dir).where(F.col("time_us") > head_before).count()
+    # known before the batch lands: the hub can deliver it before a
+    # count of the log would return, and a tail still waiting for more
+    # frames than the batch holds would sit until its socket times out
+    new_count = normalized.count()
     expect[0] = new_count
+    eventlog.ingest_batch(normalized, log_dir, wall_clock_us=head_before + 1)
+    assert eventlog.read_log(spark, log_dir).where(F.col("time_us") > head_before).count() == new_count
     for t in threads:
         t.join(timeout=120)
     assert [len(r) for r in results] == [new_count, new_count]
