@@ -20,6 +20,12 @@ the filters need, and streams in file order. Writing sorted-by-time_us
 within partitions keeps parquet row-group min/max stats tight, so even
 intra-hour seeks skip row groups.
 
+The append runs on the driver, as the reference's one consumer writes
+each event straight into Pebble (persist.go:90-117): `ingest_batch`
+collects the sequenced batch once as Arrow and writes one time-sorted
+pyarrow file per hour bucket, with no Spark write job and no Hadoop
+commit protocol. Compaction and the replay scans stay in Spark.
+
 The serving read (LogWindow) uses the same layout without Spark: the live
 hub's slice (lo, hi] lists the hour dirs it spans, keeps only the files
 whose footer time_us min/max meets it (footer stats cached per file
@@ -35,12 +41,14 @@ import json
 import os
 import shutil
 import time
+import uuid
 from collections.abc import Callable
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -73,18 +81,6 @@ def mark_batch_done(log_dir: str, batch_id: int) -> None:
     os.replace(tmp, path)
 
 
-def write_events(df: DataFrame, log_dir: str) -> None:
-    """Append sequenced envelopes to the hour-partitioned log (S11): one
-    hour_bucket directory per hour, files sorted by time_us."""
-    (
-        df.withColumn("hour_bucket", F.expr(f"time_us div {US_PER_HOUR}"))
-        .sortWithinPartitions("time_us")
-        .write.mode("append")
-        .partitionBy("hour_bucket")
-        .parquet(log_dir)
-    )
-
-
 def _remove_batch_files(log_dir: str, batch_id: int) -> None:
     """Delete every log file a prior (possibly partial) commit of this batch
     produced — file names carry the batch id, so the batch's footprint is
@@ -101,39 +97,59 @@ def _remove_batch_files(log_dir: str, batch_id: int) -> None:
                 os.remove(os.path.join(part_dir, fn))
 
 
-def _commit_batch(df: DataFrame, log_dir: str, batch_id: int, n_rows: int) -> None:
-    """Idempotent batch append: stage the batch under a batch-id directory,
-    delete any files a previous attempt of the SAME batch left in the log,
-    then move the staged files in under batch-tagged names. Re-running any
-    prefix of this sequence converges to the same final state — the parquet
-    analogue of the reference's overwrite-idempotent Pebble keys
-    (persist.go:101-108, P8), which plain `mode("append")` does not give.
-    Spark ignores `_`-prefixed directories, so the staging area is invisible
-    to log readers. On a cluster this role belongs to the FileSystem commit
-    protocol or a transactional table format; local-FS rename here.
+def _hour_slices(table: pa.Table):
+    """(hour_bucket, rows) per hour the time-sorted batch spans. The batch's
+    time_us is dense, so it spans one bucket, or two across an hour edge."""
+    t = table["time_us"].to_numpy()
+    for bucket in range(int(t[0]) // US_PER_HOUR, int(t[-1]) // US_PER_HOUR + 1):
+        lo, hi = np.searchsorted(t, [bucket * US_PER_HOUR, (bucket + 1) * US_PER_HOUR])
+        if hi > lo:
+            yield bucket, table.slice(lo, hi - lo)
 
-    The staged write observes its own row count (no extra job) and must see
-    the `n_rows` the sequencer counted: an input that reads differently on
-    its second read would leave time_us sparse or overlapping the next
-    batch, so the commit raises before any staged file moves into the log."""
-    staging = os.path.join(log_dir, "_staging", f"batch-{batch_id}")
+
+def _commit_batch(df: DataFrame, log_dir: str, batch_id: int | None, n_rows: int) -> None:
+    """Append one sequenced batch to the hour-partitioned log (S11) from the
+    driver: one Arrow collect of `df` (the job that evaluates the
+    sequencer's rank), then one pyarrow file per hour bucket, sorted by
+    time_us so each file's footer min/max is the batch's range there.
+    Files hold no hour_bucket column; the directory name carries it, as in
+    a Spark partitionBy layout, so Spark readers and LogWindow read them
+    alike. The driver holds at most one batch, which the source's
+    batch_size bounds.
+
+    The files are staged under `_staging/batch-N`, then any files a
+    previous attempt of the SAME batch left in the log are deleted, then
+    the staged files move in as `b{N}-0.parquet`. Re-running any prefix of
+    this sequence converges to the same final state — the parquet analogue
+    of the reference's overwrite-idempotent Pebble keys (persist.go:101-108,
+    P8). Readers skip `_`-prefixed entries, so the staging area is
+    invisible to them. With `batch_id` None (one-shot and test appends) the
+    files get untagged `part-<uuid>-0.parquet` names and nothing is deleted.
+
+    The collect must hold the `n_rows` the sequencer counted: an input
+    that reads differently on its second read would leave time_us sparse
+    or overlapping the next batch, so the commit raises before any file is
+    written."""
+    table = df.toArrow()
+    if table.num_rows != n_rows:
+        raise RuntimeError(f"batch {batch_id}: the write saw {table.num_rows} rows, the sequencer counted {n_rows}")
+    tag = f"part-{uuid.uuid4().hex}" if batch_id is None else f"b{batch_id}"
+    staging = os.path.join(log_dir, "_staging", tag if batch_id is None else f"batch-{batch_id}")
     shutil.rmtree(staging, ignore_errors=True)
-    written = Observation()
-    write_events(df.observe(written, F.count(F.lit(1)).alias("rows")), staging)
-    seen = written.get["rows"]
-    if seen != n_rows:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise RuntimeError(f"batch {batch_id}: the write saw {seen} rows, the sequencer counted {n_rows}")
-    _remove_batch_files(log_dir, batch_id)
-    for entry in sorted(os.listdir(staging)):
-        if not entry.startswith("hour_bucket="):
-            continue
-        src_dir = os.path.join(staging, entry)
-        dst_dir = os.path.join(log_dir, entry)
+    os.makedirs(staging)
+    staged = []
+    for bucket, rows in _hour_slices(table.sort_by("time_us")):
+        path = os.path.join(staging, f"hour_bucket={bucket}.parquet")
+        # no Arrow schema blob (~1.4 KB a footer): the parquet schema
+        # alone reads back the same types
+        pq.write_table(rows, path, store_schema=False)
+        staged.append((bucket, path))
+    if batch_id is not None:
+        _remove_batch_files(log_dir, batch_id)
+    for bucket, path in staged:
+        dst_dir = os.path.join(log_dir, f"hour_bucket={bucket}")
         os.makedirs(dst_dir, exist_ok=True)
-        files = sorted(f for f in os.listdir(src_dir) if f.endswith(".parquet"))
-        for i, fn in enumerate(files):
-            os.replace(os.path.join(src_dir, fn), os.path.join(dst_dir, f"b{batch_id}-{i}.parquet"))
+        os.replace(path, os.path.join(dst_dir, f"{tag}-0.parquet"))
     shutil.rmtree(staging, ignore_errors=True)
 
 
@@ -146,7 +162,10 @@ def ingest_batch(
     """Sequence a normalized batch and append it to the log, persisting
     sequencer state (the batch path of the standing pipeline §3.1).
     Returns the new last_time_us; a batch the sequencer counts empty
-    returns the unchanged one, with no staging write and no state save.
+    returns the unchanged one, with no collect, no file and no state save.
+
+    Two Spark jobs: the sequencer's count and the commit's Arrow collect;
+    the files are written on the driver (_commit_batch).
 
     With batch_id set, the append is idempotent under crash-replay: a
     re-run first removes the batch's own files (delete-before-rewrite), so
@@ -154,10 +173,7 @@ def ingest_batch(
     save — converges to exactly one copy of the batch with strictly
     monotonic time_us (a replay after the state save re-assigns from
     last+1; the old copy is deleted first). Without batch_id the write is a
-    plain append (one-shot/test usage).
-
-    The sequencer ranks the batch in one task, so the write produces one
-    file per hour bucket."""
+    plain append (one-shot/test usage)."""
     if wall_clock_us is None:
         wall_clock_us = int(time.time() * 1_000_000)
     state = SequencerState.load(log_dir)
@@ -165,11 +181,7 @@ def ingest_batch(
     sequenced, last, _ = sequence_events(frames_normalized, state.last_time_us, wall_clock_us=wall_clock_us)
     if last < base:
         return state.last_time_us  # nothing to stage, state unchanged
-    out = sequenced.drop("_seq")
-    if batch_id is None:
-        write_events(out, log_dir)
-    else:
-        _commit_batch(out, log_dir, batch_id, last - base + 1)
+    _commit_batch(sequenced.drop("_seq"), log_dir, batch_id, last - base + 1)
     state.last_time_us = last
     state.save(log_dir)
     return last

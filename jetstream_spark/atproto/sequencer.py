@@ -7,17 +7,17 @@ version keeps that shape per batch — one ordered pass in one task. The
 input is coalesced to one partition, so neither step below shuffles:
 
   1. a count of the batch gives the new last_time_us up front,
-  2. the action that reads the sequenced frame (the log write) evaluates,
-     in a single task,
+  2. the action that reads the sequenced frame (the log commit's Arrow
+     collect, log.py::_commit_batch) evaluates, in a single task,
      time_us = base + row_number() over (ORDER BY _seq, did) - 1, where
      base = max(last_time_us + 1, wall_clock_us)
      — the exact clock-bump rule of clock.go:51-53 lifted from per-event
      to per-batch granularity.
 
 Ordering by the relay seq keeps the reference's arrival order, on a
-deterministic key (SURVEY §1.5 option b). The count and the write each
-read the input, so the log write checks its own observed row count
-against the count (log.py::_commit_batch).
+deterministic key (SURVEY §1.5 option b). The count and the collect each
+read the input, so the log commit checks the collected row count against
+the count (log.py::_commit_batch).
 
 State (`last_time_us`) persists to a JSON sidecar next to the log —
 the analogue of the reference's cursor record (persist.go:19-23, S12) —
@@ -30,6 +30,7 @@ import json
 import os
 import time
 from dataclasses import dataclass
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -76,5 +77,9 @@ def sequence_events(
     df = df.coalesce(1)
     total = df.count()
     rank = F.row_number().over(Window.orderBy("_seq", "did"))
-    sequenced = df.withColumn("time_us", (F.lit(base) + rank - 1).cast("long"))
+    # base rides as a decimal literal: Spark inlines a long literal into the
+    # generated code, so every batch's new base recompiled the rank's stage
+    # (2 Janino compiles, ~50 ms a batch); a decimal literal is an object
+    # the generated code references, so one compiled stage serves every batch
+    sequenced = df.withColumn("time_us", (F.lit(Decimal(base)) + rank - 1).cast("long"))
     return sequenced, base + total - 1 if total else last_time_us, df

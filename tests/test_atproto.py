@@ -102,6 +102,7 @@ NORMALIZED_SCHEMA = T.StructType(
 def test_normalize_mixed_batch_expected_rows(spark):
     out = normalize_frames(spark.createDataFrame(MIXED_FRAMES, schema=RAW_FRAME_SCHEMA))
     assert out.schema == NORMALIZED_SCHEMA
+    assert normalize_frames(spark.createDataFrame([], schema=RAW_FRAME_SCHEMA)).schema == NORMALIZED_SCHEMA
     got = sorted((tuple(r) for r in out.collect()), key=repr)
     assert got == [
         ("did:a", 1, "com", ("r1", "c", "app.bsky.feed.post", "k1", '{"n":1}', "c1"), None, None),
@@ -225,20 +226,23 @@ def test_did_filter_large_set_semi_join(spark, populated_log):
 
 
 def test_compact_bucket(spark, normalized, tmp_path):
-    """S11 maintenance: multi-batch partitions compact to one time-sorted
-    file; replay output is byte-identical before/after."""
+    """S11 maintenance: multi-batch partitions (tagged batch files and an
+    untagged append) compact to one time-sorted file; every row survives
+    unchanged and replay output is byte-identical before/after."""
     import os
 
     log_dir = str(tmp_path / "log")
     h = eventlog.ingest_batch(normalized, log_dir, wall_clock_us=1_000_000, batch_id=0)
-    h = eventlog.ingest_batch(normalized, log_dir, wall_clock_us=h + 1, batch_id=1)
+    h = eventlog.ingest_batch(normalized, log_dir, wall_clock_us=h + 1)
     eventlog.ingest_batch(normalized, log_dir, wall_clock_us=h + 1, batch_id=2)
-    for b in (0, 1, 2):
+    for b in (0, 2):
         eventlog.mark_batch_done(log_dir, b)
     part = os.path.join(log_dir, "hour_bucket=0")
     before = sorted(
         (r["time_us"], r["did"]) for r in eventlog.replay(spark, log_dir).collect()
     )
+    rows_before = sorted(eventlog.read_log(spark, log_dir).toJSON().collect())
+    assert len(rows_before) == 3 * normalized.count()
     n_files = eventlog.compact_bucket(spark, log_dir, bucket=0)
     assert n_files >= 3, "each batch should have produced at least one file"
     left = [f for f in os.listdir(part) if f.endswith(".parquet")]
@@ -247,6 +251,7 @@ def test_compact_bucket(spark, normalized, tmp_path):
         (r["time_us"], r["did"]) for r in eventlog.replay(spark, log_dir).collect()
     )
     assert after == before, "compaction must not change replay output"
+    assert sorted(eventlog.read_log(spark, log_dir).toJSON().collect()) == rows_before
 
 
 def test_compact_refuses_unmarked_batch(spark, normalized, tmp_path):
@@ -417,10 +422,90 @@ def test_small_batch_writes_few_files_and_stays_dense(spark, tmp_path, normalize
     assert ts[-1] == last
 
 
+# the log as Spark reads it: the file columns in the sequenced frame's
+# order, then the partition column; a file source reads every field nullable
+LOG_SCHEMA = T.StructType(
+    [
+        T.StructField("did", T.StringType(), True),
+        T.StructField("type", T.StringType(), True),
+        T.StructField("commit", NORMALIZED_SCHEMA["commit"].dataType, True),
+        T.StructField("account", ACCOUNT_STRUCT, True),
+        T.StructField("identity", IDENTITY_STRUCT, True),
+        T.StructField("time_us", T.LongType(), True),
+        T.StructField("hour_bucket", T.IntegerType(), True),
+    ]
+)
+
+
+def test_log_schema_matches_the_spark_layout(spark, tmp_path, normalized):
+    """The driver-written log reads with the schema, column order
+    included, that Spark's partitionBy write gave it."""
+    log_dir = str(tmp_path / "log")
+    eventlog.ingest_batch(normalized, log_dir, wall_clock_us=1_000_000, batch_id=0)
+    assert eventlog.read_log(spark, log_dir).schema == LOG_SCHEMA
+
+
+def test_batch_file_is_time_sorted_with_tight_footer_stats(tmp_path, normalized):
+    """A batch across an hour edge lands as one file per bucket. Each file
+    is sorted by time_us, its footer min/max (what LogWindow prunes on) is
+    its rows' range, and the hour lives in the directory name only."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    log_dir = str(tmp_path / "log")
+    n = normalized.count()
+    wall = 5 * eventlog.US_PER_HOUR - n // 2
+    last = eventlog.ingest_batch(normalized, log_dir, wall_clock_us=wall, batch_id=0)
+    assert last == wall + n - 1
+    seen = []
+    for bucket in (4, 5):
+        part = os.path.join(log_dir, f"hour_bucket={bucket}")
+        assert os.listdir(part) == ["b0-0.parquet"]
+        path = os.path.join(part, "b0-0.parquet")
+        table = pq.ParquetFile(path).read()
+        assert "hour_bucket" not in table.column_names
+        ts = table["time_us"].to_pylist()
+        assert ts == sorted(ts) and {t // eventlog.US_PER_HOUR for t in ts} == {bucket}
+        _, rows, t_min, t_max = eventlog._footer(path)
+        assert (rows, t_min, t_max) == (len(ts), ts[0], ts[-1])
+        seen += ts
+    assert seen == list(range(wall, last + 1))
+
+
+def test_commit_leaves_no_staging_or_commit_protocol_files(tmp_path, normalized):
+    """A tagged commit, its crash-replay re-run and an untagged append
+    leave only their data files: no staged batch, and none of the
+    `_temporary`/`_SUCCESS`/`.crc` litter of a Hadoop commit."""
+    import os
+
+    log_dir = str(tmp_path / "log")
+    h = eventlog.ingest_batch(normalized, log_dir, wall_clock_us=1_000_000, batch_id=0)
+    h = eventlog.ingest_batch(normalized, log_dir, wall_clock_us=h + 1, batch_id=0)
+    eventlog.ingest_batch(normalized, log_dir, wall_clock_us=h + 1)
+    entries = [
+        os.path.relpath(os.path.join(d, name), log_dir)
+        for d, dirs, files in os.walk(log_dir)
+        for name in dirs + files
+    ]
+    litter = [
+        e
+        for e in entries
+        if e.startswith(os.path.join("_staging", "batch-"))
+        or "_temporary" in e
+        or e.endswith(("_SUCCESS", ".crc"))
+    ]
+    assert litter == []
+    data = sorted(e for e in entries if e.endswith(".parquet"))
+    assert len(data) == 2 and data[0] == os.path.join("hour_bucket=0", "b0-0.parquet"), data
+    assert data[1].startswith(os.path.join("hour_bucket=0", "part-"))
+
+
 def test_commit_refuses_an_input_that_reads_differently(spark, tmp_path, normalized):
-    """The sequencer's count and the log write each read the batch's input.
-    An input that serves fewer rows on its second read must fail the
-    commit: no file reaches the log and the sequencer state is unchanged."""
+    """The sequencer's count and the log commit's collect each read the
+    batch's input. An input that serves fewer rows on its second read must
+    fail the commit: no file reaches the log and the sequencer state is
+    unchanged."""
     import os
 
     log_dir = str(tmp_path / "log")
@@ -432,7 +517,7 @@ def test_commit_refuses_an_input_that_reads_differently(spark, tmp_path, normali
 
     def kept(seq):
         # the first evaluation for a seq keeps its row, every later one
-        # keeps only even seqs: the count reads more rows than the write
+        # keeps only even seqs: the count reads more rows than the collect
         try:
             os.close(os.open(os.path.join(marks, str(seq)), os.O_CREAT | os.O_EXCL))
             return True
