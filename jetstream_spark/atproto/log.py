@@ -20,10 +20,11 @@ the filters need, and streams in file order. Writing sorted-by-time_us
 within partitions keeps parquet row-group min/max stats tight, so even
 intra-hour seeks skip row groups.
 
-The append runs on the driver, as the reference's one consumer writes
-each event straight into Pebble (persist.go:90-117): `ingest_batch`
-collects the sequenced batch once as Arrow and writes one time-sorted
-pyarrow file per hour bucket, with no Spark write job and no Hadoop
+The append runs on the driver, as the reference's one consumer stamps
+each event and writes it straight into Pebble (persist.go:90-117):
+`ingest_batch` takes the batch the sequencer collected once as Arrow and
+sequenced in time_us order, and writes one pyarrow file per hour bucket,
+with no second read of the input, no Spark write job and no Hadoop
 commit protocol. Compaction and the replay scans stay in Spark.
 
 The serving read (LogWindow) uses the same layout without Spark: the live
@@ -107,15 +108,14 @@ def _hour_slices(table: pa.Table):
             yield bucket, table.slice(lo, hi - lo)
 
 
-def _commit_batch(df: DataFrame, log_dir: str, batch_id: int | None, n_rows: int) -> None:
-    """Append one sequenced batch to the hour-partitioned log (S11) from the
-    driver: one Arrow collect of `df` (the job that evaluates the
-    sequencer's rank), then one pyarrow file per hour bucket, sorted by
-    time_us so each file's footer min/max is the batch's range there.
-    Files hold no hour_bucket column; the directory name carries it, as in
-    a Spark partitionBy layout, so Spark readers and LogWindow read them
-    alike. The driver holds at most one batch, which the source's
-    batch_size bounds.
+def _commit_batch(table: pa.Table, log_dir: str, batch_id: int | None) -> None:
+    """Append one sequenced batch (sequencer.py::sequence_events: Arrow,
+    in time_us order) to the hour-partitioned log (S11) from the driver:
+    one pyarrow file per hour bucket, so each file's footer min/max is the
+    batch's range there. Files hold no hour_bucket column; the directory
+    name carries it, as in a Spark partitionBy layout, so Spark readers and
+    LogWindow read them alike. The driver holds at most one batch, which
+    the source's batch_size bounds.
 
     The files are staged under `_staging/batch-N`, then any files a
     previous attempt of the SAME batch left in the log are deleted, then
@@ -124,21 +124,13 @@ def _commit_batch(df: DataFrame, log_dir: str, batch_id: int | None, n_rows: int
     of the reference's overwrite-idempotent Pebble keys (persist.go:101-108,
     P8). Readers skip `_`-prefixed entries, so the staging area is
     invisible to them. With `batch_id` None (one-shot and test appends) the
-    files get untagged `part-<uuid>-0.parquet` names and nothing is deleted.
-
-    The collect must hold the `n_rows` the sequencer counted: an input
-    that reads differently on its second read would leave time_us sparse
-    or overlapping the next batch, so the commit raises before any file is
-    written."""
-    table = df.toArrow()
-    if table.num_rows != n_rows:
-        raise RuntimeError(f"batch {batch_id}: the write saw {table.num_rows} rows, the sequencer counted {n_rows}")
+    files get untagged `part-<uuid>-0.parquet` names and nothing is deleted."""
     tag = f"part-{uuid.uuid4().hex}" if batch_id is None else f"b{batch_id}"
     staging = os.path.join(log_dir, "_staging", tag if batch_id is None else f"batch-{batch_id}")
     shutil.rmtree(staging, ignore_errors=True)
     os.makedirs(staging)
     staged = []
-    for bucket, rows in _hour_slices(table.sort_by("time_us")):
+    for bucket, rows in _hour_slices(table):
         path = os.path.join(staging, f"hour_bucket={bucket}.parquet")
         # no Arrow schema blob (~1.4 KB a footer): the parquet schema
         # alone reads back the same types
@@ -161,11 +153,11 @@ def ingest_batch(
 ) -> int:
     """Sequence a normalized batch and append it to the log, persisting
     sequencer state (the batch path of the standing pipeline §3.1).
-    Returns the new last_time_us; a batch the sequencer counts empty
-    returns the unchanged one, with no collect, no file and no state save.
+    Returns the new last_time_us; an empty batch returns the unchanged
+    one, with no file and no state save.
 
-    Two Spark jobs: the sequencer's count and the commit's Arrow collect;
-    the files are written on the driver (_commit_batch).
+    One Spark job: the sequencer's Arrow collect; the clock, the sort and
+    the files run on the driver (sequence_events, _commit_batch).
 
     With batch_id set, the append is idempotent under crash-replay: a
     re-run first removes the batch's own files (delete-before-rewrite), so
@@ -174,14 +166,11 @@ def ingest_batch(
     monotonic time_us (a replay after the state save re-assigns from
     last+1; the old copy is deleted first). Without batch_id the write is a
     plain append (one-shot/test usage)."""
-    if wall_clock_us is None:
-        wall_clock_us = int(time.time() * 1_000_000)
     state = SequencerState.load(log_dir)
-    base = max(state.last_time_us + 1, wall_clock_us)
     sequenced, last, _ = sequence_events(frames_normalized, state.last_time_us, wall_clock_us=wall_clock_us)
-    if last < base:
-        return state.last_time_us  # nothing to stage, state unchanged
-    _commit_batch(sequenced.drop("_seq"), log_dir, batch_id, last - base + 1)
+    if sequenced.num_rows == 0:
+        return last  # nothing to stage, state unchanged
+    _commit_batch(sequenced, log_dir, batch_id)
     state.last_time_us = last
     state.save(log_dir)
     return last

@@ -2,22 +2,23 @@
 
 The reference creates total order with ONE goroutine and a mutex clock
 (consumer.go:311-342, clock.go:34-56): every event funnels through a single
-thread. A micro-batch holds at most `batch_size` frames, so the Spark
-version keeps that shape per batch — one ordered pass in one task. The
-input is coalesced to one partition, so neither step below shuffles:
+thread, which stamps it in memory just before persisting it. A micro-batch
+holds at most `batch_size` frames, so the Spark version keeps that shape
+per batch — one ordered pass on the driver, with no count job and no Spark
+rank:
 
-  1. a count of the batch gives the new last_time_us up front,
-  2. the action that reads the sequenced frame (the log commit's Arrow
-     collect, log.py::_commit_batch) evaluates, in a single task,
-     time_us = base + row_number() over (ORDER BY _seq, did) - 1, where
+  1. one Arrow collect of the batch (`DataFrame.toArrow()`, the batch's
+     one Spark job; the log commit writes the same table),
+  2. the rows sorted by (_seq, did), nulls first — the order Spark's
+     ORDER BY _seq, did gives,
+  3. time_us = base + (0, 1, ..., n - 1) in that order, where
      base = max(last_time_us + 1, wall_clock_us)
      — the exact clock-bump rule of clock.go:51-53 lifted from per-event
      to per-batch granularity.
 
 Ordering by the relay seq keeps the reference's arrival order, on a
-deterministic key (SURVEY §1.5 option b). The count and the collect each
-read the input, so the log commit checks the collected row count against
-the count (log.py::_commit_batch).
+deterministic key (SURVEY §1.5 option b). The input is read once, so the
+new last_time_us is base + n - 1 of the very rows the log commit writes.
 
 State (`last_time_us`) persists to a JSON sidecar next to the log —
 the analogue of the reference's cursor record (persist.go:19-23, S12) —
@@ -30,10 +31,11 @@ import json
 import os
 import time
 from dataclasses import dataclass
-from decimal import Decimal
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 
 STATE_FILE = "_sequencer_state.json"
 
@@ -63,23 +65,18 @@ def sequence_events(
     df: DataFrame,
     last_time_us: int = 0,
     wall_clock_us: int | None = None,
-) -> tuple[DataFrame, int, DataFrame]:
+) -> tuple[pa.Table, int, DataFrame]:
     """Assign dense, strictly monotonic `time_us` to every row.
 
-    Returns (sequenced_df, new_last_time_us, df): the count job runs here,
-    the rank is lazy and runs with whatever action reads sequenced_df. The
-    third element is the input frame the count read."""
+    Returns (sequenced, new_last_time_us, df): `sequenced` is the batch
+    collected once as Arrow, without `_seq`, in time_us order; the third
+    element is the input frame it was collected from."""
     if wall_clock_us is None:
         wall_clock_us = int(time.time() * 1_000_000)
     base = max(last_time_us + 1, wall_clock_us)
-    # one partition satisfies both the count's and the rank's all-rows
-    # distribution, so neither plans an Exchange
-    df = df.coalesce(1)
-    total = df.count()
-    rank = F.row_number().over(Window.orderBy("_seq", "did"))
-    # base rides as a decimal literal: Spark inlines a long literal into the
-    # generated code, so every batch's new base recompiled the rank's stage
-    # (2 Janino compiles, ~50 ms a batch); a decimal literal is an object
-    # the generated code references, so one compiled stage serves every batch
-    sequenced = df.withColumn("time_us", (F.lit(Decimal(base)) + rank - 1).cast("long"))
-    return sequenced, base + total - 1 if total else last_time_us, df
+    table = df.toArrow()
+    order = pc.sort_indices(table, [("_seq", "ascending"), ("did", "ascending")], null_placement="at_start")
+    n = table.num_rows
+    sequenced = table.take(order).drop_columns("_seq")
+    sequenced = sequenced.append_column("time_us", pa.array(np.arange(base, base + n, dtype=np.int64)))
+    return sequenced, base + n - 1 if n else last_time_us, df

@@ -124,24 +124,46 @@ def test_normalize_reads_frames_once(spark):
 
 # --- sequencer (S10/H1) ---------------------------------------------------------
 def test_sequencer_strictly_monotonic(normalized):
-    seq_df, last, _ = sequence_events(normalized, last_time_us=0, wall_clock_us=1_700_000_000_000_000)
-    rows = seq_df.orderBy("time_us").collect()
-    times = [r["time_us"] for r in rows]
+    seq, last, _ = sequence_events(normalized, last_time_us=0, wall_clock_us=1_700_000_000_000_000)
+    times = seq["time_us"].to_pylist()
     assert len(times) == normalized.count()
     assert all(b > a for a, b in zip(times, times[1:])), "time_us must be strictly increasing"
     assert last == max(times)
-    # relay-arrival order, as the reference's single sequencer keeps it
-    seqs = [r["_seq"] for r in rows]
-    assert seqs == sorted(seqs), "_seq must be non-decreasing in time_us order"
+    # relay-arrival order, as the reference's single sequencer keeps it:
+    # in time_us order the rows are the input's rows in _seq order
+    by_seq = normalized.orderBy("_seq", "did").drop("_seq").toArrow()
+    assert seq.drop_columns("time_us").to_pylist() == by_seq.to_pylist(), (
+        "_seq must be non-decreasing in time_us order"
+    )
 
 
 def test_sequencer_deterministic_order(normalized):
     """Option (b) of §1.5: ordering by (_seq, did) makes assignment reproducible."""
     a, _, _ = sequence_events(normalized, 0, wall_clock_us=10_000)
     b, _, _ = sequence_events(normalized, 0, wall_clock_us=10_000)
-    ra = {(r["did"], r["_seq"]): r["time_us"] for r in a.collect()}
-    rb = {(r["did"], r["_seq"]): r["time_us"] for r in b.collect()}
-    assert ra == rb
+    assert a.equals(b)
+
+
+def test_sequencer_order_matches_spark_row_number(spark):
+    """The driver's order is Spark's ORDER BY _seq, did: null _seq (and a
+    null did) first, ties on _seq broken by did, and did compared as UTF-8
+    bytes — which puts U+FF5E before U+1F600, where UTF-16 order would not.
+    Oracle: row_number() over (ORDER BY _seq, did), computed here."""
+    from pyspark.sql import Window
+
+    dids = [
+        "did:plc:b", "did:plc:a", "did:plc:é", "did:plc:Ω", "did:plc:日本",
+        "did:plc:\uff5e", "did:plc:\U0001f600", None,
+    ]
+    rows = [(i, seq, did) for i, (seq, did) in enumerate((s, d) for s in (7, None, 3) for d in dids)]
+    batch = spark.createDataFrame(rows, "id int, _seq long, did string").repartition(3)
+    base = 1_000_000
+    seq, last, _ = sequence_events(batch, last_time_us=0, wall_clock_us=base)
+    got = dict(zip(seq["id"].to_pylist(), seq["time_us"].to_pylist()))
+    rank = F.row_number().over(Window.orderBy("_seq", "did"))
+    want = {r["id"]: r["t"] for r in batch.select("id", (F.lit(base) + rank - 1).alias("t")).collect()}
+    assert got == want
+    assert last == base + len(rows) - 1
 
 
 def test_sequencer_restart_continuity(normalized, tmp_path):
@@ -300,8 +322,8 @@ def test_ttl_trim(spark, normalized, tmp_path):
 
 # --- wire format (S16) ----------------------------------------------------------------
 def test_wire_omitempty_and_raw_record(spark, normalized):
-    seq_df, _, _ = sequence_events(normalized, 0, wall_clock_us=1_700_000_000_000_000)
-    wire = to_wire(seq_df)
+    seq, _, _ = sequence_events(normalized, 0, wall_clock_us=1_700_000_000_000_000)
+    wire = to_wire(spark.createDataFrame(seq))
     for r in wire.collect():
         frame = json.loads(r["value"])
         assert set(frame).issubset({"did", "time_us", "type", "commit", "account", "identity"})
@@ -501,23 +523,22 @@ def test_commit_leaves_no_staging_or_commit_protocol_files(tmp_path, normalized)
     assert data[1].startswith(os.path.join("hour_bucket=0", "part-"))
 
 
-def test_commit_refuses_an_input_that_reads_differently(spark, tmp_path, normalized):
-    """The sequencer's count and the log commit's collect each read the
-    batch's input. An input that serves fewer rows on its second read must
-    fail the commit: no file reaches the log and the sequencer state is
-    unchanged."""
+def test_ingest_reads_its_input_once(spark, tmp_path, normalized):
+    """The sequencer's collect is the batch's one read of its input, and
+    the log commit writes that same table. An input that serves fewer
+    rows on any later read still commits whole: the log holds exactly
+    last - base + 1 rows, time_us dense and strictly increasing, and the
+    saved state is the returned last."""
     import os
 
     log_dir = str(tmp_path / "log")
     SequencerState(last_time_us=5_000).save(log_dir)
-    state_path = os.path.join(log_dir, "_sequencer_state.json")
-    before = (open(state_path).read(), os.stat(state_path).st_mtime_ns)
     marks = str(tmp_path / "reads")
     os.makedirs(marks)
 
     def kept(seq):
         # the first evaluation for a seq keeps its row, every later one
-        # keeps only even seqs: the count reads more rows than the collect
+        # keeps only even seqs: a second read would see fewer rows
         try:
             os.close(os.open(os.path.join(marks, str(seq)), os.O_CREAT | os.O_EXCL))
             return True
@@ -526,17 +547,20 @@ def test_commit_refuses_an_input_that_reads_differently(spark, tmp_path, normali
 
     keep = F.udf(kept, T.BooleanType()).asNondeterministic()
     shifting = normalized.where(keep("_seq"))
-    with pytest.raises(RuntimeError, match="the write saw"):
-        eventlog.ingest_batch(shifting, log_dir, wall_clock_us=1_000_000, batch_id=0)
-    assert (open(state_path).read(), os.stat(state_path).st_mtime_ns) == before
-    assert [p for p, _, _ in os.walk(log_dir) if "hour_bucket=" in p] == []
+    base = 1_000_000
+    last = eventlog.ingest_batch(shifting, log_dir, wall_clock_us=base, batch_id=0)
+    logged = eventlog.read_log(spark, log_dir).select("time_us").orderBy("time_us").collect()
+    ts = [r["time_us"] for r in logged]
+    assert len(ts) == last - base + 1 == normalized.count()
+    assert ts == list(range(base, last + 1)), "time_us must be dense and strictly increasing"
+    assert SequencerState.load(log_dir).last_time_us == last
 
 
-def test_ingest_batch_runs_at_most_two_jobs(spark, tmp_path, normalized):
-    """One non-empty batch costs the sequencer's count and the log write:
-    no sampling, checkpoint or per-partition collect job, and no shuffle
-    stage under either (the input is one partition). The fixture's cache
-    is filled first: that job belongs to the fixture, not to the batch."""
+def test_ingest_batch_runs_one_job(spark, tmp_path, normalized):
+    """One non-empty batch costs one Spark job, the sequencer's Arrow
+    collect: no count, sampling, checkpoint or write job. The fixture's
+    cache is filled first: that job belongs to the fixture, not to the
+    batch."""
     normalized.count()
     sc = spark.sparkContext
     group = f"ingest-jobs-{tmp_path.name}"
@@ -547,4 +571,4 @@ def test_ingest_batch_runs_at_most_two_jobs(spark, tmp_path, normalized):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 2, sorted(jobs)
+    assert len(jobs) == 1, sorted(jobs)

@@ -37,8 +37,8 @@ def test_sequencer_monotonic_for_any_state(normalized, last, wall):
     """Strict monotonicity and continuity hold for ANY prior state and wall
     clock, including a wall clock far behind the persisted state
     (clock.go:51-53's bump rule generalized)."""
-    df, new_last, _ = sequence_events(normalized, last_time_us=last, wall_clock_us=wall)
-    times = sorted(r["time_us"] for r in df.select("time_us").collect())
+    seq, new_last, _ = sequence_events(normalized, last_time_us=last, wall_clock_us=wall)
+    times = sorted(seq["time_us"].to_pylist())
     assert times[0] > last, "must start above prior state"
     assert times[0] >= wall or times[0] == last + 1
     assert all(b == a + 1 for a, b in zip(times, times[1:])), "dense, strictly increasing"
