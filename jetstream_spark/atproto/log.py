@@ -150,11 +150,16 @@ def ingest_batch(
     log_dir: str,
     wall_clock_us: int | None = None,
     batch_id: int | None = None,
+    *,
+    on_sequenced: Callable[[pa.Table, int], None] | None = None,
 ) -> int:
     """Sequence a normalized batch and append it to the log, persisting
     sequencer state (the batch path of the standing pipeline §3.1).
     Returns the new last_time_us; an empty batch returns the unchanged
-    one, with no file and no state save.
+    one, with no file and no state save. `on_sequenced(table, last)`, if
+    given, gets the batch as the sequencer collected it once the batch is
+    durable (after the state save; at once for an empty batch), so a
+    caller can count it without another Spark job.
 
     One Spark job: the sequencer's Arrow collect; the clock, the sort and
     the files run on the driver (sequence_events, _commit_batch).
@@ -168,11 +173,12 @@ def ingest_batch(
     plain append (one-shot/test usage)."""
     state = SequencerState.load(log_dir)
     sequenced, last, _ = sequence_events(frames_normalized, state.last_time_us, wall_clock_us=wall_clock_us)
-    if sequenced.num_rows == 0:
-        return last  # nothing to stage, state unchanged
-    _commit_batch(sequenced, log_dir, batch_id)
-    state.last_time_us = last
-    state.save(log_dir)
+    if sequenced.num_rows:
+        _commit_batch(sequenced, log_dir, batch_id)
+        state.last_time_us = last
+        state.save(log_dir)
+    if on_sequenced is not None:
+        on_sequenced(sequenced, last)
     return last
 
 

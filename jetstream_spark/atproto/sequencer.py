@@ -23,6 +23,9 @@ new last_time_us is base + n - 1 of the very rows the log commit writes.
 State (`last_time_us`) persists to a JSON sidecar next to the log —
 the analogue of the reference's cursor record (persist.go:19-23, S12) —
 so monotonicity survives restart (tested in tests/test_atproto.py).
+The same sidecar is the head the live tail ticks on: `SequencerHeadSource`
+is a streaming source whose offset is `last_time_us`, so a standing query
+over it runs one micro-batch exactly when a commit moves the head.
 """
 
 from __future__ import annotations
@@ -36,6 +39,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 STATE_FILE = "_sequencer_state.json"
 
@@ -80,3 +84,41 @@ def sequence_events(
     sequenced = table.take(order).drop_columns("_seq")
     sequenced = sequenced.append_column("time_us", pa.array(np.arange(base, base + n, dtype=np.int64)))
     return sequenced, base + n - 1 if n else last_time_us, df
+
+
+class SequencerHeadReader(SimpleDataSourceStreamReader):
+    """Offsets are the sequencer head, `{"last_time_us": n}`; a batch
+    carries no rows. Each poll reads the state sidecar, so the query's
+    cost per idle trigger is one small file read, whatever the size of
+    the log. An offset written by another source (a checkpoint from an
+    older hub) only differs from the head, so a restart on it runs one
+    batch and goes on from there."""
+
+    def __init__(self, log_dir: str):
+        self.log_dir = log_dir
+
+    def initialOffset(self) -> dict:
+        return {"last_time_us": 0}
+
+    def read(self, start: dict):
+        return iter(()), {"last_time_us": SequencerState.load(self.log_dir).last_time_us}
+
+    def readBetweenOffsets(self, start: dict, end: dict):
+        return iter(())
+
+
+class SequencerHeadSource(DataSource):
+    """`spark.readStream.format("sequencer_head").option("log_dir", ...)`:
+    a row-less stream whose micro-batches mark head moves. It lives here,
+    next to the state it reads, so Spark's source-runner process imports
+    only this module's dependencies."""
+
+    @classmethod
+    def name(cls) -> str:
+        return "sequencer_head"
+
+    def schema(self) -> str:
+        return "last_time_us bigint"
+
+    def simpleStreamReader(self, schema) -> SequencerHeadReader:
+        return SequencerHeadReader(self.options["log_dir"])

@@ -18,6 +18,8 @@ from __future__ import annotations
 import threading
 import time
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
@@ -58,10 +60,10 @@ class ConsumerMetrics:
     - consumer_last_seq / consumer_last_evt_processed_at gauges,
       consumer_events_{sequenced,persisted}_total conservation counters.
 
-    Per-batch label counts come from ONE tiny distributed agg
-    (groupBy(type, op-kind, collection).count() — rows bounded by
-    #collections, never by batch size), so attaching metrics adds a single
-    extra small job per microbatch and nothing per-row.
+    Per-batch label counts come from a pyarrow group_by(type, op-kind,
+    collection) over the batch the sequencer already collected on the
+    driver (`ingest_batch`'s `on_sequenced` hook), so attaching metrics
+    adds no Spark job and nothing per-row on the executors.
     """
 
     def __init__(self, socket_url: str = "ingest"):
@@ -77,27 +79,31 @@ class ConsumerMetrics:
         self.events_persisted_total = 0
         self._lock = threading.Lock()
 
-    def observe_batch(self, batch_df: DataFrame, duration_s: float, last_seq: int) -> None:
-        """Record one committed microbatch of normalized events."""
+    def observe_batch(self, batch: pa.Table, duration_s: float, last_seq: int) -> None:
+        """Record one committed microbatch: `batch` is the normalized
+        events as the sequencer collected them (Arrow)."""
+        commit = batch["commit"]
         counts = (
-            batch_df.groupBy(
-                F.col("type").alias("event_type"),
-                F.col("commit.type").alias("kind"),
-                F.col("commit.collection").alias("op_path"),
+            pa.table(
+                {
+                    "event_type": batch["type"],
+                    "kind": pc.struct_field(commit, "type"),
+                    "op_path": pc.struct_field(commit, "collection"),
+                }
             )
-            .count()
-            .collect()
+            .group_by(["event_type", "kind", "op_path"])
+            .aggregate([([], "count_all")])
+            .to_pylist()
         )
         with self._lock:
             n = 0
             for row in counts:
-                n += row["count"]
-                self.events_processed[row["event_type"]] = (
-                    self.events_processed.get(row["event_type"], 0) + row["count"]
-                )
+                c = row["count_all"]
+                n += c
+                self.events_processed[row["event_type"]] = self.events_processed.get(row["event_type"], 0) + c
                 if row["kind"] is not None:
                     key = (row["kind"], row["op_path"] or "")
-                    self.ops_processed[key] = self.ops_processed.get(key, 0) + row["count"]
+                    self.ops_processed[key] = self.ops_processed.get(key, 0) + c
             for i, ub in enumerate(_DURATION_BUCKETS):
                 if duration_s <= ub:
                     self.bucket_counts[i] += 1

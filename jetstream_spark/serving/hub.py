@@ -7,13 +7,16 @@ consumer feeds N per-subscriber buffers, with per-subscriber predicates
 evaluated at emit time against envelope fields — never re-serializing
 (serialize-once, P3: wire frames are prebuilt by to_wire upstream).
 
-Spark shape: a Structured Streaming tick query watches the log directory;
-each tick computes ONE ordered incremental slice (min subscriber watermark,
-sequencer head] and the Python fan-out loop routes rows by the S17 filter
-semantics + each subscriber's S18 monotonic guard. The slice is read on
-the driver (log.py::LogWindow: only the files whose footer time_us range
-meets the slice, usually the one batch file just committed) and handed
-to to_wire as a local relation, so a live slice runs no Spark job — the
+Spark shape: a Structured Streaming tick query runs over the sequencer
+head (atproto/sequencer.py::SequencerHeadSource, whose offset is
+last_time_us), so it ticks exactly when a commit moves the head and never
+lists the log. Each tick computes ONE ordered incremental slice (min
+subscriber watermark, sequencer head] and the Python fan-out loop routes
+rows by the S17 filter semantics + each subscriber's S18 monotonic guard.
+The slice is read on the driver (log.py::LogWindow: only the files whose
+footer time_us range meets the slice, usually the one batch file just
+committed) and handed to to_wire as a local relation, so a live slice
+runs no Spark job — the
 analogue of the reference emitting from memory right after the persist
 (server.go:62-116). When the window cannot be served (a compaction or
 trim in motion, a file replaced under the listing, or more candidate
@@ -44,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from jetstream_spark.atproto.log import LogWindow, replay, replay_rows
-from jetstream_spark.atproto.sequencer import SequencerState
+from jetstream_spark.atproto.sequencer import SequencerHeadSource, SequencerState
 from jetstream_spark.atproto.subscribe import Subscription
 from jetstream_spark.atproto.wire import to_wire
 from jetstream_spark.serving.edge import MAX_SUB_RATE, PLAYBACK_MULT
@@ -130,17 +133,15 @@ class LiveTailHub:
     # --- streaming tail -------------------------------------------------------
 
     def start(self) -> StreamingQuery:
+        # the tick stream's offset is the sequencer head: one micro-batch
+        # per head move, whatever the log holds — it never lists the log,
+        # so a trim or compaction under it cannot fail it. Its batch is
+        # row-less; delivery lives in the seq-guarded slice read (_on_tick)
+        self.spark.dataSource.register(SequencerHeadSource)
         tick = (
-            self.spark.readStream.schema("time_us bigint, hour_bucket bigint")
-            .option("maxFilesPerTrigger", 1000)
-            # the heartbeat must not die on files a TTL trim removed
-            # between listing and read — delivery correctness lives in the
-            # seq-guarded replay re-read (_on_tick), not in this stream's
-            # contents. Deliberately NOT set on the replay reads: there a
-            # vanished file can be a mid-compaction swap whose data lives on
-            # at the aside copy, and replay_rows' re-plan retry is the tool
-            .option("ignoreMissingFiles", "true")
-            .parquet(self.log_dir)
+            self.spark.readStream.format(SequencerHeadSource.name())
+            .option("log_dir", self.log_dir)
+            .load()
         )
         self._query = (
             tick.writeStream.foreachBatch(self._on_tick)

@@ -104,9 +104,12 @@ def _commit_ingest(
     )
     with span:
         t0 = time.monotonic()
-        last = ingest_batch(batch_df, log_dir, wall_clock_us=wall_clock_us, batch_id=batch_id)
-        if metrics is not None:
-            metrics.observe_batch(batch_df, time.monotonic() - t0, last)
+        observe = (
+            None
+            if metrics is None
+            else lambda table, last: metrics.observe_batch(table, time.monotonic() - t0, last)
+        )
+        ingest_batch(batch_df, log_dir, wall_clock_us=wall_clock_us, batch_id=batch_id, on_sequenced=observe)
 
 
 def start_ingest(
@@ -123,8 +126,9 @@ def start_ingest(
 
     With `metrics` set (operators.observability.ConsumerMetrics), every
     committed microbatch updates the reference's consumer_* Prometheus
-    families (pkg/consumer/metrics.go) — one extra tiny agg per batch,
-    nothing per-row; metrics=None leaves the hot path untouched. With
+    families (pkg/consumer/metrics.go) — a driver-side group-by of the
+    table the sequencer collected, no extra Spark job; metrics=None leaves
+    the hot path untouched. With
     `tracer` set, each commit runs in a CommitBatch span — the engine's
     unit of processing, the analogue of the reference's per-event
     HandleStreamEvent span (pkg/consumer/consumer.go:100). Driver-side

@@ -572,3 +572,41 @@ def test_ingest_batch_runs_one_job(spark, tmp_path, normalized):
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) == 1, sorted(jobs)
+
+
+def test_commit_ingest_with_metrics_runs_one_job(spark, tmp_path):
+    """Consumer metrics ride on the sequencer's collect: one non-empty
+    batch through the standing ingest commit with metrics attached still
+    runs one Spark job, and its label counters equal Spark's
+    groupBy(type, commit.type, commit.collection).count() of the batch."""
+    from jetstream_spark.operators.observability import ConsumerMetrics
+    from jetstream_spark.streaming.pipeline import _commit_ingest
+
+    batch = normalize_frames(spark.createDataFrame(MIXED_FRAMES, schema=RAW_FRAME_SCHEMA)).cache()
+    events: dict = {}
+    ops: dict = {}
+    for r in batch.groupBy("type", F.col("commit.type").alias("kind"), F.col("commit.collection")).count().collect():
+        events[r["type"]] = events.get(r["type"], 0) + r["count"]
+        if r["kind"] is not None:
+            key = (r["kind"], r["collection"] or "")
+            ops[key] = ops.get(key, 0) + r["count"]
+    assert len(events) == 3 and len(ops) == 3, (events, ops)
+
+    metrics = ConsumerMetrics()
+    log_dir = str(tmp_path / "log")
+    sc = spark.sparkContext
+    group = f"ingest-metrics-jobs-{tmp_path.name}"
+    sc.setJobGroup(group, "one ingest commit with metrics")
+    try:
+        _commit_ingest(log_dir, 1_000_000, metrics, None, batch, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1, sorted(jobs)
+    assert metrics.events_processed == events
+    assert metrics.ops_processed == ops
+    n = sum(events.values())
+    assert metrics.events_sequenced_total == metrics.events_persisted_total == n
+    assert metrics.last_seq == SequencerState.load(log_dir).last_time_us == 1_000_000 + n - 1
+    assert metrics.duration_count == 1

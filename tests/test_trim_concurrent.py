@@ -160,9 +160,9 @@ def test_vanished_subpath_classifier():
 def test_live_subscription_survives_ttl_trim_between_ticks(spark, tmp_path, normalized):
     """Race 1 on the live-tail path: a subscriber attached to the hub keeps
     delivering across a TTL trim of already-delivered buckets — the tick
-    stream must not die on vanished files (ignoreMissingFiles: the tick is
-    a heartbeat, delivery is the seq-guarded replay re-read), and events
-    ingested AFTER the trim must still arrive complete and in order."""
+    stream must not die when buckets vanish (it ticks on the sequencer
+    head, delivery is the seq-guarded replay re-read), and events ingested
+    AFTER the trim must still arrive complete and in order."""
     log_dir = _mk_hourly_log(spark, tmp_path, normalized)
     all_keys = _keys(eventlog.replay(spark, log_dir).collect())
 
@@ -203,29 +203,13 @@ def test_live_subscription_survives_ttl_trim_between_ticks(spark, tmp_path, norm
     assert times == sorted(times), "delivery order broke across the trim"
 
 
-def test_ignore_missing_files_suppresses_task_time_vanish(spark, tmp_path, normalized):
-    """Pins the Spark contract the tick streams lean on: with
-    ignoreMissingFiles, a file deleted between a frame's listing and its
-    task execution is skipped, not fatal. If a Spark bump breaks this,
-    the tick heartbeats lose their trim protection — fail here, loudly,
-    instead of in a live subscriber."""
-    log_dir = _mk_hourly_log(spark, tmp_path, normalized)
-    # frame listed WITH bucket 0, files deleted before task execution
-    df = spark.read.option("ignoreMissingFiles", "true").parquet(log_dir)
-    shutil.rmtree(os.path.join(log_dir, "hour_bucket=0"))
-    got = df.count()  # without the option this raises FAILED_READ_FILE
-    surviving = eventlog.read_log(spark, log_dir).count()
-    assert surviving > 0
-    assert got == surviving, got
-
-
 def test_subscription_restart_from_checkpoint_after_trim(spark, tmp_path, normalized):
     """A hub that stops, misses a TTL trim while down, and restarts from
     the SAME checkpoint (serve reuses `_hub_ckpt` across restarts): the
-    file source's seen-file log references files that no longer exist, and
-    the restart must come up clean and deliver exactly the events appended
-    since (seq guard) to the reattached subscriber, not crash on the
-    vanished history. This is the reference's reconnect-after-downtime
+    checkpoint's last offset is a head whose older buckets no longer
+    exist, and the restart must come up clean and deliver exactly the
+    events appended since (seq guard) to the reattached subscriber, not
+    crash on the vanished history. This is the reference's reconnect-after-downtime
     shape (server.go:240-356 with a cursor inside the retention window
     while older data expired)."""
     log_dir = _mk_hourly_log(spark, tmp_path, normalized)
