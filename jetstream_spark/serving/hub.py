@@ -16,15 +16,14 @@ rows by the S17 filter semantics + each subscriber's S18 monotonic guard.
 The slice is read on the driver (log.py::LogWindow: only the files whose
 footer time_us range meets the slice, usually the one batch file just
 committed) and handed to to_wire as a local relation, so a live slice
-runs no Spark job — the
-analogue of the reference emitting from memory right after the persist
-(server.go:62-116). When the window cannot be served (a compaction or
-trim in motion, a file replaced under the listing, or more candidate
-rows than batch_limit) the slice is the Spark replay scan, with
-replay_rows' re-plan retry. Per-round driver materialization is bounded
-by batch_limit either way (the 10×-sub-rate replay contract,
-persist.go:149) — a subscriber far behind head never forces an
-unbounded collect.
+runs no Spark job — the analogue of the reference emitting from memory
+right after the persist (server.go:62-116). When the window cannot be
+served (a compaction or trim in motion, a file replaced under the
+listing, or more candidate rows than batch_limit) the slice is the Spark
+replay scan, with replay_rows' re-plan retry. Per-round driver
+materialization is bounded by batch_limit either way (the 10×-sub-rate
+replay contract, persist.go:149) — a subscriber far behind head never
+forces an unbounded collect.
 
 Registration does an inline catch-up round so a subscriber attaching
 between ticks (the replay→live cutover instant, server.go:305-337) is

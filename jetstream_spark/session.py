@@ -15,10 +15,10 @@ nothing here is single-node-specific. Key choices for the 100 TB design point:
   through the FileSystem-based checkpoint file manager, not the default
   FileContext one: one atomic metadata write (createAtomic) takes ~11 ms
   instead of ~40 ms (median of 40 writes each, 4-core host, local disk),
-  and every standing query pays at least two per trigger. Both managers write a temp file and rename it,
-  so the write is atomic wherever rename is (local POSIX, HDFS); neither
-  fsyncs. An object store without atomic rename needs a different
-  manager either way.
+  and every standing query pays at least two per trigger. Both managers
+  write a temp file and rename it, so the write is atomic wherever
+  rename is (local POSIX, HDFS); neither fsyncs. An object store without
+  atomic rename needs a different manager either way.
 """
 
 from __future__ import annotations

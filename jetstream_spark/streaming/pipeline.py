@@ -127,13 +127,12 @@ def start_ingest(
     With `metrics` set (operators.observability.ConsumerMetrics), every
     committed microbatch updates the reference's consumer_* Prometheus
     families (pkg/consumer/metrics.go) — a driver-side group-by of the
-    table the sequencer collected, no extra Spark job; metrics=None leaves
-    the hot path untouched. With
-    `tracer` set, each commit runs in a CommitBatch span — the engine's
-    unit of processing, the analogue of the reference's per-event
-    HandleStreamEvent span (pkg/consumer/consumer.go:100). Driver-side
-    only; the executors' work inside is visible through Spark's own task
-    metrics."""
+    table the sequencer collected, no extra Spark job; metrics=None
+    leaves the hot path untouched. With `tracer` set, each commit runs in
+    a CommitBatch span — the engine's unit of processing, the analogue of
+    the reference's per-event HandleStreamEvent span
+    (pkg/consumer/consumer.go:100). Driver-side only; the executors' work
+    inside is visible through Spark's own task metrics."""
     return start_exactly_once(
         normalize_frames(frames),
         log_dir,
