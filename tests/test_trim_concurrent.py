@@ -209,9 +209,9 @@ def test_subscription_restart_from_checkpoint_after_trim(spark, tmp_path, normal
     checkpoint's last offset is a head whose older buckets no longer
     exist, and the restart must come up clean and deliver exactly the
     events appended since (seq guard) to the reattached subscriber, not
-    crash on the vanished history. This is the reference's reconnect-after-downtime
-    shape (server.go:240-356 with a cursor inside the retention window
-    while older data expired)."""
+    crash on the vanished history. This is the reference's
+    reconnect-after-downtime shape (server.go:240-356 with a cursor inside
+    the retention window while older data expired)."""
     log_dir = _mk_hourly_log(spark, tmp_path, normalized)
     all_keys = _keys(eventlog.replay(spark, log_dir).collect())
     ckpt = str(tmp_path / "hubckpt")
