@@ -7,7 +7,10 @@ embeddings table written ONCE partitioned by LSH bucket id
 (Hive-style `bucket=<id>/` directories), so a probe's
 `WHERE bucket IN (<probe set>)` is a PARTITION FILTER — Spark prunes the
 non-matching directories at planning time and the scan physically reads only
-the probed subset (asserted by plan test in tests/test_ann_index.py).
+the probed subset (asserted by plan test in tests/test_ann_index.py). A
+probe scores through the same top-k core as the on-the-fly queries
+(`queries/similarity.py::_vector_topk`), reading each row's bucket or cell
+from the index column instead of computing it.
 
 At 100 TB: the index write is one full pass + one shuffle on bucket id; every
 subsequent probe reads hamming<=2 probe sets = 22/64 of the partitions (and
@@ -22,51 +25,42 @@ sign(dot(v, plane_b)) with float64 arithmetic on the same seeded planes.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from jetstream_spark.operators import freshness
 from jetstream_spark.queries.similarity import (
-    IVF_CELLS,
-    IVF_NPROBE,
-    LSH_PLANES,
+    _POPCOUNT,
     LSH_PROBE_RADIUS,
-    LSH_SEED,
-    N_QUERIES,
-    TOP_K,
-    _IVF_CENTROID_BASE,
+    _probe_state,
     _query_matrix,
+    _vector_topk,
+    ivf_centroids,
+    lsh_planes,
 )
 from jetstream_spark.tables import table
 
 
-def index_is_fresh(index_path: str, sf_dir: str) -> bool:
-    """Build-once/probe-many contract: rebuild only when the corpus
-    changed, decided by fingerprint VALUE (operators/freshness.py) rather
-    than mtime ordering — survives mtime-preserving regenerations."""
-    import os
-
-    from jetstream_spark.operators import freshness
-
-    return freshness.index_is_fresh(
-        index_path, os.path.join(sf_dir, "embeddings.parquet")
-    )
-
-
-def _stamp(index_path: str, sf_dir: str) -> None:
-    import os
-
-    from jetstream_spark.operators import freshness
-
-    freshness.write_source_fingerprint(
-        index_path, os.path.join(sf_dir, "embeddings.parquet")
-    )
+def _ensure(spark: SparkSession, sf_dir: str, kind: str, build) -> str:
+    """Resolve (and build if stale/absent) the canonical location of an
+    index layout for a corpus dir; returns the index path. Build-once/
+    probe-many: rebuild only when the corpus changed, decided by
+    fingerprint VALUE (operators/freshness.py) rather than mtime ordering —
+    survives mtime-preserving regenerations."""
+    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
+    index_path = os.path.join(tempfile.gettempdir(), f"jetstream_{kind}_index_{tag}")
+    if not freshness.index_is_fresh(index_path, os.path.join(sf_dir, "embeddings.parquet")):
+        build(spark, sf_dir, index_path)
+    return index_path
 
 
-def lsh_planes(dim: int = 64) -> np.ndarray:
-    """The deterministic hyperplane matrix shared with q_ann_lsh."""
-    return np.random.RandomState(LSH_SEED).randn(LSH_PLANES, dim)
+def _write_index(emb: DataFrame, key: str, sf_dir: str, index_path: str) -> None:
+    emb.write.mode("overwrite").partitionBy(key).parquet(index_path)
+    freshness.write_source_fingerprint(index_path, os.path.join(sf_dir, "embeddings.parquet"))
 
 
 def lsh_bucket_expr(planes: np.ndarray, emb_col: str = "embedding") -> Column:
@@ -92,21 +86,19 @@ def build_lsh_index(spark: SparkSession, sf_dir: str, index_path: str) -> None:
     only help bucket-equi-joins.)
     """
     emb = table(spark, sf_dir, "embeddings")
-    (
-        emb.withColumn("bucket", lsh_bucket_expr(lsh_planes()))
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(index_path)
-    )
-    _stamp(index_path, sf_dir)
+    bucketed = emb.withColumn("bucket", lsh_bucket_expr(lsh_planes()))
+    _write_index(bucketed, "bucket", sf_dir, index_path)
+
+
+def ensure_lsh_index(spark: SparkSession, sf_dir: str) -> str:
+    return _ensure(spark, sf_dir, "ann", build_lsh_index)
 
 
 def probe_buckets(q_buckets: np.ndarray) -> list[int]:
     """Union of buckets within hamming<=LSH_PROBE_RADIUS of any query bucket."""
-    popcount = np.array([bin(i).count("1") for i in range(1 << LSH_PLANES)])
     probe: set[int] = set()
     for qb in q_buckets:
-        ham = popcount[np.bitwise_xor(np.arange(1 << LSH_PLANES), int(qb))]
+        ham = _POPCOUNT[np.bitwise_xor(np.arange(len(_POPCOUNT)), int(qb))]
         probe.update(np.nonzero(ham <= LSH_PROBE_RADIUS)[0].tolist())
     return sorted(probe)
 
@@ -115,70 +107,18 @@ def probe_lsh_index(spark: SparkSession, sf_dir: str, index_path: str) -> DataFr
     """Top-k cosine over ONLY the probed partitions of the materialized index.
 
     Produces the same (query_id, vec_id, cosine, rank) result as q_ann_lsh —
-    the bucket-membership semantics are identical; only the physical access
-    path differs (partition-pruned scan vs full-corpus rescan).
+    the same core reads each row's bucket from the index column instead of
+    computing it; only the physical access path differs (partition-pruned
+    scan vs full-corpus rescan).
     """
-    import pandas as pd
-
-    planes = lsh_planes()
     q_ids, q_mat = _query_matrix(spark, sf_dir)
-    q_norms = np.linalg.norm(q_mat, axis=1)
-    q_buckets = (np.sign(q_mat @ planes.T) > 0) @ (1 << np.arange(LSH_PLANES))
-    union = probe_buckets(q_buckets)
-    popcount = np.array([bin(i).count("1") for i in range(1 << LSH_PLANES)])
-    bq = spark.sparkContext.broadcast((q_ids, q_mat, q_norms, q_buckets, popcount))
-
+    st = _probe_state(q_mat, planes=lsh_planes())
     # bucket IN (...) is a partition filter: only bucket=<id>/ dirs are read.
-    idx = spark.read.parquet(index_path).where(F.col("bucket").isin(union))
-
-    def score(batches):
-        ids, mat, norms, buckets, pc = bq.value
-        for pdf in batches:
-            b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            b_mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            b_bucket = pdf["bucket"].to_numpy(dtype=np.int64)
-            b_norms = np.linalg.norm(b_mat, axis=1)
-            out = []
-            for qi in range(len(ids)):
-                ham = pc[np.bitwise_xor(b_bucket, int(buckets[qi]))]
-                mask = (ham <= LSH_PROBE_RADIUS) & (b_ids != ids[qi])
-                if mask.any():
-                    cos = (b_mat[mask] @ mat[qi]) / (b_norms[mask] * norms[qi])
-                    out.append(
-                        pd.DataFrame({"query_id": ids[qi], "vec_id": b_ids[mask], "cosine": cos})
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    scores = idx.select("vec_id", "embedding", "bucket").mapInPandas(
-        score, schema="query_id long, vec_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    idx = spark.read.parquet(index_path).where(F.col("bucket").isin(probe_buckets(st["buckets"])))
+    return _vector_topk(spark, idx.select("vec_id", "embedding", "bucket"), q_ids, st)
 
 
 # --- IVF (coarse-quantizer) physical index ---------------------------------------
-
-
-def ivf_centroids(spark: SparkSession, sf_dir: str) -> np.ndarray:
-    """The deterministic unit-norm centroid matrix shared with q_ann_ivf
-    (corpus rows vec_id in [100, 100+IVF_CELLS))."""
-    emb = table(spark, sf_dir, "embeddings")
-    rows = (
-        emb.where(
-            (F.col("vec_id") >= _IVF_CENTROID_BASE)
-            & (F.col("vec_id") < _IVF_CENTROID_BASE + IVF_CELLS)
-        )
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    rows.sort(key=lambda r: r["vec_id"])
-    cents = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    return cents / np.linalg.norm(cents, axis=1, keepdims=True)
 
 
 def ivf_cell_expr(cents: np.ndarray, emb_col: str = "embedding") -> Column:
@@ -202,76 +142,30 @@ def build_ivf_index(spark: SparkSession, sf_dir: str, index_path: str) -> None:
     IVF cell id (the inverted file). A probe's `cell IN (<nprobe cells>)`
     is a partition filter — it reads nprobe/IVF_CELLS of the data."""
     emb = table(spark, sf_dir, "embeddings")
-    cents = ivf_centroids(spark, sf_dir)
-    (
-        emb.withColumn("cell", ivf_cell_expr(cents))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(index_path)
-    )
-    _stamp(index_path, sf_dir)
+    celled = emb.withColumn("cell", ivf_cell_expr(ivf_centroids(spark, sf_dir)))
+    _write_index(celled, "cell", sf_dir, index_path)
 
 
 def ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
-    """Resolve (and build if stale/absent) the canonical inverted-file
-    location for a corpus dir; returns the index path. Shared by the batch
-    query surface and the streaming probe."""
-    import os
-    import tempfile
-
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_path = os.path.join(tempfile.gettempdir(), f"jetstream_ivf_index_{tag}")
-    if not index_is_fresh(index_path, sf_dir):
-        build_ivf_index(spark, sf_dir, index_path)
-    return index_path
+    """The inverted file of a corpus dir, shared by the batch query surface
+    and the streaming probe."""
+    return _ensure(spark, sf_dir, "ivf", build_ivf_index)
 
 
 def probe_ivf_index(spark: SparkSession, sf_dir: str, index_path: str) -> DataFrame:
     """Top-k cosine over only the probed cells of the materialized inverted
     file; same result as q_ann_ivf, partition-pruned physical access."""
-    cents = ivf_centroids(spark, sf_dir)
     q_ids, q_mat = _query_matrix(spark, sf_dir)
-    return probe_ivf_with(spark, cents, q_ids, q_mat, index_path)
+    return probe_ivf_with(spark, ivf_centroids(spark, sf_dir), q_ids, q_mat, index_path)
 
 
 def probe_ivf_with(spark: SparkSession, cents, q_ids, q_mat, index_path: str) -> DataFrame:
-    """The probe core, parameterized on the query matrix — shared by the
-    batch query (fixed probe vectors) and the streaming probe (each
+    """The inverted-file probe parameterized on the query matrix — shared by
+    the batch query (fixed probe vectors) and the streaming probe (each
     micro-batch's incoming vectors). Only the nprobe cells' partitions are
-    read; the query matrix broadcasts."""
-    import pandas as pd
-
-    q_norms = np.linalg.norm(q_mat, axis=1)
-    q_cells = np.argsort(-(q_mat / q_norms[:, None]) @ cents.T, axis=1)[:, :IVF_NPROBE]
-    union = sorted({int(c) for row in q_cells for c in row})
-    bq = spark.sparkContext.broadcast((q_ids, q_mat, q_norms, q_cells))
-
+    read; scoring is the shared core, reading each row's cell from the
+    index column."""
+    st = _probe_state(q_mat, cents=cents)
+    union = sorted({int(c) for row in st["cells"] for c in row})
     idx = spark.read.parquet(index_path).where(F.col("cell").isin(union))
-
-    def score(batches):
-        ids, mat, norms, cells = bq.value
-        for pdf in batches:
-            b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            b_mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            b_cell = pdf["cell"].to_numpy(dtype=np.int64)
-            b_norms = np.linalg.norm(b_mat, axis=1)
-            out = []
-            for qi in range(len(ids)):
-                mask = np.isin(b_cell, cells[qi]) & (b_ids != ids[qi])
-                if mask.any():
-                    cos = (b_mat[mask] @ mat[qi]) / (b_norms[mask] * norms[qi])
-                    out.append(
-                        pd.DataFrame({"query_id": ids[qi], "vec_id": b_ids[mask], "cosine": cos})
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    scores = idx.select("vec_id", "embedding", "cell").mapInPandas(
-        score, schema="query_id long, vec_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _vector_topk(spark, idx.select("vec_id", "embedding", "cell"), q_ids, st)

@@ -134,19 +134,6 @@ def index_path(sf_dir: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"jetstream_band_index_{_tag(sf_dir)}")
 
 
-_FPRINT_FILE = freshness.FPRINT_FILE
-
-
-def write_source_fingerprint(path: str, sf_dir: str) -> None:
-    freshness.write_source_fingerprint(path, os.path.join(sf_dir, "documents.parquet"))
-
-
-def index_is_fresh(path: str, sf_dir: str) -> bool:
-    """Fingerprint-by-value freshness (operators/freshness.py) against the
-    documents corpus — survives mtime-preserving regenerations."""
-    return freshness.index_is_fresh(path, os.path.join(sf_dir, "documents.parquet"))
-
-
 def build_band_index(spark: SparkSession, sf_dir: str, name: str, path: str) -> None:
     """One signature pass over HISTORY (everything outside the incoming
     split) → external bucketed+sorted table on (band_idx, band_key). The
@@ -164,7 +151,7 @@ def build_band_index(spark: SparkSession, sf_dir: str, name: str, path: str) -> 
         .sortBy("band_idx", "band_key")
         .saveAsTable(name)
     )
-    write_source_fingerprint(path, sf_dir)
+    freshness.write_source_fingerprint(path, os.path.join(sf_dir, "documents.parquet"))
 
 
 def ensure_band_index(spark: SparkSession, sf_dir: str) -> str:
@@ -173,9 +160,11 @@ def ensure_band_index(spark: SparkSession, sf_dir: str) -> str:
     Fresh data + table already registered → reuse as-is. Fresh data from an
     earlier session (in-memory catalog lost the entry) → re-register the
     bucket spec over the existing files, no rewrite. Stale or absent →
-    rebuild."""
+    rebuild. Freshness is the documents corpus's fingerprint by value
+    (operators/freshness.py), which survives mtime-preserving
+    regenerations."""
     name, path = index_table_name(sf_dir), index_path(sf_dir)
-    fresh = index_is_fresh(path, sf_dir)
+    fresh = freshness.index_is_fresh(path, os.path.join(sf_dir, "documents.parquet"))
     if fresh and spark.catalog.tableExists(name):
         return name
     if fresh:

@@ -27,7 +27,18 @@ _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__
 # Entries whose engine/oracle code changed since the last checked round:
 # they re-enter the window ahead of the staleness order so the change is
 # checked in the round it ships. Reset each round.
-_CODE_CHANGED: tuple[str, ...] = ()
+_CODE_CHANGED: tuple[str, ...] = (
+    "ann_brute_force_topk",
+    "ann_lsh_topk",
+    "ann_lsh_indexed",
+    "ann_ivf_topk",
+    "ann_ivf_indexed",
+    "ann_pq_topk",
+    "ann_ivfpq_topk",
+    "knn_graph",
+    "knn_graph_ivf",
+    "ann_hamming_topk",
+)
 
 
 def load_evidence(root: str) -> dict[str, tuple[int, int]]:

@@ -28,11 +28,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from jetstream_spark.operators.dedup_index import SHINGLE_W
 from jetstream_spark.queries.spec import QuerySpec
 from jetstream_spark.tables import table
 
 # --- shared shingling contract (mirrored in oracles) -------------------------
-SHINGLE_W = 8
 JACCARD_T = 0.7
 
 # array<string> of distinct char-8-grams of lower(text)

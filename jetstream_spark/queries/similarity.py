@@ -1,30 +1,33 @@
 """Similarity search over the `embeddings` table (SURVEY.md §2.3).
 
-Two tiers:
+Every vector top-k here is "prune the candidates, then rank them exactly",
+and only the prune step differs between the variants. One core does the
+rest (`_vector_topk`): broadcast the per-query state, and in one
+mapInPandas pass turn each Arrow batch into a (batch, Q) score matrix plus
+a per-query candidate mask (`_score_batch`), keeping a running partial
+top-k per query by (score order, vec_id). Each partition thus emits ≤ k·Q
+rows, and one rank window (`_rank_tail`) merges them. The variants supply
+only their pieces (`_probe_state`):
 
-- brute-force top-k (correctness baseline, oracle-checked): broadcast the
-  query matrix, score every base vector with vectorized numpy block
-  products inside mapInPandas (Arrow batches, float64), take top-k per
-  query with a window. Cost is O(N·Q) but embarrassingly parallel — each
-  partition scores independently and pre-reduces to its own k rows per
-  query INSIDE the Arrow kernel, so the global window merges ≤ k·P
-  candidate rows per query instead of N (see q_ann_brute_force_topk).
+- brute force (the correctness baseline): every row but the query itself;
+- LSH: seeded random-hyperplane sign buckets within hamming-2 of the
+  query's bucket;
+- IVF: rows whose coarse-quantizer cell is in the query's probe set;
+- PQ / IVF-PQ: ADC over byte codes (ascending) in place of cosine.
 
-- LSH-bucketed ANN (the 100 TB path): random-hyperplane signatures put
-  near vectors in the same bucket; search touches only the probed
-  buckets. Approximate relative to brute force, but fully DETERMINISTIC
-  (seeded planes / fixed centroids), so both scale-path queries carry
-  real SQL oracles: the plane matrix is emitted as SQL literals and the
-  bucket assignment + probe + exact re-score is recomputed in DuckDB.
-  Recall floors vs the brute-force baseline are additionally asserted in
-  tests.
+The bucket or cell is read from the materialized index's column when the
+scan has one (operators/ann_index.py) and computed from the embedding
+otherwise. All variants are fully DETERMINISTIC (seeded planes / fixed
+centroid and codebook rows), so each carries a real SQL oracle that
+recomputes bucket assignment, probe and exact re-score in DuckDB; recall
+floors vs the brute-force baseline are additionally asserted in tests.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -33,6 +36,29 @@ from jetstream_spark.tables import table
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
 TOP_K = 5
+
+# LSH: 2^6 = 64 buckets; multi-probe touches buckets within hamming 2 of
+# the query's
+LSH_PLANES = 6
+LSH_PROBE_RADIUS = 2
+LSH_SEED = 7
+_POPCOUNT = np.array([bin(i).count("1") for i in range(1 << LSH_PLANES)])
+
+# IVF: vec_id in [100, 100+IVF_CELLS) serve as centroids
+IVF_CELLS = 16
+IVF_NPROBE = 4
+_IVF_CENTROID_BASE = 100
+
+# PQ: M=16 x 4-dim subspaces with 256-entry codebooks is the standard PQ
+# shape (16 bytes/vector). Parameter choice is measured, not guessed: this
+# corpus is near-isotropic (the PQ worst case), and sampled-codebook
+# recall@5 on it is 0.08 at (M=8, K=16), 0.35 at (M=8, K=256), 0.59 at
+# (M=16, K=256) — the finer subspace split is what pays, so the recall
+# floor test has margin.
+PQ_M = 16  # subspaces
+PQ_SUB = 4  # dims per subspace (PQ_M * PQ_SUB = 64)
+PQ_K = 256  # codes per subspace codebook
+_PQ_CODE_BASE = 100  # vec_id in [100, 100+PQ_K) donate the codebook entries
 
 
 def _query_matrix(spark: SparkSession, sf_dir: str):
@@ -48,74 +74,186 @@ def _query_matrix(spark: SparkSession, sf_dir: str):
     return ids, mat
 
 
-def _scores_df(spark: SparkSession, sf_dir: str, partial_topk: int | None = None) -> DataFrame:
-    """(query_id, vec_id, cosine) of base × query vectors (self-matches
-    excluded). With `partial_topk=k` each PARTITION emits only its k best
-    rows per query — a running heap over the partition's Arrow batches by
-    the final global order (cosine desc, vec_id asc), the map-side combine
-    of top-k. Any globally top-k row is necessarily within its own
-    partition's top-k under the same order, so the downstream window sees
-    ≤ k·Q rows per partition instead of the full N·Q score matrix — at
-    100 TB the difference between shuffling ~everything and ~nothing."""
-    q_ids, q_mat = _query_matrix(spark, sf_dir)
-    q_norms = np.linalg.norm(q_mat, axis=1)
-    bq = spark.sparkContext.broadcast((q_ids, q_mat, q_norms))
-    emb = table(spark, sf_dir, "embeddings")
+def _normalized(mat: "np.ndarray") -> "np.ndarray":
+    return mat / np.sqrt((mat**2).sum(axis=1, keepdims=True))
 
-    def score(batches):
-        ids, mat, norms = bq.value
+
+def _unit_rows(spark: SparkSession, sf_dir: str, base: int, n: int) -> "np.ndarray":
+    """(n, d) L2-normalized corpus rows vec_id in [base, base+n), by vec_id:
+    the bounded driver collect behind the IVF centroids and PQ codebooks."""
+    rows = (
+        table(spark, sf_dir, "embeddings")
+        .where((F.col("vec_id") >= base) & (F.col("vec_id") < base + n))
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    rows.sort(key=lambda r: r["vec_id"])
+    return _normalized(np.array([r["embedding"] for r in rows], dtype=np.float64))
+
+
+def ivf_centroids(spark: SparkSession, sf_dir: str) -> "np.ndarray":
+    """(IVF_CELLS, d) unit-norm coarse-quantizer centroids — the fixed
+    corpus rows, shared by every IVF consumer (a real pipeline
+    k-means-trains them on a sample; the partition/probe machinery is
+    identical)."""
+    return _unit_rows(spark, sf_dir, _IVF_CENTROID_BASE, IVF_CELLS)
+
+
+def _pq_codebooks(spark: SparkSession, sf_dir: str) -> "np.ndarray":
+    """(PQ_M, PQ_K, PQ_SUB) codebooks: the L2-normalized corpus rows
+    [_PQ_CODE_BASE, +PQ_K) sliced per subspace — deterministic (no trained
+    state), the IVF-seed convention, so the oracle can rebuild them in
+    SQL."""
+    # (K, M, SUB) -> (M, K, SUB)
+    mat = _unit_rows(spark, sf_dir, _PQ_CODE_BASE, PQ_K)
+    return mat.reshape(PQ_K, PQ_M, PQ_SUB).transpose(1, 0, 2)
+
+
+def lsh_planes(dim: int = 64) -> "np.ndarray":
+    """The deterministic (LSH_PLANES, dim) hyperplane matrix."""
+    return np.random.RandomState(LSH_SEED).randn(LSH_PLANES, dim)
+
+
+def _lsh_buckets(mat: "np.ndarray", planes: "np.ndarray") -> "np.ndarray":
+    return (np.sign(mat @ planes.T) > 0) @ (1 << np.arange(LSH_PLANES))
+
+
+def _pq_codes(x: "np.ndarray", books: "np.ndarray") -> "np.ndarray":
+    """(n, M) codes of unit rows; np.argmin ties to the LOWEST code,
+    matching the oracle's ORDER BY dist, k."""
+    xs = x.reshape(len(x), PQ_M, PQ_SUB)
+    return np.argmin(((xs[:, :, None, :] - books[None, :, :, :]) ** 2).sum(axis=-1), axis=-1)
+
+
+# --- the shared top-k core --------------------------------------------------------
+def _probe_state(q_mat, *, planes=None, cents=None, books=None) -> dict:
+    """Per-query pieces `_score_batch` reads. With none of the keywords
+    every row but the query itself is a candidate, scored by cosine.
+    `planes` keeps rows whose LSH bucket is within LSH_PROBE_RADIUS of the
+    query's, `cents` rows whose IVF cell is among the query's IVF_NPROBE
+    nearest (by cosine to the centroid), and `books` scores by PQ ADC."""
+    norms = np.linalg.norm(q_mat, axis=1)
+    st = {"mat": q_mat, "norms": norms}
+    if planes is not None:
+        st.update(planes=planes, buckets=_lsh_buckets(q_mat, planes))
+    if cents is not None:
+        cells = np.argsort(-(q_mat / norms[:, None]) @ cents.T, axis=1)[:, :IVF_NPROBE]
+        st.update(cents=cents, cells=cells)
+    if books is not None:
+        q_sub = _normalized(q_mat).reshape(len(q_mat), PQ_M, PQ_SUB)
+        # tables[q, m, k] = ||q_m − c_{m,k}||²
+        tables = ((q_sub[:, :, None, :] - books[None, :, :, :]) ** 2).sum(axis=-1)
+        st.update(books=books, tables=tables)
+    return st
+
+
+def _score_batch(pdf: pd.DataFrame, st: dict):
+    """((batch, Q) scores, (batch, Q) candidate mask) of one Arrow batch.
+    The LSH bucket / IVF cell comes from the index's `bucket` / `cell`
+    column when the scan carries one, else from the embedding."""
+    x = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+    ok = np.ones((len(x), len(st["mat"])), dtype=bool)
+    if "planes" in st:
+        if "bucket" in pdf:
+            b = pdf["bucket"].to_numpy(dtype=np.int64)
+        else:
+            b = _lsh_buckets(x, st["planes"])
+        ok &= _POPCOUNT[np.bitwise_xor(b[:, None], st["buckets"][None, :])] <= LSH_PROBE_RADIUS
+    if "cents" in st:
+        if "cell" in pdf:
+            c = pdf["cell"].to_numpy(dtype=np.int64)
+        else:
+            c = np.argmax(_normalized(x) @ st["cents"].T, axis=1)
+        ok &= (c[:, None, None] == st["cells"][None, :, :]).any(axis=2)
+    if "books" in st:
+        # ADC: adc[n, q] = Σ_m tables[q, m, codes[n, m]]
+        codes = _pq_codes(_normalized(x), st["books"])
+        return st["tables"][:, np.arange(PQ_M)[None, :], codes].sum(axis=-1).T, ok
+    return (x @ st["mat"].T) / np.outer(np.linalg.norm(x, axis=1), st["norms"]), ok
+
+
+def _rank_tail(
+    scores: DataFrame,
+    by: str,
+    tie: str,
+    score: str,
+    *,
+    ascending: bool = False,
+    out: Column | None = None,
+) -> DataFrame:
+    """The one top-k window of the family: row_number over `by` ordered by
+    (`score`, `tie` asc), rank <= TOP_K, projected to (by, tie, out, rank);
+    `out` defaults to the score rounded to 6 places (half-up, in Spark)."""
+    key = F.col(score) if ascending else F.col(score).desc()
+    w = Window.partitionBy(by).orderBy(key, F.col(tie))
+    return (
+        scores.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= TOP_K)
+        .select(by, tie, F.round(score, 6).alias(score) if out is None else out, "rank")
+    )
+
+
+def _vector_topk(spark: SparkSession, rows: DataFrame, q_ids, st: dict) -> DataFrame:
+    """(query_id, vec_id, cosine | adc_dist, rank) top-k of `rows`
+    (vec_id, embedding[, bucket | cell]) for each query of `st`.
+
+    Each PARTITION emits only its k best rows per query — a running
+    partial top-k over the partition's Arrow batches by the final global
+    order (cosine desc or ADC asc, then vec_id asc), the map-side combine
+    of top-k. Any globally top-k row is necessarily within its own
+    partition's top-k under the same order, so the rank window sees ≤ k·Q
+    rows per partition instead of every candidate — at 100 TB the
+    difference between shuffling ~everything and ~nothing."""
+    col, sign = ("adc_dist", 1.0) if "books" in st else ("cosine", -1.0)
+    bq = spark.sparkContext.broadcast((q_ids, st))
+
+    def scan(batches):
+        ids, s = bq.value
         nq = len(ids)
-        # per-query running candidates for this partition
-        run_v = [np.empty(0, dtype=np.int64) for _ in range(nq)]
-        run_c = [np.empty(0, dtype=np.float64) for _ in range(nq)]
+        run_v = [np.empty(0, dtype=np.int64)] * nq
+        run_s = [np.empty(0, dtype=np.float64)] * nq
         for pdf in batches:
-            b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            b_mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            b_norms = np.linalg.norm(b_mat, axis=1)
-            cos = (b_mat @ mat.T) / np.outer(b_norms, norms)  # (batch, Q)
-            if partial_topk is None:
-                n = len(b_ids)
-                full = pd.DataFrame(
-                    {
-                        "query_id": np.repeat(ids, n),
-                        "vec_id": np.tile(b_ids, nq),
-                        "cosine": cos.T.ravel(),
-                    }
-                )
-                yield full[full["query_id"] != full["vec_id"]]
+            if len(pdf) == 0:
                 continue
+            b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+            score, ok = _score_batch(pdf, s)
+            ok &= b_ids[:, None] != ids[None, :]  # self-match never competes for a slot
             for qi in range(nq):
-                keep = b_ids != ids[qi]  # self-match never competes for a slot
+                keep = ok[:, qi]
                 v = np.concatenate([run_v[qi], b_ids[keep]])
-                c = np.concatenate([run_c[qi], cos[keep, qi]])
-                order = np.lexsort((v, -c))[:partial_topk]
-                run_v[qi], run_c[qi] = v[order], c[order]
-        if partial_topk is not None and any(len(v) for v in run_v):
+                c = np.concatenate([run_s[qi], score[keep, qi]])
+                order = np.lexsort((v, sign * c))[:TOP_K]
+                run_v[qi], run_s[qi] = v[order], c[order]
+        if any(len(v) for v in run_v):
             yield pd.DataFrame(
                 {
                     "query_id": np.repeat(ids, [len(v) for v in run_v]),
                     "vec_id": np.concatenate(run_v),
-                    "cosine": np.concatenate(run_c),
+                    col: np.concatenate(run_s),
                 }
             )
 
-    return emb.select("vec_id", "embedding").mapInPandas(
-        score, schema="query_id long, vec_id long, cosine double"
-    )
+    scores = rows.mapInPandas(scan, schema=f"query_id long, vec_id long, {col} double")
+    if col == "cosine":
+        return _rank_tail(scores, "query_id", "vec_id", col)
+    out = (F.round(col, 6) + F.lit(0.0)).alias(col)
+    return _rank_tail(scores, "query_id", "vec_id", col, ascending=True, out=out)
+
+
+def _embedding_topk(spark: SparkSession, sf_dir: str, **pieces) -> DataFrame:
+    """The fixed query vectors' top-k over the whole corpus."""
+    q_ids, q_mat = _query_matrix(spark, sf_dir)
+    rows = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return _vector_topk(spark, rows, q_ids, _probe_state(q_mat, **pieces))
 
 
 def q_ann_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 neighbors for each of the 10 query vectors
     (self-match excluded); deterministic tiebreak (cosine desc, vec_id).
-    The kernel pre-reduces to TOP_K rows per query per partition, so the
-    window shuffle merges partials instead of ranking the full N·Q."""
-    scores = _scores_df(spark, sf_dir, partial_topk=TOP_K)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    Cost is O(N·Q) but embarrassingly parallel, and the shared core's
+    partial top-k means the window merges ≤ k rows per query per
+    partition instead of the full N·Q."""
+    return _embedding_topk(spark, sf_dir)
 
 
 # Portable cosine: spelled out as list_transform/list_aggregate arithmetic —
@@ -145,12 +283,7 @@ FROM ranked WHERE rank <= {TOP_K}
 """
 
 
-# --- LSH-bucketed ANN (scale path; approximate, no SQL oracle) -------------------
-LSH_PLANES = 6  # 2^6 = 64 buckets
-LSH_PROBE_RADIUS = 2  # multi-probe: buckets within hamming 2 of the query's
-LSH_SEED = 7
-
-
+# --- LSH-bucketed ANN (scale path) ----------------------------------------------
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane LSH ANN with multi-probe: base vectors hashed into
     sign-buckets; each query rescans only buckets whose signature is within
@@ -159,52 +292,9 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic (seeded planes), so it carries a real SQL oracle
     (_lsh_oracle). Recall floor additionally asserted in tests. At 100 TB
     the bucket id becomes the partition key and a probe touches those
-    partitions only; #planes grows with log(N) to keep bucket occupancy
-    constant."""
-    dim = 64
-    rng = np.random.RandomState(LSH_SEED)
-    planes = rng.randn(LSH_PLANES, dim)
-    q_ids, q_mat = _query_matrix(spark, sf_dir)
-    q_norms = np.linalg.norm(q_mat, axis=1)
-    q_buckets = (np.sign(q_mat @ planes.T) > 0) @ (1 << np.arange(LSH_PLANES))
-    popcount = np.array([bin(i).count("1") for i in range(1 << LSH_PLANES)])
-    bq = spark.sparkContext.broadcast((q_ids, q_mat, q_norms, q_buckets, planes, popcount))
-    emb = table(spark, sf_dir, "embeddings")
-
-    def probe(batches):
-        ids, mat, norms, buckets, pl, pc = bq.value
-        for pdf in batches:
-            b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            b_mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            b_buckets = (np.sign(b_mat @ pl.T) > 0) @ (1 << np.arange(LSH_PLANES))
-            b_norms = np.linalg.norm(b_mat, axis=1)
-            out_q, out_v, out_c = [], [], []
-            for qi in range(len(ids)):
-                ham = pc[np.bitwise_xor(b_buckets, buckets[qi])]
-                mask = (ham <= LSH_PROBE_RADIUS) & (b_ids != ids[qi])
-                if mask.any():
-                    cos = (b_mat[mask] @ mat[qi]) / (b_norms[mask] * norms[qi])
-                    out_q.append(np.full(mask.sum(), ids[qi]))
-                    out_v.append(b_ids[mask])
-                    out_c.append(cos)
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "vec_id": np.concatenate(out_v),
-                        "cosine": np.concatenate(out_c),
-                    }
-                )
-
-    scores = emb.select("vec_id", "embedding").mapInPandas(
-        probe, schema="query_id long, vec_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    partitions only (q_ann_lsh_indexed); #planes grows with log(N) to keep
+    bucket occupancy constant."""
+    return _embedding_topk(spark, sf_dir, planes=lsh_planes())
 
 
 def _lsh_oracle() -> str:
@@ -213,8 +303,7 @@ def _lsh_oracle() -> str:
     are emitted as SQL literals (repr() round-trips float64 exactly) and
     DuckDB independently recomputes sign-buckets, the hamming<=2
     multi-probe, and the exact cosine re-score over candidates."""
-    rng = np.random.RandomState(LSH_SEED)
-    planes = rng.randn(LSH_PLANES, 64)
+    planes = lsh_planes()
     plane_rows = ",\n         ".join(
         "({b}, [{vals}])".format(
             b=b, vals=", ".join(repr(float(x)) for x in planes[b])
@@ -253,78 +342,16 @@ FROM ranked WHERE rank <= {TOP_K}
 
 
 # --- IVF-bucketed ANN (coarse-quantizer cells; deterministic -> SQL oracle) ------
-IVF_CELLS = 16
-IVF_NPROBE = 4
-_IVF_CENTROID_BASE = 100  # vec_id in [100, 100+IVF_CELLS) serve as centroids
-
-
-def _ivf_centroids(spark: SparkSession, sf_dir: str) -> "np.ndarray":
-    """(IVF_CELLS, d) unit-norm coarse-quantizer centroids — the fixed
-    corpus rows, shared by every IVF consumer. Bounded 16-row collect."""
-    emb = table(spark, sf_dir, "embeddings")
-    cent_rows = (
-        emb.where(
-            (F.col("vec_id") >= _IVF_CENTROID_BASE)
-            & (F.col("vec_id") < _IVF_CENTROID_BASE + IVF_CELLS)
-        )
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    cent_rows.sort(key=lambda r: r["vec_id"])
-    cents = np.array([r["embedding"] for r in cent_rows], dtype=np.float64)
-    return cents / np.linalg.norm(cents, axis=1, keepdims=True)
-
-
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN: a coarse quantizer (here: 16 fixed, deterministic corpus
-    vectors as centroids — a real pipeline k-means-trains them on a sample;
-    the partition/probe machinery is identical) assigns every base vector
-    to its nearest cell; each query scores only its IVF_NPROBE nearest
-    cells. At 100 TB the cell id is the partition key: one shuffle to build
-    the inverted file, and a probe touches nprobe/cells of the data —
-    orthogonal to the LSH path (q_ann_lsh), which needs no training.
-    Approximate vs brute force but deterministic (fixed centroid rows), so
-    it carries a real SQL oracle (_ivf_oracle); recall floor vs brute
-    force additionally asserted in tests."""
-    import numpy as np
-
-    emb = table(spark, sf_dir, "embeddings")
-    cents = _ivf_centroids(spark, sf_dir)
-    q_ids, q_mat = _query_matrix(spark, sf_dir)
-    q_norms = np.linalg.norm(q_mat, axis=1)
-    # each query's nprobe nearest cells (by cosine to the centroid)
-    q_cells = np.argsort(-(q_mat / q_norms[:, None]) @ cents.T, axis=1)[:, :IVF_NPROBE]
-    bq = spark.sparkContext.broadcast((q_ids, q_mat, q_norms, q_cells, cents))
-
-    def probe(batches):
-        ids, mat, norms, cells, c = bq.value
-        for pdf in batches:
-            b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            b_mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            b_norms = np.linalg.norm(b_mat, axis=1)
-            b_cell = np.argmax((b_mat / b_norms[:, None]) @ c.T, axis=1)
-            out = []
-            for qi in range(len(ids)):
-                mask = np.isin(b_cell, cells[qi]) & (b_ids != ids[qi])
-                if mask.any():
-                    cos = (b_mat[mask] @ mat[qi]) / (b_norms[mask] * norms[qi])
-                    out.append(
-                        pd.DataFrame(
-                            {"query_id": ids[qi], "vec_id": b_ids[mask], "cosine": cos}
-                        )
-                    )
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    scores = emb.select("vec_id", "embedding").mapInPandas(
-        probe, schema="query_id long, vec_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    """IVF ANN: a coarse quantizer (ivf_centroids) assigns every base
+    vector to its nearest cell; each query scores only its IVF_NPROBE
+    nearest cells. At 100 TB the cell id is the partition key: one shuffle
+    to build the inverted file, and a probe touches nprobe/cells of the
+    data (q_ann_ivf_indexed) — orthogonal to the LSH path (q_ann_lsh),
+    which needs no training. Approximate vs brute force but deterministic
+    (fixed centroid rows), so it carries a real SQL oracle (_ivf_oracle);
+    recall floor vs brute force additionally asserted in tests."""
+    return _embedding_topk(spark, sf_dir, cents=ivf_centroids(spark, sf_dir))
 
 
 def q_ann_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -336,20 +363,9 @@ def q_ann_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_ann_lsh, so the same SQL oracle checks it. The index is reused when
     a completed build is newer than the source corpus (build once, probe
     many times); a stale or absent index is rebuilt in-line."""
-    import os
-    import tempfile
+    from jetstream_spark.operators.ann_index import ensure_lsh_index, probe_lsh_index
 
-    from jetstream_spark.operators.ann_index import (
-        build_lsh_index,
-        index_is_fresh,
-        probe_lsh_index,
-    )
-
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    index_path = os.path.join(tempfile.gettempdir(), f"jetstream_ann_index_{tag}")
-    if not index_is_fresh(index_path, sf_dir):
-        build_lsh_index(spark, sf_dir, index_path)
-    return probe_lsh_index(spark, sf_dir, index_path)
+    return probe_lsh_index(spark, sf_dir, ensure_lsh_index(spark, sf_dir))
 
 
 def _ivf_oracle() -> str:
@@ -775,6 +791,42 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- kNN graph (every vector's top-k neighbors) -------------------------------
 _KNN_BLOCKS = 8
 KNN_PARTIAL_PAD = 3  # per-block partial k padding against rounded-tie flips
+_KNN_SCHEMA = "vec_id long, neighbor_id long, cosine double"
+
+
+def _knn_compare(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
+    """Cogroup kernel of both kNN graphs: cosine of every left row against
+    every right row in one numpy product, pre-reduced to each left row's
+    TOP_K + KNN_PARTIAL_PAD best by (cosine desc, neighbor_id asc) — the
+    global contract — with self-matches excluded."""
+    if len(lpdf) == 0 or len(rpdf) == 0:
+        return pd.DataFrame({"vec_id": [], "neighbor_id": [], "cosine": []}).astype(
+            {"vec_id": "int64", "neighbor_id": "int64", "cosine": "float64"}
+        )
+    l_ids = lpdf["vec_id"].to_numpy(dtype=np.int64)
+    r_ids = rpdf["vec_id"].to_numpy(dtype=np.int64)
+    l_mat = np.array(lpdf["embedding"].tolist(), dtype=np.float64)
+    r_mat = np.array(rpdf["embedding"].tolist(), dtype=np.float64)
+    cos = (l_mat @ r_mat.T) / np.outer(
+        np.linalg.norm(l_mat, axis=1), np.linalg.norm(r_mat, axis=1)
+    )
+    cos[l_ids[:, None] == r_ids[None, :]] = -np.inf  # self-match
+    out_q, out_n, out_c = [], [], []
+    k = min(TOP_K + KNN_PARTIAL_PAD, cos.shape[1])
+    for li in range(cos.shape[0]):
+        row = cos[li]
+        idx = np.lexsort((r_ids, -row))[:k]
+        idx = idx[np.isfinite(row[idx])]
+        out_q.append(np.full(len(idx), l_ids[li]))
+        out_n.append(r_ids[idx])
+        out_c.append(row[idx])
+    return pd.DataFrame(
+        {
+            "vec_id": np.concatenate(out_q),
+            "neighbor_id": np.concatenate(out_n),
+            "cosine": np.concatenate(out_c),
+        }
+    )
 
 
 def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -787,12 +839,13 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash into B blocks and all B² ordered block pairs are cogrouped (the
     dedup_embedding_cosine topology); each task scores one block pair with
     a single numpy float64 matrix product and pre-reduces to k+pad rows
-    per query vector BEFORE the shuffle, so the global per-vector window
-    merges ≤ (k+pad)·B candidate rows per vector instead of N. Executor
-    memory is bounded by two blocks; total work is the inherent O(N²·d) of
-    an exact kNN graph, spread over B² even tasks. The approximate scale
-    path at 100 TB is the same graph restricted to IVF cells (semdedup's
-    within-cell structure) or LSH buckets (ann_lsh) — both in-repo."""
+    per query vector BEFORE the shuffle (_knn_compare), so the global
+    per-vector window merges ≤ (k+pad)·B candidate rows per vector instead
+    of N. Executor memory is bounded by two blocks; total work is the
+    inherent O(N²·d) of an exact kNN graph, spread over B² even tasks. The
+    approximate scale path at 100 TB is the same graph restricted to IVF
+    cells (semdedup's within-cell structure) or LSH buckets (ann_lsh) —
+    both in-repo."""
     B = _KNN_BLOCKS
 
     def side(pair_col: str) -> DataFrame:
@@ -806,50 +859,12 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             "bi", "bj", "vec_id", "embedding"
         )
 
-    keep = TOP_K + KNN_PARTIAL_PAD
-
-    def compare(key, lpdf, rpdf):
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return pd.DataFrame({"vec_id": [], "neighbor_id": [], "cosine": []}).astype(
-                {"vec_id": "int64", "neighbor_id": "int64", "cosine": "float64"}
-            )
-        l_ids = lpdf["vec_id"].to_numpy(dtype=np.int64)
-        r_ids = rpdf["vec_id"].to_numpy(dtype=np.int64)
-        l_mat = np.array(lpdf["embedding"].tolist(), dtype=np.float64)
-        r_mat = np.array(rpdf["embedding"].tolist(), dtype=np.float64)
-        cos = (l_mat @ r_mat.T) / np.outer(
-            np.linalg.norm(l_mat, axis=1), np.linalg.norm(r_mat, axis=1)
-        )
-        cos[l_ids[:, None] == r_ids[None, :]] = -np.inf  # self-match
-        out_q, out_n, out_c = [], [], []
-        k = min(keep, cos.shape[1])
-        for li in range(cos.shape[0]):
-            row = cos[li]
-            # top-k by (cosine desc, neighbor_id asc) — the global contract
-            idx = np.lexsort((r_ids, -row))[:k]
-            idx = idx[np.isfinite(row[idx])]
-            out_q.append(np.full(len(idx), l_ids[li]))
-            out_n.append(r_ids[idx])
-            out_c.append(row[idx])
-        return pd.DataFrame(
-            {
-                "vec_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "cosine": np.concatenate(out_c),
-            }
-        )
-
     raw = (
         side("bi").groupby("bi", "bj")
         .cogroup(side("bj").groupby("bi", "bj"))
-        .applyInPandas(compare, schema="vec_id long, neighbor_id long, cosine double")
+        .applyInPandas(_knn_compare, schema=_KNN_SCHEMA)
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        raw.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("vec_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _rank_tail(raw, "vec_id", "neighbor_id", "cosine")
 
 
 Q_KNN_GRAPH_ORACLE = f"""
@@ -890,26 +905,14 @@ def q_knn_graph_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowest cell) ⇒ real SQL oracle; recall floor vs the exact graph
     asserted in tests."""
     emb = table(spark, sf_dir, "embeddings")
-    cent_rows = (
-        emb.where(
-            (F.col("vec_id") >= _IVF_CENTROID_BASE)
-            & (F.col("vec_id") < _IVF_CENTROID_BASE + IVF_CELLS)
-        )
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    cent_rows.sort(key=lambda r: r["vec_id"])
-    cents = np.array([r["embedding"] for r in cent_rows], dtype=np.float64)
-    cents /= np.linalg.norm(cents, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast(cents)
+    bc = spark.sparkContext.broadcast(ivf_centroids(spark, sf_dir))
 
     def assign(batches):
         c = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            m = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            dots = (m / np.linalg.norm(m, axis=1, keepdims=True)) @ c.T
+            dots = _normalized(np.array(pdf["embedding"].tolist(), dtype=np.float64)) @ c.T
             # stable sort on -dots: equal dots keep ascending cell order,
             # matching the oracle's ORDER BY dot DESC, cell
             order = np.argsort(-dots, axis=1, kind="stable")[:, :IVF_NPROBE]
@@ -928,49 +931,12 @@ def q_knn_graph_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     assigned = probed.where(F.col("probe_rank") == 1).select("cell", "vec_id", "embedding")
     probe = probed.select("cell", "vec_id", "embedding")
-    keep = TOP_K + KNN_PARTIAL_PAD
-
-    def compare(key, lpdf, rpdf):
-        if len(lpdf) == 0 or len(rpdf) == 0:
-            return pd.DataFrame({"vec_id": [], "neighbor_id": [], "cosine": []}).astype(
-                {"vec_id": "int64", "neighbor_id": "int64", "cosine": "float64"}
-            )
-        l_ids = lpdf["vec_id"].to_numpy(dtype=np.int64)
-        r_ids = rpdf["vec_id"].to_numpy(dtype=np.int64)
-        l_mat = np.array(lpdf["embedding"].tolist(), dtype=np.float64)
-        r_mat = np.array(rpdf["embedding"].tolist(), dtype=np.float64)
-        cos = (l_mat @ r_mat.T) / np.outer(
-            np.linalg.norm(l_mat, axis=1), np.linalg.norm(r_mat, axis=1)
-        )
-        cos[l_ids[:, None] == r_ids[None, :]] = -np.inf
-        out_q, out_n, out_c = [], [], []
-        k = min(keep, cos.shape[1])
-        for li in range(cos.shape[0]):
-            row = cos[li]
-            idx = np.lexsort((r_ids, -row))[:k]
-            idx = idx[np.isfinite(row[idx])]
-            out_q.append(np.full(len(idx), l_ids[li]))
-            out_n.append(r_ids[idx])
-            out_c.append(row[idx])
-        return pd.DataFrame(
-            {
-                "vec_id": np.concatenate(out_q),
-                "neighbor_id": np.concatenate(out_n),
-                "cosine": np.concatenate(out_c),
-            }
-        )
-
     raw = (
         probe.groupby("cell")
         .cogroup(assigned.groupby("cell"))
-        .applyInPandas(compare, schema="vec_id long, neighbor_id long, cosine double")
+        .applyInPandas(_knn_compare, schema=_KNN_SCHEMA)
     )
-    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        raw.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("vec_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _rank_tail(raw, "vec_id", "neighbor_id", "cosine")
 
 
 def _knn_graph_ivf_oracle() -> str:
@@ -1016,40 +982,6 @@ FROM ranked WHERE rank <= {TOP_K}
 
 
 # --- product-quantization ANN (the memory-compressed tier) -----------------------
-# M=16 x 4-dim subspaces with 256-entry codebooks is the standard PQ shape
-# (16 bytes/vector). Parameter choice is measured, not guessed: this corpus
-# is near-isotropic (the PQ worst case), and sampled-codebook recall@5 on it
-# is 0.08 at (M=8, K=16), 0.35 at (M=8, K=256), 0.59 at (M=16, K=256) — the
-# finer subspace split is what pays, so the recall floor test has margin.
-PQ_M = 16  # subspaces
-PQ_SUB = 4  # dims per subspace (PQ_M * PQ_SUB = 64)
-PQ_K = 256  # codes per subspace codebook
-_PQ_CODE_BASE = 100  # vec_id in [100, 100+PQ_K) donate the codebook entries
-
-
-def _normalized(mat: "np.ndarray") -> "np.ndarray":
-    return mat / np.sqrt((mat**2).sum(axis=1, keepdims=True))
-
-
-def _pq_codebooks(spark: SparkSession, sf_dir: str) -> "np.ndarray":
-    """(PQ_M, PQ_K, PQ_SUB) codebooks: the L2-normalized corpus rows
-    [_PQ_CODE_BASE, +PQ_K) sliced per subspace — deterministic (no trained
-    state), the IVF-seed convention, so the oracle can rebuild them in
-    SQL. Bounded 16-row collect."""
-    emb = table(spark, sf_dir, "embeddings")
-    rows = (
-        emb.where(
-            (F.col("vec_id") >= _PQ_CODE_BASE) & (F.col("vec_id") < _PQ_CODE_BASE + PQ_K)
-        )
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    rows.sort(key=lambda r: r["vec_id"])
-    mat = _normalized(np.array([r["embedding"] for r in rows], dtype=np.float64))
-    # (K, M, SUB) -> (M, K, SUB)
-    return mat.reshape(PQ_K, PQ_M, PQ_SUB).transpose(1, 0, 2)
-
-
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (Jégou et al.): each L2-normalized vector
     is encoded as {PQ_M} one-byte codes (argmin-L2 subvector against a
@@ -1069,58 +1001,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k window. Deterministic: argmin ties to the lowest code, ranking
     ties to the lowest vec_id — the oracle rebuilds codebooks, codes, and
     ADC in pure SQL and hash-matches."""
-    cb = _pq_codebooks(spark, sf_dir)  # (M, K, SUB)
-    q_ids, q_mat = _query_matrix(spark, sf_dir)
-    q_sub = _normalized(q_mat).reshape(len(q_ids), PQ_M, PQ_SUB)
-    # tables[q, m, k] = ||q_m − c_{m,k}||²
-    tables = ((q_sub[:, :, None, :] - cb[None, :, :, :]) ** 2).sum(axis=-1)
-    bq = spark.sparkContext.broadcast((q_ids, tables, cb))
-    emb = table(spark, sf_dir, "embeddings")
-
-    def score(batches):
-        ids, tab, books = bq.value
-        nq = len(ids)
-        run_v = [np.empty(0, dtype=np.int64) for _ in range(nq)]
-        run_d = [np.empty(0, dtype=np.float64) for _ in range(nq)]
-        for pdf in batches:
-            b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            x = _normalized(np.array(pdf["embedding"].tolist(), dtype=np.float64))
-            xs = x.reshape(len(b_ids), PQ_M, PQ_SUB)
-            # encode: (n, M) codes; np.argmin ties to the LOWEST index,
-            # matching the oracle's ORDER BY dist, k
-            d_codes = ((xs[:, :, None, :] - books[None, :, :, :]) ** 2).sum(axis=-1)
-            codes = np.argmin(d_codes, axis=-1)  # (n, M)
-            # ADC: adc[n, q] = Σ_m tab[q, m, codes[n, m]]
-            adc = tab[:, np.arange(PQ_M)[None, :], codes].sum(axis=-1).T  # (n, Q)
-            for qi in range(nq):
-                keep = b_ids != ids[qi]
-                v = np.concatenate([run_v[qi], b_ids[keep]])
-                d = np.concatenate([run_d[qi], adc[keep, qi]])
-                order = np.lexsort((v, d))[:TOP_K]
-                run_v[qi], run_d[qi] = v[order], d[order]
-        if any(len(v) for v in run_v):
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(ids, [len(v) for v in run_v]),
-                    "vec_id": np.concatenate(run_v),
-                    "adc_dist": np.concatenate(run_d),
-                }
-            )
-
-    scores = emb.select("vec_id", "embedding").mapInPandas(
-        score, schema="query_id long, vec_id long, adc_dist double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist"), F.col("vec_id"))
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "vec_id",
-            (F.round("adc_dist", 6) + F.lit(0.0)).alias("adc_dist"),
-            "rank",
-        )
-    )
+    return _embedding_topk(spark, sf_dir, books=_pq_codebooks(spark, sf_dir))
 
 
 def _pq_oracle() -> str:
@@ -1184,57 +1065,8 @@ def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition. ONE window shuffle of ≤ k·Q rows/partition finishes. Both
     quantizers are deterministic corpus slices, so the oracle rebuilds
     cells, probes, codes, and ADC relationally and hash-matches."""
-    cents = _ivf_centroids(spark, sf_dir)
-    cb = _pq_codebooks(spark, sf_dir)  # (M, K, SUB)
-    q_ids, q_mat = _query_matrix(spark, sf_dir)
-    q_norms = np.linalg.norm(q_mat, axis=1)
-    q_cells = np.argsort(-(q_mat / q_norms[:, None]) @ cents.T, axis=1)[:, :IVF_NPROBE]
-    q_sub = _normalized(q_mat).reshape(len(q_ids), PQ_M, PQ_SUB)
-    tables = ((q_sub[:, :, None, :] - cb[None, :, :, :]) ** 2).sum(axis=-1)
-    bq = spark.sparkContext.broadcast((q_ids, q_cells, tables, cb, cents))
-    emb = table(spark, sf_dir, "embeddings")
-
-    def score(batches):
-        ids, cells, tab, books, c = bq.value
-        nq = len(ids)
-        run_v = [np.empty(0, dtype=np.int64) for _ in range(nq)]
-        run_d = [np.empty(0, dtype=np.float64) for _ in range(nq)]
-        for pdf in batches:
-            b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            raw = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            b_cell = np.argmax(_normalized(raw) @ c.T, axis=1)
-            xs = _normalized(raw).reshape(len(b_ids), PQ_M, PQ_SUB)
-            d_codes = ((xs[:, :, None, :] - books[None, :, :, :]) ** 2).sum(axis=-1)
-            codes = np.argmin(d_codes, axis=-1)  # (n, M)
-            adc = tab[:, np.arange(PQ_M)[None, :], codes].sum(axis=-1).T  # (n, Q)
-            for qi in range(nq):
-                keep = np.isin(b_cell, cells[qi]) & (b_ids != ids[qi])
-                v = np.concatenate([run_v[qi], b_ids[keep]])
-                d = np.concatenate([run_d[qi], adc[keep, qi]])
-                order = np.lexsort((v, d))[:TOP_K]
-                run_v[qi], run_d[qi] = v[order], d[order]
-        if any(len(v) for v in run_v):
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(ids, [len(v) for v in run_v]),
-                    "vec_id": np.concatenate(run_v),
-                    "adc_dist": np.concatenate(run_d),
-                }
-            )
-
-    scores = emb.select("vec_id", "embedding").mapInPandas(
-        score, schema="query_id long, vec_id long, adc_dist double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("adc_dist"), F.col("vec_id"))
-    return (
-        scores.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "vec_id",
-            (F.round("adc_dist", 6) + F.lit(0.0)).alias("adc_dist"),
-            "rank",
-        )
+    return _embedding_topk(
+        spark, sf_dir, cents=ivf_centroids(spark, sf_dir), books=_pq_codebooks(spark, sf_dir)
     )
 
 
@@ -1720,12 +1552,7 @@ def q_ann_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id", ham.alias("hamming"))
     )
-    w = Window.partitionBy("query_id").orderBy("hamming", "vec_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "vec_id", "hamming", "rank")
-    )
+    return _rank_tail(scored, "query_id", "vec_id", "hamming", ascending=True, out=F.col("hamming"))
 
 
 def _hamming_oracle() -> str:

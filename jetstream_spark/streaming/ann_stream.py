@@ -8,11 +8,16 @@ stream. Each micro-batch:
   1. collects its (small, batch-sized) query vectors to the driver — the
      same bounded-state pattern as the IVF centroid collect; a query
      micro-batch is request traffic, not corpus data;
-  2. assigns them to nprobe cells and probes ONLY those cells' partitions
-     of the index (partition-pruned scan, query matrix broadcast) via the
-     shared `probe_ivf_with` core — identical semantics to the batch
-     `ann_ivf_indexed` query;
-  3. appends per-query top-k results under a batch-tagged directory.
+  2. skips rows no probe can score (null query id, null or wrong-length
+     embedding, non-finite or zero norm) and logs how many it skipped, so
+     one bad line cannot fail the batch on every replay;
+  3. assigns the rest to nprobe cells and probes ONLY those cells'
+     partitions of the index (partition-pruned scan, query matrix
+     broadcast) through `operators/ann_index.py::probe_ivf_with`, which
+     scores on the ANN family's shared top-k core
+     (`queries/similarity.py::_vector_topk`) — identical semantics to the
+     batch `ann_ivf_indexed` query;
+  4. appends per-query top-k results under a batch-tagged directory.
 
 Results are exactly-once through the shared handler every stream here
 runs on (pipeline.py::commit_once): batch-id markers +
@@ -27,6 +32,7 @@ absorbs corpus growth.
 
 from __future__ import annotations
 
+import logging
 import os
 import shutil
 from functools import partial
@@ -45,9 +51,22 @@ from jetstream_spark.streaming.pipeline import read_frame_stream, start_exactly_
 
 QUERY_STREAM_SCHEMA = "query_id long, embedding array<float>"
 
+log = logging.getLogger(__name__)
+
 
 def init_ann_state(state_dir: str) -> None:
     os.makedirs(os.path.join(state_dir, "results"), exist_ok=True)
+
+
+def _scorable(row, dim: int) -> bool:
+    """A query row a probe can score: an id and a `dim`-vector with a
+    finite, non-zero norm (a null element reads as NaN, so the norm test
+    rules it out too)."""
+    emb = row["embedding"]
+    if row["query_id"] is None or emb is None or len(emb) != dim:
+        return False
+    norm = np.linalg.norm(np.array(emb, dtype=np.float64))
+    return bool(np.isfinite(norm) and norm > 0)
 
 
 def _commit_batch(
@@ -55,10 +74,19 @@ def _commit_batch(
 ) -> None:
     spark = batch_df.sparkSession
     rows = batch_df.select("query_id", "embedding").collect()
-    if not rows:
+    good = [r for r in rows if _scorable(r, cents.shape[1])]
+    if len(good) < len(rows):
+        log.warning(
+            "ann probe batch %d: skipped %d of %d query rows "
+            "(null id, null or wrong-length embedding, or non-finite or zero norm)",
+            batch_id,
+            len(rows) - len(good),
+            len(rows),
+        )
+    if not good:
         return
-    q_ids = np.array([r["query_id"] for r in rows], dtype=np.int64)
-    q_mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    q_ids = np.array([r["query_id"] for r in good], dtype=np.int64)
+    q_mat = np.array([r["embedding"] for r in good], dtype=np.float64)
     result = probe_ivf_with(spark, cents, q_ids, q_mat, index_path)
     # delete-before-rewrite: a crashed attempt's partial output is replaced
     out_dir = os.path.join(state_dir, "results", f"b{batch_id}")

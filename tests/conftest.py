@@ -1,11 +1,13 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's engine, wherever it is cloned
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from jetstream_spark.session import get_spark
 from jetstream_spark.tables import TABLE_NAMES

@@ -18,14 +18,15 @@ from jetstream_spark.operators.dedup_index import (
     INC_MOD,
     INC_REM,
     ensure_band_index,
-    index_is_fresh,
     index_path,
     index_table_name,
     minhash_bands,
 )
+from jetstream_spark.operators.freshness import FPRINT_FILE, index_is_fresh
 from jetstream_spark.queries.dedup import q_dedup_incremental, q_dedup_minhash_lsh
 
 SF_DIR = "/root/testdata/sf0.001"
+DOCS = os.path.join(SF_DIR, "documents.parquet")
 
 
 @pytest.fixture(scope="module")
@@ -60,10 +61,8 @@ def test_index_is_bucketed_and_probe_join_reads_it_shuffle_free(spark, index_nam
 def test_index_reused_when_fresh_and_rebuilt_when_stale(spark, index_name):
     import json
 
-    from jetstream_spark.operators.dedup_index import _FPRINT_FILE
-
     path = index_path(SF_DIR)
-    assert index_is_fresh(path, SF_DIR)
+    assert index_is_fresh(path, DOCS)
     marker = os.path.join(path, "_SUCCESS")
     before = os.path.getmtime(marker)
     # fresh → reuse: ensure must not rewrite
@@ -73,18 +72,18 @@ def test_index_reused_when_fresh_and_rebuilt_when_stale(spark, index_name):
     # (the testdata-regeneration case, which can preserve or backdate
     # mtimes — a raw mtime ORDERING check would miss it); simulate by
     # tampering the recorded size
-    fp = os.path.join(path, _FPRINT_FILE)
+    fp = os.path.join(path, FPRINT_FILE)
     with open(fp) as f:
         rec = json.load(f)
     rec["total_size"] += 1
     with open(fp, "w") as f:
         json.dump(rec, f)
-    assert not index_is_fresh(path, SF_DIR)
+    assert not index_is_fresh(path, DOCS)
     # a missing sidecar (pre-fingerprint index) is also stale
     os.remove(fp)
-    assert not index_is_fresh(path, SF_DIR)
+    assert not index_is_fresh(path, DOCS)
     ensure_band_index(spark, SF_DIR)
-    assert index_is_fresh(path, SF_DIR), "rebuild must restore the fingerprint"
+    assert index_is_fresh(path, DOCS), "rebuild must restore the fingerprint"
 
 
 def test_index_reregistered_from_disk_without_rewrite(spark, index_name):

@@ -62,36 +62,95 @@ def test_ann_lsh_recall_vs_brute_force(spark):
     assert recall >= 0.2, f"LSH recall collapsed: {recall:.2f}"
 
 
-def test_ann_brute_force_partial_topk_bounds_shuffle_input(spark):
-    """The score kernel must pre-reduce per partition: the window shuffle
-    sees at most k rows per query per partition, never the N·Q score
-    matrix — and the partial path must agree exactly with the full one."""
-    from jetstream_spark.queries.similarity import N_QUERIES, _scores_df
+def _numpy_topk(spark, name):
+    """The unreduced reference top-k of ANN query `name`: every candidate
+    of every query scored in one numpy pass over the whole corpus, then
+    ranked by (score order, vec_id). Returns ({(query_id, rank): (vec_id,
+    score)}, number of candidate rows)."""
+    import numpy as np
 
-    partial = _scores_df(spark, SF_DIR, partial_topk=TOP_K)
-    n_parts = partial.rdd.getNumPartitions()
-    n_rows = partial.count()
-    assert n_rows <= TOP_K * N_QUERIES * n_parts, (n_rows, n_parts)
+    from jetstream_spark.queries import similarity as sim
 
-    full = _scores_df(spark, SF_DIR)
-    n_base = full.select("vec_id").distinct().count()
-    assert n_rows < full.count(), "partial top-k did not reduce anything"
-    assert n_base > TOP_K * n_parts or n_rows == full.count()
+    rows = table(spark, SF_DIR, "embeddings").select("vec_id", "embedding").collect()
+    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    mat = np.array([r["embedding"] for r in rows], dtype=np.float64)
+    q_ids, q_mat = sim._query_matrix(spark, SF_DIR)
+    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    q_unit = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
+    cand = ids[:, None] != q_ids[None, :]  # (N, Q): all rows but the query itself
+    if "lsh" in name:
+        planes = sim.lsh_planes()
+        weights = 1 << np.arange(sim.LSH_PLANES)
+        bucket, q_bucket = ((mat @ planes.T) > 0) @ weights, ((q_mat @ planes.T) > 0) @ weights
+        ham = np.vectorize(lambda x: bin(x).count("1"))(bucket[:, None] ^ q_bucket[None, :])
+        cand &= ham <= sim.LSH_PROBE_RADIUS
+    if "ivf" in name:
+        cents = sim.ivf_centroids(spark, SF_DIR)
+        cell = np.argmax(unit @ cents.T, axis=1)
+        probe = np.argsort(-(q_unit @ cents.T), axis=1)[:, : sim.IVF_NPROBE]
+        cand &= np.stack([np.isin(cell, p) for p in probe], axis=1)
+    if "pq" in name:
+        books = sim._pq_codebooks(spark, SF_DIR)  # (M, K, SUB)
+        xs = unit.reshape(len(ids), sim.PQ_M, sim.PQ_SUB)
+        qs = q_unit.reshape(len(q_ids), sim.PQ_M, sim.PQ_SUB)
+        score = np.zeros((len(ids), len(q_ids)))
+        for m in range(sim.PQ_M):
+            code = ((xs[:, m, None, :] - books[m][None]) ** 2).sum(axis=-1).argmin(axis=1)
+            score += ((qs[None, :, m, :] - books[m][code][:, None, :]) ** 2).sum(axis=-1)
+        sign = 1.0
+    else:
+        score = (mat @ q_mat.T) / np.outer(np.linalg.norm(mat, axis=1), np.linalg.norm(q_mat, axis=1))
+        sign = -1.0
+    ref = {}
+    for qi, q in enumerate(q_ids):
+        keep = cand[:, qi]
+        v, c = ids[keep], score[keep, qi]
+        for rank, j in enumerate(np.lexsort((v, sign * c))[:TOP_K], start=1):
+            ref[(int(q), rank)] = (int(v[j]), float(c[j]))
+    return ref, int(cand.sum())
 
-    # same final answer either way
-    def topk(scores):
-        from pyspark.sql import functions as F
-        from pyspark.sql.window import Window
 
-        w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-        return sorted(
-            (r["query_id"], r["vec_id"], round(r["cosine"], 6))
-            for r in scores.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= TOP_K)
-            .collect()
-        )
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ann_brute_force_topk",
+        "ann_lsh_topk",
+        "ann_ivf_topk",
+        "ann_pq_topk",
+        "ann_ivfpq_topk",
+        "ann_lsh_indexed",
+        "ann_ivf_indexed",
+    ],
+)
+def test_ann_brute_force_partial_topk_bounds_shuffle_input(spark, monkeypatch, name):
+    """Every query on the shared top-k kernel must pre-reduce per
+    partition: the rank window sees at most k rows per query per
+    partition, never every candidate — and the final top-k must equal an
+    unreduced numpy top-k over all candidates."""
+    from jetstream_spark.queries import similarity as sim
 
-    assert topk(partial) == topk(full)
+    build = next(q.build for q in sim.QUERIES if q.name == name)
+    partials = []
+    rank_tail = sim._rank_tail
+
+    def spy(scores, *args, **kwargs):
+        partials.append(scores)
+        return rank_tail(scores, *args, **kwargs)
+
+    monkeypatch.setattr(sim, "_rank_tail", spy)
+    final = build(spark, SF_DIR).collect()
+    assert len(partials) == 1, "the query must rank through the shared core once"
+    per_part = partials[0].rdd.mapPartitions(lambda it: [sum(1 for _ in it)]).collect()
+    ref, n_cand = _numpy_topk(spark, name)
+    assert max(per_part) <= TOP_K * sim.N_QUERIES, per_part
+    assert sum(per_part) < n_cand, "partial top-k did not reduce anything"
+
+    score = "adc_dist" if "pq" in name else "cosine"
+    got = {(r["query_id"], r["rank"]): (r["vec_id"], r[score]) for r in final}
+    assert got.keys() == ref.keys() and len(ref) == TOP_K * sim.N_QUERIES
+    for key, (vec_id, value) in ref.items():
+        assert got[key][0] == vec_id, (name, key, got[key], ref[key])
+        assert abs(got[key][1] - value) <= 1e-6, (name, key, got[key], ref[key])
 
 
 def test_aqe_skew_join_split(spark):
@@ -394,15 +453,15 @@ def test_ann_ivfpq_candidates_and_recall(spark):
 
     from jetstream_spark.queries.similarity import (
         IVF_NPROBE,
-        _ivf_centroids,
         _normalized,
         _query_matrix,
+        ivf_centroids,
         q_ann_brute_force,
         q_ann_ivfpq_topk,
     )
     from jetstream_spark.tables import table
 
-    cents = _ivf_centroids(spark, SF_DIR)
+    cents = ivf_centroids(spark, SF_DIR)
     rows = table(spark, SF_DIR, "embeddings").select("vec_id", "embedding").collect()
     ids = np.array([r["vec_id"] for r in rows])
     mat = _normalized(np.array([r["embedding"] for r in rows], dtype=np.float64))

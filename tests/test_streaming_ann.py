@@ -123,3 +123,60 @@ def test_streaming_ann_replay_converges(spark, tmp_path):
     commit_once(state, body, bdf, 0)
     assert sorted(tuple(r) for r in read_results(spark, state).collect()) == once
     assert 0 in load_done_batches(state)
+
+
+@pytest.mark.timeout(300)
+@pytest.mark.parametrize(
+    "bad",
+    [None, [0.5, 0.25, 0.125], [0.0] * 64],
+    ids=["null", "wrong_length", "zero_norm"],
+)
+def test_streaming_ann_skips_unscorable_row(spark, tmp_path, bad):
+    """One bad line must not poison its batch: a drop file with a null,
+    wrong-length or zero-norm embedding next to a good one yields exactly
+    the good row's top-k, and the batch is marked done (a failing batch
+    would fail the same way on every replay, so the query never advances)."""
+    import numpy as np
+
+    from jetstream_spark.atproto.log import load_done_batches
+    from jetstream_spark.operators.ann_index import (
+        ensure_ivf_index,
+        ivf_centroids,
+        probe_ivf_with,
+    )
+    from jetstream_spark.streaming.ann_stream import (
+        init_ann_state,
+        read_results,
+        start_streaming_ann,
+    )
+
+    queries_dir = tmp_path / "queries_in"
+    queries_dir.mkdir()
+    state = str(tmp_path / "state")
+    init_ann_state(state)
+    good = _query_rows(spark, [3])[0]
+    with open(queries_dir / "batch.json", "w") as f:
+        f.write(json.dumps({"query_id": 9001, "embedding": bad}) + "\n")
+        f.write(
+            json.dumps({"query_id": 3, "embedding": list(map(float, good["embedding"]))}) + "\n"
+        )
+
+    q = start_streaming_ann(spark, str(queries_dir), SF_DIR, state, str(tmp_path / "ckpt"))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    assert 0 in load_done_batches(state)
+    got = sorted(tuple(r) for r in read_results(spark, state).collect())
+    want = sorted(
+        tuple(r)
+        for r in probe_ivf_with(
+            spark,
+            ivf_centroids(spark, SF_DIR),
+            np.array([3], dtype=np.int64),
+            np.array([good["embedding"]], dtype=np.float64),
+            ensure_ivf_index(spark, SF_DIR),
+        ).collect()
+    )
+    assert got == want and len(want) > 0

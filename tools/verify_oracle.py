@@ -20,7 +20,7 @@ import traceback
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from jetstream_spark.session import get_spark  # noqa: E402
 from jetstream_spark.tables import TABLE_NAMES  # noqa: E402
